@@ -789,6 +789,12 @@ object Main {
     s
   }
 
+  /** Progress line on stderr at `--log-level info`; the message is
+    * by-name, so a costly one (a plan's column count) is never built at
+    * quieter levels. */
+  private def info(logLevel: String, msg: => String): Unit =
+    if (logLevel == "info") System.err.println(msg)
+
   /** Runs a transfer/preview/dry-run; returns the process exit code. */
   def runTransfer(cfg: JobConfig, preview: Option[Int], dryRun: Boolean,
                   logLevel: String): Int = {
@@ -797,10 +803,8 @@ object Main {
     val spark = session(logLevel)
     try {
       val engine = new TransferEngine(cfg)
-      def info(msg: String): Unit =
-        if (logLevel == "info") System.err.println(msg)
-      info(s"→ Source: ${cfg.source}")
-      info(s"→ Target: ${cfg.target}")
+      info(logLevel, s"→ Source: ${cfg.source}")
+      info(logLevel, s"→ Target: ${cfg.target}")
       preview match {
         case Some(n) => println(engine.preview(spark, n)); 0
         case None if dryRun =>
@@ -809,7 +813,7 @@ object Main {
             s"source and target validated")
           0
         case None =>
-          info(s"→ ${engine.plan(spark).schema.fields.length} columns detected")
+          info(logLevel, s"→ ${engine.plan(spark).schema.fields.length} columns detected")
           val stats = engine.execute(spark)
           println("Transfer completed successfully!")
           println(f"Processed ${stats.totalRows} rows in ${stats.seconds}%.2fs " +
@@ -822,14 +826,6 @@ object Main {
     } finally if (!preExisting) spark.stop()
   }
 
-  /** Runs a YAML job with a `curation:` section: the surrounding job's
-    * source/schema/transform stages build the input frame (so one file
-    * can clean, reshape, THEN curate), [[graft.llm.Curation.pipeline]]
-    * filters it, and the write goes either through the normal target
-    * connector or — when `shards:` is configured — through
-    * [[graft.llm.Shuffling.writeShards]] as deterministic training
-    * shards (always parquet, `shard=N` directories). Preview/dry-run
-    * apply to the CURATED frame, same no-write contract as transfers. */
   /** Train the `lang_id:` stage's classifier from its seed source —
     * the (model, classStats, allow) triple Curation.PipelineConfig
     * takes. Shared by batch and stream curation (training is always
@@ -843,86 +839,100 @@ object Main {
     (model, stats, spec.allow)
   }
 
+  /** The one `curation:` spec → [[graft.llm.Curation.PipelineConfig]]
+    * mapping, shared by batch and stream runs: every knob is forwarded,
+    * so [[graft.llm.Curation.pipelineStream]] rejects the corpus-wide
+    * ones itself instead of a stream run silently ignoring them. Side
+    * frames (probe corpora, DSIR target, reference snapshot) read
+    * through the same connector factory as any source and are STATIC
+    * in a stream run: collected into per-row probes or joined
+    * stream-static; the lang-id model trains batch-side from its seed. */
+  private def pipelineConfig(spark: SparkSession, cur: YamlJob.CurationSpec)
+      : graft.llm.Curation.PipelineConfig = {
+    import graft.llm.Sampling
+    def read(uri: String) = graft.sources.Connectors.read(spark, uri, Map.empty)
+    val probeFrames = cur.contamination.map(cs => read(cs.probesUri))
+    val dsirFrames = cur.dsir.map(ds => read(ds.targetUri))
+    val exciseFrames = cur.decontaminateExcise.map(es => read(es.probesUri))
+    val fuzzyFrames = cur.decontaminateFuzzy.map(fs => read(fs.probesUri))
+    val refFrame = cur.referenceUri.map(read)
+    val langIdFrames = cur.langId.map(trainLangId(spark, _))
+    graft.llm.Curation.PipelineConfig(
+      blocklist = cur.blocklist,
+      maxDupWordFrac = cur.maxDupWordFrac,
+      maxDupNgramFrac = cur.maxDupNgramFrac,
+      maxTopNgramFrac = cur.maxTopNgramFrac,
+      repetitionN = cur.repetitionN,
+      sampleFraction = cur.sampleFraction,
+      bucketFn =
+        if (cur.portableBucket) Sampling.portableBucket else Sampling.bucket,
+      persistSurvivors = cur.persistSurvivors,
+      stripTrackingParams = cur.stripTrackingParams,
+      consent = cur.consent,
+      consentNoindex = cur.consentNoindex,
+      stripHtml = cur.stripHtml,
+      stripMarkdown = cur.stripMarkdown,
+      fixMojibake = cur.fixMojibake,
+      normalizeUnicode = cur.normalizeUnicode,
+      langId = langIdFrames,
+      lineDedupMinDocs = cur.lineDedupMinDocs,
+      substringDedupWindow = cur.substringDedupWindow,
+      softDedup = cur.softDedup,
+      compressionBand = cur.compressionBand,
+      referenceSnapshot = refFrame,
+      referenceNearDup = cur.referenceNearDup,
+      referenceBloom = cur.referenceBloom,
+      gopherRules = cur.gopherRules,
+      c4Rules = cur.c4Rules.isDefined,
+      c4MinWordsPerLine = cur.c4Rules.map(_.minWordsPerLine).getOrElse(5),
+      c4MinSentences = cur.c4Rules.map(_.minSentences).getOrElse(3),
+      c4BadWords = cur.c4Rules.map(_.badWords).getOrElse(Nil),
+      decontaminateExciseProbes = exciseFrames,
+      decontaminateExciseWindow =
+        cur.decontaminateExcise.map(_.window).getOrElse(50),
+      decontaminateExciseProbeTextCol =
+        cur.decontaminateExcise.map(_.textColumn).getOrElse("text"),
+      decontaminateFuzzyProbes = fuzzyFrames,
+      decontaminateFuzzyK = cur.decontaminateFuzzy.map(_.k).getOrElse(16),
+      decontaminateFuzzyW = cur.decontaminateFuzzy.map(_.w).getOrElse(32),
+      decontaminateFuzzyProbeTextCol =
+        cur.decontaminateFuzzy.map(_.textColumn).getOrElse("text"),
+      dsirTarget = dsirFrames,
+      dsirK = cur.dsir.map(_.k).getOrElse(0),
+      dsirTargetTextCol = cur.dsir.map(_.textColumn).getOrElse("text"),
+      dsirBuckets = cur.dsir.map(_.buckets).getOrElse(10000),
+      dsirSeed = cur.dsir.map(_.seed).getOrElse(42L),
+      contaminationProbes = probeFrames,
+      contaminationProbeTextCol =
+        cur.contamination.map(_.textColumn).getOrElse("text"),
+      contaminationN = cur.contamination.map(_.n).getOrElse(8),
+      maxContamination = cur.contamination.map(_.max).getOrElse(0.2),
+      tokenBudget = cur.tokenBudget,
+      tokenBudgetShards = cur.tokenBudgetShards)
+  }
+
+  /** Runs a YAML job with a `curation:` section: the surrounding job's
+    * source/schema/transform stages build the input frame (so one file
+    * can clean, reshape, THEN curate), [[graft.llm.Curation.pipeline]]
+    * filters it, and the write goes either through the normal target
+    * connector or — when `shards:` is configured — through
+    * [[graft.llm.Shuffling.writeShards]] as deterministic training
+    * shards (always parquet, `shard=N` directories). Preview/dry-run
+    * apply to the CURATED frame, same no-write contract as transfers. */
   def runCuration(cfg: JobConfig, cur: YamlJob.CurationSpec,
                   preview: Option[Int], dryRun: Boolean,
                   logLevel: String): Int = {
-    import graft.llm.{Curation, Sampling, Shuffling}
+    import graft.llm.{Curation, Shuffling}
     import org.apache.spark.sql.Observation
     import org.apache.spark.sql.functions.{count, lit}
     val preExisting = SparkSession.getDefaultSession.isDefined
     val spark = session(logLevel)
     try {
-      def info(msg: String): Unit =
-        if (logLevel == "info") System.err.println(msg)
-      info(s"→ Source: ${cfg.source}")
-      info(s"→ Target: ${cfg.target}")
+      info(logLevel, s"→ Source: ${cfg.source}")
+      info(logLevel, s"→ Target: ${cfg.target}")
       // read → validate → transform, the transfer engine's exact plan
       val input = new TransferEngine(cfg).plan(spark)
-      // the decontamination probe corpus and the incremental reference
-      // snapshot read through the same connector factory as any source
-      val probeFrames = cur.contamination.map(cs =>
-        graft.sources.Connectors.read(spark, cs.probesUri, Map.empty))
-      val dsirFrames = cur.dsir.map(ds =>
-        graft.sources.Connectors.read(spark, ds.targetUri, Map.empty))
-      val exciseFrames = cur.decontaminateExcise.map(es =>
-        graft.sources.Connectors.read(spark, es.probesUri, Map.empty))
-      val fuzzyFrames = cur.decontaminateFuzzy.map(fs =>
-        graft.sources.Connectors.read(spark, fs.probesUri, Map.empty))
-      val refFrame = cur.referenceUri.map(u =>
-        graft.sources.Connectors.read(spark, u, Map.empty))
-      val langIdFrames = cur.langId.map(trainLangId(spark, _))
-      val pc = Curation.PipelineConfig(
-        blocklist = cur.blocklist,
-        maxDupWordFrac = cur.maxDupWordFrac,
-        maxDupNgramFrac = cur.maxDupNgramFrac,
-        maxTopNgramFrac = cur.maxTopNgramFrac,
-        repetitionN = cur.repetitionN,
-        sampleFraction = cur.sampleFraction,
-        bucketFn =
-          if (cur.portableBucket) Sampling.portableBucket else Sampling.bucket,
-        persistSurvivors = cur.persistSurvivors,
-        stripTrackingParams = cur.stripTrackingParams,
-        consent = cur.consent,
-        consentNoindex = cur.consentNoindex,
-        stripHtml = cur.stripHtml,
-        stripMarkdown = cur.stripMarkdown,
-        fixMojibake = cur.fixMojibake,
-        normalizeUnicode = cur.normalizeUnicode,
-        langId = langIdFrames,
-        lineDedupMinDocs = cur.lineDedupMinDocs,
-        substringDedupWindow = cur.substringDedupWindow,
-        softDedup = cur.softDedup,
-        compressionBand = cur.compressionBand,
-        referenceSnapshot = refFrame,
-        referenceNearDup = cur.referenceNearDup,
-        referenceBloom = cur.referenceBloom,
-        gopherRules = cur.gopherRules,
-        c4Rules = cur.c4Rules.isDefined,
-        c4MinWordsPerLine = cur.c4Rules.map(_.minWordsPerLine).getOrElse(5),
-        c4MinSentences = cur.c4Rules.map(_.minSentences).getOrElse(3),
-        c4BadWords = cur.c4Rules.map(_.badWords).getOrElse(Nil),
-        decontaminateExciseProbes = exciseFrames,
-        decontaminateExciseWindow =
-          cur.decontaminateExcise.map(_.window).getOrElse(50),
-        decontaminateExciseProbeTextCol =
-          cur.decontaminateExcise.map(_.textColumn).getOrElse("text"),
-        decontaminateFuzzyProbes = fuzzyFrames,
-        decontaminateFuzzyK = cur.decontaminateFuzzy.map(_.k).getOrElse(16),
-        decontaminateFuzzyW = cur.decontaminateFuzzy.map(_.w).getOrElse(32),
-        decontaminateFuzzyProbeTextCol =
-          cur.decontaminateFuzzy.map(_.textColumn).getOrElse("text"),
-        dsirTarget = dsirFrames,
-        dsirK = cur.dsir.map(_.k).getOrElse(0),
-        dsirTargetTextCol = cur.dsir.map(_.textColumn).getOrElse("text"),
-        dsirBuckets = cur.dsir.map(_.buckets).getOrElse(10000),
-        dsirSeed = cur.dsir.map(_.seed).getOrElse(42L),
-        contaminationProbes = probeFrames,
-        contaminationProbeTextCol =
-          cur.contamination.map(_.textColumn).getOrElse("text"),
-        contaminationN = cur.contamination.map(_.n).getOrElse(8),
-        maxContamination = cur.contamination.map(_.max).getOrElse(0.2),
-        tokenBudget = cur.tokenBudget,
-        tokenBudgetShards = cur.tokenBudgetShards)
+      val pc = pipelineConfig(spark, cur)
       // preview/dry-run are no-write modes and use the lazy pipeline
       // even when `observed` is set (stage counts only make sense for a
       // run that actually materializes the corpus); persistSurvivors is
@@ -1021,7 +1031,7 @@ object Main {
   def runCurationStream(cfg: JobConfig, cur: YamlJob.CurationSpec,
                         preview: Option[Int], dryRun: Boolean,
                         logLevel: String): Int = {
-    import graft.llm.{Curation, Sampling}
+    import graft.llm.Curation
     import org.apache.spark.sql.streaming.Trigger
     if (preview.isDefined || dryRun)
       throw GraftError.Configuration(
@@ -1043,68 +1053,12 @@ object Main {
     val preExisting = SparkSession.getDefaultSession.isDefined
     val spark = session(logLevel)
     try {
-      def info(msg: String): Unit =
-        if (logLevel == "info") System.err.println(msg)
-      info(s"→ Source (stream): ${cfg.source}")
-      info(s"→ Target: ${cfg.target}")
+      info(logLevel, s"→ Source (stream): ${cfg.source}")
+      info(logLevel, s"→ Target: ${cfg.target}")
       val src = graft.sources.Connectors.readStream(
         spark, cfg.source, cfg.sourceOptions)
       val input = new TransferEngine(cfg).planOver(spark, src)
-      // the incremental reference snapshot is a STATIC frame joined
-      // against every micro-batch (stream-static anti-join)
-      val refFrame = cur.referenceUri.map(u =>
-        graft.sources.Connectors.read(spark, u, Map.empty))
-      // the lang-id model trains BATCH-side from the static seed; the
-      // compiled literal maps then score each micro-batch per-row
-      val langIdFrames = cur.langId.map(trainLangId(spark, _))
-      // the excise probe corpus is STATIC: its window hashes collect
-      // once into the per-row projection every micro-batch runs
-      val exciseFrames = cur.decontaminateExcise.map(es =>
-        graft.sources.Connectors.read(spark, es.probesUri, Map.empty))
-      val fuzzyFrames = cur.decontaminateFuzzy.map(fs =>
-        graft.sources.Connectors.read(spark, fs.probesUri, Map.empty))
-      val pc = graft.llm.Curation.PipelineConfig(
-        blocklist = cur.blocklist,
-        maxDupWordFrac = cur.maxDupWordFrac,
-        maxDupNgramFrac = cur.maxDupNgramFrac,
-        maxTopNgramFrac = cur.maxTopNgramFrac,
-        repetitionN = cur.repetitionN,
-        sampleFraction = cur.sampleFraction,
-        bucketFn =
-          if (cur.portableBucket) Sampling.portableBucket else Sampling.bucket,
-        // forwarded so pipelineStream can reject it loudly — dropping
-        // it here would silently ignore the YAML knob
-        persistSurvivors = cur.persistSurvivors,
-        stripTrackingParams = cur.stripTrackingParams,
-        consent = cur.consent,
-        consentNoindex = cur.consentNoindex,
-        stripHtml = cur.stripHtml,
-        stripMarkdown = cur.stripMarkdown,
-        fixMojibake = cur.fixMojibake,
-        normalizeUnicode = cur.normalizeUnicode,
-        langId = langIdFrames,
-        compressionBand = cur.compressionBand,
-        referenceSnapshot = refFrame,
-        gopherRules = cur.gopherRules,
-        c4Rules = cur.c4Rules.isDefined,
-        c4MinWordsPerLine = cur.c4Rules.map(_.minWordsPerLine).getOrElse(5),
-        c4MinSentences = cur.c4Rules.map(_.minSentences).getOrElse(3),
-        c4BadWords = cur.c4Rules.map(_.badWords).getOrElse(Nil),
-        decontaminateExciseProbes = exciseFrames,
-        decontaminateExciseWindow =
-          cur.decontaminateExcise.map(_.window).getOrElse(50),
-        decontaminateExciseProbeTextCol =
-          cur.decontaminateExcise.map(_.textColumn).getOrElse("text"),
-        decontaminateFuzzyProbes = fuzzyFrames,
-        decontaminateFuzzyK = cur.decontaminateFuzzy.map(_.k).getOrElse(16),
-        decontaminateFuzzyW = cur.decontaminateFuzzy.map(_.w).getOrElse(32),
-        decontaminateFuzzyProbeTextCol =
-          cur.decontaminateFuzzy.map(_.textColumn).getOrElse("text"),
-        // live in stream mode: a per-row broadcast probe over the
-        // driver-collected reference index
-        referenceNearDup = cur.referenceNearDup,
-        // live in stream mode: the blob bakes into a per-row literal test
-        referenceBloom = cur.referenceBloom)
+      val pc = pipelineConfig(spark, cur)
       val curated = Curation.pipelineStream(
         input, cur.idColumn, cur.textColumn, tsCol, cur.dedupHorizon, pc)
       // an extension-less target is a parquet directory — the same

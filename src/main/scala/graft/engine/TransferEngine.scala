@@ -59,28 +59,31 @@ final case class TransferStats(totalRows: Long, seconds: Double,
 class TransferEngine(cfg: JobConfig) {
 
   /** The pre-transform frame (read + validation) — the "original
-    * schema" preview renders this stage's shape. */
-  private def sourceFrame(spark: SparkSession): DataFrame = {
-    val df = Connectors.read(spark, cfg.source, cfg.sourceOptions)
-    // validation BEFORE transform (transfer.rs:154-159, README.md:772)
-    cfg.schemaFile.fold(df)(p => validated(df, SchemaFile.fromFile(p)))
-  }
+    * schema" preview renders this stage's shape — and, with a
+    * quarantine target configured, the rejected rows. The source is
+    * built ONCE for both routes (a second build would re-run the
+    * inference sample and re-download http/ssh sources). */
+  private def sourceFrame(spark: SparkSession)
+      : (DataFrame, Option[DataFrame]) =
+    validated(Connectors.read(spark, cfg.source, cfg.sourceOptions))
 
-  /** Validation stage: fail-fast by default; with a quarantine target
-    * configured, the VALID-side route (annotate → keep clean → type) —
+  /** Validation stage, BEFORE transform (transfer.rs:154-159,
+    * README.md:772): fail-fast by default; with a quarantine target
+    * configured, [[Validation.quarantine]]'s (valid, invalid) split —
     * the invalid side is written by [[execute]], and preview/dry-run
     * naturally render the valid route. */
-  private def validated(df: DataFrame, sf: SchemaFile): DataFrame =
-    if (cfg.quarantine.isEmpty) Validation(df, sf)
-    else {
-      import org.apache.spark.sql.functions.{col, size}
-      Validation(Validation.annotate(df, sf)
-        .where(size(col("_violations")) === 0).drop("_violations"), sf)
+  private def validated(df: DataFrame): (DataFrame, Option[DataFrame]) =
+    cfg.schemaFile.map(SchemaFile.fromFile) match {
+      case None => (df, None)
+      case Some(sf) if cfg.quarantine.isEmpty => (Validation(df, sf), None)
+      case Some(sf) =>
+        val (valid, invalid) = Validation.quarantine(df, sf)
+        (valid, Some(invalid))
     }
 
   /** Build the full lazy plan (read → validate → transform). */
   def plan(spark: SparkSession): DataFrame =
-    applyTransforms(spark, sourceFrame(spark))
+    applyTransforms(spark, sourceFrame(spark)._1)
 
   /** The validate → transform stages over an externally built source
     * frame — the streaming curation path reads via
@@ -98,9 +101,7 @@ class TransferEngine(cfg: JobConfig) {
         "quarantine cannot stream (it forks the batch into two sinks " +
           "over one materialized pass) — run validation-routing as a " +
           "batch transfer")
-    var df = source
-    cfg.schemaFile.foreach(p => df = validated(df, SchemaFile.fromFile(p)))
-    applyTransforms(spark, df)
+    applyTransforms(spark, validated(source)._1)
   }
 
   /** Transform + skip-existing stages over an already-built source
@@ -144,47 +145,37 @@ class TransferEngine(cfg: JobConfig) {
     * RDD-based Avro sink can't fire Dataset listeners; it counts rows
     * while writing and returns the count directly. */
   def execute(spark: SparkSession): TransferStats = {
-    import org.apache.spark.sql.Observation
-    import org.apache.spark.sql.functions.{count, lit}
+    import org.apache.spark.sql.functions.{col, concat_ws}
     val t0 = System.nanoTime()
-    val rejected = cfg.quarantine.fold(0L)(writeQuarantine(spark, _))
-    val obs = Observation()
-    val df = exactDecimals(plan(spark)).observe(obs, count(lit(1)).as("rows"))
-    val direct =
-      try Connectors.write(df, cfg.target, cfg.truncate, cfg.targetOptions)
-      catch {
-        case e: graft.core.GraftError => throw e // already typed
-        case e: Exception => throw graft.core.GraftError.DataTransfer(
-          s"writing ${cfg.target} failed: ${e.getMessage}", e)
-      }
-    val rows = direct.getOrElse(obs.get("rows").asInstanceOf[Long])
+    val (valid, invalid) = sourceFrame(spark)
+    // dead-letter write: the INVALID route — raw source typing plus
+    // `_violations` flattened to a '|'-joined string (portable across
+    // every sink, CSV included), written BEFORE the main transfer so a
+    // failing main write still leaves the rejects inspectable
+    val rejected = invalid.fold(0L) { inv =>
+      val target = cfg.quarantine.get
+      countedWrite(
+        inv.withColumn("_violations", concat_ws("|", col("_violations"))),
+        target, Map.empty, s"quarantine $target")
+    }
+    val rows = countedWrite(exactDecimals(applyTransforms(spark, valid)),
+      cfg.target, cfg.targetOptions, cfg.target)
     TransferStats(rows, (System.nanoTime() - t0) / 1e9, rejected)
   }
 
-  /** Dead-letter write: the INVALID side of the annotated source —
-    * raw source typing plus `_violations` flattened to a '|'-joined
-    * string (portable across every sink, CSV included). Written before
-    * the main transfer so a failing main write still leaves the
-    * rejects inspectable. Costs one extra source pass — the route
-    * split is two filters over one lazy read; sources where a second
-    * scan is expensive (http/ssh download once into a temp file via
-    * their connectors) are unaffected. */
-  private def writeQuarantine(spark: SparkSession, target: String): Long = {
-    import org.apache.spark.sql.functions.{col, concat_ws, count, lit, size}
+  /** One sink write, its row count riding the write job itself. */
+  private def countedWrite(df: DataFrame, target: String,
+                           options: Map[String, String], what: String): Long = {
     import org.apache.spark.sql.Observation
-    val sf = SchemaFile.fromFile(cfg.schemaFile.get)
-    val src = Connectors.read(spark, cfg.source, cfg.sourceOptions)
-    val invalid = Validation.annotate(src, sf)
-      .where(size(col("_violations")) > 0)
-      .withColumn("_violations", concat_ws("|", col("_violations")))
+    import org.apache.spark.sql.functions.{count, lit}
     val obs = Observation()
-    val observed = invalid.observe(obs, count(lit(1)).as("rows"))
     val direct =
-      try Connectors.write(observed, target, cfg.truncate, Map.empty)
+      try Connectors.write(df.observe(obs, count(lit(1)).as("rows")),
+        target, cfg.truncate, options)
       catch {
-        case e: graft.core.GraftError => throw e
+        case e: graft.core.GraftError => throw e // already typed
         case e: Exception => throw graft.core.GraftError.DataTransfer(
-          s"writing quarantine $target failed: ${e.getMessage}", e)
+          s"writing $what failed: ${e.getMessage}", e)
       }
     direct.getOrElse(obs.get("rows").asInstanceOf[Long])
   }
@@ -230,7 +221,7 @@ class TransferEngine(cfg: JobConfig) {
     * schema when a transform is configured, then the first N rows in the
     * reference's fixed-width table — no write. */
   def preview(spark: SparkSession, n: Int = 10): String = {
-    val src = sourceFrame(spark) // built ONCE; both sections derive from it
+    val src = sourceFrame(spark)._1 // built ONCE; both sections derive from it
     val df = applyTransforms(spark, src)
     val sb = new StringBuilder
     sb.append("\nOriginal Schema Preview:\n")

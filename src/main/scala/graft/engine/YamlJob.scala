@@ -383,10 +383,9 @@ object YamlJob {
           throw graft.core.GraftError.Configuration(
             "curation mode=stream needs checkpoint (streaming " +
               "checkpoint directory)")
-        // corpus-wide knobs that Main's stream path does not forward
-        // into PipelineConfig must reject HERE — otherwise the YAML
-        // key would be silently ignored (the knobs Main forwards are
-        // rejected by pipelineStream itself, same loudness contract)
+        // corpus-wide knobs reject HERE, at load time and under their
+        // YAML key names; Main forwards every knob, so pipelineStream
+        // rejects the same ones again for API-built specs
         def streamBlocked(k: String): Boolean = c.get(k).flatMap(Option(_))
           .exists(v => k != "soft_dedup" || boolOpt("soft_dedup", v))
         for (k <- Seq("line_dedup_min_docs", "substring_dedup_window",

@@ -93,27 +93,28 @@ object CellInference {
     raw.select(exprs: _*)
   }
 
+  /** The raw CSV dialect every tinyetl-semantics CSV read (batch and
+    * stream) uses: header row, every cell kept as text (typing is
+    * ours), and RFC 4180 doubled-quote escaping ("" inside a quoted
+    * cell), the reference csv crate's dialect — Spark's backslash
+    * default would mangle quoted JSON cells. "" must reach classify
+    * (not become null early); the null sentinel is NUL-wrapped so no
+    * legal CSV cell can ever equal it — a plain-text sentinel would
+    * silently null matching cells. */
+  val RawCsvOptions: Map[String, String] = Map(
+    "header" -> "true",
+    "inferSchema" -> "false",
+    "nullValue" -> "\u0000never\u0000",
+    "escape" -> "\"")
+
   /** tinyetl-semantics CSV read: header row, every column read raw as
     * string, types inferred from a 1000-row sample, then cast
     * distributed. Differs from Spark's `inferSchema` on purpose
     * (multi-format dates, strict "true"/"false" booleans). */
   def readCsv(spark: org.apache.spark.sql.SparkSession, path: String,
               sampleRows: Int = SampleRows): DataFrame = {
-    val raw = spark.read
-      .option("header", "true")
-      // keep cells textually intact; typing is ours
-      .option("inferSchema", "false")
-      // "" must reach classify (not become null early); the sentinel is
-      // NUL-wrapped ("\u0000never\u0000") so no legal CSV cell can ever
-      // equal it — a plain-text sentinel would silently null matching cells
-      .option("nullValue", "\u0000never\u0000")
-      // RFC 4180 doubled-quote escaping ("" inside a quoted cell), the
-      // reference csv crate's dialect — Spark's backslash default would
-      // mangle quoted JSON cells
-      .option("escape", "\"")
-      .csv(path)
-    val cols = inferColumns(raw, sampleRows)
-    applyTypes(raw, cols)
+    val raw = spark.read.options(RawCsvOptions).csv(path)
+    applyTypes(raw, inferColumns(raw, sampleRows))
   }
 
   /** tinyetl-semantics JSON read (S2): JSON-array files (the reference's

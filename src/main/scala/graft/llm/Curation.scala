@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** The standard corpus-curation pipeline, composed from the individual
@@ -56,11 +56,15 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  /** [[PipelineConfig.referenceBloom]] accelerates the EXACT reference
-    * hash probe only — near-dup matching never probes a full content
-    * hash, so combining the knobs is a config mistake, not a silent
-    * no-op. */
-  private def requireBloomExactRef(cfg: PipelineConfig): Unit = {
+  /** The reference-stage knobs that only make sense together, checked
+    * before any stage is planned. [[PipelineConfig.referenceBloom]]
+    * accelerates the EXACT reference hash probe only — near-dup
+    * matching never probes a full content hash, so combining the knobs
+    * is a config mistake, not a silent no-op. */
+  private def requireReferenceConfig(cfg: PipelineConfig): Unit = {
+    if (cfg.referenceNearDup.isDefined && cfg.referenceSnapshot.isEmpty)
+      throw graft.core.GraftError.Configuration(
+        "referenceNearDup needs a referenceSnapshot to match against")
     if (cfg.referenceBloom.isDefined) {
       if (cfg.referenceSnapshot.isEmpty)
         throw graft.core.GraftError.Configuration(
@@ -314,88 +318,146 @@ object Curation {
           "substring_dedup_window (whitespace-insensitive) or run the " +
           "line stages on unstripped text.")
 
-  def pipeline(df: DataFrame, idCol: String, textCol: String,
-               cfg: PipelineConfig = PipelineConfig()): DataFrame = {
+  /** The per-row prefix every entry point shares, in its one order:
+    * blocklist → tracking params → consent → HTML/markdown strip →
+    * mojibake → normalize → C4 → Gopher → lang-id → compression band →
+    * repetition. Blocklist, tracking params and consent read the RAW
+    * markup, so they run before the strips; rewrites land before every
+    * text statistic. All stateless projections/filters — the prefix
+    * streams unchanged. `afterUrls` sees the frame right after the
+    * blocklist (the observed pipeline taps its "after_urls" count
+    * there); the remaining drops fold into "after_repetition". */
+  private def perRow(df: DataFrame, textCol: String, cfg: PipelineConfig,
+                     afterUrls: DataFrame => DataFrame = identity)
+      : DataFrame = {
     warnStripEatsLines(cfg)
-    val afterUrls0 =
+    def opt(on: Boolean)(stage: DataFrame => DataFrame): DataFrame => DataFrame =
+      if (on) stage else identity
+    val blocked =
       if (cfg.blocklist.isEmpty) df
       else Urls.filterBlocked(df, textCol, cfg.blocklist)
-    val afterUrls1 =
-      if (cfg.stripTrackingParams) Urls.canonicalizeUrls(afterUrls0, textCol)
-      else afterUrls0
-    val afterUrls = applyConsent(afterUrls1, textCol, cfg)
-    val afterStrip0 =
-      if (cfg.stripHtml) TextAnalysis.stripHtml(afterUrls, textCol)
-      else afterUrls
-    val afterStrip =
-      if (cfg.stripMarkdown) TextAnalysis.stripMarkdown(afterStrip0, textCol)
-      else afterStrip0
-    val afterFix =
-      if (cfg.fixMojibake) TextAnalysis.fixMojibake(afterStrip, textCol)
-      else afterStrip
-    val afterNorm = applyNormalize(afterFix, textCol, cfg)
-    val afterC4 = applyGopher(applyC4(afterNorm, textCol, cfg), textCol, cfg)
-    val afterLang = applyLangId(afterC4, textCol, cfg)
-    val afterCompress = applyCompressionBand(afterLang, textCol, cfg)
-    val afterRepetition0 = Repetition.filterRepetitive(afterCompress, textCol,
-      cfg.maxDupWordFrac, cfg.maxDupNgramFrac, cfg.maxTopNgramFrac,
-      cfg.repetitionN)
-    val afterRepetition =
-      if (cfg.persistSurvivors) afterRepetition0.localCheckpoint(true)
-      else afterRepetition0
+    Seq[DataFrame => DataFrame](
+      opt(cfg.stripTrackingParams)(Urls.canonicalizeUrls(_, textCol)),
+      applyConsent(_, textCol, cfg),
+      opt(cfg.stripHtml)(TextAnalysis.stripHtml(_, textCol)),
+      opt(cfg.stripMarkdown)(TextAnalysis.stripMarkdown(_, textCol)),
+      opt(cfg.fixMojibake)(TextAnalysis.fixMojibake(_, textCol)),
+      applyNormalize(_, textCol, cfg),
+      applyC4(_, textCol, cfg),
+      applyGopher(_, textCol, cfg),
+      applyLangId(_, textCol, cfg),
+      applyCompressionBand(_, textCol, cfg),
+      Repetition.filterRepetitive(_, textCol, cfg.maxDupWordFrac,
+        cfg.maxDupNgramFrac, cfg.maxTopNgramFrac, cfg.repetitionN)
+    ).foldLeft(afterUrls(blocked))((d, stage) => stage(d))
+  }
+
+  /** Substring-granularity decontamination: excise verbatim probe
+    * leaks, then near-verbatim (edit-tolerant) ones — exact cuts are
+    * cheap and deterministic, the fuzzy pass then only pays for the
+    * edited leaks verbatim windows cannot see. Both keep every row
+    * (no observation of their own) and are pure per-row projections
+    * over collected probe indexes, so they stream unchanged. */
+  private def exciseLeaks(df: DataFrame, idCol: String, textCol: String,
+                          cfg: PipelineConfig): DataFrame = {
+    val verbatim = cfg.decontaminateExciseProbes.fold(df)(p =>
+      Contamination.decontaminateExcise(df, p, idCol, textCol,
+        cfg.decontaminateExciseProbeTextCol, cfg.decontaminateExciseWindow))
+    cfg.decontaminateFuzzyProbes.fold(verbatim)(p =>
+      Contamination.decontaminateFuzzy(verbatim, p, idCol, textCol,
+        cfg.decontaminateFuzzyProbeTextCol, cfg.decontaminateFuzzyK,
+        cfg.decontaminateFuzzyW, charsCol = "near_contaminated_chars"))
+  }
+
+  private def sample(df: DataFrame, idCol: String,
+                     cfg: PipelineConfig): DataFrame =
+    if (cfg.sampleFraction >= 1.0) df
+    else Sampling.byHash(df, idCol, cfg.sampleFraction, cfg.bucketFn)
+
+  def pipeline(df: DataFrame, idCol: String, textCol: String,
+               cfg: PipelineConfig = PipelineConfig()): DataFrame =
+    batch(df, idCol, textCol, cfg, observe = false)._1
+
+  /** [[pipeline]] plus per-stage survivor counts — the drop accounting
+    * every production curation run records: "input", "after_urls",
+    * "after_repetition", "after_dedup", "kept", plus
+    * "after_reference" / "after_decontamination" / "after_dsir" when
+    * those optional stages are configured. Same stage body as
+    * [[pipeline]].
+    *
+    * The filter-stage counts ride ONE eager localCheckpoint of the
+    * filtered survivors via `observe` (an observe below the dedup's
+    * plan fan-out would otherwise be DUPLICATED into both branches of
+    * the tree — Catalyst plans are trees, not DAGs — and double-fire).
+    * The checkpoint also makes the dedup's two consumers read the
+    * materialized survivors instead of re-running the filter subtree,
+    * so observability costs storage for the survivor set, not extra
+    * compute; for pure throughput without the materialization use
+    * [[pipeline]]. Counts for the filter stages are final as soon as
+    * this returns; "after_dedup"/"kept" complete when the returned
+    * frame is consumed. */
+  def pipelineObserved(df: DataFrame, idCol: String, textCol: String,
+                       cfg: PipelineConfig = PipelineConfig())
+      : (DataFrame, () => Map[String, Long]) = {
+    val (out, obs) = batch(df, idCol, textCol, cfg, observe = true)
+    (out, () => obs.map { case (n, o) =>
+      n -> o.get("n").asInstanceOf[Long]
+    }.toMap)
+  }
+
+  /** The batch stage body behind [[pipeline]] and [[pipelineObserved]].
+    * The two differ in `tap` (a count observation when observing,
+    * identity otherwise) and in which fan-out points materialize: an
+    * observed frame read by two consumers would double-fire its
+    * observe, so observing checkpoints every fan-out that
+    * [[PipelineConfig.persistSurvivors]] does, plus the DSIR input. */
+  private def batch(df: DataFrame, idCol: String, textCol: String,
+                    cfg: PipelineConfig, observe: Boolean)
+      : (DataFrame, Seq[(String, Observation)]) = {
+    requireReferenceConfig(cfg)
+    val obs = scala.collection.mutable.ArrayBuffer.empty[(String, Observation)]
+    def tap(name: String)(frame: DataFrame): DataFrame =
+      if (!observe) frame
+      else {
+        val o = Observation()
+        obs += name -> o
+        frame.observe(o, count(lit(1)).as("n"))
+      }
+    def checkpoint(on: Boolean)(frame: DataFrame): DataFrame =
+      if (on) frame.localCheckpoint(true) else frame
+    val fanOut = observe || cfg.persistSurvivors
+    // the filter observes fire at this checkpoint, exactly once
+    val filtered = checkpoint(fanOut)(tap("after_repetition")(
+      perRow(tap("input")(df), textCol, cfg, tap("after_urls"))))
     // optional line-level rewrite BEFORE hashing, so footer-stripped
-    // copies collapse in the dedup below; checkpointed under the
-    // persist knob because the rewrite fans out into dedup's two
-    // consumers just like the filter subtree does
-    val afterLines0 = cfg.lineDedupMinDocs match {
-      case Some(k) => Paragraphs.dropCommon(afterRepetition, idCol, textCol, k)
-      case None => afterRepetition
-    }
-    val afterLines =
-      if (cfg.persistSurvivors && cfg.lineDedupMinDocs.isDefined)
-        afterLines0.localCheckpoint(true)
-      else afterLines0
+    // copies collapse in the dedup below; the rewrite fans out into
+    // dedup's two consumers just like the filter subtree does
+    val afterLines = cfg.lineDedupMinDocs.fold(filtered)(k =>
+      checkpoint(fanOut)(Paragraphs.dropCommon(filtered, idCol, textCol, k)))
     // substring excision AFTER the line rewrite (footers die cheaper at
     // line granularity) and BEFORE hashing, so excision-collapsed copies
-    // dedup below; the excise plan fans its input into the window
-    // projection and the rebuild join-back, so the persist knob
-    // checkpoints it like the other fan-out stages
-    val afterSub0 = cfg.substringDedupWindow match {
-      case Some(w) =>
-        // persist follows the pipeline knob: with it on, the corpus is
-        // window-hashed exactly once (guard + agg + join-back all read
-        // the checkpointed keys-only projection)
-        SubstringDedup.excise(afterLines, idCol, textCol, w = w,
-          persist = cfg.persistSurvivors)
-      case None => afterLines
-    }
-    val afterSub =
-      if (cfg.persistSurvivors && cfg.substringDedupWindow.isDefined)
-        afterSub0.localCheckpoint(true)
-      else afterSub0
+    // dedup below; with `persist` the corpus is window-hashed exactly
+    // once (guard + agg + join-back all read the checkpointed keys-only
+    // projection)
+    val afterSub = cfg.substringDedupWindow.fold(afterLines)(w =>
+      checkpoint(fanOut)(SubstringDedup.excise(afterLines, idCol, textCol,
+        w = w, persist = fanOut)))
     // cross-snapshot (incremental) dedup BEFORE in-batch dedup:
     // previously-shipped content is gone before it can elect a
-    // canonical. The result fans out into the dedup's two consumers
-    // below, so the persist knob checkpoints it like the other
-    // fan-out stages.
-    requireBloomExactRef(cfg)
-    val afterRef0 = (cfg.referenceSnapshot, cfg.referenceNearDup) match {
-      case (Some(ref), Some(th)) =>
-        Dedup.nearDupAgainstReference(afterSub, ref, idCol, textCol,
-          refTextCol = textCol, threshold = th)
-      case (Some(ref), None) =>
-        Dedup.againstReference(afterSub, ref, idCol, Seq(textCol),
-          bloomPrefilter = cfg.referenceBloom.isDefined,
-          expectedRefItems = cfg.referenceBloom.getOrElse(1000000L))
-      case (None, Some(_)) =>
-        throw graft.core.GraftError.Configuration(
-          "referenceNearDup needs a referenceSnapshot to match against")
-      case (None, None) => afterSub
+    // canonical. It drops rows, so it carries its own observation, and
+    // it fans out into the dedup's two consumers below.
+    val afterRef = cfg.referenceSnapshot.fold(afterSub) { ref =>
+      val kept = cfg.referenceNearDup match {
+        case Some(th) =>
+          Dedup.nearDupAgainstReference(afterSub, ref, idCol, textCol,
+            refTextCol = textCol, threshold = th)
+        case None =>
+          Dedup.againstReference(afterSub, ref, idCol, Seq(textCol),
+            bloomPrefilter = cfg.referenceBloom.isDefined,
+            expectedRefItems = cfg.referenceBloom.getOrElse(1000000L))
+      }
+      checkpoint(fanOut)(tap("after_reference")(kept))
     }
-    val afterRef =
-      if (cfg.persistSurvivors && cfg.referenceSnapshot.isDefined)
-        afterRef0.localCheckpoint(true)
-      else afterRef0
     // exact dedup, keep-min-id, computed directly from ONE narrow
     // (id, hash) projection of the filtered corpus: groupBy(hash) →
     // min(id) is the keep set, full rows semi-join it by id. The
@@ -403,10 +465,11 @@ object Curation {
     // keep-set pass + the surviving-rows pass) — routing through
     // Dedup.exact's decision frame would cost a third evaluation.
     // Under softDedup the stage keeps EVERY row and attaches
-    // (dup_count, weight = 1/|cluster|) instead: same narrow keys-only
-    // exchange shape (softWeights' window rides the content-hash
-    // partition), plain inner join back by id.
-    val deduped = if (cfg.softDedup) {
+    // (dup_count, weight = 1/|cluster|) instead — "after_dedup" then
+    // equals the stage's input count: same narrow keys-only exchange
+    // shape (softWeights' window rides the content-hash partition),
+    // plain inner join back by id.
+    val deduped = tap("after_dedup")(if (cfg.softDedup) {
       Guards.requireFreshColumns(df, Seq("dup_count", "weight"),
         "Curation.pipeline(softDedup)")
       val wts = Dedup.softWeights(
@@ -419,44 +482,31 @@ object Curation {
         .groupBy(col("__h")).agg(min(col(idCol)).as(idCol))
         .select(col(idCol))
       afterRef.join(keptIds, Seq(idCol), "left_semi")
+    })
+    // substring-granularity decontamination first (keep the doc), THEN
+    // the drop-mode n-gram stage judges the already-excised text
+    val excised = exciseLeaks(deduped, idCol, textCol, cfg)
+    // decontamination reads its corpus twice (gram scan + anti-join):
+    // the checkpoint runs the dedup shuffle + semi-join (the most
+    // expensive stage) once and fires the "after_dedup" observe once
+    val decontaminated = cfg.contaminationProbes.fold(excised)(p =>
+      tap("after_decontamination")(Contamination.decontaminate(
+        checkpoint(fanOut)(excised), p, idCol, textCol,
+        cfg.contaminationProbeTextCol, cfg.contaminationN,
+        cfg.maxContamination)))
+    // DSIR selection drops rows, so it carries its own observation;
+    // when observing, the checkpoint fires the upstream observes
+    // exactly once and keeps the weighting pass (two corpus reads:
+    // bucket counts + the weighted top-k) off the decontamination
+    // subtree
+    val selected = cfg.dsirTarget match {
+      case Some(_) => tap("after_dsir")(applyDsir(
+        checkpoint(observe)(decontaminated), idCol, textCol, cfg))
+      case None => applyDsir(decontaminated, idCol, textCol, cfg)
     }
-    // substring-granularity decontamination first (excise verbatim
-    // leaks, keep the doc — a pure per-row projection, no fan-out, no
-    // checkpoint needed), THEN the drop-mode n-gram stage judges the
-    // already-excised text
-    val excised0 = cfg.decontaminateExciseProbes match {
-      case Some(p) =>
-        Contamination.decontaminateExcise(deduped, p, idCol, textCol,
-          cfg.decontaminateExciseProbeTextCol, cfg.decontaminateExciseWindow)
-      case None => deduped
-    }
-    // near-verbatim excision AFTER the verbatim pass: exact cuts are
-    // cheap and deterministic, the fuzzy pass then only pays for the
-    // edited leaks verbatim windows cannot see
-    val excised = cfg.decontaminateFuzzyProbes match {
-      case Some(p) =>
-        Contamination.decontaminateFuzzy(excised0, p, idCol, textCol,
-          cfg.decontaminateFuzzyProbeTextCol, cfg.decontaminateFuzzyK,
-          cfg.decontaminateFuzzyW, charsCol = "near_contaminated_chars")
-      case None => excised0
-    }
-    // decontamination reads its corpus twice (gram scan + anti-join);
-    // under the persist knob the deduped survivors are checkpointed so
-    // the dedup shuffle + semi-join (the most expensive stage) run once
-    val decontaminated = cfg.contaminationProbes match {
-      case Some(p) =>
-        val src =
-          if (cfg.persistSurvivors) excised.localCheckpoint(true) else excised
-        Contamination.decontaminate(src, p, idCol, textCol,
-          cfg.contaminationProbeTextCol, cfg.contaminationN,
-          cfg.maxContamination)
-      case None => excised
-    }
-    val selected = applyDsir(decontaminated, idCol, textCol, cfg)
-    val sampled =
-      if (cfg.sampleFraction >= 1.0) selected
-      else Sampling.byHash(selected, idCol, cfg.sampleFraction, cfg.bucketFn)
-    applyTokenBudget(sampled, idCol, textCol, cfg)
+    val out = tap("kept")(applyTokenBudget(sample(selected, idCol, cfg),
+      idCol, textCol, cfg))
+    (out, obs.toSeq)
   }
 
   private def applyDsir(df: DataFrame, idCol: String, textCol: String,
@@ -476,27 +526,27 @@ object Curation {
         df
     }
 
-  /** The CONTINUOUS-INGEST curation pipeline: the same stage bodies as
-    * [[pipeline]], applied to a streaming DataFrame. Per-row stages
-    * (URL hygiene, HTML strip, mojibake repair, Unicode normalization,
-    * repetition filter, hash sampling) stream unchanged — they are
-    * stateless projections/filters, batch/stream parity is structural.
-    * Exact dedup becomes watermark-bounded first-occurrence dedup on
-    * the content hash (`dropDuplicatesWithinWatermark` — state stays
-    * bounded; a duplicate arriving later than `dedupHorizon` after its
-    * original is re-emitted, so size the horizon to the crawler's real
-    * re-fetch window).
+  /** The CONTINUOUS-INGEST curation pipeline: the same per-row prefix,
+    * excise stages and hash sample as [[pipeline]], applied to a
+    * streaming DataFrame — they are stateless projections/filters, so
+    * batch/stream parity is structural. Exact dedup becomes
+    * watermark-bounded first-occurrence dedup on the content hash
+    * (`dropDuplicatesWithinWatermark` — state stays bounded; a
+    * duplicate arriving later than `dedupHorizon` after its original
+    * is re-emitted, so size the horizon to the crawler's real re-fetch
+    * window).
     *
     * Corpus-wide stages CANNOT stream and are rejected loudly rather
-    * than silently skipped: line dedup, drop-mode decontamination and
-    * the token budget all need the whole corpus (doc frequencies /
-    * probe-overlap ratios / global running sums) — run them in a
-    * periodic batch compaction over the stream's output instead. The
-    * two probe-shaped stages DO stream, because their bounded side
-    * collects into a per-row expression: decontaminate-excise (probe
-    * window-hash index) and reference NEAR-dup
-    * ([[Dedup.nearDupRefIndex]] — band buckets + shingle sets of the
-    * snapshot, loud size caps, batch-identical verdicts).
+    * than silently skipped: line/substring dedup, soft dedup, drop-mode
+    * decontamination, DSIR and the token budget all need the whole
+    * corpus (doc frequencies / cluster sizes / probe-overlap ratios /
+    * global top-k / running sums) — run them in a periodic batch
+    * compaction over the stream's output instead. The two probe-shaped
+    * stages DO stream, because their bounded side collects into a
+    * per-row expression: decontaminate-excise (probe window-hash
+    * index) and reference NEAR-dup ([[Dedup.nearDupRefIndex]] — band
+    * buckets + shingle sets of the snapshot, loud size caps,
+    * batch-identical verdicts).
     * [[PipelineConfig.persistSurvivors]] is rejected under the same
     * loudness contract: micro-batches evaluate their plan once, so the
     * batch knob's storage-for-compute trade has nothing to buy here.
@@ -517,10 +567,7 @@ object Curation {
       throw graft.core.GraftError.Configuration(
         s"$name is corpus-wide and cannot stream — run it as a batch " +
           "compaction over the stream's output")
-    if (cfg.referenceNearDup.isDefined && cfg.referenceSnapshot.isEmpty)
-      throw graft.core.GraftError.Configuration(
-        "referenceNearDup needs a referenceSnapshot to match against")
-    requireBloomExactRef(cfg)
+    requireReferenceConfig(cfg)
     // not corpus-wide, but still meaningless on a stream: the knob's
     // localCheckpoint is a batch materialization, and each micro-batch
     // already evaluates its plan exactly once — reject rather than
@@ -529,35 +576,8 @@ object Curation {
       throw graft.core.GraftError.Configuration(
         "persistSurvivors cannot stream — micro-batches evaluate once; " +
           "there is no double-evaluation to trade storage against")
-    val afterUrls0 =
-      if (cfg.blocklist.isEmpty) df
-      else Urls.filterBlocked(df, textCol, cfg.blocklist)
-    val afterUrls1 =
-      if (cfg.stripTrackingParams) Urls.canonicalizeUrls(afterUrls0, textCol)
-      else afterUrls0
-    // consent is per-row (meta tags + optional crawl columns) — one of
-    // the stages that streams unchanged
-    val afterUrls = applyConsent(afterUrls1, textCol, cfg)
-    val afterStrip0 =
-      if (cfg.stripHtml) TextAnalysis.stripHtml(afterUrls, textCol)
-      else afterUrls
-    val afterStrip =
-      if (cfg.stripMarkdown) TextAnalysis.stripMarkdown(afterStrip0, textCol)
-      else afterStrip0
-    val afterFix =
-      if (cfg.fixMojibake) TextAnalysis.fixMojibake(afterStrip, textCol)
-      else afterStrip
-    val afterNorm = applyNormalize(afterFix, textCol, cfg)
-    val afterC4 = applyGopher(applyC4(afterNorm, textCol, cfg), textCol, cfg)
-    // per-row projection+filter over literal in-plan maps — the
-    // structural reason lang-id streams while the corpus-wide stages
-    // above are rejected
-    val afterLang = applyLangId(afterC4, textCol, cfg)
-    val afterCompress = applyCompressionBand(afterLang, textCol, cfg)
-    val afterRepetition = Repetition.filterRepetitive(afterCompress, textCol,
-      cfg.maxDupWordFrac, cfg.maxDupNgramFrac, cfg.maxTopNgramFrac,
-      cfg.repetitionN)
-    Guards.requireFreshColumns(afterRepetition, Seq("__cs_h"),
+    val filtered = perRow(df, textCol, cfg)
+    Guards.requireFreshColumns(filtered, Seq("__cs_h"),
       "Curation.pipelineStream")
     // cross-snapshot (incremental) dedup: ONE stream-static anti-join
     // on the content hash (Spark supports left_anti with a static
@@ -578,7 +598,7 @@ object Curation {
         require(!ref.isStreaming,
           "referenceSnapshot must be a static (batch) frame")
         val idx = Dedup.nearDupRefIndex(ref, textCol, threshold = th)
-        afterRepetition.filter(!Dedup.nearDupProbe(col(textCol), idx))
+        filtered.filter(!Dedup.nearDupProbe(col(textCol), idx))
       case (Some(ref), None) =>
         require(!ref.isStreaming,
           "referenceSnapshot must be a static (batch) frame")
@@ -598,41 +618,21 @@ object Curation {
           case Some(n) =>
             val (m, k) = Bloom.sizeFor(n, 0.01)
             val blob = Bloom.buildLocal(ref, hex(h), m, k)
-            afterRepetition.withColumn("__cs_h",
+            filtered.withColumn("__cs_h",
               when(graft.functions.BloomExprs.test(lit(blob),
                 graft.functions.BloomExprs.keyPositions(hex(h), m, k)), h))
-          case None => afterRepetition.withColumn("__cs_h", h)
+          case None => filtered.withColumn("__cs_h", h)
         }
         keyed.join(refHashes, Seq("__cs_h"), "left_anti")
           .drop("__cs_h")
-      case (None, _) => afterRepetition
+      case (None, _) => filtered
     }
     val deduped = afterRef
       .withColumn("__cs_h", Dedup.contentHash(Seq(textCol)))
       .withWatermark(tsCol, dedupHorizon)
       .dropDuplicatesWithinWatermark("__cs_h")
       .drop("__cs_h")
-    // substring-granularity decontamination STREAMS: the probe index
-    // is a bounded batch-side collect baked into a per-row projection
-    // (no join, no state) — unlike the drop-mode n-gram stage, whose
-    // corpus-ratio aggregation is rejected above
-    val excised0 = cfg.decontaminateExciseProbes match {
-      case Some(p) =>
-        Contamination.decontaminateExcise(deduped, p, idCol, textCol,
-          cfg.decontaminateExciseProbeTextCol, cfg.decontaminateExciseWindow)
-      case None => deduped
-    }
-    // the near-verbatim pass streams for the same structural reason
-    // (two bounded collected indexes, per-row projection)
-    val excised = cfg.decontaminateFuzzyProbes match {
-      case Some(p) =>
-        Contamination.decontaminateFuzzy(excised0, p, idCol, textCol,
-          cfg.decontaminateFuzzyProbeTextCol, cfg.decontaminateFuzzyK,
-          cfg.decontaminateFuzzyW, charsCol = "near_contaminated_chars")
-      case None => excised0
-    }
-    if (cfg.sampleFraction >= 1.0) excised
-    else Sampling.byHash(excised, idCol, cfg.sampleFraction, cfg.bucketFn)
+    sample(exciseLeaks(deduped, idCol, textCol, cfg), idCol, cfg)
   }
 
   private def applyConsent(df: DataFrame, textCol: String,
@@ -647,7 +647,6 @@ object Curation {
       TextAnalysis.c4Filter(df, textCol, cfg.c4MinWordsPerLine,
         cfg.c4MinSentences, cfg.c4BadWords)
     else df
-
   /** The full Gopher Table-A1.1 block as ONE fused text walk: the
     * 7-signal document filter ([[TextAnalysis.gopherFilter]]'s
     * published thresholds) AND the duplicate line/paragraph fractions
@@ -708,165 +707,4 @@ object Curation {
           .drop("__ct_toks")
       case None => df
     }
-
-  /** [[pipeline]] plus per-stage survivor counts — the drop accounting
-    * every production curation run records: "input", "after_urls",
-    * "after_repetition", "after_dedup", "kept", plus
-    * "after_reference" / "after_decontamination" when those optional
-    * stages are configured.
-    *
-    * The filter-stage counts ride ONE eager localCheckpoint of the
-    * filtered survivors via `observe` (an observe below the dedup's
-    * plan fan-out would otherwise be DUPLICATED into both branches of
-    * the tree — Catalyst plans are trees, not DAGs — and double-fire).
-    * The checkpoint also makes the dedup's two consumers read the
-    * materialized survivors instead of re-running the filter subtree,
-    * so observability costs storage for the survivor set, not extra
-    * compute; for pure throughput without the materialization use
-    * [[pipeline]]. Counts for the filter stages are final as soon as
-    * this returns; "after_dedup"/"kept" complete when the returned
-    * frame is consumed. */
-  def pipelineObserved(df: DataFrame, idCol: String, textCol: String,
-                       cfg: PipelineConfig = PipelineConfig())
-      : (DataFrame, () => Map[String, Long]) = {
-    import org.apache.spark.sql.Observation
-    def tap(frame: DataFrame, o: Observation): DataFrame =
-      frame.observe(o, count(lit(1)).as("n"))
-    warnStripEatsLines(cfg)
-    val oIn = Observation(); val oU = Observation(); val oR = Observation()
-    val oD = Observation(); val oOut = Observation()
-    val in = tap(df, oIn)
-    val afterUrls =
-      if (cfg.blocklist.isEmpty) in
-      else Urls.filterBlocked(in, textCol, cfg.blocklist)
-    // strip is a row-preserving projection: it rides between the oU tap
-    // and the repetition filter with no observation of its own
-    def stripped(d: DataFrame): DataFrame = {
-      val s0a =
-        if (cfg.stripTrackingParams) Urls.canonicalizeUrls(d, textCol) else d
-      // consent drops rows per-row like C4/lang-id below: its drops
-      // fold into the "after_repetition" count, and it must see the
-      // RAW markup, so it rides before the strips
-      val s0 = applyConsent(s0a, textCol, cfg)
-      val s1 = if (cfg.stripHtml) TextAnalysis.stripHtml(s0, textCol) else s0
-      val s1b =
-        if (cfg.stripMarkdown) TextAnalysis.stripMarkdown(s1, textCol) else s1
-      val s2 =
-        if (cfg.fixMojibake) TextAnalysis.fixMojibake(s1b, textCol) else s1b
-      // C4 rules, lang-id and the compression band are per-row
-      // filters like repetition; their drops fold into the
-      // "after_repetition" count. (lang-id was MISSING here until r12
-      // — the capstone yaml e2e caught `observed: true` silently
-      // skipping the language filter while the lazy pipeline applied
-      // it; same stage order as pipeline(): normalize → C4 rules →
-      // lang-id → compression band)
-      applyCompressionBand(
-        applyLangId(
-          applyGopher(
-            applyC4(applyNormalize(s2, textCol, cfg), textCol, cfg),
-            textCol, cfg),
-          textCol, cfg),
-        textCol, cfg)
-    }
-    val r = tap(Repetition.filterRepetitive(stripped(tap(afterUrls, oU)), textCol,
-        cfg.maxDupWordFrac, cfg.maxDupNgramFrac, cfg.maxTopNgramFrac,
-        cfg.repetitionN), oR)
-      .localCheckpoint(true) // filter observes fire here, exactly once
-    // line + substring rewrites keep every row (counts unchanged), so
-    // they carry no observation; each IS checkpointed so dedup's two
-    // consumers read the rewritten rows instead of re-running the
-    // rewrite joins
-    val r2a = cfg.lineDedupMinDocs match {
-      case Some(k) =>
-        Paragraphs.dropCommon(r, idCol, textCol, k).localCheckpoint(true)
-      case None => r
-    }
-    val r2 = cfg.substringDedupWindow match {
-      case Some(w) =>
-        // observed runs always trade storage for single evaluation
-        SubstringDedup.excise(r2a, idCol, textCol, w = w, persist = true)
-          .localCheckpoint(true)
-      case None => r2a
-    }
-    // incremental (cross-snapshot) dedup: it DROPS rows, so it carries
-    // its own observation, and the checkpoint both fires that observe
-    // exactly once and keeps the stage's anti-join out of the dedup
-    // fan-out below
-    val (r3, refObs) = cfg.referenceSnapshot match {
-      case Some(ref) =>
-        val oRef = Observation()
-        (tap(Dedup.againstReference(r2, ref, idCol, Seq(textCol)), oRef)
-          .localCheckpoint(true),
-          Seq("after_reference" -> oRef))
-      case None => (r2, Nil)
-    }
-    // under softDedup "after_dedup" equals the stage's input count —
-    // rows gain (dup_count, weight) instead of dropping
-    val d = if (cfg.softDedup) {
-      Guards.requireFreshColumns(df, Seq("dup_count", "weight"),
-        "Curation.pipelineObserved(softDedup)")
-      val wts = Dedup.softWeights(
-        Dedup.exact(r3, idCol, Seq(textCol)), idCol)
-        .select(col(idCol), col("dup_count"), col("weight"))
-      tap(r3.join(wts, Seq(idCol)), oD)
-    } else {
-      val keptIds = r3
-        .select(col(idCol), Dedup.contentHash(Seq(textCol)).as("__h"))
-        .groupBy(col("__h")).agg(min(col(idCol)).as(idCol))
-        .select(col(idCol))
-      tap(r3.join(keptIds, Seq(idCol), "left_semi"), oD)
-    }
-    // substring-granularity excision keeps every row (counts
-    // unchanged), so like the other row-preserving rewrites it carries
-    // no observation of its own; the near-verbatim pass follows the
-    // verbatim one exactly as in [[pipeline]]
-    val dE0 = cfg.decontaminateExciseProbes match {
-      case Some(p) =>
-        Contamination.decontaminateExcise(d, p, idCol, textCol,
-          cfg.decontaminateExciseProbeTextCol, cfg.decontaminateExciseWindow)
-      case None => d
-    }
-    val dE = cfg.decontaminateFuzzyProbes match {
-      case Some(p) =>
-        Contamination.decontaminateFuzzy(dE0, p, idCol, textCol,
-          cfg.decontaminateFuzzyProbeTextCol, cfg.decontaminateFuzzyK,
-          cfg.decontaminateFuzzyW, charsCol = "near_contaminated_chars")
-      case None => dE0
-    }
-    // decontamination reads its corpus twice (gram scan + anti-join);
-    // without a checkpoint the oD observe above would be duplicated
-    // into both reads and double-fire — same fan-out rule as the
-    // filter stages
-    val (afterDecon, deconObs) = cfg.contaminationProbes match {
-      case Some(p) =>
-        val dd = dE.localCheckpoint(true) // oD fires here, exactly once
-        val oC = Observation()
-        (tap(Contamination.decontaminate(dd, p, idCol, textCol,
-          cfg.contaminationProbeTextCol, cfg.contaminationN,
-          cfg.maxContamination), oC),
-          Seq("after_decontamination" -> oC))
-      case None => (dE, Nil)
-    }
-    // DSIR selection drops rows, so it carries its own observation;
-    // the checkpoint fires the upstream observes exactly once and
-    // keeps the weighting pass (two corpus reads: bucket counts + the
-    // weighted top-k) off the decontamination subtree
-    val (afterDsir, dsirObs) = cfg.dsirTarget match {
-      case Some(_) =>
-        val oS = Observation()
-        (tap(applyDsir(afterDecon.localCheckpoint(true), idCol, textCol,
-          cfg), oS), Seq("after_dsir" -> oS))
-      case None => (applyDsir(afterDecon, idCol, textCol, cfg), Nil)
-    }
-    val sampled =
-      if (cfg.sampleFraction >= 1.0) afterDsir
-      else Sampling.byHash(afterDsir, idCol, cfg.sampleFraction, cfg.bucketFn)
-    val out = tap(applyTokenBudget(sampled, idCol, textCol, cfg), oOut)
-    val obs = Seq("input" -> oIn, "after_urls" -> oU,
-      "after_repetition" -> oR) ++ refObs ++ Seq("after_dedup" -> oD) ++
-      deconObs ++ dsirObs ++ Seq("kept" -> oOut)
-    (out, () => obs.map { case (n, o) =>
-      n -> o.get("n").asInstanceOf[Long]
-    }.toMap)
-  }
 }

@@ -193,20 +193,11 @@ object Connectors {
         spark.readStream.schema(spark.read.orc(ref.path).schema)
           .orc(ref.path)
       case "csv" =>
-        // same NUL-wrapped null sentinel as CellInference.readCsv ("",
-        // not null, must reach classify; no legal CSV cell can equal it)
-        val sentinel = "\u0000never\u0000"
-        val rawBatch = spark.read
-          .option("header", "true")
-          .option("inferSchema", "false")
-          .option("nullValue", sentinel)
-          .option("escape", "\"") // RFC 4180, as CellInference.readCsv
+        val rawBatch = spark.read.options(CellInference.RawCsvOptions)
           .csv(ref.path)
         val cols = CellInference.inferColumns(rawBatch)
         val rawStream = spark.readStream.schema(rawBatch.schema)
-          .option("header", "true")
-          .option("nullValue", sentinel)
-          .option("escape", "\"")
+          .options(CellInference.RawCsvOptions)
           .csv(ref.path)
         CellInference.applyTypes(rawStream, cols)
       case other => throw graft.core.GraftError.Configuration(

@@ -1328,6 +1328,13 @@ class CliSpec extends SparkSpec {
     intercept[GraftError.Configuration](
       runCurationStream(r.cfg,
         cur.copy(persistSurvivors = true), None, false, "error"))
+    // corpus-wide knobs on an API-built spec reach pipelineStream's own
+    // rejection instead of being dropped on the way
+    for (c <- Seq(cur.copy(softDedup = true),
+        cur.copy(lineDedupMinDocs = Some(4)),
+        cur.copy(tokenBudget = Some(1000L))))
+      intercept[GraftError.Configuration](
+        runCurationStream(r.cfg, c, None, false, "error"))
   }
 
   test("profile subcommand: parse forms, box output, typed errors") {

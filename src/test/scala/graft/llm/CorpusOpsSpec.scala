@@ -1137,6 +1137,11 @@ class CorpusOpsSpec extends SparkSpec {
     assert(Curation.pipeline(corpus, "doc_id", "text",
         loose.copy(referenceNearDup = Some(0.5)))
       .select("doc_id").as[Long].collect().toSet == Set(3L))
+    // the observed pipeline runs the same near-dup reference stage
+    val (observedKept, counts) = Curation.pipelineObserved(corpus, "doc_id",
+      "text", loose.copy(referenceNearDup = Some(0.5)))
+    assert(observedKept.select("doc_id").as[Long].collect().toSet == Set(3L))
+    assert(counts()("after_reference") == 1L)
     // near-dup without a snapshot is loud
     intercept[graft.core.GraftError.Configuration](
       Curation.pipeline(corpus, "doc_id", "text",

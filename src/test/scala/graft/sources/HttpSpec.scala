@@ -12,6 +12,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 class HttpSpec extends SparkSpec {
 
   private val csvBody = "id,name\n1,alpha\n2,beta\n3,gamma\n"
+  private val countedGets = new java.util.concurrent.atomic.AtomicInteger
 
   private def withServer(f: Int => Unit): Unit = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
@@ -39,6 +40,10 @@ class HttpSpec extends SparkSpec {
       if (Option(ex.getRequestHeaders.getFirst("X-Api-Key")).contains("k9"))
         respond(ex, 200, csvBody)
       else respond(ex, 403, "forbidden")
+    })
+    server.createContext("/counted.csv", (ex: HttpExchange) => {
+      countedGets.incrementAndGet()
+      respond(ex, 200, "id,name\n1,alpha\n,beta\n3,gamma\n")
     })
     server.createContext("/boom.csv", (ex: HttpExchange) =>
       respond(ex, 500, "internal oops"))
@@ -105,6 +110,25 @@ class HttpSpec extends SparkSpec {
         Connectors.read(spark, s"http://127.0.0.1:$port/header",
           Map("header.X-Api-Key" -> "k9")))
       assert(e.getMessage.contains("sourceType"))
+    }
+  }
+
+  test("a quarantine transfer downloads its source once") {
+    withServer { port =>
+      val dir = tmpDir("http_quarantine")
+      val schema = s"$dir/schema.yaml"
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(schema),
+        "columns:\n  - name: id\n    type: integer\n    nullable: false\n")
+      val cfg = graft.engine.JobConfig(
+        source = s"http://127.0.0.1:$port/counted.csv",
+        target = s"$dir/good.parquet",
+        schemaFile = Some(schema),
+        quarantine = Some(s"$dir/bad.parquet"))
+      countedGets.set(0)
+      assert(graft.Main.runTransfer(cfg, None, dryRun = false, "error") == 0)
+      assert(countedGets.get == 1)
+      assert(spark.read.parquet(s"$dir/good.parquet").count() == 2)
+      assert(spark.read.parquet(s"$dir/bad.parquet").count() == 1)
     }
   }
 }
