@@ -139,11 +139,10 @@ class TransferEngine(cfg: JobConfig) {
       throw graft.core.GraftError.Configuration(
         "skipExisting requires primaryKey (no id-like integer column found)"))
 
-  /** Execute the copy (write path). Row stats come from an
-    * `Observation` riding the write job itself (U4) — one pass, no
-    * re-read of the written target, no second scan of the source. The
-    * RDD-based Avro sink can't fire Dataset listeners; it counts rows
-    * while writing and returns the count directly. */
+  /** Execute the copy (write path). Row stats come from
+    * [[Connectors.countedWrite]], riding each write job itself (U4) —
+    * one pass, no re-read of the written target, no second scan of the
+    * source. */
   def execute(spark: SparkSession): TransferStats = {
     import org.apache.spark.sql.functions.{col, concat_ws}
     val t0 = System.nanoTime()
@@ -154,30 +153,14 @@ class TransferEngine(cfg: JobConfig) {
     // failing main write still leaves the rejects inspectable
     val rejected = invalid.fold(0L) { inv =>
       val target = cfg.quarantine.get
-      countedWrite(
-        inv.withColumn("_violations", concat_ws("|", col("_violations"))),
-        target, Map.empty, s"quarantine $target")
+      val flat = inv.withColumn("_violations", concat_ws("|", col("_violations")))
+      Connectors.countedWrite(flat, s"quarantine $target")(
+        Connectors.write(_, target, cfg.truncate))
     }
-    val rows = countedWrite(exactDecimals(applyTransforms(spark, valid)),
-      cfg.target, cfg.targetOptions, cfg.target)
+    val out = exactDecimals(applyTransforms(spark, valid))
+    val rows = Connectors.countedWrite(out, cfg.target)(
+      Connectors.write(_, cfg.target, cfg.truncate, cfg.targetOptions))
     TransferStats(rows, (System.nanoTime() - t0) / 1e9, rejected)
-  }
-
-  /** One sink write, its row count riding the write job itself. */
-  private def countedWrite(df: DataFrame, target: String,
-                           options: Map[String, String], what: String): Long = {
-    import org.apache.spark.sql.Observation
-    import org.apache.spark.sql.functions.{count, lit}
-    val obs = Observation()
-    val direct =
-      try Connectors.write(df.observe(obs, count(lit(1)).as("rows")),
-        target, cfg.truncate, options)
-      catch {
-        case e: graft.core.GraftError => throw e // already typed
-        case e: Exception => throw graft.core.GraftError.DataTransfer(
-          s"writing $what failed: ${e.getMessage}", e)
-      }
-    direct.getOrElse(obs.get("rows").asInstanceOf[Long])
   }
 
   /** Write-boundary cast for `decimalMode = "exact"`: every floating

@@ -57,11 +57,18 @@ object LmScore {
     * stops being its own driver ACTION — the extra tokenize pass it
     * cost folds into the scoring plan, where exchange reuse collapses
     * it with the vocabulary build (round-19, guide §5: exchange reuse
-    * cannot span separate actions). An empty/token-less corpus yields
-    * a null `__total` (the Long form throws instead — callers that
-    * need the loud guard keep using it). */
+    * cannot span separate actions). */
   def totalTokensDf(df: DataFrame, textCol: String): DataFrame =
     wordCounts(df, textCol).agg(sum(col("cnt")).as("__total"))
+
+  /** A [[totalTokensDf]] frame that fails the scoring plan when
+    * `__total` is null or < 1 (an empty or token-less corpus) — the
+    * frame overloads' twin of the Long overloads' `require`. */
+  private def checkedTotal(total: DataFrame): DataFrame =
+    total.select(when(col("__total").isNull || col("__total") < 1,
+        raise_error(lit("total tokens must be >= 1 " +
+          "(empty or token-less corpus)")))
+      .otherwise(col("__total")).as("__total"))
 
   /** `(id, prev, word)` token stream with `prev = null` on each
     * document's first token — built SHUFFLE-FREE from one array
@@ -138,8 +145,8 @@ object LmScore {
                   alpha: Double, roundTo: Int): DataFrame = {
     Guards.requireFreshColumns(df, Seq("__total"), "LmScore.scoreBigram")
     scoreBigramImpl(df, idCol, textCol, vocab, bigrams,
-      _.crossJoin(broadcast(total)), col("__total").cast("double"),
-      alpha, roundTo)
+      _.crossJoin(broadcast(checkedTotal(total))),
+      col("__total").cast("double"), alpha, roundTo)
   }
 
   def scoreBigram(df: DataFrame, idCol: String, textCol: String,
@@ -192,7 +199,8 @@ object LmScore {
   def score(df: DataFrame, idCol: String, textCol: String,
             vocab: DataFrame, total: DataFrame, roundTo: Int): DataFrame = {
     Guards.requireFreshColumns(df, Seq("__total"), "LmScore.score")
-    scoreImpl(df, idCol, textCol, vocab, _.crossJoin(broadcast(total)),
+    scoreImpl(df, idCol, textCol, vocab,
+      _.crossJoin(broadcast(checkedTotal(total))),
       col("__total").cast("double"), roundTo)
   }
 

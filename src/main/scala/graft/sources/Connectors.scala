@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.infer.CellInference
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 
 /** URI → reader/writer routing (S14/T11,
   * `/root/reference/src/connectors/mod.rs:67-239`,
@@ -427,6 +427,27 @@ object Connectors {
         None
       case other => throw UnsupportedUri(other, Supported)
     }
+  }
+
+  /** One sink write with its row count: `write` runs `df` tapped by a
+    * `count(lit(1))` [[Observation]], so the count rides the write job
+    * itself (one pass, no re-read of the target); a sink that counts
+    * rows directly (`write` returns Some, e.g. the RDD-based Avro path,
+    * which fires no Dataset listener) wins. Failures other than a typed
+    * [[graft.core.GraftError]] become `DataTransfer("writing $what
+    * failed")`. */
+  def countedWrite(df: DataFrame, what: String)(
+      write: DataFrame => Option[Long]): Long = {
+    import org.apache.spark.sql.functions.{count, lit}
+    val obs = Observation()
+    val direct =
+      try write(df.observe(obs, count(lit(1)).as("rows")))
+      catch {
+        case e: graft.core.GraftError => throw e // already typed
+        case e: Exception => throw graft.core.GraftError.DataTransfer(
+          s"writing $what failed: ${e.getMessage}", e)
+      }
+    direct.getOrElse(obs.get("rows").asInstanceOf[Long])
   }
 
   /** Sink DDL type maps from the reference, via createTableColumnTypes:

@@ -380,11 +380,48 @@ class CliSpec extends SparkSpec {
     val t3 = parse(List("a.csv", "b.parquet",
       "--transform", "--x=1; y=row.a")).asInstanceOf[Transfer]
     assert(t3.cfg.transform.inline.contains("--x=1; y=row.a"))
+    // ... even when it reads like one of the verb's own --flag=value pairs
+    val t4 = parse(List("a.csv", "b.parquet",
+      "--transform", "--log-level=warn")).asInstanceOf[Transfer]
+    assert(t4.cfg.transform.inline.contains("--log-level=warn"))
+    // --flag=value works for every value flag of every verb
+    assert(parse(List("check", "a.csv", "--rules=r.yaml"))
+      .asInstanceOf[CheckCmd].rulesFile == "r.yaml")
+    val smp = parse(List("sample", "in", "out", "--id=doc_id",
+      "--fraction=0.5")).asInstanceOf[SampleCmd]
+    assert(smp.id == "doc_id" && smp.fraction.contains(0.5))
     // a stray flag value names itself, not a misleading SOURCE/TARGET error
     val e = intercept[GraftError.Configuration](
       parse(List("a.csv", "b.parquet", "--infer-schema", "yes")))
     assert(e.getMessage.contains("unexpected argument") &&
       e.getMessage.contains("yes"))
+  }
+
+  test("usage lists every flag each verb's parser accepts") {
+    val lines = usage.linesIterator.toVector
+    val options = lines.dropWhile(_ != "Options:").mkString("\n")
+    // a verb's usage entry: its `graft <verb>` line and the indented
+    // continuation lines up to the next entry
+    def entry(verb: String): String = {
+      val from = lines.indexWhere(_.contains(s"graft $verb "))
+      assert(from >= 0, s"usage has no 'graft $verb' entry")
+      (lines(from) +: lines.drop(from + 1)
+        .takeWhile(l => l.trim.nonEmpty && !l.contains("graft ")))
+        .mkString("\n")
+    }
+    def mentions(text: String, flag: String): Boolean =
+      s"(?<![\\w-])${java.util.regex.Pattern.quote(flag)}(?![\\w-])".r
+        .findFirstIn(text).isDefined
+    // --log-level applies to every verb and is documented once, under Options
+    assert(mentions(options, "--log-level"))
+    (transfer +: subcommands.values.toSeq).foreach { v =>
+      val text = if (v == transfer) options else entry(v.name)
+      (v.flags - "--log-level").foreach { f =>
+        assert(mentions(text, f),
+          s"usage for '${if (v == transfer) "transfer" else v.name}' " +
+            s"does not mention $f")
+      }
+    }
   }
 
   test("--source-type forces the format for extension-less local files") {

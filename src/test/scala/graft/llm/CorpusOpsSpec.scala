@@ -1429,6 +1429,15 @@ class CorpusOpsSpec extends SparkSpec {
     // guard: clash with an output column is loud
     intercept[IllegalArgumentException](LmScore.score(
       d.withColumn("n_tokens", lit(1L)), "doc_id", "text", vocab, total))
+    // guard: a token-less corpus has no denominator — the frame form
+    // fails in-plan, as the Long form's require does
+    val tokenless = Seq((5L, ""), (6L, null.asInstanceOf[String]))
+      .toDF("doc_id", "text")
+    val noTotal = intercept[Exception](LmScore.score(
+      d.filter(col("doc_id") <= 2L), "doc_id", "text", vocab,
+      LmScore.totalTokensDf(tokenless, "text")).collect())
+    assert((Option(noTotal.getMessage) ++ Option(noTotal.getCause)
+      .map(_.getMessage)).exists(_.contains("total tokens")), noTotal)
   }
 
   test("collocations: PMI separates bound pairs from frequent-independent") {
@@ -1539,6 +1548,15 @@ class CorpusOpsSpec extends SparkSpec {
     intercept[IllegalArgumentException](LmScore.scoreBigram(
       d.withColumn("bcnt", lit(1L)), "doc_id", "text", vocab,
       LmScore.bigramCounts(d, "text", vocab), total))
+    // guard: a token-less corpus has no denominator — the frame form
+    // fails in-plan, as the Long form's require does
+    val tokenless = d.filter(col("doc_id") >= 4L)
+    val noTotal = intercept[Exception](LmScore.scoreBigram(
+      d.filter(col("doc_id") <= 2L), "doc_id", "text", vocab,
+      LmScore.bigramCounts(d, "text", vocab),
+      LmScore.totalTokensDf(tokenless, "text")).collect())
+    assert((Option(noTotal.getMessage) ++ Option(noTotal.getCause)
+      .map(_.getMessage)).exists(_.contains("total tokens")), noTotal)
   }
 
   // --- Repeated spans ---------------------------------------------------
