@@ -5,8 +5,9 @@ import java.time.format.{DateTimeFormatter, DateTimeFormatterBuilder, ResolverSt
 import java.time.temporal.ChronoField
 import java.util.Locale
 
+import graft.functions.DateExprs
+
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /** Ordered multi-format date/datetime parsing.
   *
@@ -17,11 +18,17 @@ import org.apache.spark.sql.functions._
   * date_parser.rs:67-68) is preserved exactly — oracle hashes depend
   * on it.
   *
-  * Exposed two ways from one format list:
-  *  - [[parseExpr]]: a `coalesce(try_to_timestamp(c, f1), ...)` Column —
-  *    fully codegen'd, distributed, no UDF.
+  * Exposed two ways from one format list and one [[guard]]:
+  *  - [[parseExpr]]: the native `ParseDateChain` kernel (DateExprs) —
+  *    codegen'd, distributed, no UDF. It trims each cell once, skips
+  *    every format whose required literal characters the cell lacks,
+  *    and parses the rest in order with the formatters of Spark's own
+  *    try-to-timestamp function, so it equals a `coalesce` of those
+  *    calls on `trim(c)` cell for cell without an exception per format
+  *    that fails.
   *  - [[tryParse]]: driver-side Scala parsing for sampled schema
-  *    inference (bounded at 1000 rows, so driver-side is scale-safe).
+  *    inference (bounded at 1000 rows, so driver-side is scale-safe),
+  *    skipping formats by the same literal table.
   */
 object DateFormats {
 
@@ -76,13 +83,11 @@ object DateFormats {
 
   val all: Seq[String] = isoTz ++ isoNoTz ++ dateOnly ++ dateTime
 
-  /** Distributed parse: first format that succeeds wins, null if none.
-    * Pure built-in expressions → whole-stage codegen, no UDF. */
-  def parseExpr(c: Column): Column = {
-    val trimmed = trim(c)
-    val attempts = all.map(f => try_to_timestamp(trimmed, lit(f)))
-    coalesce(attempts: _*)
-  }
+  /** The literal characters each format of [[all]] requires. */
+  private val guard: DateExprs.LiteralGuard = DateExprs.LiteralGuard(all)
+
+  /** Distributed parse: first format that succeeds wins, null if none. */
+  def parseExpr(c: Column): Column = DateExprs.parseDateChain(c, guard)
 
   /** Quick heuristic prefilter (mirrors date_parser.rs:120-173): a cell
     * must contain a digit and a date-ish separator to be worth the full
@@ -104,28 +109,34 @@ object DateFormats {
       .toFormatter(Locale.US)
       .withResolverStyle(ResolverStyle.STRICT)
 
-  private lazy val isoTzF = isoTz.map(fmt)
-  private lazy val isoNoTzF = isoNoTz.map(fmt)
-  private lazy val dateOnlyF = dateOnly.map(fmt)
-  private lazy val dateTimeF = dateTime.map(fmt)
+  /** A group's formatters, each with its index in [[all]]. */
+  private def indexed(group: Seq[String]): Seq[(Int, DateTimeFormatter)] =
+    group.map(p => (all.indexOf(p), fmt(p)))
 
-  private def attempt[T](fs: Seq[DateTimeFormatter], s: String)(
-      parse: (DateTimeFormatter, String) => T): Option[T] =
-    fs.iterator.flatMap { f =>
-      try Some(parse(f, s))
-      catch { case _: Exception => None }
+  private lazy val isoTzF = indexed(isoTz)
+  private lazy val isoNoTzF = indexed(isoNoTz)
+  private lazy val dateOnlyF = indexed(dateOnly)
+  private lazy val dateTimeF = indexed(dateTime)
+
+  private def attempt[T](fs: Seq[(Int, DateTimeFormatter)], s: String,
+      present: Int)(parse: (DateTimeFormatter, String) => T): Option[T] =
+    fs.iterator.filter { case (i, _) => guard.admits(i, present) }.flatMap {
+      case (_, f) =>
+        try Some(parse(f, s))
+        catch { case _: Exception => None }
     }.nextOption()
 
   /** Driver-side equivalent of [[parseExpr]] for a single cell. */
   def tryParse(value: String): Option[Instant] = {
     val s = value.trim
     if (s.isEmpty || !mightBeDate(s)) return None
-    attempt(isoTzF, s)((f, v) => Instant.from(f.parse(v)))
-      .orElse(attempt(isoNoTzF, s)((f, v) =>
+    val present = guard.present(s)
+    attempt(isoTzF, s, present)((f, v) => Instant.from(f.parse(v)))
+      .orElse(attempt(isoNoTzF, s, present)((f, v) =>
         LocalDateTime.parse(v, f).toInstant(ZoneOffset.UTC)))
-      .orElse(attempt(dateOnlyF, s)((f, v) =>
+      .orElse(attempt(dateOnlyF, s, present)((f, v) =>
         LocalDate.parse(v, f).atStartOfDay.toInstant(ZoneOffset.UTC)))
-      .orElse(attempt(dateTimeF, s)((f, v) =>
+      .orElse(attempt(dateTimeF, s, present)((f, v) =>
         LocalDateTime.parse(v, f).toInstant(ZoneOffset.UTC)))
   }
 
@@ -133,7 +144,8 @@ object DateFormats {
     * declare Date vs DateTime in inferred schemas. */
   def isDateOnly(value: String): Boolean = {
     val s = value.trim
-    attempt(isoTzF ++ isoNoTzF, s)((f, v) => f.parse(v)).isEmpty &&
-      attempt(dateOnlyF, s)((f, v) => LocalDate.parse(v, f)).isDefined
+    val present = guard.present(s)
+    attempt(isoTzF ++ isoNoTzF, s, present)((f, v) => f.parse(v)).isEmpty &&
+      attempt(dateOnlyF, s, present)((f, v) => LocalDate.parse(v, f)).isDefined
   }
 }

@@ -293,6 +293,34 @@ class PlanSpec extends SparkSpec {
       "scan → filter → derive must be one narrow stage")
   }
 
+  test("CSV date columns: one native ParseDateChain each, inside whole-stage codegen") {
+    import graft.functions.DateExprs.ParseDateChain
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    val dir = tmpDir("plan_csv_dates")
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/in.csv"),
+      "id,shipped,note,received\n1,2023-12-25,a,12/26/2023\n2,15.3.1995,b,2023-01-05T10:30:00Z\n"
+        .getBytes("UTF-8"))
+    val df = graft.sources.Connectors.read(spark, s"$dir/in.csv")
+    assert(df.schema("shipped").dataType == org.apache.spark.sql.types.TimestampType &&
+      df.schema("received").dataType == org.apache.spark.sql.types.TimestampType)
+    val optimized = df.queryExecution.optimizedPlan
+    val names = optimized.flatMap(_.expressions.flatMap(_.collect { case e => e.prettyName }))
+    assert(!names.exists(n => n == "gettimestamp" || n == "try_to_timestamp"),
+      s"generic timestamp parsing in the plan:\n$optimized")
+    val kernels = optimized.flatMap(_.expressions.flatMap(_.collect {
+      case k: ParseDateChain => k }))
+    assert(kernels.size == 2, s"want one ParseDateChain per date column:\n$optimized")
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+      case p => p
+    }
+    val fused = plan.collect { case w: WholeStageCodegenExec =>
+      w.child.flatMap(_.expressions.flatMap(_.collect { case k: ParseDateChain => k }))
+    }.flatten
+    assert(fused.size == 2, s"ParseDateChain outside whole-stage codegen:\n$plan")
+  }
+
   test("repetition stats and chunking are shuffle-free codegen'd projections") {
     val rep = graft.llm.Repetition.stats(sf("documents"), "text")
     assert(shuffleOutputs(rep).isEmpty,

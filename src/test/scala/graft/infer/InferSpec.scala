@@ -71,6 +71,63 @@ class InferSpec extends SparkSpec {
     }
   }
 
+  test("parseExpr equals the try_to_timestamp chain cell for cell " +
+       "(codegen and interpreted, two session zones)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{coalesce, col, lit, trim, try_to_timestamp}
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import java.time.{OffsetDateTime, ZoneOffset}
+    import java.time.format.DateTimeFormatter
+
+    // every pattern rendered from seeded instants: 1-digit fields,
+    // offsets, fractions and AM/PM come from the draws
+    val rnd = new scala.util.Random(20231225L)
+    val rendered = DateFormats.all.flatMap { p =>
+      val f = DateTimeFormatter.ofPattern(p, java.util.Locale.US)
+      Seq.fill(12) {
+        val at = OffsetDateTime.of(1970 + rnd.nextInt(130), 1 + rnd.nextInt(12),
+          1 + rnd.nextInt(28), rnd.nextInt(24), rnd.nextInt(60), rnd.nextInt(60),
+          rnd.nextInt(1000000) * 1000,
+          ZoneOffset.ofTotalSeconds((rnd.nextInt(105) - 48) * 900))
+        at.format(f)
+      }
+    }
+    val cells: Seq[String] = rendered ++ rendered.map(c => s"  $c ") ++
+      rendered.map(_.toLowerCase) ++ rendered.map("\t" + _) ++
+      Seq("Mar 15, 1995", "2023-02-30", "2023-01-05x", "someday", "", null)
+    val oracle = coalesce(DateFormats.all.map(f =>
+      try_to_timestamp(trim(col("s")), lit(f))): _*)
+
+    val modes = Seq(
+      Map("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.wholeStage" -> "true", "spark.sql.codegen.fallback" -> "false"),
+      Map("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false"))
+    try {
+      for (mode <- modes; zone <- Seq("UTC", "America/New_York")) {
+        (mode + ("spark.sql.session.timeZone" -> zone)).foreach {
+          case (k, v) => spark.conf.set(k, v)
+        }
+        // an RDD-backed frame: a local relation would be folded by the
+        // optimizer instead of running the generated code
+        val df = spark.createDataFrame(
+          spark.sparkContext.parallelize(cells.map(Row(_)), 4),
+          StructType(Seq(StructField("s", StringType))))
+        val rows = df.select(col("s"), DateFormats.parseExpr(col("s")), oracle).collect()
+        assert(rows.length == cells.length)
+        val mismatches = rows.filter(r => r.get(1) != r.get(2))
+        assert(mismatches.isEmpty,
+          s"$mode $zone: ${mismatches.take(5).mkString("; ")}")
+        val parsed = rows.filter(r => !r.isNullAt(2)).map(_.getString(0)).toSet
+        assert(rendered.forall(parsed), s"$zone: a rendered pattern did not parse")
+      }
+    } finally {
+      Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage",
+        "spark.sql.codegen.fallback").foreach(spark.conf.unset)
+      spark.conf.set("spark.sql.session.timeZone", "UTC")
+    }
+  }
+
   test("cell classification lattice (csv.rs:82-111)") {
     assert(CellInference.classify("123") == TInteger)
     assert(CellInference.classify("-42") == TInteger)
