@@ -723,7 +723,7 @@ object SparkEntry {
       val db = scratch("derby_rt_" + ProcessHandle.current().pid())
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(db))
       // derby.system.home is set once at harness startup
-      // (Logs.derbyHomeToScratch in Bench/Verify/TestSpark mains) —
+      // (Logs.derbyHomeToScratch in Verify and TestSpark) —
       // never from inside a query fn: the property is read a single
       // time at engine boot, so a late set here would be a racy no-op.
       val uri = s"jdbc:derby:$db/rt;create=true#supplier"

@@ -36,7 +36,7 @@ object Verify {
       // drop stale cache entries + checkpoint blocks between queries —
       // 244 queries share this JVM, and operators that persist fan-out
       // frames would otherwise pile registry entries / blocks onto
-      // later queries (same hygiene as Bench.settle, without the GC)
+      // later queries
       try spark.sharedState.cacheManager.clearCache()
       catch { case _: Throwable => () }
       spark.sparkContext.getPersistentRDDs.values

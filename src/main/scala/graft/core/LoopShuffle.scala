@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * exchanges from a MEASURED per-round row count — one cheap count of
   * an already-checkpointed frame — instead of inheriting the global
   * `spark.sql.shuffle.partitions`, so a 100× run needs no hand-tuned
-  * `SPARK_GRAFT_SHUFFLE`.
+  * global shuffle width.
   */
 object LoopShuffle {
 

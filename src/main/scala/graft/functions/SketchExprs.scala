@@ -357,8 +357,8 @@ object SketchExprs {
 
   /** [[ShingleHash]] with a FIXED-WIDTH BINARY payload: the identical
     * sorted-distinct long image (shared [[ShingleHash.longs]] core),
-    * laid out as 8-byte native-order entries in one byte[] instead of
-    * ArrayType(Long).
+    * laid out as 8-byte little-endian entries in one byte[] instead of
+    * ArrayType(Long) (see [[PackedLayout]]).
     *
     * Why (round-19, guide §1.2 step 2 / §5): the dedup families'
     * candidate-VERIFY stages carry each candidate document's shingle
@@ -399,7 +399,7 @@ object SketchExprs {
       while (i < arr.length) {
         org.apache.spark.unsafe.Platform.putLong(out,
           org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + (i.toLong << 3),
-          arr(i))
+          PackedLayout.littleEndian(arr(i)))
         i += 1
       }
       out
@@ -961,7 +961,7 @@ object SketchExprs {
 
   /** [[JaccardSorted]] over two PACKED shingle sets
     * ([[ShingleHashPacked]] payloads: sorted-distinct longs as 8-byte
-    * native-order entries in one byte[]). Identical merge, identical
+    * little-endian entries in one byte[]). Identical merge, identical
     * result for the same hash image — the longs are read in place
     * from the binary cell, so the verify inner loop never unpacks an
     * array per comparison. */
@@ -986,8 +986,10 @@ object SketchExprs {
       if (na == 0 && nb == 0) return 1.0d
       var i = 0; var j = 0; var inter = 0
       while (i < na && j < nb) {
-        val x = org.apache.spark.unsafe.Platform.getLong(a, off + (i.toLong << 3))
-        val y = org.apache.spark.unsafe.Platform.getLong(b, off + (j.toLong << 3))
+        val x = PackedLayout.littleEndian(
+          org.apache.spark.unsafe.Platform.getLong(a, off + (i.toLong << 3)))
+        val y = PackedLayout.littleEndian(
+          org.apache.spark.unsafe.Platform.getLong(b, off + (j.toLong << 3)))
         if (x == y) { inter += 1; i += 1; j += 1 }
         else if (x < y) i += 1
         else j += 1

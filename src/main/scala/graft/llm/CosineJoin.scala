@@ -124,8 +124,8 @@ object CosineJoin {
     // Cache lifetime (round-19, honest version of the r18 note): a
     // SQL-level persist registers a CacheManager entry that holds a
     // strong reference — GC of the returned frame does NOT free it.
-    // The entry lives until the session drops it (the bench/verify
-    // harness clears the registry between queries; a long-lived
+    // The entry lives until the session drops it (graft.Verify
+    // clears the registry between queries; a long-lived
     // session calling this repeatedly should `unpersist()` the result's
     // cached lineage or `sharedState.cacheManager.clearCache()` when
     // done). The guard's failure path below unpersists before

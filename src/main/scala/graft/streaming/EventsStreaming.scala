@@ -26,10 +26,9 @@ object EventsStreaming {
     *
     * `spark.sql.legacy.parquet.nanosAsLong` is a session-level conf and
     * is set ONCE at session construction by every entry point that owns
-    * a session (Bench, Verify, Profile, Main, TestSpark) — never flipped
-    * inside a query/operator body, which would be racy under concurrent
-    * use and surprising to callers reading other nanos parquet
-    * mid-session. */
+    * a session (Main, Verify, TestSpark) — never flipped inside a
+    * query/operator body, which would be racy under concurrent use and
+    * surprising to callers reading other nanos parquet mid-session. */
   val eventsSchemaRaw: StructType = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", LongType),

@@ -167,10 +167,12 @@ class LlmSpec extends SparkSpec {
       "Mixed CASE tokens", "double  space", "a-b.c,d;e", "!!!",
       "word " * 40 + "tail", "Kelvin sign", "café au lait",
       "İstanbul I", "emoji 😀 mid", "the quick brown fox", "the quick")
-    def unpack(bytes: Array[Byte]): Seq[Long] =
-      (0 until (bytes.length >> 3)).map(i =>
-        org.apache.spark.unsafe.Platform.getLong(bytes,
-          org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + (i.toLong << 3)))
+    // the packed layout is little-endian on every host, not native order
+    def unpack(bytes: Array[Byte]): Seq[Long] = {
+      val lb = java.nio.ByteBuffer.wrap(bytes)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN).asLongBuffer()
+      Seq.fill(lb.remaining)(lb.get())
+    }
     val lit = org.apache.spark.sql.catalyst.expressions.Literal("x")
     for (n <- Seq(1, 2, 3, 5); strict <- Seq(false, true)) {
       val arr = graft.functions.SketchExprs.ShingleHash(lit, n, strict)
