@@ -34,7 +34,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // drop stale cache entries + checkpoint blocks between queries —
-      // 244 queries share this JVM, and operators that persist fan-out
+      // every query shares this JVM, and operators that persist fan-out
       // frames would otherwise pile registry entries / blocks onto
       // later queries
       try spark.sharedState.cacheManager.clearCache()
