@@ -3387,6 +3387,34 @@ object SparkEntry {
       graft.operators.GroupTopK.topK(docs, Seq("lang"), "text_len", "doc_id", 5)
     },
 
+    // --- deliberately skewed TPC-H-shape join stressor: the derived
+    // key sends ~75% of lineitem to ONE nation (a real hot key, unlike
+    // the table's uniform FKs), and the salted broadcast join spreads
+    // it over 16 (key, salt) tasks instead of one straggler — the
+    // ahead-of-time shape for skew AQE can't fix (broadcast joins
+    // don't split at runtime). Salt values never affect the result
+    // (every (key, salt) exists on the replicated dim side), so the
+    // oracle replays the same key derivation with a plain join.
+    // Salted-broadcast plan shape asserted in PlanSpec. ---
+    "q_skew_join" -> { (s, dir) =>
+      val dec = org.apache.spark.sql.types.DecimalType(18, 4)
+      val skewed = t(s, dir, "lineitem")
+        .withColumn("nk",
+          when(pmod(col("l_orderkey"), lit(4)) < 3, lit(0L))
+            .otherwise(pmod(col("l_suppkey"), lit(25))).cast("long"))
+        .select(col("nk"), col("l_extendedprice"), col("l_discount"))
+      val dim = t(s, dir, "nation")
+        .select(col("n_nationkey").cast("long").as("nk"), col("n_name"))
+      graft.operators.Skew.saltedBroadcastJoin(skewed, dim, "nk", salts = 16)
+        .groupBy(col("n_name"))
+        .agg(
+          sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
+            .cast(dec)).cast("double").as("revenue"),
+          count(lit(1)).as("cnt"))
+        .select(col("n_name"), round(col("revenue"), 4).as("revenue"),
+          col("cnt"))
+    },
+
     // --- custom-state shape: running-total threshold crossings ---
     "q_threshold_crossings" -> { (s, dir) =>
       EventsStreaming.thresholdCrossings(EventsStreaming.readEvents(s, dir), 500.0)
@@ -7889,6 +7917,22 @@ object SparkEntry {
         |)
         |SELECT lang, CAST(rank AS INTEGER) AS rank, doc_id, text_len
         |FROM r WHERE rank <= 5""".stripMargin,
+
+    // q_skew_join: salts are join-invariant, so the oracle is the
+    // UNSALTED join over the same skewed key derivation
+    "q_skew_join" ->
+      """WITH l AS (
+        |  SELECT CASE WHEN l_orderkey % 4 < 3 THEN 0
+        |              ELSE l_suppkey % 25 END AS nk,
+        |    l_extendedprice, l_discount
+        |  FROM lineitem
+        |)
+        |SELECT n_name,
+        |  round(CAST(sum(CAST(l_extendedprice * (1 - l_discount)
+        |    AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue,
+        |  count(*) AS cnt
+        |FROM l JOIN nation ON n_nationkey = l.nk
+        |GROUP BY n_name""".stripMargin,
 
     "q_threshold_crossings" ->
       """WITH c AS (

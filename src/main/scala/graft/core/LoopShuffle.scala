@@ -2,15 +2,15 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-round exchange sizing for ITERATIVE operators (the closure
-  * rounds of `Dedup.convergeCanonicals`) — the rule SCALING.md's 30×
-  * ramp measured: a closure loop launches its join+agg jobs over
-  * every shuffle partition EVERY round, so `width × rounds × stages` of
-  * task overhead dominates before data volume does when the width is
-  * sized to the input corpus instead of the per-round table
+/** Per-round exchange sizing for ITERATIVE operators (closure rounds,
+  * frontier expansions, power iterations) — the rule SCALING.md's 30×
+  * ramp measured: a closure loop launches its join+agg jobs over every
+  * shuffle partition EVERY round, so `width × rounds × stages` of task
+  * overhead dominates before data volume does when the width is sized
+  * to the input corpus instead of the per-round table
   * (q_dedup_connected at 30×: 113s at shuffle=192 vs 47s at 96 on
-  * identical data/cores). The loop therefore sizes its own exchanges
-  * from a MEASURED per-round row count — one cheap count of
+  * identical data/cores). The loop families therefore size their own
+  * exchanges from a MEASURED per-round row count — one cheap count of
   * an already-checkpointed frame — instead of inheriting the global
   * `spark.sql.shuffle.partitions`, so a 100× run needs no hand-tuned
   * global shuffle width.

@@ -195,6 +195,23 @@ class PlanSpec extends SparkSpec {
       "revenue aggregation must combine map-side")
   }
 
+  test("q_skew_join: salted broadcast spreads the hot key, no sort-merge") {
+    val df = SparkEntry.queries("q_skew_join")(spark, "/root/testdata/sf0.001")
+    val p = df.queryExecution.executedPlan.toString
+    // the join must be a broadcast hash join ON (key, salt): the salt
+    // in the join keys is exactly what spreads the hot key over 16
+    // tasks — a plain key join would funnel ~75% of lineitem into one
+    assert(p.contains("BroadcastHashJoin"), s"dim side must broadcast:\n$p")
+    assert(p.contains("_salt"), s"salt must be part of the join keys:\n$p")
+    assert(!p.contains("SortMergeJoin"),
+      s"salted join fell back to sort-merge:\n$p")
+    // the dim side replicates via explode BEFORE broadcast (16×25 rows)
+    assert(p.contains("Generate explode"),
+      s"dim replication must be an explode on the broadcast side:\n$p")
+    assert(df.queryExecution.sparkPlan.toString.contains("partial_sum"),
+      "revenue aggregation must combine map-side")
+  }
+
   test("q_supplier_rank: ONE exchange serves both the agg and the window") {
     val df = SparkEntry.queries("q_supplier_rank")(spark, "/root/testdata/sf0.001")
     // the explicit repartition(l_suppkey) satisfies BOTH the agg's
@@ -510,6 +527,17 @@ class PlanSpec extends SparkSpec {
       s"expected the single explicit shard exchange, got ${shuffles.length}")
   }
 
+  test("interval coalescing: ONE key exchange feeds both windows and the groupBy") {
+    val iv = sf("lineitem").filter(col("l_quantity") > 45)
+      .select(col("l_suppkey"), col("l_shipdate").as("s"),
+        col("l_shipdate").as("e"))
+    val df = graft.operators.Intervals.coalesceIntervals(
+      iv, Seq("l_suppkey"), "s", "e")
+    val shuffles = shuffleOutputs(df)
+    assert(shuffles.length == 1,
+      s"islands must reuse one key partitioning, got ${shuffles.length}: $shuffles")
+  }
+
   test("shard manifest: one narrow partial-aggregating exchange, no content") {
     val df = graft.llm.Shuffling.shardManifest(
       sf("documents"), "doc_id", "text", seed = 7L, shards = 8)
@@ -521,6 +549,17 @@ class PlanSpec extends SparkSpec {
       "manifest aggregation must combine map-side")
   }
 
+  test("decayed score: one partial-aggregating exchange, weights in the scan") {
+    val df = graft.operators.Decay.decayedScore(
+      graft.streaming.EventsStreaming.readEvents(spark, "/root/testdata/sf0.001")
+        .select(col("user_id"), col("ts"), col("value")),
+      Seq("user_id"), "ts", "value", "2024-02-01 00:00:00", 259200.0)
+    val shuffles = shuffleOutputs(df)
+    assert(shuffles.length == 1, s"expected one exchange: $shuffles")
+    assert(df.queryExecution.sparkPlan.toString.contains("partial_sum"),
+      "decay weights must fold map-side")
+  }
+
   test("temperature sample: the kept-set filter is a shuffle-free scan") {
     val df = graft.llm.Sampling.temperatureSample(
       sf("documents").select(col("doc_id"), col("lang")),
@@ -528,6 +567,41 @@ class PlanSpec extends SparkSpec {
       bucketFn = graft.llm.Sampling.portableBucket)
     assert(shuffleOutputs(df).isEmpty,
       "the sampler must stay a pure filter projection")
+  }
+
+  test("cooccurrence: metric joins broadcast; pair shuffles are key-narrow") {
+    val baskets = sf("lineitem").select(col("l_orderkey").as("b"),
+      pmod(col("l_partkey"), lit(199)).as("i"))
+    val df = graft.operators.Cooccurrence.pairs(baskets, "b", "i",
+      minCount = 3)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin") ||
+      plan.contains("BroadcastExchange"),
+      "item totals must broadcast back onto the pair counts")
+    // every exchange carries only basket/item keys and counters
+    shuffleOutputs(df).foreach(cols =>
+      assert(cols.size <= 5, s"unexpectedly wide shuffle: $cols"))
+  }
+
+  test("markov transitions: no shuffle carries raw event payloads") {
+    val df = graft.operators.Markov.transitions(
+      graft.streaming.EventsStreaming.readEvents(spark, "/root/testdata/sf0.001")
+        .select(col("user_id"), col("ts"), col("event_id"),
+          col("event_type"), col("props")),
+      Seq("user_id"), "ts", "event_type", tieCols = Seq("event_id"))
+    shuffleOutputs(df).foreach(cols =>
+      assert(!cols.contains("props"),
+        s"unused payload crossed a shuffle: $cols"))
+  }
+
+  test("anomaly z-score: exactly one shuffle, the per-key window") {
+    import spark.implicits._
+    val d = (1 to 100).map(i => ("u" + (i % 5), i.toLong, i * 1.5))
+      .toDF("k", "t", "v")
+    val out = graft.operators.Anomaly.trailingZScore(
+      d, Seq("k"), "t", "v", width = 10L)
+    val shuffles = shuffleOutputs(out)
+    assert(shuffles.size == 1, s"expected ONE window exchange: $shuffles")
   }
 
   test("soft weights: one keys-only exchange on the component label") {
@@ -556,6 +630,9 @@ class PlanSpec extends SparkSpec {
     assert(!hasGlobalSort(graft.operators.Distributions.percentilesByKey(
       li, "l_suppkey", "l_extendedprice", Seq(("p50", 0.5)), scale = 2)),
       "percentilesByKey must not plan a global sort")
+    assert(!hasGlobalSort(graft.operators.RobustStats.trimmedMean(
+      li, "l_suppkey", "l_extendedprice")),
+      "trimmedMean must not plan a global sort")
   }
 
   test("cosine join: no cartesian/nested-loop product anywhere") {
