@@ -1553,6 +1553,21 @@ object SparkEntry {
           col("html_lang"))
     },
 
+    // --- Count-Min frequency sketch (Cormode 2005): token counts at a
+    // fixed d×w cell budget; w=64 is deliberately tiny so hash
+    // collisions genuinely occur in-gate (3 of 31 keys overestimate
+    // through ALL FOUR depths at sf0.01; 28 stay exact) and the
+    // min-over-depths logic is exercised — the oracle replays the portable position family,
+    // the cell table, and every estimate EXACTLY, collisions included ---
+    "q_cms_freq" -> { (s, dir) =>
+      import graft.operators.FreqSketch
+      val toks = t(s, dir, "documents")
+        .select(explode(split(lower(col("text")), "\\W+")).as("tk"))
+        .filter(length(col("tk")) > 0)
+      val sketch = FreqSketch.build(toks, col("tk"), w = 64, d = 4)
+      FreqSketch.estimate(sketch, toks.distinct(), "tk", 64, 4)
+    },
+
     // --- fill-in-the-middle (Bavarian 2022 / StarCoder PSM) over the
     // REAL documents text: half the corpus (portable-hash selected,
     // seed 42) rewrites to <fim_prefix>P<fim_suffix>S<fim_middle>M with
@@ -2414,6 +2429,23 @@ object SparkEntry {
       EventsStreaming.propsStats(EventsStreaming.readEvents(s, dir))
     },
 
+    // --- JSON payload flattening: bounded sampled inference → ONE
+    // codegen'd from_json projection lifts every (nested) key into a
+    // typed column; the payload is built from event fields so the
+    // oracle replays the whole round trip from the base columns ---
+    "q_json_flatten" -> { (s, dir) =>
+      val ev = EventsStreaming.readEvents(s, dir)
+      val payload = ev.select(col("event_id"),
+        to_json(struct(
+          col("event_type").as("type"),
+          struct(col("user_id").as("uid"),
+            pmod(col("user_id"), lit(5)).as("segment")).as("user"),
+          col("value").as("amount"),
+          get_json_object(col("props"), "$.k").cast("long").as("k")))
+          .as("payload"))
+      graft.operators.JsonFlatten.flatten(payload, "payload")
+    },
+
     // --- events: click→purchase attribution pairs — the stream-stream
     // interval-join shape (equi-join on user + bounded time range);
     // batch body here, streaming self-join parity in StreamingSpec ---
@@ -2436,6 +2468,94 @@ object SparkEntry {
           col("w.click_ts").as("click_ts"),
           col("w.purchase_ts").as("purchase_ts"),
           col("w.purchase_value").as("purchase_value"))
+    },
+
+    // --- SCD2 versioning: events as per-user state updates → half-open
+    // validity intervals, last version open (one window pass). ---
+    "q_scd2" -> { (s, dir) =>
+      graft.operators.Scd2.history(
+        EventsStreaming.readEvents(s, dir)
+          .select(col("event_id"), col("user_id"), col("ts"), col("value")),
+        Seq("user_id"), "ts", orderCols = Seq("event_id"))
+        .select(col("event_id"), col("user_id"), col("value"),
+          col("valid_from"), col("valid_to"), col("is_current"))
+    },
+
+    // --- as-of join: every event attaches the latest preceding snapshot
+    // (every-5th event, deduped per (user, ts)) within a 1h tolerance.
+    // Single-exchange sort-merge as-of; the oracle is DuckDB's native
+    // ASOF LEFT JOIN with the tolerance replayed as a mask on the
+    // matched row's own time. ---
+    "q_asof_join" -> { (s, dir) =>
+      val ev = EventsStreaming.readEvents(s, dir)
+        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
+      val snaps = ev.filter(pmod(col("event_id"), lit(5)) === 0)
+        .groupBy(col("user_id"), col("ts"))
+        .agg(max(col("value")).as("snap_value"))
+        .withColumnRenamed("ts", "snap_ts")
+      graft.operators.AsOfJoin.asof(ev, snaps,
+        on = Seq("user_id"), leftTime = "ts", rightTime = "snap_ts",
+        carry = Seq("snap_value"), matchedTimeAs = Some("snap_ts_matched"),
+        tolerance = Some(expr("INTERVAL 1 HOUR")))
+    },
+
+    // --- CDC changelog apply: merge an upsert/delete log into a
+    // snapshot, latest seq per key wins. The log exercises every path:
+    // update (seq 1), delete-overriding-update (%35 keys), re-insert
+    // after delete (%21 keys), insert of keys the snapshot never had
+    // (%4==3 keys), delete of absent keys (no-op), pure passthrough.
+    // The window sorts the LOG only; the snapshot sees one anti join. ---
+    "q_cdc_apply" -> { (s, dir) =>
+      val orders = t(s, dir, "orders")
+      val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
+        "o_totalprice", "o_orderdate", "o_orderpriority")
+      val snap = orders.filter(pmod(col("o_orderkey"), lit(4)) =!= 3)
+      val upd = orders.filter(pmod(col("o_orderkey"), lit(5)) === 0)
+        .withColumn("o_totalprice", col("o_totalprice") + 100.0)
+        .withColumn("seq", lit(1L)).withColumn("op", lit("U"))
+      val del = orders.filter(pmod(col("o_orderkey"), lit(7)) === 0)
+        .withColumn("seq", lit(2L)).withColumn("op", lit("D"))
+      val reins = orders.filter(pmod(col("o_orderkey"), lit(3)) === 0)
+        .withColumn("o_totalprice", col("o_totalprice") * 0.5)
+        .withColumn("seq", lit(3L)).withColumn("op", lit("U"))
+      val changes = upd.unionByName(del).unionByName(reins)
+        .select((cols :+ "seq" :+ "op").map(col): _*)
+      graft.operators.Cdc.apply(snap.select(cols.map(col): _*), changes,
+          Seq("o_orderkey"), "seq", "op")
+        .withColumn("o_totalprice", round(col("o_totalprice"), 4))
+    },
+
+    // --- PageRank over a link graph derived from orders (custkey-mod
+    // → orderkey-mod buckets: a dense 300-node digraph with real hub
+    // skew). 3 fixed rounds, d=0.85, uncalibrated power iteration —
+    // the oracle replays every round as an unrolled CTE chain, so the
+    // join-on-src / agg-on-dst loop is value-gated end to end. ---
+    "q_pagerank" -> { (s, dir) =>
+      val orders = t(s, dir, "orders")
+      val edges = orders.select(
+        pmod(col("o_custkey"), lit(300)).as("src"),
+        pmod(col("o_orderkey"), lit(300)).as("dst"))
+      graft.operators.PageRank.ranks(edges, "src", "dst", iters = 3)
+        .select(col("id"), round(col("rank"), 6).as("rank"))
+    },
+
+    // --- bounded-hop BFS over the bipartite customer–supplier graph
+    // (an edge when a supplier filled one of the customer's orders):
+    // blast-radius distances from a seeded customer cohort. Frontier
+    // joins only, visited anti-join, 3 rounds; the oracle is a
+    // recursive CTE taking min(dist). Supplier ids shift by 1e6 into
+    // their own id space. ---
+    "q_graph_bfs" -> { (s, dir) =>
+      val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
+      val ord = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
+      val edges = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
+        .select(col("o_custkey").as("src"),
+          (col("l_suppkey") + lit(1000000L)).as("dst"))
+      val seeds = t(s, dir, "customer")
+        .filter(pmod(col("c_custkey"), lit(100)) === 1)
+        .select(col("c_custkey").as("id"))
+      graft.operators.ShortestPaths.bfs(edges, "src", "dst", seeds, "id",
+        maxHops = 3)
     },
 
     // --- validation quarantine (dead-letter pattern): the fail-fast
@@ -2470,6 +2590,97 @@ object SparkEntry {
           (size(col("_violations")) === 0).as("is_valid"))
     },
 
+    // --- gains/lift decile table: rank events by value, cut into 10
+    // exact equal-depth buckets (NTILE spelled in integer arithmetic
+    // over range-partitioned global positions — no single-reducer
+    // sort), report per-decile purchase rate, cumulative capture, and
+    // lift. The oracle replays the cut and the double arithmetic. ---
+    "q_gains" -> { (s, dir) =>
+      graft.operators.Gains.liftTable(
+        EventsStreaming.readEvents(s, dir)
+          .select(col("event_id"), col("value"),
+            (col("event_type") === "purchase").as("label")),
+        "value", "label", "event_id", buckets = 10)
+    },
+
+    // --- exact largest-remainder proration: each order's total (in
+    // cents) split across its lineitems proportionally to quantity,
+    // with whole-cent shares reconciling EXACTLY to the order total.
+    // One hash exchange on the order key, pure integer arithmetic; the
+    // oracle replays floor shares + remainder ranking verbatim. ---
+    "q_prorate" -> { (s, dir) =>
+      val li = t(s, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
+      val ord = t(s, dir, "orders")
+        .select(col("o_orderkey"), col("o_totalprice"))
+      val joined = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
+        .drop("o_orderkey")
+      graft.operators.Allocation.prorate(joined, Seq("l_orderkey"),
+        "l_quantity", "o_totalprice", "l_linenumber")
+    },
+
+    // --- leave-one-out target encoding with additive smoothing (the
+    // CatBoost/Kaggle high-cardinality categorical feature): encode
+    // each order's customer by the mean total of the customer's OTHER
+    // orders, shrunk toward the global prior — LOO is the leakage
+    // control, smoothing the rare-category control. Exact DECIMAL
+    // sums; one hash exchange on the category. ---
+    "q_target_encode" -> { (s, dir) =>
+      graft.operators.TargetEncode.looEncode(
+        t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
+          col("o_totalprice")),
+        "o_custkey", "o_totalprice")
+        .select(col("o_orderkey"), col("o_custkey"), col("target_enc"))
+    },
+
+    // --- per-key two-feature OLS (price ~ quantity + discount per
+    // return flag): nine exact integer moments, Cramer determinants
+    // in exact DECIMAL(38,0) (HUGEINT in the oracle), doubles only at
+    // the final divisions — Trend's replayability contract one
+    // regressor up. ---
+    "q_ols2" -> { (s, dir) =>
+      val li = t(s, dir, "lineitem").select(col("l_returnflag"),
+        floor(col("l_quantity") + 0.5).cast("long").as("qty"),
+        floor(col("l_discount") * 100 + 0.5).cast("long").as("disc_pct"),
+        floor(col("l_extendedprice") + 0.5).cast("long").as("price_usd"))
+      graft.operators.Regression.fit2(li, Seq("l_returnflag"),
+        "qty", "disc_pct", "price_usd")
+    },
+
+    // --- day-weighted calendar-month revenue recognition: each line
+    // item's price spread across the months between order and ship
+    // date, day-proportional, with whole-cent shares reconciling
+    // EXACTLY to the line total (month explode composed with the
+    // largest-remainder prorator). The oracle replays the month
+    // generation, the day overlaps, and the Hamilton arithmetic. ---
+    "q_recognition" -> { (s, dir) =>
+      // the synthetic generator enforces neither TPC-H's unique
+      // (orderkey, linenumber) nor ship-after-order — pre-aggregate
+      // to a unique line key (exact DECIMAL value sum) and scope to
+      // real spans; inverted spans are loud data bugs to the operator
+      val li = t(s, dir, "lineitem")
+        .filter(pmod(col("l_orderkey"), lit(7)) === 0)
+        .groupBy(col("l_orderkey"), col("l_linenumber"))
+        .agg(max(col("l_shipdate")).as("ship"),
+          sum(col("l_extendedprice").cast(
+            org.apache.spark.sql.types.DecimalType(18, 4)))
+            .cast("double").as("val"))
+        .select((col("l_orderkey") * 8 + col("l_linenumber"))
+          .as("line_id"), col("l_orderkey"), col("ship"), col("val"))
+      val ord = t(s, dir, "orders")
+        .select(col("o_orderkey"), col("o_orderdate"))
+      val contracts = li
+        .join(ord, li("l_orderkey") === ord("o_orderkey"))
+        .where(col("ship") >= col("o_orderdate"))
+        .select(col("line_id"), col("o_orderdate"), col("ship"),
+          col("val"))
+      graft.operators.Recognition.byMonth(contracts, "line_id",
+          "o_orderdate", "ship", "val")
+        // timestamp for the compare: pandas reads a DuckDB DATE as
+        // datetime64 while a Spark DATE stays a date object
+        .withColumn("month_start", col("month_start").cast("timestamp"))
+    },
+
     // --- feature hashing (Weinberger ICML'09 hashing trick): sparse
     // signed token features with NO vocabulary and NO driver state —
     // the portable polynomial-31 hash makes bucket and sign exact
@@ -2494,6 +2705,108 @@ object SparkEntry {
           (col("doc_id") + 1).as("pos_id"))
       graft.llm.NegativeSampling.negatives(
         positives, docs, "q_id", "pos_id", "doc_id", k = 4)
+    },
+
+    // --- 2-D skyline / Pareto frontier per brand: the undominated
+    // parts maximizing size while minimizing price. Sort-based
+    // identity over a range-partitioned parallel prefix best — no
+    // self-join, no nested loop; the oracle is the textbook
+    // NOT-EXISTS dominance query. ---
+    "q_skyline" -> { (s, dir) =>
+      graft.operators.Skyline.skyline(
+        t(s, dir, "part").select(col("p_partkey"), col("p_brand"),
+          col("p_size"), col("p_retailprice")),
+        Seq("p_brand"), "p_size", "p_retailprice",
+        maximizeX = true, maximizeY = false)
+    },
+
+    // --- general connected components over the per-user event-star
+    // graph (each event linked to its user's first event): the dedup
+    // closure promoted to a first-class graph operator. The oracle is
+    // an INDEPENDENT structural derivation — a star connects all of a
+    // user's events, so component = min(event_id) per user and size =
+    // the user's event count; the engine still runs the real fused
+    // join+agg label propagation to discover that. ---
+    "q_connected_components" -> { (s, dir) =>
+      val ev = t(s, dir, "events").select(col("event_id"), col("user_id"))
+      val hubs = ev.groupBy(col("user_id"))
+        .agg(min(col("event_id")).as("hub"))
+      val edges = ev.join(hubs, Seq("user_id"))
+        .select(col("event_id").as("src"), col("hub").as("dst"))
+      graft.operators.ConnectedComponents.withSizes(
+        graft.operators.ConnectedComponents.run(
+          edges, "src", "dst",
+          vertices = Some(ev.select(col("event_id").as("id")))))
+    },
+
+    // --- ordered funnel (view → click → purchase) per user: ONE
+    // window exchange computes sequential reach times (stage i counts
+    // only strictly after stage i-1); the oracle replays it as the
+    // equivalent per-stage join chain, so the one-pass formulation is
+    // value-gated against the textbook multi-join one. ---
+    "q_funnel" -> { (s, dir) =>
+      graft.operators.Funnel.funnel(
+        EventsStreaming.readEvents(s, dir)
+          .select(col("user_id"), col("ts"), col("event_type")),
+        Seq("user_id"), "ts", "event_type",
+        Seq("view", "click", "purchase"))
+    },
+
+    // --- weekly cohort retention triangle over events: first-seen
+    // week per user, distinct active users per (cohort, offset). ---
+    "q_cohort" -> { (s, dir) =>
+      graft.operators.Cohort.retention(
+        EventsStreaming.readEvents(s, dir)
+          .select(col("user_id"), col("ts")),
+        "user_id", "ts")
+    },
+
+    // --- truncated EWMA smoothing per user over the event value
+    // series: the bias-corrected EWM mean (pandas ewm adjust=True)
+    // over a FIXED-WIDTH window instead of the inherently sequential
+    // recursion (truncation drops < (1-α)^(L+1) of the weight mass),
+    // with the head renormalized so row 1 smooths to itself exactly.
+    // The oracle folds the identical position-weighted list. ---
+    "q_ewma" -> { (s, dir) =>
+      graft.operators.Ewma.smooth(
+        EventsStreaming.readEvents(s, dir)
+          .where(col("value").isNotNull)
+          .select(col("event_id"), col("user_id"), col("ts"),
+            col("value")),
+        "user_id", "event_id", "ts", "value",
+        alpha = 0.5, lookback = 8)
+        .select(col("event_id"), col("user_id"), col("ewma"))
+    },
+
+    // --- join-key skew diagnostics (the pre-flight for every 100 TB
+    // shuffle): profile a PLANTED hot-key distribution (3/4 of events
+    // collapse onto one key) — max/avg skew factor, top-10 mass,
+    // entropy ratio, and the salt factor the salted-agg remedy should
+    // use. The oracle recomputes every statistic from the same
+    // counts. ---
+    "q_skew_profile" -> { (s, dir) =>
+      val keyed = EventsStreaming.readEvents(s, dir)
+        .select(when(pmod(col("event_id"), lit(4)) =!= 0, lit("hot"))
+          .otherwise(col("event_type")).as("k"))
+      graft.operators.SkewProfile.profile(keyed, "k")
+    },
+
+    // --- z-order clustering: the Morton z-value over (l_partkey,
+    // l_suppkey) with probed bounds — the sort key behind OPTIMIZE
+    // ZORDER-style multi-column data skipping. The value is pure
+    // codegen'd bit arithmetic; the oracle rebuilds the identical
+    // 32-term interleave in SQL, so the curve is gated bit for bit.
+    // The file-level skipping effect (per-file bounding boxes tile the
+    // plane) is measured in ZOrderSpec. ---
+    "q_zorder" -> { (s, dir) =>
+      val li = t(s, dir, "lineitem")
+      val b = li.agg(min("l_partkey"), max("l_partkey"),
+        min("l_suppkey"), max("l_suppkey")).head()
+      li.select(col("l_orderkey"), col("l_linenumber"),
+        graft.operators.ZOrder.zvalue(Seq(
+          (col("l_partkey"), lit(b.getLong(0)), lit(b.getLong(1))),
+          (col("l_suppkey"), lit(b.getLong(2)), lit(b.getLong(3)))))
+          .as("zval"))
     },
 
     // --- stream-static enrichment join (batch body of the streaming
@@ -2566,6 +2879,32 @@ object SparkEntry {
         .agg(sum(col("l_quantity").cast(dec)).cast("double").as("sum_qty"),
           count(lit(1)).as("n"),
           grouping_id().cast("int").as("gid"))
+    },
+
+    // --- exact one-pass Pearson correlation matrix over FIXED-POINT
+    // inputs: columns scale to integer cents first, so every moment
+    // accumulates as a DECIMAL(38,0) sum of long products (compact
+    // long-backed decimals — the (38,8) path's value×10^16 forced
+    // BigDecimal adds); the double formula replays bit-identically
+    // from the exact integer sums; k(k+1)/2+k aggregates, ONE scan ---
+    "q_correlations" -> { (s, dir) =>
+      graft.operators.Correlations.matrixFixedPoint(t(s, dir, "lineitem"),
+          Seq("l_quantity" -> 2, "l_extendedprice" -> 2, "l_discount" -> 2))
+        .select(col("col_a"), col("col_b"), round(col("corr"), 6).as("corr"))
+    },
+
+    // --- per-user hourly resample with forward fill: regularize the
+    // irregular events stream onto a fixed 1h grid, carrying the last
+    // bucket average across gap hours. The oracle replays bucket agg →
+    // per-key generate_series grid → IGNORE-NULLS last_value fill. ---
+    "q_resample" -> { (s, dir) =>
+      graft.operators.Resample.resample(
+          EventsStreaming.readEvents(s, dir)
+            .select(col("user_id"), col("ts"), col("value")),
+          Seq("user_id"), "ts", "value", every = "1 hour")
+        .select(col("user_id"), col("bucket_start"),
+          round(col("avg_value"), 4).as("avg_value"),
+          col("n_events"), col("filled"))
     },
 
     // --- edit-distance-1 similarity join over the part-name vocabulary
@@ -3177,6 +3516,62 @@ object SparkEntry {
         t(s, dir, "lineitem"), "l_extendedprice", bins = 12)
     },
 
+    // --- robust outlier scoring: median/MAD (exact lower-median order
+    // statistics via the distribution trick) — heavy tails can't drag
+    // their own threshold. ---
+    "q_robust_outliers" -> { (s, dir) =>
+      graft.operators.RobustStats.outliers(
+        t(s, dir, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
+          col("l_extendedprice")),
+        "l_extendedprice", cutoff = 3.5)
+    },
+
+    // --- bucketed co-located join: lineitem and orders pre-shuffled
+    // into 16 matching buckets at write time, then joined with ZERO
+    // exchanges on the join (asserted in BucketedSpec) — the nightly-
+    // table pattern that turns a 100 TB join shuffle into a local
+    // bucket zip. The oracle replays the plain join. ---
+    "q_bucketed_join" -> { (s, dir) =>
+      val dec = org.apache.spark.sql.types.DecimalType(18, 4)
+      val scratch = "/root/repo/target/tmp/q_bucketed"
+      graft.operators.Bucketed.write(
+        t(s, dir, "lineitem").select(col("l_orderkey"), col("l_quantity")),
+        "graft_bkt_lineitem", Seq("l_orderkey"), 16, Some(s"$scratch/l"))
+      graft.operators.Bucketed.write(
+        t(s, dir, "orders").select(col("o_orderkey").as("l_orderkey"),
+          col("o_orderpriority")),
+        "graft_bkt_orders", Seq("l_orderkey"), 16, Some(s"$scratch/o"))
+      graft.operators.Bucketed.join(s,
+          "graft_bkt_lineitem", "graft_bkt_orders", Seq("l_orderkey"))
+        .groupBy(col("o_orderpriority"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("l_quantity").cast(dec)).cast("double").as("sum_qty"))
+    },
+
+    // --- winsorization: clamp heavy-tailed numerics to exact
+    // [p01, p99] order-statistic bounds (distribution + cumulative
+    // windows; no global sort, bounds broadcast back). ---
+    "q_winsorize" -> { (s, dir) =>
+      val li = t(s, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_linenumber"),
+          col("l_quantity"), col("l_extendedprice"))
+      graft.operators.Winsorize.clamp(
+        li, Seq("l_quantity", "l_extendedprice"), 0.01, 0.99)
+    },
+
+    // --- trailing time-window features: per-user count + decimal-exact
+    // sum over the last hour at every event (RANGE frame; two-pointer
+    // scan per key, one exchange). ---
+    "q_rolling_features" -> { (s, dir) =>
+      val dec = org.apache.spark.sql.types.DecimalType(18, 4)
+      val ev = EventsStreaming.readEvents(s, dir)
+        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
+      graft.operators.Rolling.withTrailing(
+          ev, Seq("user_id"), "ts", 3600L * 1000000)(
+        w => count(lit(1)).over(w).as("n_1h"),
+        w => sum(col("value").cast(dec)).over(w).cast("double").as("sum_1h"))
+    },
+
     // --- exact weighted-cosine all-pairs join (Bayardo WWW'07 shape):
     // tf-idf cosine >= 0.6 pairs via a SOUND integer-arithmetic prefix
     // filter (rarest-first; a skippable tail carries < t of the norm).
@@ -3200,6 +3595,46 @@ object SparkEntry {
         thresholdNum = 3, thresholdDen = 4)
     },
 
+    // --- end-to-end entity resolution (the MDM capstone composition):
+    // TWO blocking strategies union their candidates (equality blocks
+    // catch mid-string typos, sorted neighborhood catches block-key
+    // typos), the pinned Jaro-Winkler scores at a tie-safe 0.9 cut,
+    // matched pairs close transitively into components, and the
+    // minimum id becomes each entity's golden record. ---
+    "q_entity_resolution" -> { (s, dir) =>
+      val name9 = translate(substring(col("c_name"), 10, 9),
+        "0123456789", "aeioubcdfg")
+      val base = t(s, dir, "customer")
+        .filter(pmod(col("c_custkey"), lit(10)) === 0)
+        .select(col("c_custkey").as("id"), name9.as("name"))
+      val p = (pmod(col("id"), lit(50)) / 10 + 1).cast("int")
+      val swapped = concat(
+        col("name").substr(lit(1), p - 1),
+        col("name").substr(p + 1, lit(1)),
+        col("name").substr(p, lit(1)),
+        col("name").substr(p + 2, lit(9)))
+      val party = base.union(
+        base.select((col("id") + 1000000L).as("id"), swapped.as("name")))
+      def cut(df: org.apache.spark.sql.DataFrame) = df
+        .withColumn("match_score",
+          floor(col("match_score") * 1e6 + 0.5) / 1e6)
+        .filter(col("match_score") >= 0.9)
+        .select(col("id_a"), col("id_b"))
+      val blocked = cut(graft.operators.RecordLinkage.fuzzyDedup(
+        party.withColumn("block", substring(col("name"), 7, 3)),
+        "id", "block", Seq(("name", 1.0)), threshold = 0.89))
+      val snm = cut(graft.operators.RecordLinkage
+        .sortedNeighborhood(party, "id", "name", window = 3)
+        .withColumn("match_score", graft.operators.RecordLinkage
+          .similarity(col("key_a"), col("key_b")))
+        .select(col("id_a"), col("id_b"), col("match_score")))
+      graft.operators.ConnectedComponents.withSizes(
+          graft.operators.ConnectedComponents.run(
+            blocked.union(snm), "id_a", "id_b",
+            vertices = Some(party.select(col("id")))))
+        .withColumn("is_canonical", col("id") === col("component"))
+    },
+
     // --- sorted-neighborhood blocking (Hernández-Stolfo): pair each
     // customer with its 3 successors in name order, score with the
     // native Jaro-Winkler — the blocking pass for near-dups that share
@@ -3214,6 +3649,64 @@ object SparkEntry {
         .filter(col("score") >= 0.9)
         .select(col("id_a"), col("id_b"), col("rank_a"), col("rank_b"),
           col("score"))
+    },
+
+    // --- k-anonymity equivalence classes over customer
+    // quasi-identifiers (nation × segment × balance band): the
+    // re-identification risk report a dataset passes before leaving
+    // the building. One keys-only aggregation. ---
+    "q_k_anonymity" -> { (s, dir) =>
+      graft.operators.Privacy.kAnonymityClasses(
+        t(s, dir, "customer").withColumn("bal_band",
+          floor(col("c_acctbal") / 2000).cast("long")),
+        Seq("c_nationkey", "c_mktsegment", "bal_band"), k = 5)
+    },
+
+    // --- pair-prediction quality: P/R/F1 of prefix-blocking predicted
+    // pairs against CONSTRUCTION ground truth (planted replicas:
+    // identical text = catchable, changed-prefix = guaranteed false
+    // negatives; natural prefix collisions = false positives). Two
+    // keys-only distincts meeting in one full-outer join. ---
+    "q_pair_eval" -> { (s, dir) =>
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val corpus = docs
+        .union(docs.filter(pmod(col("doc_id"), lit(5)) === 0)
+          .select((col("doc_id") + 100000).as("doc_id"), col("text")))
+        .union(docs.filter(pmod(col("doc_id"), lit(7)) === 0)
+          .select((col("doc_id") + 200000).as("doc_id"),
+            concat(lit("zzz "), col("text")).as("text")))
+      val truth = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
+        .select(col("doc_id").as("id_a"),
+          (col("doc_id") + 100000).as("id_b"))
+        .union(docs.filter(pmod(col("doc_id"), lit(7)) === 0)
+          .select(col("doc_id").as("id_a"),
+            (col("doc_id") + 200000).as("id_b")))
+      val blocks = corpus.select(col("doc_id"),
+        substring(col("text"), 1, 40).as("pfx"))
+      val predicted = blocks.as("x").join(blocks.as("y"),
+          col("x.pfx") === col("y.pfx") &&
+            col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
+      graft.operators.PairEval.score(predicted, truth)
+    },
+
+    // --- TWAP per user: each value holds until the user's next
+    // observation — the irregular-sampling mean a plain AVG gets wrong
+    // (one window exchange, exact decimal value×duration products). ---
+    "q_twap" -> { (s, dir) =>
+      graft.operators.Timeseries.twap(
+        EventsStreaming.readEvents(s, dir)
+          .select(col("user_id"), col("ts"), col("value")),
+        Seq("user_id"), "ts", "value")
+    },
+
+    // --- VWAP per supplier: Σ price·qty / Σ qty in fixed point — the
+    // execution-quality benchmark; pure map-side-combined aggregation,
+    // no window. ---
+    "q_vwap" -> { (s, dir) =>
+      graft.operators.Timeseries.vwap(
+        t(s, dir, "lineitem"), Seq("l_suppkey"),
+        "l_extendedprice", "l_quantity")
     },
 
     // --- PSI drift detection: price distribution shift between the
@@ -3260,6 +3753,68 @@ object SparkEntry {
         "lang", "doc_id", k = 100)
     },
 
+    // --- Kaplan-Meier survival: retention's statistically honest form
+    // — users still active at the horizon are CENSORED (out of the
+    // at-risk denominator) rather than counted churned. Running
+    // ln-factor sums over the aggregated day axis replay in order. ---
+    "q_kaplan_meier" -> { (s, dir) =>
+      val subj = EventsStreaming.readEvents(s, dir)
+        .groupBy(col("user_id"))
+        .agg(min(col("ts")).as("first_ts"), max(col("ts")).as("last_ts"))
+        .select(
+          floor((unix_micros(col("last_ts")) -
+            unix_micros(col("first_ts"))).cast("double") / lit(86400e6))
+            .cast("long").as("dur"),
+          (col("last_ts") <
+            lit(java.sql.Timestamp.valueOf("2024-01-25 00:00:00")))
+            .as("ev"))
+      graft.operators.Survival.kaplanMeier(subj, "dur", "ev")
+    },
+
+    // --- A/B readout: per-user conversion (any purchase) under a
+    // deterministic 3-way variant split, two-proportion z-test of each
+    // treatment vs control — rates, lifts, pooled z, 95% call on the
+    // ROUNDED statistic. One keys-only aggregation + a broadcast
+    // control row. ---
+    "q_ab_test" -> { (s, dir) =>
+      val subjects = EventsStreaming.readEvents(s, dir)
+        .groupBy(col("user_id"))
+        .agg(max(when(col("event_type") === "purchase", 1L)
+          .otherwise(0L)).as("converted"))
+        .withColumn("variant",
+          when(pmod(col("user_id"), lit(3)) === 0, "control")
+            .when(pmod(col("user_id"), lit(3)) === 1, "a")
+            .otherwise("b"))
+      graft.operators.AbTest.proportionTest(
+        subjects, "variant", "converted", "control")
+    },
+
+    // --- Benford first-digit audit (Nigrini's fabricated-numbers
+    // screen): leading digit from the fixed-point integer's STRING
+    // form (no log10 edge cases), all nine digits reported with
+    // observed vs log10(1+1/d) expected. Shuffle-free projection +
+    // 9-key aggregation. ---
+    "q_benford" -> { (s, dir) =>
+      graft.operators.Forensics.benford(
+        t(s, dir, "lineitem"), "l_extendedprice")
+    },
+
+    // --- market concentration per nation: supplier revenue HHI (DOJ
+    // points scale) + Gini via the rank formulation — exact decimal
+    // moments, one bounded per-market window for ranks. ---
+    "q_concentration" -> { (s, dir) =>
+      val dec = org.apache.spark.sql.types.DecimalType(18, 4)
+      val rev = t(s, dir, "lineitem")
+        .join(broadcast(t(s, dir, "supplier")
+          .select(col("s_suppkey"), col("s_nationkey"))),
+          col("l_suppkey") === col("s_suppkey"))
+        .groupBy(col("s_nationkey"), col("s_suppkey"))
+        .agg(sum(col("l_extendedprice").cast(dec)).cast("double")
+          .as("revenue"))
+      graft.operators.Forensics.concentration(
+        rev, Seq("s_nationkey"), "revenue", "s_suppkey")
+    },
+
     // --- 2-D heatmap: quantity × price density grid over lineitem
     // with pinned ranges so both widths (2.5, 6000.0) are exact
     // doubles and every cell assignment replays bit-for-bit; empty
@@ -3271,6 +3826,32 @@ object SparkEntry {
         "l_quantity", "l_extendedprice", bins = 20,
         xLo = Some(0.0), xHi = Some(50.0),
         yLo = Some(0.0), yHi = Some(120000.0))
+    },
+
+    // --- future-activity labeling (churn/retention targets): per
+    // event, will the same user act again within 2 hours? Censoring
+    // against the CORPUS end (not the user's own last event) keeps
+    // knowable inactivity labeled and only boundary rows flagged. ---
+    "q_churn_labels" -> { (s, dir) =>
+      graft.operators.Labels.futureActivity(
+        EventsStreaming.readEvents(s, dir)
+          .select(col("event_id"), col("user_id"), col("ts")),
+        Seq("user_id"), "ts", "event_id", horizon = 7200L * 1000000)
+    },
+
+    // --- per-key linear interpolation: engineered nulls (every 7th
+    // event) take the time-weighted blend of their known neighbors;
+    // edges stay honestly null. One exchange, two frames of the same
+    // sorted window; the oracle replays with IGNORE NULLS windows. ---
+    "q_interpolate" -> { (s, dir) =>
+      val ev = EventsStreaming.readEvents(s, dir)
+        .select(col("event_id"), col("user_id"), col("ts"),
+          when(pmod(col("event_id"), lit(7)) === 0, lit(null))
+            .otherwise(col("value")).as("v"))
+      graft.operators.Resample.interpolate(ev, Seq("user_id"), "ts",
+          "event_id", "v")
+        .select(col("event_id"), col("user_id"), col("ts"), col("v"),
+          col("value_interp"), col("interpolated"))
     },
 
     // --- top-N + Others rollup: per nation, the three biggest
@@ -3289,6 +3870,71 @@ object SparkEntry {
           .as("revenue"))
       graft.operators.GroupTopK.topNOthers(rev, Seq("s_nationkey"),
         "s_suppkey", "revenue", n = 3)
+    },
+
+    // --- calendar-aware period-over-period: monthly revenue per
+    // priority with MoM and YoY comparisons. Prior/season values
+    // arrive by equi-join on the integer month index (idx-1 / idx-12),
+    // so a missing month yields an honest null instead of silently
+    // borrowing the previous row; deltas exact decimal, pcts rounded
+    // tie-safely. The oracle replays the index joins. ---
+    "q_period_over_period" -> { (s, dir) =>
+      graft.operators.Timeseries.periodOverPeriod(
+        t(s, dir, "orders").select(col("o_orderpriority"),
+          col("o_orderdate"), col("o_totalprice")),
+        Seq("o_orderpriority"), "o_orderdate", "o_totalprice",
+        grain = "month", seasonLag = 12)
+    },
+
+    // --- chi-square contingency crosstab: is order status independent
+    // of priority? Complete observed×expected cell grid (zero cells
+    // included), statistic = exact LONG sum of per-cell 6dp-snapped
+    // contributions (order-independent across engines by
+    // construction), Cramér's V from the snapped statistic. ---
+    "q_crosstab" -> { (s, dir) =>
+      graft.operators.CrossTab.chi2(
+        t(s, dir, "orders")
+          .select(col("o_orderstatus"), col("o_orderpriority")),
+        "o_orderstatus", "o_orderpriority")
+    },
+
+    // --- fingerprint key-collision clustering (OpenRefine cluster &
+    // edit): engineered spelling variants of supplier names — cased/
+    // spaced/punctuated — collapse to one fingerprint (lowercase,
+    // punctuation→space, tokens deduped + sorted); canonical = most
+    // frequent spelling, ties to the smallest. One codegen'd
+    // projection + map-side-combined groupBy; the oracle replays the
+    // normalization chain and the argmax verbatim. ---
+    "q_keycollision" -> { (s, dir) =>
+      val sup = t(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))
+      val base = sup.select(col("s_suppkey").as("id"),
+        col("s_name").as("name"))
+      val va = sup.filter(pmod(col("s_suppkey"), lit(3)) === 0)
+        .select((col("s_suppkey") + 10000).as("id"),
+          upper(regexp_replace(col("s_name"), "#", " # ")).as("name"))
+      val vb = sup.filter(pmod(col("s_suppkey"), lit(4)) === 0)
+        .select((col("s_suppkey") + 20000).as("id"),
+          concat(lower(col("s_name")), lit(".")).as("name"))
+      graft.operators.KeyCollision.clusters(
+        base.unionByName(va).unionByName(vb), "id", "name")
+    },
+
+    // --- ABC contribution classes per nation: suppliers ranked by
+    // revenue share, classic 80/95 Pareto cut decided on exact scaled
+    // integers (100·prev < pct·n); the cumulative rides the
+    // range-partitioned parallel prefix sums with the scaled value as
+    // the count. Same revenue derivation as q_concentration. ---
+    "q_abc" -> { (s, dir) =>
+      val dec = org.apache.spark.sql.types.DecimalType(18, 4)
+      val rev = t(s, dir, "lineitem")
+        .join(broadcast(t(s, dir, "supplier")
+          .select(col("s_suppkey"), col("s_nationkey"))),
+          col("l_suppkey") === col("s_suppkey"))
+        .groupBy(col("s_nationkey"), col("s_suppkey"))
+        .agg(sum(col("l_extendedprice").cast(dec)).cast("double")
+          .as("revenue"))
+      graft.operators.Abc.classify(rev, Seq("s_nationkey"), "s_suppkey",
+        "revenue")
     },
 
     // --- exact two-sample Kolmogorov-Smirnov drift: the binning-free
@@ -3311,6 +3957,89 @@ object SparkEntry {
       graft.operators.Distributions.percentilesByKey(
         t(s, dir, "lineitem"), "l_suppkey", "l_extendedprice",
         Seq(("p50", 0.5), ("p90", 0.9), ("p99", 0.99)), scale = 2)
+    },
+
+    // --- per-key trimmed mean: drop the floor(n·p) extremes per
+    // supplier, average the middle — computed straight from the value
+    // distribution (parallel prefix sums give each value its kept-copy
+    // count arithmetically; raw rows touched once, never sorted). ---
+    "q_trimmed_mean" -> { (s, dir) =>
+      graft.operators.RobustStats.trimmedMean(
+        t(s, dir, "lineitem"), "l_suppkey", "l_extendedprice")
+    },
+
+    // --- trailing-baseline anomaly scoring: each event's z-score vs
+    // the PRIOR hour of its own user (frame ends strictly before now,
+    // so a spike never judges itself). Fixed-point exact window
+    // moments — order-independent, replays bit-for-bit; the flag
+    // evaluates on the ROUNDED score. ---
+    "q_anomaly_zscore" -> { (s, dir) =>
+      graft.operators.Anomaly.trailingZScore(
+        EventsStreaming.readEvents(s, dir)
+          .select(col("event_id"), col("user_id"), col("ts"), col("value")),
+        Seq("user_id"), "ts", "value", width = 3600L * 1000000)
+    },
+
+    // --- CUSUM change-point detection (Page): per-user two-sided
+    // drift statistic via the prefix-sum-minus-running-min identity —
+    // one hash exchange, exact fixed-point integer accumulation, the
+    // alarm decided on scaled integers. The oracle replays the same
+    // prefix/min windows in DuckDB. ---
+    "q_cusum" -> { (s, dir) =>
+      graft.operators.Changepoint.cusum(
+        EventsStreaming.readEvents(s, dir)
+          .select(col("event_id"), col("user_id"), col("ts"), col("value")),
+        Seq("user_id"), "ts", "event_id", "value",
+        target = 50.0, slack = 5.0, threshold = 150.0)
+    },
+
+    // --- bucketized range join: every event pairs with each active
+    // 45-minute window of its user (windows anchored at every 10th
+    // event). Stays a hash equi-join on (user, time-bucket); the
+    // oracle is the plain inequality join. ---
+    "q_range_join" -> { (s, dir) =>
+      val ev = EventsStreaming.readEvents(s, dir)
+        .select(col("event_id"), col("user_id"), col("ts"))
+      val ivs = ev.filter(pmod(col("event_id"), lit(10)) === 0)
+        .select(col("user_id"), col("ts").as("start_ts"),
+          (col("ts") + expr("INTERVAL 45 MINUTES")).as("end_ts"),
+          col("event_id").as("window_id"))
+      graft.operators.RangeJoin.join(ev, ivs, Seq("user_id"), "ts",
+        "start_ts", "end_ts", granularity = 15L * 60 * 1000000)
+    },
+
+    // --- interval OVERLAP join (interval×interval): each user's
+    // 45-minute activity windows pair with each of their 30-minute
+    // promo windows whose spans intersect. Both sides ride the
+    // time-grid bucketization, so the plan is a hash equi-join on
+    // (user, bucket) with each overlapping pair meeting exactly once
+    // (residual pins the bucket of the later start); the oracle is the
+    // plain inequality join. ---
+    "q_interval_join" -> { (s, dir) =>
+      val ev = EventsStreaming.readEvents(s, dir)
+        .select(col("event_id"), col("user_id"), col("ts"))
+      val act = ev.filter(pmod(col("event_id"), lit(10)) === 0)
+        .select(col("user_id"), col("ts").as("a_start"),
+          (col("ts") + expr("INTERVAL 45 MINUTES")).as("a_end"),
+          col("event_id").as("window_id"))
+      val promo = ev.filter(pmod(col("event_id"), lit(7)) === 0)
+        .select(col("user_id"), col("ts").as("b_start"),
+          (col("ts") + expr("INTERVAL 30 MINUTES")).as("b_end"),
+          col("event_id").as("promo_id"))
+      graft.operators.RangeJoin.overlap(act, promo, Seq("user_id"),
+        "a_start", "a_end", "b_start", "b_end",
+        granularity = 15L * 60 * 1000000)
+    },
+
+    // --- skew-salted two-stage aggregation (equal to plain groupBy) ---
+    "q_skew_agg" -> { (s, dir) =>
+      graft.operators.Skew.saltedSumCount(
+          t(s, dir, "lineitem")
+            .withColumn("l_quantity",
+              col("l_quantity").cast(org.apache.spark.sql.types.DecimalType(18, 4))),
+          Seq("l_returnflag"), "l_quantity", salts = 16)
+        .select(col("l_returnflag"),
+          col("sum_l_quantity").cast("double").as("sum_qty"), col("cnt"))
     },
 
     // --- one-pass table profile: per-column nulls/distinct/min/max
@@ -3368,6 +4097,23 @@ object SparkEntry {
         bins = 25, lo = Some(0.0), hi = Some(600000.0))
     },
 
+    // --- snapshot delta: an "old" snapshot is derived deterministically
+    // from orders (keys ≡0 mod 7 missing → added; o_totalprice bumped
+    // for keys ≡0 mod 5 → changed; nothing removed on this corpus, the
+    // removed leg is unit-pinned). The hash fast path ships only
+    // (pk, 8-byte fingerprint) through the full-outer join — the
+    // oracle replays the value-comparison semantics the hash stands
+    // in for, and units pin the two paths equal ---
+    "q_table_diff" -> { (s, dir) =>
+      import org.apache.spark.sql.functions._
+      val cur = t(s, dir, "orders")
+      val old = cur.where(col("o_orderkey") % 7 =!= 0)
+        .withColumn("o_totalprice",
+          when(col("o_orderkey") % 5 === 0, col("o_totalprice") + 1.0)
+            .otherwise(col("o_totalprice")))
+      graft.operators.TableDiff.diff(old, cur, Seq("o_orderkey"))
+    },
+
     // --- top-k frequent values per column: melt → one distinct-triple
     // shuffle → per-column rank over aggregated counts; deterministic
     // tie-break (count desc, value asc) so any engine replays it ---
@@ -3422,6 +4168,142 @@ object SparkEntry {
           round(col("running_total"), 4).as("running_total"))
     },
 
+    // --- per-node triangle counts over a derived order graph
+    // (custkey/orderkey folded onto one 4000-node domain so odd
+    // cycles exist; density stays non-degenerate at bench scale). Degree-oriented wedge counting — each triangle
+    // generated by exactly one wedge at its min-(deg,id) vertex; the
+    // oracle replays the id-ordered a<b<c three-way join, which
+    // counts the same set. ---
+    "q_triangles" -> { (s, dir) =>
+      val edges = t(s, dir, "orders").select(
+        pmod(col("o_custkey"), lit(4000)).as("x"),
+        pmod(col("o_orderkey"), lit(4000)).as("y"))
+      graft.operators.Triangles.perNodeCounts(edges, "x", "y")
+    },
+
+    // --- interval coalescing (gaps-and-islands) per supplier:
+    // shipping windows of (l_quantity - 45) days on the >45-quantity
+    // lineitems merge where they overlap or touch; one window
+    // exchange, no self-join. The oracle replays the running-max
+    // island derivation. ---
+    "q_interval_merge" -> { (s, dir) =>
+      val iv = t(s, dir, "lineitem").filter(col("l_quantity") > 45)
+        .select(col("l_suppkey"),
+          to_date(col("l_shipdate")).as("w_start"),
+          date_add(to_date(col("l_shipdate")),
+            (col("l_quantity") - 45).cast("int")).as("w_end"))
+      graft.operators.Intervals.coalesceIntervals(
+          iv, Seq("l_suppkey"), "w_start", "w_end")
+        // dates → timestamps only for the gate: the oracle's DATE
+        // arrives via pandas as midnight datetimes
+        .select(col("l_suppkey"),
+          col("span_start").cast("timestamp").as("span_start"),
+          col("span_end").cast("timestamp").as("span_end"),
+          col("merged_n"))
+    },
+
+    // --- coverage gaps (islands' complement): where each supplier's
+    // shipping windows were silent — one lead over the already-merged
+    // span frame. ---
+    "q_interval_gaps" -> { (s, dir) =>
+      val iv = t(s, dir, "lineitem").filter(col("l_quantity") > 45)
+        .select(col("l_suppkey"),
+          to_date(col("l_shipdate")).as("w_start"),
+          date_add(to_date(col("l_shipdate")),
+            (col("l_quantity") - 45).cast("int")).as("w_end"))
+      graft.operators.Intervals.gaps(iv, Seq("l_suppkey"),
+          "w_start", "w_end")
+        .select(col("l_suppkey"),
+          col("gap_start").cast("timestamp").as("gap_start"),
+          col("gap_end").cast("timestamp").as("gap_end"))
+    },
+
+    // --- longest-prefix-match enrichment (CIDR/routing-table shape)
+    // over a 16-bit key space: three prefix generations (len 4/8/12)
+    // derived from nation, facts never shuffle (descending-length
+    // broadcast join chain + coalesce). Some top nibbles are
+    // deliberately uncovered so the no-match path is exercised. ---
+    "q_lpm_enrich" -> { (s, dir) =>
+      val facts = EventsStreaming.readEvents(s, dir)
+        .select(col("event_id"),
+          pmod(col("user_id") * lit(2654435761L), lit(65536)).as("ip"))
+      val n = t(s, dir, "nation")
+      val dim =
+        n.filter(col("n_nationkey") < 10)
+          .select(lit(4).as("len"),
+            col("n_nationkey").cast("long").as("prefix"),
+            col("n_name").as("geo"))
+          .union(n.filter(col("n_nationkey") >= 5)
+            .select(lit(8).as("len"),
+              (col("n_nationkey") * 9 + 3).cast("long").as("prefix"),
+              col("n_name").as("geo")))
+          .union(n.filter(pmod(col("n_nationkey"), lit(3)) === 0)
+            .select(lit(12).as("len"),
+              (col("n_nationkey") * 163).cast("long").as("prefix"),
+              col("n_name").as("geo")))
+      graft.operators.PrefixJoin.lpmJoin(
+          facts, dim, "ip", "len", "prefix", Seq("geo"), keyBits = 16)
+        .select(col("event_id"), col("ip"),
+          coalesce(col("matched_len"), lit(0)).cast("long").as("matched_len"),
+          coalesce(col("geo"), lit("none")).as("geo"))
+    },
+
+    // --- exponentially time-decayed engagement score per user (fixed
+    // as-of instant, 3-day half-life): one map-side-combinable
+    // aggregation; the oracle replays the pow(2, -age/halflife)
+    // weighting in double seconds. ---
+    "q_decayed_score" -> { (s, dir) =>
+      graft.operators.Decay.decayedScore(
+          EventsStreaming.readEvents(s, dir)
+            .select(col("user_id"), col("ts"), col("value")),
+          Seq("user_id"), "ts", "value",
+          asOf = "2024-02-01 00:00:00", halfLifeSecs = 259200.0)
+        .select(col("user_id"),
+          round(col("decayed_score"), 4).as("decayed_score"),
+          round(col("raw_sum"), 4).as("raw_sum"), col("n_events"))
+    },
+
+    // --- golden-record survivorship: three derived customer sources
+    // with distinct priorities and engineered per-field null patterns;
+    // every field survives from the highest-priority source that has
+    // it, in ONE hash aggregation (no per-field joins). The oracle
+    // replays the union + per-field arg_max. ---
+    "q_golden_record" -> { (s, dir) =>
+      val c = t(s, dir, "customer")
+      val srcA = c.filter(pmod(col("c_custkey"), lit(3)) === 0)
+        .select(col("c_custkey"), lit(3L).as("priority"),
+          upper(col("c_name")).as("name"),
+          when(pmod(col("c_custkey"), lit(6)) === 0, lit(null))
+            .otherwise(concat(lit("+1-"), col("c_custkey"))).as("phone"),
+          round(col("c_acctbal") + 10, 2).as("acctbal"))
+      val srcB = c.select(col("c_custkey"), lit(2L).as("priority"),
+        col("c_name").as("name"),
+        concat(lit("+0-"), col("c_custkey")).as("phone"),
+        when(pmod(col("c_custkey"), lit(2)) === 0, lit(null))
+          .otherwise(round(col("c_acctbal"), 2)).as("acctbal"))
+      val srcC = c.filter(pmod(col("c_custkey"), lit(2)) === 0)
+        .select(col("c_custkey"), lit(1L).as("priority"),
+          lit(null).cast("string").as("name"),
+          lit("unknown").as("phone"),
+          lit(0.0).as("acctbal"))
+      graft.operators.Survivorship.goldenRecords(
+        srcA.union(srcB).union(srcC),
+        Seq("c_custkey"), "priority", Seq("name", "phone", "acctbal"))
+    },
+
+    // --- first-order Markov transitions over per-user event flows:
+    // one window exchange for adjacent pairs, aggregation over
+    // (from, to), normalizer on the GROUPED counts only. ---
+    "q_transitions" -> { (s, dir) =>
+      graft.operators.Markov.transitions(
+          EventsStreaming.readEvents(s, dir)
+            .select(col("user_id"), col("ts"), col("event_id"),
+              col("event_type")),
+          Seq("user_id"), "ts", "event_type", tieCols = Seq("event_id"))
+        .select(col("from_state"), col("to_state"), col("n"),
+          round(col("p"), 6).as("p"))
+    },
+
     // --- temperature-based domain rebalance (XLM-R p_d ∝ n_d^alpha,
     // alpha 0.5, target = half the corpus): boosts the low-resource
     // languages relative to en; the oracle replays counts → pow →
@@ -3470,6 +4352,27 @@ object SparkEntry {
       Contamination.exactSubstring(docs, probes, "doc_id", "text", "probe")
     },
 
+    // --- market-basket co-occurrence over order baskets (parts folded
+    // to a 199-item catalog so pairs recur): support / directional
+    // confidence / lift; basket-size cap is the skew bound. ---
+    "q_cooccurrence" -> { (s, dir) =>
+      val baskets = t(s, dir, "lineitem").select(
+        col("l_orderkey").as("basket"),
+        pmod(col("l_partkey"), lit(199)).as("item"))
+      graft.operators.Cooccurrence.pairs(
+        baskets, "basket", "item", minCount = 3)
+    },
+
+    // --- per-supplier OLS price trend over ship dates: exact integer
+    // moments (days since 1995-01-01, whole-dollar prices) make the
+    // double slope/intercept/r2 bit-replayable in any engine. ---
+    "q_trend" -> { (s, dir) =>
+      val b = t(s, dir, "lineitem").select(col("l_suppkey"),
+        datediff(to_date(col("l_shipdate")), lit("1995-01-01")).as("x"),
+        round(col("l_extendedprice")).cast("long").as("y"))
+      graft.operators.Trend.fit(b, Seq("l_suppkey"), "x", "y")
+    },
+
     // --- Efraimidis-Spirakis weighted sampling without replacement:
     // exactly 60 documents, inclusion odds proportional to length;
     // shuffle-free keys + TakeOrderedAndProject (no global sort). ---
@@ -3479,12 +4382,30 @@ object SparkEntry {
         "doc_id", "n_chars", k = 60, seed = 7L)
     },
 
+    // --- incremental aggregate maintenance: the snapshot (pre-1997
+    // orders) merges with the delta batch's partials — history is
+    // never rescanned — and the oracle is the FULL recompute, so the
+    // merge identity combine(partials(a), partials(b)) ≡
+    // partials(a ∪ b) is what the gate checks. ---
+    "q_incremental_agg" -> { (s, dir) =>
+      val o = t(s, dir, "orders")
+        .filter(col("o_orderdate").isNotNull)
+        .select(col("o_custkey"), col("o_orderdate"),
+          round(col("o_totalprice") * 100).cast("long").as("cents"))
+      val cut = to_timestamp(lit("1997-01-01 00:00:00"))
+      val snap = graft.operators.IncrementalAgg.partials(
+        o.filter(col("o_orderdate") < cut), Seq("o_custkey"), Seq("cents"))
+      val delta = graft.operators.IncrementalAgg.partials(
+        o.filter(col("o_orderdate") >= cut), Seq("o_custkey"), Seq("cents"))
+      graft.operators.IncrementalAgg.combine(
+        Seq(snap, delta), Seq("o_custkey"), Seq("cents"))
+    },
+
     // --- LINEAR multi-touch attribution: every qualifying click
     // splits the purchase's value evenly (credit = value / touches);
     // one window exchange on purchase_id over the narrow touch rows.
-    // floor-half-up rounding keeps the division engine-replayable even
-    // on exact decimal ties, where Spark's HALF_UP round and DuckDB's
-    // round() can disagree on a double. ---
+    // floor-half-up rounding (see q_cooccurrence) keeps the division
+    // engine-replayable even on exact decimal ties. ---
     "q_attribution_linear" -> { (s, dir) =>
       val touches = EventsStreaming.attributionBatch(s, dir)
       val w = org.apache.spark.sql.expressions.Window
@@ -5263,6 +6184,42 @@ object SparkEntry {
         |    '(?i)<html\b[^>]*\blang\s*=\s*"([^"]*)"', 1), '') AS html_lang
         |FROM fixture""".stripMargin,
 
+    // Count-Min replayed exactly: the 31/37 codepoint-polynomial pair,
+    // (h1 + i·h2) mod 64 positions, instance-counted cells, and the
+    // min-over-depths estimate (left join covers never-hit cells)
+    "q_cms_freq" ->
+      """WITH tok AS (
+        |  SELECT unnest(regexp_split_to_array(lower(text), '\W+')) AS tk
+        |  FROM documents
+        |), tok2 AS (
+        |  SELECT tk FROM tok WHERE length(tk) > 0
+        |), hh AS (
+        |  SELECT tk,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(range(1, length(tk) + 1), i ->
+        |        CAST(ascii(substr(tk, CAST(i AS BIGINT), 1)) AS BIGINT))),
+        |      (a, b) -> (a * 31 + b) % 2147483647) AS h1,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(range(1, length(tk) + 1), i ->
+        |        CAST(ascii(substr(tk, CAST(i AS BIGINT), 1)) AS BIGINT))),
+        |      (a, b) -> (a * 37 + b) % 2147483647) AS h2
+        |  FROM tok2
+        |), pos AS (
+        |  SELECT tk,
+        |    CAST(unnest(range(0, 4)) AS INT) AS depth,
+        |    unnest(list_transform(range(0, 4), i -> (h1 + i * h2) % 64))
+        |      AS pos
+        |  FROM hh
+        |), cms AS (
+        |  SELECT depth, pos, count(*) AS cnt FROM pos GROUP BY depth, pos
+        |), probe AS (
+        |  SELECT DISTINCT tk, depth, pos FROM pos
+        |)
+        |SELECT probe.tk,
+        |  CAST(min(coalesce(cms.cnt, 0)) AS BIGINT) AS est
+        |FROM probe LEFT JOIN cms USING (depth, pos)
+        |GROUP BY probe.tk""".stripMargin,
+
     // FIM replayed exactly: the Knuth portable hash chain (((x mod P) *
     // K) mod P mod 10^6 — every product < 2^63), selection at rate*10^6,
     // cut points by modulo, and the PSM string rebuild
@@ -6569,6 +7526,20 @@ object SparkEntry {
         |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
         |FROM events GROUP BY 1, 2""".stripMargin,
 
+    "q_scd2" ->
+      """SELECT event_id, user_id, value,
+        |  ts AS valid_from,
+        |  lead(ts) OVER w AS valid_to,
+        |  lead(ts) OVER w IS NULL AS is_current
+        |FROM events
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin,
+
+    "q_json_flatten" ->
+      """SELECT event_id, event_type AS "type", user_id AS user_uid,
+        |  user_id % 5 AS user_segment, value AS amount,
+        |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
+        |FROM events""".stripMargin,
+
     "q_attribution" ->
       """SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
         |  c.ts AS click_ts, p.ts AS purchase_ts, p.value AS purchase_value
@@ -6594,6 +7565,104 @@ object SparkEntry {
         |  purchase_value
         |FROM r WHERE rn = 1""".stripMargin,
 
+    "q_asof_join" ->
+      """WITH snaps AS (
+        |  SELECT user_id, ts AS snap_ts, max(value) AS snap_value
+        |  FROM events WHERE event_id % 5 = 0 GROUP BY user_id, ts
+        |)
+        |SELECT e.event_id, e.user_id, e.ts, e.value,
+        |  CASE WHEN s.snap_ts >= e.ts - INTERVAL 1 HOUR
+        |       THEN s.snap_value END AS snap_value,
+        |  CASE WHEN s.snap_ts >= e.ts - INTERVAL 1 HOUR
+        |       THEN s.snap_ts END AS snap_ts_matched
+        |FROM events e ASOF LEFT JOIN snaps s
+        |  ON e.user_id = s.user_id AND e.ts >= s.snap_ts""".stripMargin,
+
+    "q_cdc_apply" ->
+      """WITH snap AS (
+        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
+        |         o_orderdate, o_orderpriority
+        |  FROM orders WHERE o_orderkey % 4 <> 3
+        |), ch AS (
+        |  SELECT o_orderkey, o_custkey, o_orderstatus,
+        |         o_totalprice + 100.0 AS o_totalprice, o_orderdate,
+        |         o_orderpriority, 1 AS seq, 'U' AS op
+        |  FROM orders WHERE o_orderkey % 5 = 0
+        |  UNION ALL
+        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
+        |         o_orderdate, o_orderpriority, 2, 'D'
+        |  FROM orders WHERE o_orderkey % 7 = 0
+        |  UNION ALL
+        |  SELECT o_orderkey, o_custkey, o_orderstatus,
+        |         o_totalprice * 0.5, o_orderdate, o_orderpriority, 3, 'U'
+        |  FROM orders WHERE o_orderkey % 3 = 0
+        |), resolved AS (
+        |  SELECT * FROM (
+        |    SELECT ch.*, row_number() OVER (
+        |      PARTITION BY o_orderkey ORDER BY seq DESC) AS rn FROM ch)
+        |  WHERE rn = 1
+        |)
+        |SELECT s.o_orderkey, s.o_custkey, s.o_orderstatus,
+        |  round(s.o_totalprice, 4) AS o_totalprice, s.o_orderdate,
+        |  s.o_orderpriority
+        |FROM snap s ANTI JOIN resolved r ON s.o_orderkey = r.o_orderkey
+        |UNION ALL
+        |SELECT o_orderkey, o_custkey, o_orderstatus,
+        |  round(o_totalprice, 4) AS o_totalprice, o_orderdate,
+        |  o_orderpriority
+        |FROM resolved WHERE op <> 'D'""".stripMargin,
+
+    "q_pagerank" ->
+      """WITH edges AS (
+        |  SELECT DISTINCT o_custkey % 300 AS src, o_orderkey % 300 AS dst
+        |  FROM orders
+        |), nodes AS (
+        |  SELECT src AS id FROM edges UNION SELECT dst FROM edges
+        |), deg AS (
+        |  SELECT src, count(*) AS d FROM edges GROUP BY src
+        |), r0 AS (
+        |  SELECT id, 1.0 AS rank FROM nodes
+        |), c1 AS (
+        |  SELECT e.dst AS id, sum(r.rank / deg.d) AS c
+        |  FROM edges e JOIN deg ON e.src = deg.src JOIN r0 r ON r.id = e.src
+        |  GROUP BY e.dst
+        |), r1 AS (
+        |  SELECT n.id, 0.15 + 0.85 * coalesce(c.c, 0) AS rank
+        |  FROM nodes n LEFT JOIN c1 c ON n.id = c.id
+        |), c2 AS (
+        |  SELECT e.dst AS id, sum(r.rank / deg.d) AS c
+        |  FROM edges e JOIN deg ON e.src = deg.src JOIN r1 r ON r.id = e.src
+        |  GROUP BY e.dst
+        |), r2 AS (
+        |  SELECT n.id, 0.15 + 0.85 * coalesce(c.c, 0) AS rank
+        |  FROM nodes n LEFT JOIN c2 c ON n.id = c.id
+        |), c3 AS (
+        |  SELECT e.dst AS id, sum(r.rank / deg.d) AS c
+        |  FROM edges e JOIN deg ON e.src = deg.src JOIN r2 r ON r.id = e.src
+        |  GROUP BY e.dst
+        |)
+        |SELECT n.id, round(0.15 + 0.85 * coalesce(c.c, 0), 6) AS rank
+        |FROM nodes n LEFT JOIN c3 c ON n.id = c.id""".stripMargin,
+
+    // q_graph_bfs: recursive-CTE ground truth — enumerate every
+    // (vertex, hops) pair reachable within 3 and take the minimum,
+    // which is exactly what first-discovery frontier BFS assigns
+    "q_graph_bfs" ->
+      """WITH RECURSIVE e0 AS (
+        |  SELECT DISTINCT o.o_custkey AS src, l.l_suppkey + 1000000 AS dst
+        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |), bi AS (
+        |  SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0
+        |), reach(id, dist) AS (
+        |  SELECT c_custkey AS id, 0 AS dist
+        |  FROM customer WHERE c_custkey % 100 = 1
+        |  UNION
+        |  SELECT bi.dst, r.dist + 1
+        |  FROM reach r JOIN bi ON bi.src = r.id
+        |  WHERE r.dist < 3
+        |)
+        |SELECT id, min(dist) AS dist FROM reach GROUP BY id""".stripMargin,
+
     // q_heatmap: the same floor((x-lo)/width) cell arithmetic on
     // exact pinned widths, hi folding into the last bin
     "q_heatmap" ->
@@ -6610,6 +7679,56 @@ object SparkEntry {
         |  AND l_extendedprice IS NOT NULL
         |  AND l_extendedprice >= 0.0 AND l_extendedprice <= 120000.0
         |GROUP BY 1, 2""".stripMargin,
+
+    // q_churn_labels: lead over (ts, event_id), gap compared as exact
+    // ticks, corpus-end censoring replayed via a scalar max
+    "q_churn_labels" ->
+      """WITH b AS (
+        |  SELECT event_id, user_id, ts, epoch_us(ts) AS t FROM events
+        |), e AS (
+        |  SELECT max(t) AS endt FROM b
+        |), n AS (
+        |  SELECT event_id, user_id, ts, t,
+        |    lead(t) OVER (PARTITION BY user_id ORDER BY t, event_id) AS nt
+        |  FROM b
+        |)
+        |SELECT event_id, user_id, ts,
+        |  nt - t AS next_gap,
+        |  coalesce(nt - t <= 7200000000, false) AS label_active,
+        |  (NOT coalesce(nt - t <= 7200000000, false))
+        |    AND e.endt - t < 7200000000 AS label_censored
+        |FROM n CROSS JOIN e""".stripMargin,
+
+    // q_interpolate: prev/next known neighbors via IGNORE NULLS
+    // windows over (ts, event_id) order, the blend spelled with the
+    // same double ops and 6dp floor-half-up rounding
+    "q_interpolate" ->
+      """WITH b AS (
+        |  SELECT event_id, user_id, ts, epoch_us(ts) AS t,
+        |    CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS v
+        |  FROM events
+        |), n AS (
+        |  SELECT event_id, user_id, ts, t, v,
+        |    last_value(v IGNORE NULLS) OVER wp AS pv,
+        |    last_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS)
+        |      OVER wp AS pt,
+        |    first_value(v IGNORE NULLS) OVER wf AS nv,
+        |    first_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS)
+        |      OVER wf AS nt
+        |  FROM b
+        |  WINDOW wp AS (PARTITION BY user_id ORDER BY t, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+        |  wf AS (PARTITION BY user_id ORDER BY t, event_id
+        |    ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)
+        |)
+        |SELECT event_id, user_id, ts, v,
+        |  CASE WHEN v IS NOT NULL THEN v
+        |       WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
+        |         floor((pv + (nv - pv) * CAST(t - pt AS DOUBLE)
+        |           / CAST(nt - pt AS DOUBLE)) * 1e6 + 0.5) / 1e6
+        |  END AS value_interp,
+        |  v IS NULL AND pv IS NOT NULL AND nv IS NOT NULL AS interpolated
+        |FROM n""".stripMargin,
 
     // q_topn_others: rank replay + exact complement aggregation; item
     // stringified identically on both sides
@@ -6639,6 +7758,156 @@ object SparkEntry {
         |  CAST(sum(wi) AS DOUBLE) / 100.0,
         |  CAST(NULL AS INTEGER), true, CAST(count(*) AS BIGINT)
         |FROM r WHERE rk > 3 GROUP BY s_nationkey""".stripMargin,
+
+    // q_period_over_period: the integer month index (year*12+month-1)
+    // and both calendar joins replayed; decimal sums, double casts,
+    // and the 6dp floor-half-up pct spelling identical
+    "q_period_over_period" ->
+      """WITH m AS (
+        |  SELECT o_orderpriority,
+        |    (year(o_orderdate) * 12 + month(o_orderdate) - 1) AS idx,
+        |    min(date_trunc('month', o_orderdate)) AS period_start,
+        |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS v
+        |  FROM orders WHERE o_orderdate IS NOT NULL
+        |  GROUP BY 1, 2
+        |)
+        |SELECT cur.o_orderpriority, cur.period_start,
+        |  CAST(cur.v AS DOUBLE) AS value,
+        |  CAST(p.v AS DOUBLE) AS prior_value,
+        |  CAST(cur.v - p.v AS DOUBLE) AS delta,
+        |  CASE WHEN p.v IS NOT NULL AND p.v <> 0 THEN
+        |    floor(CAST(cur.v - p.v AS DOUBLE) / CAST(p.v AS DOUBLE)
+        |      * 1e6 + 0.5) / 1e6 END AS pct_change,
+        |  CAST(s.v AS DOUBLE) AS season_value,
+        |  CAST(cur.v - s.v AS DOUBLE) AS season_delta,
+        |  CASE WHEN s.v IS NOT NULL AND s.v <> 0 THEN
+        |    floor(CAST(cur.v - s.v AS DOUBLE) / CAST(s.v AS DOUBLE)
+        |      * 1e6 + 0.5) / 1e6 END AS season_pct
+        |FROM m cur
+        |LEFT JOIN m p ON p.o_orderpriority = cur.o_orderpriority
+        |  AND p.idx = cur.idx - 1
+        |LEFT JOIN m s ON s.o_orderpriority = cur.o_orderpriority
+        |  AND s.idx = cur.idx - 12""".stripMargin,
+
+    // q_crosstab: the complete cell grid, the one-division expected,
+    // the 6dp contribution snap, and the exact long statistic sum
+    // replayed — dims via scalar subqueries, V from the snapped chi2
+    "q_crosstab" ->
+      """WITH r AS (
+        |  SELECT o_orderstatus AS a, o_orderpriority AS b FROM orders
+        |  WHERE o_orderstatus IS NOT NULL AND o_orderpriority IS NOT NULL
+        |), cells AS (
+        |  SELECT a, b, CAST(count(*) AS BIGINT) AS observed
+        |  FROM r GROUP BY 1, 2
+        |), ra AS (
+        |  SELECT a, CAST(sum(observed) AS BIGINT) AS ra FROM cells GROUP BY 1
+        |), rb AS (
+        |  SELECT b, CAST(sum(observed) AS BIGINT) AS rb FROM cells GROUP BY 1
+        |), dims AS (
+        |  SELECT (SELECT count(DISTINCT a) FROM r) AS rc,
+        |         (SELECT count(DISTINCT b) FROM r) AS cc
+        |), grid AS (
+        |  SELECT ra.a, rb.b, ra.ra, rb.rb, coalesce(c.observed, 0) AS observed
+        |  FROM ra CROSS JOIN rb
+        |  LEFT JOIN cells c ON c.a = ra.a AND c.b = rb.b
+        |), st AS (
+        |  SELECT *, CAST(sum(observed) OVER () AS BIGINT) AS n FROM grid
+        |), e AS (
+        |  SELECT *, CAST(ra AS DOUBLE) * CAST(rb AS DOUBLE)
+        |    / CAST(n AS DOUBLE) AS ex FROM st
+        |), ci AS (
+        |  SELECT *, CAST(floor((CAST(observed AS DOUBLE) - ex)
+        |    * (CAST(observed AS DOUBLE) - ex) / ex * 1e6 + 0.5) AS BIGINT)
+        |    AS snapped
+        |  FROM e
+        |), agg AS (
+        |  SELECT *, CAST(sum(snapped) OVER () AS BIGINT) AS chi2s FROM ci
+        |)
+        |SELECT a AS o_orderstatus, b AS o_orderpriority, observed,
+        |  floor(ex * 1e6 + 0.5) / 1e6 AS expected,
+        |  CAST(snapped AS DOUBLE) / 1e6 AS contribution,
+        |  CAST(chi2s AS DOUBLE) / 1e6 AS chi2,
+        |  CAST((dims.rc - 1) * (dims.cc - 1) AS BIGINT) AS dof,
+        |  n,
+        |  CASE WHEN least(dims.rc - 1, dims.cc - 1) > 0 AND n > 0 THEN
+        |    floor(sqrt((CAST(chi2s AS DOUBLE) / 1e6)
+        |      / (CAST(n AS DOUBLE)
+        |         * CAST(least(dims.rc - 1, dims.cc - 1) AS DOUBLE)))
+        |      * 1e6 + 0.5) / 1e6 END AS cramers_v
+        |FROM agg CROSS JOIN dims""".stripMargin,
+
+    // q_keycollision: the normalization chain (lower → punct→space →
+    // split → drop empties → distinct → sort → rejoin), the distinct-
+    // spelling counts, the (max count, min value) canonical, and the
+    // >= 2 spelling filter replayed verbatim
+    "q_keycollision" ->
+      """WITH corpus AS (
+        |  SELECT s_suppkey AS id, s_name AS name FROM supplier
+        |  UNION ALL
+        |  SELECT s_suppkey + 10000, upper(replace(s_name, '#', ' # '))
+        |  FROM supplier WHERE s_suppkey % 3 = 0
+        |  UNION ALL
+        |  SELECT s_suppkey + 20000, lower(s_name) || '.'
+        |  FROM supplier WHERE s_suppkey % 4 = 0
+        |), fp AS (
+        |  SELECT id, name,
+        |    array_to_string(list_sort(list_distinct(list_filter(
+        |      string_split(regexp_replace(lower(name), '[^a-z0-9]+', ' ',
+        |        'g'), ' '),
+        |      x -> x <> ''))), ' ') AS fingerprint
+        |  FROM corpus WHERE name IS NOT NULL
+        |), nz AS (
+        |  SELECT * FROM fp WHERE fingerprint <> ''
+        |), sp AS (
+        |  SELECT fingerprint, name, count(*) AS n FROM nz GROUP BY 1, 2
+        |), mx AS (
+        |  SELECT fingerprint, max(n) AS n FROM sp GROUP BY 1
+        |), canon AS (
+        |  SELECT sp.fingerprint, min(sp.name) AS canonical
+        |  FROM sp JOIN mx ON sp.fingerprint = mx.fingerprint AND sp.n = mx.n
+        |  GROUP BY 1
+        |), sz AS (
+        |  SELECT fingerprint, CAST(count(*) AS BIGINT) AS cluster_size
+        |  FROM sp GROUP BY 1 HAVING count(*) >= 2
+        |)
+        |SELECT nz.id, nz.name, nz.fingerprint, sz.cluster_size,
+        |  canon.canonical
+        |FROM nz JOIN sz USING (fingerprint) JOIN canon USING (fingerprint)"""
+        .stripMargin,
+
+    // q_abc: per-nation Pareto classes replayed with window sums in
+    // (revenue desc, supplier) order — prior-cumulative class compare
+    // on the same scaled integers, shares rounded identically
+    "q_abc" ->
+      """WITH rev AS (
+        |  SELECT s_nationkey, s_suppkey,
+        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
+        |      AS revenue
+        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+        |  GROUP BY 1, 2
+        |), w AS (
+        |  SELECT s_nationkey, s_suppkey,
+        |    CAST(floor(revenue * 100.0 + 0.5) AS BIGINT) AS wi
+        |  FROM rev
+        |), c AS (
+        |  SELECT s_nationkey, s_suppkey, wi,
+        |    CAST(sum(wi) OVER (PARTITION BY s_nationkey
+        |      ORDER BY wi DESC, s_suppkey
+        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS e,
+        |    CAST(sum(wi) OVER (PARTITION BY s_nationkey) AS BIGINT) AS n
+        |  FROM w
+        |)
+        |SELECT s_nationkey, s_suppkey,
+        |  CAST(wi AS DOUBLE) / 100.0 AS value,
+        |  CASE WHEN n <> 0 THEN floor(CAST(wi AS DOUBLE)
+        |    / CAST(n AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS share,
+        |  CASE WHEN n <> 0 THEN floor(CAST(e AS DOUBLE)
+        |    / CAST(n AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS cum_share,
+        |  CASE WHEN n = 0 THEN NULL
+        |    WHEN 100 * (e - wi) < 80 * n THEN 'A'
+        |    WHEN 100 * (e - wi) < 95 * n THEN 'B'
+        |    ELSE 'C' END AS abc_class
+        |FROM c""".stripMargin,
 
     // q_quarantine: the corruption and the reason list replayed —
     // reason order is schema-column order then check order
@@ -6670,6 +7939,198 @@ object SparkEntry {
         |  coalesce(array_to_string(vio, '|'), '') AS violations,
         |  len(vio) = 0 AS is_valid
         |FROM v""".stripMargin,
+
+    // q_gains: NTILE cut replayed in integer arithmetic
+    // ((pos*buckets) floor-div n), rates/lifts as identical double
+    // divisions rounded floor-half-up at 6dp
+    "q_gains" ->
+      """WITH r AS (
+        |  SELECT event_id, value, event_type = 'purchase' AS lab,
+        |    row_number() OVER (ORDER BY value DESC, event_id) - 1 AS pos,
+        |    count(*) OVER () AS n
+        |  FROM events WHERE value IS NOT NULL
+        |), b AS (
+        |  SELECT CAST((pos * 10) // n AS INTEGER) + 1 AS bucket, lab FROM r
+        |), pb AS (
+        |  SELECT bucket, count(*) AS n,
+        |    sum(CASE WHEN lab THEN 1 ELSE 0 END) AS responders
+        |  FROM b GROUP BY bucket
+        |), c AS (
+        |  SELECT *, sum(n) OVER (ORDER BY bucket) AS cum_n,
+        |    sum(responders) OVER (ORDER BY bucket) AS cum_responders,
+        |    sum(n) OVER () AS tot_n, sum(responders) OVER () AS tot_r
+        |  FROM pb
+        |)
+        |SELECT bucket, CAST(n AS BIGINT) AS n,
+        |  CAST(responders AS BIGINT) AS responders,
+        |  floor(CAST(responders AS DOUBLE) / CAST(n AS DOUBLE) * 1e6 + 0.5)
+        |    / 1e6 AS response_rate,
+        |  CAST(cum_n AS BIGINT) AS cum_n,
+        |  CAST(cum_responders AS BIGINT) AS cum_responders,
+        |  CASE WHEN tot_r <> 0 THEN
+        |    floor(CAST(cum_responders AS DOUBLE) / CAST(tot_r AS DOUBLE)
+        |      * 1e6 + 0.5) / 1e6 END AS cum_capture,
+        |  CASE WHEN tot_r <> 0 THEN
+        |    floor((CAST(responders AS DOUBLE) * CAST(tot_n AS DOUBLE))
+        |      / (CAST(n AS DOUBLE) * CAST(tot_r AS DOUBLE))
+        |      * 1e6 + 0.5) / 1e6 END AS lift,
+        |  CASE WHEN tot_r <> 0 THEN
+        |    floor((CAST(cum_responders AS DOUBLE) * CAST(tot_n AS DOUBLE))
+        |      / (CAST(cum_n AS DOUBLE) * CAST(tot_r AS DOUBLE))
+        |      * 1e6 + 0.5) / 1e6 END AS cum_lift
+        |FROM c""".stripMargin,
+
+    // q_prorate: largest-remainder allocation replayed verbatim —
+    // fixed-point snaps, bigint floor division (// in DuckDB, div in
+    // Spark), remainder rank with the same tie-break. Quantities are
+    // >= 1 in the fixture, so the all-zero-weight fallback (unit-
+    // pinned) never fires here.
+    "q_prorate" ->
+      """WITH j AS (
+        |  SELECT l_orderkey, l_linenumber, l_quantity, o_totalprice,
+        |    CAST(floor(l_quantity + 0.5) AS BIGINT) AS wi,
+        |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS ti
+        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |), w AS (
+        |  SELECT *, sum(wi) OVER (PARTITION BY l_orderkey) AS wsum FROM j
+        |), f AS (
+        |  SELECT *, (ti * wi) // wsum AS fl, (ti * wi) % wsum AS rem FROM w
+        |), r AS (
+        |  SELECT *, ti - sum(fl) OVER (PARTITION BY l_orderkey) AS leftover,
+        |    row_number() OVER (PARTITION BY l_orderkey
+        |      ORDER BY rem DESC, l_linenumber, wi) AS rk
+        |  FROM f
+        |)
+        |SELECT l_orderkey, l_linenumber, l_quantity, o_totalprice,
+        |  CAST(fl + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS BIGINT)
+        |    AS allocated
+        |FROM r""".stripMargin,
+
+    // q_target_encode: LOO window sums per category in exact decimals,
+    // the same double-op order as the engine (cast-to-double AFTER the
+    // decimal subtraction), prior from one global decimal sum
+    "q_target_encode" ->
+      """WITH g AS (
+        |  SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(38,6)))
+        |    AS DOUBLE) AS gs, count(o_totalprice) AS gn
+        |  FROM orders
+        |), c AS (
+        |  SELECT o_orderkey, o_custkey,
+        |    CAST(o_totalprice AS DECIMAL(38,6)) AS y,
+        |    sum(CAST(o_totalprice AS DECIMAL(38,6)))
+        |      OVER (PARTITION BY o_custkey) AS s,
+        |    count(o_totalprice) OVER (PARTITION BY o_custkey) AS n
+        |  FROM orders
+        |)
+        |SELECT o_orderkey, o_custkey,
+        |  floor((CAST(s - y AS DOUBLE) + 20.0 * (g.gs / g.gn))
+        |    / (n - 1 + 20.0) * 1000000 + 0.5) / 1000000 AS target_enc
+        |FROM c, g""".stripMargin,
+
+    // q_ols2: the nine moments re-accumulated exactly (DuckDB BIGINT
+    // sums promote to HUGEINT), Cramer determinants in HUGEINT, and
+    // the same fixed double sequence for coefficients and r2
+    "q_ols2" ->
+      """WITH b AS (
+        |  SELECT l_returnflag,
+        |    CAST(floor(l_quantity + 0.5) AS BIGINT) AS x1,
+        |    CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS x2,
+        |    CAST(floor(l_extendedprice + 0.5) AS BIGINT) AS y
+        |  FROM lineitem
+        |  WHERE l_quantity IS NOT NULL AND l_discount IS NOT NULL
+        |    AND l_extendedprice IS NOT NULL
+        |), m AS (
+        |  SELECT l_returnflag, count(*) AS n,
+        |    CAST(sum(x1) AS HUGEINT) AS s1, CAST(sum(x2) AS HUGEINT) AS s2,
+        |    CAST(sum(y) AS HUGEINT) AS sy,
+        |    CAST(sum(x1*x1) AS HUGEINT) AS s11,
+        |    CAST(sum(x2*x2) AS HUGEINT) AS s22,
+        |    CAST(sum(x1*x2) AS HUGEINT) AS s12,
+        |    CAST(sum(x1*y) AS HUGEINT) AS s1y,
+        |    CAST(sum(x2*y) AS HUGEINT) AS s2y,
+        |    CAST(sum(y*y) AS HUGEINT) AS syy
+        |  FROM b GROUP BY 1
+        |), d AS (
+        |  SELECT *,
+        |    CAST(n AS HUGEINT) * (s11*s22 - s12*s12)
+        |      - s1 * (s1*s22 - s12*s2) + s2 * (s1*s12 - s11*s2) AS det,
+        |    sy * (s11*s22 - s12*s12)
+        |      - s1 * (s1y*s22 - s12*s2y) + s2 * (s1y*s12 - s11*s2y) AS det0,
+        |    CAST(n AS HUGEINT) * (s1y*s22 - s12*s2y)
+        |      - sy * (s1*s22 - s12*s2) + s2 * (s1*s2y - s1y*s2) AS det1,
+        |    CAST(n AS HUGEINT) * (s11*s2y - s1y*s12)
+        |      - s1 * (s1*s2y - s1y*s2) + sy * (s1*s12 - s11*s2) AS det2
+        |  FROM m
+        |), co AS (
+        |  SELECT *,
+        |    CASE WHEN n >= 3 AND det <> 0
+        |      THEN CAST(det0 AS DOUBLE) / CAST(det AS DOUBLE) END AS b0,
+        |    CASE WHEN n >= 3 AND det <> 0
+        |      THEN CAST(det1 AS DOUBLE) / CAST(det AS DOUBLE) END AS b1,
+        |    CASE WHEN n >= 3 AND det <> 0
+        |      THEN CAST(det2 AS DOUBLE) / CAST(det AS DOUBLE) END AS b2
+        |  FROM d
+        |), rr AS (
+        |  SELECT *,
+        |    CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)
+        |      / CAST(n AS DOUBLE) AS sst,
+        |    CAST(syy AS DOUBLE) - b0 * CAST(sy AS DOUBLE)
+        |      - b1 * CAST(s1y AS DOUBLE) - b2 * CAST(s2y AS DOUBLE) AS sse
+        |  FROM co
+        |)
+        |SELECT l_returnflag, n,
+        |  floor(b0 * 1000000 + 0.5) / 1000000 AS b0,
+        |  floor(b1 * 1000000 + 0.5) / 1000000 AS b1,
+        |  floor(b2 * 1000000 + 0.5) / 1000000 AS b2,
+        |  CASE WHEN n >= 3 AND det <> 0 AND sst > 0
+        |    THEN floor((1.0 - sse / sst) * 1000000 + 0.5) / 1000000
+        |  END AS r2
+        |FROM rr""".stripMargin,
+
+    // q_recognition: month explode + day overlaps + the same Hamilton
+    // arithmetic as q_prorate, keyed by line with month_start as the
+    // tie-break — whole-cent shares reconcile exactly per line
+    "q_recognition" ->
+      """WITH li AS (
+        |  SELECT l_orderkey, l_linenumber, max(l_shipdate) AS ship,
+        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4)))
+        |      AS DOUBLE) AS val
+        |  FROM lineitem WHERE l_orderkey % 7 = 0
+        |  GROUP BY 1, 2
+        |), c AS (
+        |  SELECT l_orderkey * 8 + l_linenumber AS line_id,
+        |    o_orderdate AS s, ship AS e, val
+        |  FROM li JOIN orders ON l_orderkey = o_orderkey
+        |  WHERE ship >= o_orderdate
+        |), m AS (
+        |  SELECT line_id, val, s, e,
+        |    CAST(unnest(generate_series(date_trunc('month', s),
+        |      date_trunc('month', e), INTERVAL 1 MONTH)) AS DATE) AS ms
+        |  FROM c
+        |), d AS (
+        |  SELECT line_id, val, ms AS month_start,
+        |    CAST(date_diff('day', greatest(s, ms),
+        |      least(e, last_day(ms))) + 1 AS BIGINT) AS days
+        |  FROM m
+        |), j AS (
+        |  SELECT *, CAST(floor(val * 100.0 + 0.5) AS BIGINT) AS ti
+        |  FROM d
+        |), w AS (
+        |  SELECT *, sum(days) OVER (PARTITION BY line_id) AS wsum FROM j
+        |), f AS (
+        |  SELECT *, (ti * days) // wsum AS fl, (ti * days) % wsum AS rem
+        |  FROM w
+        |), r AS (
+        |  SELECT *, ti - sum(fl) OVER (PARTITION BY line_id) AS leftover,
+        |    row_number() OVER (PARTITION BY line_id
+        |      ORDER BY rem DESC, month_start, days) AS rk
+        |  FROM f
+        |)
+        |SELECT line_id, CAST(month_start AS TIMESTAMP) AS month_start,
+        |  days,
+        |  CAST(fl + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS BIGINT)
+        |    AS recognized
+        |FROM r""".stripMargin,
 
     // q_feature_hash: per-token polynomial-31 fold mod P replayed with
     // list_reduce (0 prepended as the initial accumulator), bucket =
@@ -6720,6 +8181,145 @@ object SparkEntry {
         |FROM t JOIN ranked r USING (rank)
         |WHERE r.neg <> t.pos_id AND r.neg <> t.q_id""".stripMargin,
 
+    // q_skyline: textbook NOT-EXISTS dominance — ground truth the
+    // sort-based engine formulation must reproduce exactly (price
+    // values compare untouched off parquet, so no float arithmetic
+    // is involved on either engine)
+    "q_skyline" ->
+      """SELECT p_partkey, p_brand, p_size, p_retailprice
+        |FROM part p
+        |WHERE NOT EXISTS (
+        |  SELECT 1 FROM part q
+        |  WHERE q.p_brand = p.p_brand
+        |    AND q.p_size >= p.p_size
+        |    AND q.p_retailprice <= p.p_retailprice
+        |    AND (q.p_size > p.p_size
+        |         OR q.p_retailprice < p.p_retailprice))""".stripMargin,
+
+    // q_connected_components: the star graph connects every event of a
+    // user, so ground truth needs no recursion — component = the
+    // user's minimum event_id, size = the user's event count. An
+    // independent derivation of what the engine's label propagation
+    // must converge to.
+    "q_connected_components" ->
+      """SELECT event_id AS id,
+        |  min(event_id) OVER (PARTITION BY user_id) AS component,
+        |  count(*) OVER (PARTITION BY user_id) AS component_size
+        |FROM events""".stripMargin,
+
+    "q_funnel" ->
+      """WITH u AS (SELECT DISTINCT user_id FROM events),
+        |t1 AS (
+        |  SELECT user_id, min(ts) AS t_view FROM events
+        |  WHERE event_type = 'view' GROUP BY 1
+        |), t2 AS (
+        |  SELECT e.user_id, min(e.ts) AS t_click
+        |  FROM events e JOIN t1 USING (user_id)
+        |  WHERE e.event_type = 'click' AND e.ts > t1.t_view GROUP BY 1
+        |), t3 AS (
+        |  SELECT e.user_id, min(e.ts) AS t_purchase
+        |  FROM events e JOIN t2 USING (user_id)
+        |  WHERE e.event_type = 'purchase' AND e.ts > t2.t_click GROUP BY 1
+        |)
+        |SELECT u.user_id, t1.t_view, t2.t_click, t3.t_purchase,
+        |  CAST(CASE WHEN t3.t_purchase IS NOT NULL THEN 3
+        |       WHEN t2.t_click IS NOT NULL THEN 2
+        |       WHEN t1.t_view IS NOT NULL THEN 1
+        |       ELSE 0 END AS INTEGER) AS stages_reached
+        |FROM u LEFT JOIN t1 USING (user_id)
+        |  LEFT JOIN t2 USING (user_id) LEFT JOIN t3 USING (user_id)""".stripMargin,
+
+    "q_cohort" ->
+      """WITH f AS (
+        |  SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
+        |  FROM events GROUP BY 1
+        |), act AS (
+        |  SELECT DISTINCT e.user_id, f.cohort_week,
+        |    date_trunc('week', e.ts) AS aw
+        |  FROM events e JOIN f USING (user_id)
+        |)
+        |SELECT cohort_week,
+        |  CAST(date_diff('day', cohort_week, aw) / 7 AS INTEGER)
+        |    AS week_offset,
+        |  count(*) AS n_users
+        |FROM act GROUP BY 1, 2""".stripMargin,
+
+    // q_ewma: identical position-weighted fold over the same bounded
+    // ROWS frame — vals is frame-ordered (oldest→newest) in both
+    // engines, element i of n carries weight 0.5^(n-i), and the head
+    // renormalizes by the present weight mass (1 - 0.5^n)/0.5
+    "q_ewma" ->
+      """WITH w AS (
+        |  SELECT event_id, user_id, value,
+        |    list(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |      ROWS BETWEEN 8 PRECEDING AND CURRENT ROW) AS vals
+        |  FROM events WHERE value IS NOT NULL
+        |)
+        |SELECT event_id, user_id,
+        |  floor(
+        |    list_sum(list_transform(range(1, len(vals) + 1),
+        |      i -> vals[i] * pow(0.5, len(vals) - i)))
+        |    / ((1 - pow(0.5, len(vals))) / 0.5)
+        |    * 1000000 + 0.5) / 1000000 AS ewma
+        |FROM w""".stripMargin,
+
+    // q_skew_profile: every statistic recomputed from the same
+    // keys-only counts; hot_key = smallest key among max-count ties;
+    // entropy H = ln(N) + (Σ -c·ln c)/N, reported as H/ln(n_keys)
+    "q_skew_profile" ->
+      """WITH keyed AS (
+        |  SELECT CASE WHEN event_id % 4 <> 0 THEN 'hot'
+        |              ELSE event_type END AS k
+        |  FROM events
+        |), cnt AS (
+        |  SELECT k, count(*) AS c FROM keyed GROUP BY k
+        |), tot AS (
+        |  SELECT CAST(sum(c) AS BIGINT) AS n_rows, count(*) AS n_keys,
+        |    max(c) AS max_count,
+        |    sum(-c * ln(CAST(c AS DOUBLE))) AS nh
+        |  FROM cnt
+        |), t10 AS (
+        |  SELECT CAST(sum(c) AS BIGINT) AS top10 FROM (
+        |    SELECT c FROM cnt ORDER BY c DESC, k ASC LIMIT 10)
+        |), hot AS (
+        |  SELECT min(k) AS hot_key FROM cnt, tot WHERE c = max_count
+        |)
+        |SELECT n_rows, n_keys, hot_key, max_count,
+        |  floor(CAST(n_rows AS DOUBLE) / n_keys * 1000000 + 0.5)
+        |    / 1000000 AS avg_count,
+        |  floor(max_count * CAST(n_keys AS DOUBLE) / n_rows * 1000000
+        |    + 0.5) / 1000000 AS skew_factor,
+        |  floor(CAST(top10 AS DOUBLE) / n_rows * 1000000 + 0.5)
+        |    / 1000000 AS top10_share,
+        |  CASE WHEN n_keys = 1 THEN 1.0
+        |       ELSE floor((ln(CAST(n_rows AS DOUBLE)) + nh / n_rows)
+        |         / ln(CAST(n_keys AS DOUBLE)) * 1000000 + 0.5) / 1000000
+        |  END AS entropy_ratio,
+        |  CAST(least(ceil(max_count * CAST(n_keys AS DOUBLE) / n_rows),
+        |    64) AS INTEGER) AS suggested_salt
+        |FROM tot, t10, hot""".stripMargin,
+
+    "q_zorder" -> {
+      def quantSql(c: String, mn: String, mx: String): String =
+        s"least(65535, greatest(0, CAST(floor((CAST($c AS DOUBLE) - " +
+          s"CAST($mn AS DOUBLE)) / (CAST($mx AS DOUBLE) - " +
+          s"CAST($mn AS DOUBLE)) * 65535) AS BIGINT)))"
+      val terms = (0 until 16).flatMap(i => Seq(
+        s"(((qx >> $i) & 1) << ${2 * i})",
+        s"(((qy >> $i) & 1) << ${2 * i + 1})")).mkString(" + ")
+      s"""WITH b AS (
+         |  SELECT min(l_partkey) AS mn_p, max(l_partkey) AS mx_p,
+         |         min(l_suppkey) AS mn_s, max(l_suppkey) AS mx_s
+         |  FROM lineitem
+         |), q AS (
+         |  SELECT l_orderkey, l_linenumber,
+         |    ${quantSql("l_partkey", "mn_p", "mx_p")} AS qx,
+         |    ${quantSql("l_suppkey", "mn_s", "mx_s")} AS qy
+         |  FROM lineitem, b
+         |)
+         |SELECT l_orderkey, l_linenumber, $terms AS zval FROM q""".stripMargin
+    },
+
     "q_events_enriched" ->
       """SELECT date_trunc('hour', ts) AS hour_start,
         |  coalesce(c.c_mktsegment, 'unknown') AS segment,
@@ -6764,6 +8364,63 @@ object SparkEntry {
         |JOIN supplier ON s_suppkey = l_suppkey
         |JOIN nation ON n_nationkey = s_nationkey
         |GROUP BY CUBE (n_name, l_returnflag)""".stripMargin,
+
+    "q_correlations" ->
+      """WITH b AS (
+        |  SELECT CAST(round(l_quantity * 100) AS BIGINT) AS q,
+        |    CAST(round(l_extendedprice * 100) AS BIGINT) AS p,
+        |    CAST(round(l_discount * 100) AS BIGINT) AS d
+        |  FROM lineitem
+        |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
+        |    AND l_discount IS NOT NULL
+        |), m AS (
+        |  SELECT CAST(count(*) AS DOUBLE) AS n,
+        |    CAST(sum(CAST(q AS HUGEINT)) AS DOUBLE) AS s_q,
+        |    CAST(sum(CAST(q AS HUGEINT) * q) AS DOUBLE) AS ss_q,
+        |    CAST(sum(CAST(p AS HUGEINT)) AS DOUBLE) AS s_p,
+        |    CAST(sum(CAST(p AS HUGEINT) * p) AS DOUBLE) AS ss_p,
+        |    CAST(sum(CAST(d AS HUGEINT)) AS DOUBLE) AS s_d,
+        |    CAST(sum(CAST(d AS HUGEINT) * d) AS DOUBLE) AS ss_d,
+        |    CAST(sum(CAST(q AS HUGEINT) * p) AS DOUBLE) AS sp_qp,
+        |    CAST(sum(CAST(q AS HUGEINT) * d) AS DOUBLE) AS sp_qd,
+        |    CAST(sum(CAST(p AS HUGEINT) * d) AS DOUBLE) AS sp_pd
+        |  FROM b
+        |)
+        |SELECT 'l_quantity' AS col_a, 'l_extendedprice' AS col_b,
+        |  round((n * sp_qp - s_q * s_p)
+        |    / (sqrt(n * ss_q - s_q * s_q) * sqrt(n * ss_p - s_p * s_p)), 6)
+        |  AS corr FROM m
+        |UNION ALL
+        |SELECT 'l_quantity', 'l_discount',
+        |  round((n * sp_qd - s_q * s_d)
+        |    / (sqrt(n * ss_q - s_q * s_q) * sqrt(n * ss_d - s_d * s_d)), 6)
+        |  FROM m
+        |UNION ALL
+        |SELECT 'l_extendedprice', 'l_discount',
+        |  round((n * sp_pd - s_p * s_d)
+        |    / (sqrt(n * ss_p - s_p * s_p) * sqrt(n * ss_d - s_d * s_d)), 6)
+        |  FROM m""".stripMargin,
+
+    "q_resample" ->
+      """WITH per AS (
+        |  SELECT user_id, date_trunc('hour', ts) AS bucket_start,
+        |         avg(value) AS a, count(value) AS n
+        |  FROM events GROUP BY 1, 2
+        |), span AS (
+        |  SELECT user_id, min(bucket_start) AS mn, max(bucket_start) AS mx
+        |  FROM per GROUP BY 1
+        |), grid AS (
+        |  SELECT user_id,
+        |         unnest(generate_series(mn, mx, INTERVAL '1 hour')) AS bucket_start
+        |  FROM span
+        |)
+        |SELECT g.user_id, g.bucket_start,
+        |  round(last_value(p.a IGNORE NULLS) OVER (
+        |    PARTITION BY g.user_id ORDER BY g.bucket_start), 4) AS avg_value,
+        |  coalesce(p.n, 0) AS n_events,
+        |  p.n IS NULL AS filled
+        |FROM grid g LEFT JOIN per p
+        |  ON g.user_id = p.user_id AND g.bucket_start = p.bucket_start""".stripMargin,
 
     "q_edit_pairs" ->
       """WITH names AS (SELECT DISTINCT p_name FROM part),
@@ -7121,6 +8778,76 @@ object SparkEntry {
         |  min(v) AS bin_lo, max(v) AS bin_hi, CAST(sum(cnt) AS BIGINT) AS n_rows
         |FROM p GROUP BY 1""".stripMargin,
 
+    "q_robust_outliers" ->
+      """WITH vals AS (
+        |  SELECT l_extendedprice AS v FROM lineitem
+        |  WHERE l_extendedprice IS NOT NULL
+        |), m AS (
+        |  SELECT min(CASE WHEN r = CAST(floor((n-1)/2) AS BIGINT)
+        |             THEN v END) AS med
+        |  FROM (SELECT v, row_number() OVER (ORDER BY v) - 1 AS r,
+        |          count(*) OVER () AS n FROM vals) t
+        |), d AS (
+        |  SELECT abs(v - m.med) AS av FROM vals, m
+        |), md AS (
+        |  SELECT min(CASE WHEN r = CAST(floor((n-1)/2) AS BIGINT)
+        |             THEN av END) AS mad
+        |  FROM (SELECT av, row_number() OVER (ORDER BY av) - 1 AS r,
+        |          count(*) OVER () AS n FROM d) t
+        |)
+        |SELECT l_orderkey, l_linenumber, l_extendedprice,
+        |  round(CASE WHEN l_extendedprice IS NULL THEN NULL
+        |       WHEN md.mad = 0 THEN 0.0
+        |       ELSE (l_extendedprice - m.med) / (1.4826 * md.mad)
+        |       END, 6) AS l_extendedprice_rz,
+        |  CASE WHEN l_extendedprice IS NULL THEN NULL
+        |       ELSE md.mad > 0 AND
+        |            abs(l_extendedprice - m.med) > 3.5 * 1.4826 * md.mad
+        |       END AS l_extendedprice_outlier
+        |FROM lineitem, m, md""".stripMargin,
+
+    "q_bucketed_join" ->
+      """SELECT o_orderpriority, count(*) AS n,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY o_orderpriority""".stripMargin,
+
+    "q_winsorize" ->
+      """WITH qv AS (
+        |  SELECT l_quantity AS v, row_number() OVER (ORDER BY l_quantity) - 1 AS r,
+        |    count(*) OVER () AS n
+        |  FROM lineitem WHERE l_quantity IS NOT NULL
+        |), qb AS (
+        |  SELECT min(CASE WHEN r = CAST(floor((n-1)*0.01) AS BIGINT) THEN v END) AS lo,
+        |         min(CASE WHEN r = CAST(ceil((n-1)*0.99) AS BIGINT) THEN v END) AS hi
+        |  FROM qv
+        |), pv AS (
+        |  SELECT l_extendedprice AS v,
+        |    row_number() OVER (ORDER BY l_extendedprice) - 1 AS r,
+        |    count(*) OVER () AS n
+        |  FROM lineitem WHERE l_extendedprice IS NOT NULL
+        |), pb AS (
+        |  SELECT min(CASE WHEN r = CAST(floor((n-1)*0.01) AS BIGINT) THEN v END) AS lo,
+        |         min(CASE WHEN r = CAST(ceil((n-1)*0.99) AS BIGINT) THEN v END) AS hi
+        |  FROM pv
+        |)
+        |SELECT l_orderkey, l_linenumber,
+        |  CASE WHEN l_quantity < qb.lo THEN qb.lo
+        |       WHEN l_quantity > qb.hi THEN qb.hi
+        |       ELSE l_quantity END AS l_quantity,
+        |  CASE WHEN l_extendedprice < pb.lo THEN pb.lo
+        |       WHEN l_extendedprice > pb.hi THEN pb.hi
+        |       ELSE l_extendedprice END AS l_extendedprice
+        |FROM lineitem, qb, pb""".stripMargin,
+
+    "q_rolling_features" ->
+      """SELECT event_id, user_id, ts, value,
+        |  count(*) OVER w AS n_1h,
+        |  CAST(sum(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sum_1h
+        |FROM events
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts
+        |  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)""".stripMargin,
+
     "q_events_sliding" ->
       """WITH off AS (SELECT unnest([0, 900, 1800, 2700]) AS o),
         |w AS (
@@ -7178,6 +8905,58 @@ object SparkEntry {
         |)
         |SELECT id_a, id_b, cosine FROM scored WHERE cosine >= 0.75""".stripMargin,
 
+    // q_entity_resolution: full replay — corruption, BOTH candidate
+    // generators, the rounded JW cut, recursive-CTE closure, golden
+    // records by min id
+    "q_entity_resolution" ->
+      """WITH RECURSIVE base AS (
+        |  SELECT c_custkey AS id,
+        |    translate(substr(c_name, 10, 9),
+        |              '0123456789', 'aeioubcdfg') AS name
+        |  FROM customer WHERE c_custkey % 10 = 0
+        |), party AS (
+        |  SELECT id, name FROM base
+        |  UNION ALL
+        |  SELECT id + 1000000,
+        |    substr(name, 1, p - 1) || substr(name, p + 1, 1) ||
+        |    substr(name, p, 1) || substr(name, p + 2, 9)
+        |  FROM (SELECT id, name,
+        |          CAST(id % 50 / 10 + 1 AS INTEGER) AS p FROM base)
+        |), blk AS (
+        |  SELECT id, name, substr(name, 7, 3) AS blk FROM party
+        |), blockp AS (
+        |  SELECT a.id AS ia, b.id AS ib
+        |  FROM blk a JOIN blk b ON a.blk = b.blk AND a.id < b.id
+        |  WHERE floor(jaro_winkler_similarity(a.name, b.name) * 1e6
+        |    + 0.5) / 1e6 >= 0.9
+        |), ranked AS (
+        |  SELECT id, name,
+        |    row_number() OVER (ORDER BY name, id) - 1 AS rnk
+        |  FROM party
+        |), snmp AS (
+        |  SELECT a.id AS ia, b.id AS ib
+        |  FROM ranked a JOIN ranked b ON b.rnk - a.rnk BETWEEN 1 AND 2
+        |  WHERE floor(jaro_winkler_similarity(a.name, b.name) * 1e6
+        |    + 0.5) / 1e6 >= 0.9
+        |), pairs AS (
+        |  SELECT DISTINCT least(ia, ib) AS a, greatest(ia, ib) AS b
+        |  FROM (SELECT ia, ib FROM blockp
+        |        UNION ALL SELECT ia, ib FROM snmp)
+        |), edges AS (
+        |  SELECT a AS src, b AS dst FROM pairs
+        |  UNION SELECT b, a FROM pairs
+        |), reach(id, r) AS (
+        |  SELECT id, id FROM party
+        |  UNION
+        |  SELECT reach.id, e.dst FROM reach JOIN edges e ON e.src = reach.r
+        |), comp AS (
+        |  SELECT id, min(r) AS component FROM reach GROUP BY id
+        |)
+        |SELECT id, component,
+        |  count(*) OVER (PARTITION BY component) AS component_size,
+        |  id = component AS is_canonical
+        |FROM comp""".stripMargin,
+
     // q_sorted_neighborhood: ranks replay as row_number over the same
     // (key, id) order; neighbor pairs via the rank-difference window;
     // DuckDB's native jaro_winkler_similarity is the pinned scorer
@@ -7196,6 +8975,109 @@ object SparkEntry {
         |FROM p
         |WHERE floor(jaro_winkler_similarity(ka, kb) * 1e6 + 0.5) / 1e6
         |  >= 0.9""".stripMargin,
+
+    // q_k_anonymity: plain GROUP BY replay of the equivalence classes
+    "q_k_anonymity" ->
+      """SELECT c_nationkey, c_mktsegment,
+        |  CAST(floor(c_acctbal / 2000) AS BIGINT) AS bal_band,
+        |  count(*) AS class_size,
+        |  count(*) < 5 AS at_risk
+        |FROM customer
+        |GROUP BY 1, 2, 3""".stripMargin,
+
+    // q_pair_eval: the oracle rebuilds both normalized pair sets and
+    // the identically-spelled P/R/F1 ratios
+    "q_pair_eval" ->
+      """WITH corpus AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 5 = 0
+        |  UNION ALL
+        |  SELECT doc_id + 200000, 'zzz ' || text FROM documents
+        |  WHERE doc_id % 7 = 0
+        |), tr AS (
+        |  SELECT DISTINCT least(a, b) AS a, greatest(a, b) AS b FROM (
+        |    SELECT doc_id AS a, doc_id + 100000 AS b FROM documents
+        |    WHERE doc_id % 5 = 0
+        |    UNION ALL
+        |    SELECT doc_id, doc_id + 200000 FROM documents
+        |    WHERE doc_id % 7 = 0)
+        |), blocks AS (
+        |  SELECT doc_id, substr(text, 1, 40) AS pfx FROM corpus
+        |), pr AS (
+        |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
+        |  FROM blocks x JOIN blocks y
+        |    ON x.pfx = y.pfx AND x.doc_id < y.doc_id
+        |), m AS (
+        |  SELECT
+        |    CAST(sum(CASE WHEN pr.a IS NOT NULL THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS n_predicted,
+        |    CAST(sum(CASE WHEN tr.a IS NOT NULL THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS n_truth,
+        |    CAST(sum(CASE WHEN pr.a IS NOT NULL AND tr.a IS NOT NULL
+        |      THEN 1 ELSE 0 END) AS BIGINT) AS true_positives
+        |  FROM pr FULL OUTER JOIN tr ON pr.a = tr.a AND pr.b = tr.b
+        |)
+        |SELECT n_predicted, n_truth, true_positives,
+        |  CASE WHEN n_predicted > 0 THEN
+        |    floor(CAST(true_positives AS DOUBLE)
+        |      / CAST(n_predicted AS DOUBLE) * 1e6 + 0.5) / 1e6
+        |  END AS precision,
+        |  CASE WHEN n_truth > 0 THEN
+        |    floor(CAST(true_positives AS DOUBLE)
+        |      / CAST(n_truth AS DOUBLE) * 1e6 + 0.5) / 1e6
+        |  END AS recall,
+        |  CASE WHEN n_predicted > 0 AND n_truth > 0 AND
+        |    (CAST(true_positives AS DOUBLE) / CAST(n_predicted AS DOUBLE)
+        |     + CAST(true_positives AS DOUBLE) / CAST(n_truth AS DOUBLE)) > 0
+        |  THEN
+        |    floor(2.0
+        |      * (CAST(true_positives AS DOUBLE) / CAST(n_predicted AS DOUBLE))
+        |      * (CAST(true_positives AS DOUBLE) / CAST(n_truth AS DOUBLE))
+        |      / (CAST(true_positives AS DOUBLE) / CAST(n_predicted AS DOUBLE)
+        |         + CAST(true_positives AS DOUBLE) / CAST(n_truth AS DOUBLE))
+        |      * 1e6 + 0.5) / 1e6
+        |  END AS f1
+        |FROM m""".stripMargin,
+
+    // q_twap: same (ts, value)-ordered lead segments, same exact
+    // DECIMAL value×duration products, same two final double divisions
+    "q_twap" ->
+      """WITH o AS (
+        |  SELECT user_id,
+        |    CAST(floor(value * 10000.0 + 0.5) AS BIGINT) AS vi,
+        |    epoch_us(ts) AS t,
+        |    lead(epoch_us(ts)) OVER (
+        |      PARTITION BY user_id ORDER BY epoch_us(ts), value) AS nt
+        |  FROM events
+        |), seg AS (
+        |  SELECT user_id, vi, nt - t AS dur FROM o WHERE nt IS NOT NULL
+        |)
+        |SELECT user_id, count(*) AS n_segments,
+        |  CAST(sum(dur) AS BIGINT) AS span_us,
+        |  CASE WHEN sum(dur) > 0 THEN
+        |    floor(CAST(sum(CAST(vi AS DECIMAL(19,0)) * dur) AS DOUBLE)
+        |        / CAST(sum(dur) AS DOUBLE) / 10000.0 * 1e6 + 0.5) / 1e6
+        |  END AS twap
+        |FROM seg GROUP BY user_id""".stripMargin,
+
+    // q_vwap: identical fixed-point snap on both factors, exact
+    // decimal Σ p·q, identically-ordered final divisions
+    "q_vwap" ->
+      """WITH b AS (
+        |  SELECT l_suppkey,
+        |    CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS vi,
+        |    CAST(floor(l_quantity * 100.0 + 0.5) AS BIGINT) AS wi
+        |  FROM lineitem
+        |  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
+        |)
+        |SELECT l_suppkey, count(*) AS n,
+        |  CAST(sum(wi) AS DOUBLE) / 100.0 AS total_weight,
+        |  CASE WHEN sum(wi) > 0 THEN
+        |    floor(CAST(sum(CAST(vi AS DECIMAL(19,0)) * wi) AS DOUBLE)
+        |        / CAST(sum(wi) AS DOUBLE) / 100.0 * 1e6 + 0.5) / 1e6
+        |  END AS vwap
+        |FROM b GROUP BY l_suppkey""".stripMargin,
 
     // q_psi_drift: same baseline-anchored bins, same ε substitution on
     // the RAW proportions (display proportions round separately), same
@@ -7297,6 +9179,43 @@ object SparkEntry {
         |  END AS ndcg, mrr
         |FROM pq LEFT JOIN idcg USING (query)""".stripMargin,
 
+    // q_kaplan_meier: same day-bucketed durations and censoring rule,
+    // same suffix at-risk arithmetic, same in-order running ln-factor
+    // sum (window running sums scan rows in order on both engines)
+    "q_kaplan_meier" ->
+      """WITH subj AS (
+        |  SELECT CAST(floor(CAST(epoch_us(max(ts)) - epoch_us(min(ts))
+        |    AS DOUBLE) / 86400000000.0) AS BIGINT) AS dur,
+        |    max(ts) < TIMESTAMP '2024-01-25 00:00:00' AS ev
+        |  FROM events GROUP BY user_id
+        |), c AS (
+        |  SELECT dur AS t,
+        |    CAST(sum(CASE WHEN ev THEN 1 ELSE 0 END) AS BIGINT) AS events,
+        |    count(*) AS total
+        |  FROM subj GROUP BY dur
+        |), r AS (
+        |  SELECT t, events, total, total - events AS censored,
+        |    CAST(sum(total) OVER () AS BIGINT)
+        |      - CAST(coalesce(sum(total) OVER (ORDER BY t
+        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |        AS BIGINT) AS n_at_risk
+        |  FROM c
+        |), s AS (
+        |  SELECT t, n_at_risk, events, censored,
+        |    max(CASE WHEN events >= n_at_risk THEN 1 ELSE 0 END)
+        |      OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS extinct,
+        |    sum(CASE WHEN events > 0 AND events < n_at_risk
+        |        THEN ln(1.0 - CAST(events AS DOUBLE)
+        |          / CAST(n_at_risk AS DOUBLE))
+        |        ELSE 0.0 END)
+        |      OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS lnsum
+        |  FROM r
+        |)
+        |SELECT t, n_at_risk, events, censored,
+        |  CASE WHEN extinct = 1 THEN 0.0
+        |       ELSE floor(exp(lnsum) * 1e6 + 0.5) / 1e6 END AS survival
+        |FROM s""".stripMargin,
+
     // q_stratified_exact: identical integer allocation (// and %),
     // identical remainder ranking and portable-hash pick order
     "q_stratified_exact" ->
@@ -7324,6 +9243,120 @@ object SparkEntry {
         |)
         |SELECT doc_id, lang
         |FROM ranked JOIN alloc USING (lang) WHERE pr <= alloc""".stripMargin,
+
+    // q_ab_test: exact per-variant counts, identically-spelled pooled
+    // z, significance on the rounded statistic
+    "q_ab_test" ->
+      """WITH subj AS (
+        |  SELECT user_id,
+        |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+        |      AS conv,
+        |    CASE WHEN user_id % 3 = 0 THEN 'control'
+        |         WHEN user_id % 3 = 1 THEN 'a' ELSE 'b' END AS variant
+        |  FROM events GROUP BY user_id
+        |), counts AS (
+        |  SELECT variant, count(*) AS n,
+        |    CAST(sum(conv) AS BIGINT) AS x
+        |  FROM subj GROUP BY variant
+        |), ctrl AS (
+        |  SELECT n AS nc, x AS xc FROM counts WHERE variant = 'control'
+        |)
+        |SELECT variant,
+        |  nc AS n_control, xc AS conv_control,
+        |  n AS n_variant, x AS conv_variant,
+        |  floor(CAST(xc AS DOUBLE) / CAST(nc AS DOUBLE) * 1e6 + 0.5)
+        |    / 1e6 AS rate_control,
+        |  floor(CAST(x AS DOUBLE) / CAST(n AS DOUBLE) * 1e6 + 0.5)
+        |    / 1e6 AS rate_variant,
+        |  floor((CAST(x AS DOUBLE) / CAST(n AS DOUBLE)
+        |    - CAST(xc AS DOUBLE) / CAST(nc AS DOUBLE)) * 1e6 + 0.5)
+        |    / 1e6 AS abs_lift,
+        |  CASE WHEN xc > 0 THEN
+        |    floor((CAST(x AS DOUBLE) / CAST(n AS DOUBLE)
+        |      - CAST(xc AS DOUBLE) / CAST(nc AS DOUBLE))
+        |      / (CAST(xc AS DOUBLE) / CAST(nc AS DOUBLE)) * 1e6 + 0.5)
+        |      / 1e6 END AS rel_lift,
+        |  CASE WHEN CAST(xc + x AS DOUBLE) / CAST(nc + n AS DOUBLE) > 0
+        |        AND CAST(xc + x AS DOUBLE) / CAST(nc + n AS DOUBLE) < 1
+        |  THEN floor((CAST(x AS DOUBLE) / CAST(n AS DOUBLE)
+        |      - CAST(xc AS DOUBLE) / CAST(nc AS DOUBLE))
+        |    / sqrt(CAST(xc + x AS DOUBLE) / CAST(nc + n AS DOUBLE)
+        |      * (1.0 - CAST(xc + x AS DOUBLE) / CAST(nc + n AS DOUBLE))
+        |      * (1.0 / CAST(nc AS DOUBLE) + 1.0 / CAST(n AS DOUBLE)))
+        |    * 1e6 + 0.5) / 1e6 END AS z,
+        |  coalesce(abs(CASE WHEN CAST(xc + x AS DOUBLE)
+        |        / CAST(nc + n AS DOUBLE) > 0
+        |      AND CAST(xc + x AS DOUBLE) / CAST(nc + n AS DOUBLE) < 1
+        |    THEN floor((CAST(x AS DOUBLE) / CAST(n AS DOUBLE)
+        |        - CAST(xc AS DOUBLE) / CAST(nc AS DOUBLE))
+        |      / sqrt(CAST(xc + x AS DOUBLE) / CAST(nc + n AS DOUBLE)
+        |        * (1.0 - CAST(xc + x AS DOUBLE) / CAST(nc + n AS DOUBLE))
+        |        * (1.0 / CAST(nc AS DOUBLE) + 1.0 / CAST(n AS DOUBLE)))
+        |      * 1e6 + 0.5) / 1e6 END) >= 1.96, false) AS significant_95
+        |FROM counts, ctrl WHERE variant <> 'control'""".stripMargin,
+
+    // q_benford: string-form leading digit, 9-digit scaffold via
+    // range, identical ratio spellings; dev subtracts the ROUNDED
+    // proportions in both engines
+    "q_benford" ->
+      """WITH v AS (
+        |  SELECT abs(CAST(floor(l_extendedprice * 100.0 + 0.5)
+        |    AS BIGINT)) AS v
+        |  FROM lineitem WHERE l_extendedprice IS NOT NULL
+        |), d AS (
+        |  SELECT CAST(substr(CAST(v AS VARCHAR), 1, 1) AS INTEGER)
+        |    AS digit, count(*) AS n
+        |  FROM v WHERE v > 0 GROUP BY 1
+        |), t AS (
+        |  SELECT CAST(sum(n) AS BIGINT) AS tt FROM d
+        |), dig AS (
+        |  SELECT CAST(unnest(range(1, 10)) AS INTEGER) AS digit
+        |)
+        |SELECT dig.digit, coalesce(n, 0) AS n,
+        |  floor(CAST(coalesce(n, 0) AS DOUBLE) / CAST(tt AS DOUBLE)
+        |    * 1e6 + 0.5) / 1e6 AS observed_p,
+        |  floor(log10(1.0 + 1.0 / CAST(dig.digit AS DOUBLE))
+        |    * 1e6 + 0.5) / 1e6 AS expected_p,
+        |  abs(floor(CAST(coalesce(n, 0) AS DOUBLE) / CAST(tt AS DOUBLE)
+        |      * 1e6 + 0.5) / 1e6
+        |    - floor(log10(1.0 + 1.0 / CAST(dig.digit AS DOUBLE))
+        |      * 1e6 + 0.5) / 1e6) AS dev
+        |FROM dig LEFT JOIN d ON d.digit = dig.digit, t""".stripMargin,
+
+    // q_concentration: pre-aggregated supplier revenues, same rank
+    // formulation with (value, member) tie order, exact decimal
+    // moments, identically-ordered double sequences
+    "q_concentration" ->
+      """WITH rev AS (
+        |  SELECT s_nationkey, s_suppkey,
+        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
+        |      AS revenue
+        |  FROM lineitem JOIN supplier ON s_suppkey = l_suppkey
+        |  GROUP BY 1, 2
+        |), b AS (
+        |  SELECT s_nationkey, s_suppkey,
+        |    CAST(floor(revenue * 100.0 + 0.5) AS BIGINT) AS v
+        |  FROM rev WHERE revenue IS NOT NULL AND revenue >= 0
+        |), r AS (
+        |  SELECT s_nationkey, v,
+        |    row_number() OVER (PARTITION BY s_nationkey
+        |      ORDER BY v, s_suppkey) AS rk
+        |  FROM b
+        |)
+        |SELECT s_nationkey, count(*) AS n,
+        |  CAST(sum(CAST(v AS DECIMAL(38,0))) AS DOUBLE) / 100.0 AS total,
+        |  floor(CAST(sum(CAST(CAST(v AS DECIMAL(19,0)) * v
+        |      AS DECIMAL(38,0))) AS DOUBLE)
+        |    / (CAST(sum(CAST(v AS DECIMAL(38,0))) AS DOUBLE)
+        |       * CAST(sum(CAST(v AS DECIMAL(38,0))) AS DOUBLE))
+        |    * 10000.0 * 1e6 + 0.5) / 1e6 AS hhi,
+        |  floor((2.0 * CAST(sum(CAST(CAST(v AS DECIMAL(19,0)) * rk
+        |      AS DECIMAL(38,0))) AS DOUBLE)
+        |    / (CAST(count(*) AS DOUBLE)
+        |       * CAST(sum(CAST(v AS DECIMAL(38,0))) AS DOUBLE))
+        |    - (CAST(count(*) AS DOUBLE) + 1.0) / CAST(count(*) AS DOUBLE))
+        |    * 1e6 + 0.5) / 1e6 AS gini
+        |FROM r GROUP BY s_nationkey""".stripMargin,
 
     // q_ks_drift: single-axis cumulative replay; the rounded gap maxes
     // identically and ties on D break to the smaller value
@@ -7410,6 +9443,134 @@ object SparkEntry {
         |    + (CAST(hi99 AS DOUBLE) - CAST(lo99 AS DOUBLE)) * fr99)
         |    / 100.0 * 1e6 + 0.5) / 1e6 AS p99
         |FROM a""".stripMargin,
+
+    // q_trimmed_mean: the oracle ranks rows per key and keeps 1-based
+    // ranks (k, n-k] — the same multiset the span-overlap arithmetic
+    // keeps — so the exact integer sum matches and the two final double
+    // divisions are spelled identically
+    "q_trimmed_mean" ->
+      """WITH b AS (
+        |  SELECT l_suppkey AS k,
+        |    CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS vi
+        |  FROM lineitem WHERE l_extendedprice IS NOT NULL
+        |), r AS (
+        |  SELECT k, vi,
+        |    row_number() OVER (PARTITION BY k ORDER BY vi) AS rn,
+        |    count(*) OVER (PARTITION BY k) AS n
+        |  FROM b
+        |), t AS (
+        |  SELECT k, n, vi FROM r
+        |  WHERE rn > CAST(floor(CAST(n AS DOUBLE) * 0.1) AS BIGINT)
+        |    AND rn <= n - CAST(floor(CAST(n AS DOUBLE) * 0.1) AS BIGINT)
+        |)
+        |SELECT k AS l_suppkey, min(n) AS n,
+        |  count(*) AS n_kept,
+        |  floor(CAST(sum(CAST(vi AS DECIMAL(38,0))) AS DOUBLE)
+        |      / CAST(count(*) AS DOUBLE) / 100.0 * 1e6 + 0.5) / 1e6
+        |    AS trimmed_mean
+        |FROM t GROUP BY k""".stripMargin,
+
+    // q_anomaly_zscore: the oracle rebuilds the same prior-hour frame
+    // (RANGE ... 1 PRECEDING over epoch micros), the same exact decimal
+    // moments, and the identically-ordered double arithmetic; the flag
+    // evaluates on the rounded score in both engines
+    "q_anomaly_zscore" ->
+      """WITH b AS (
+        |  SELECT event_id, user_id, ts, value,
+        |    CAST(floor(value * 10000.0 + 0.5) AS BIGINT) AS vi,
+        |    epoch_us(ts) AS tsi
+        |  FROM events
+        |), m AS (
+        |  SELECT event_id, user_id, ts, value, vi,
+        |    count(vi) OVER w AS n_baseline,
+        |    sum(CAST(vi AS DECIMAL(38,0))) OVER w AS s,
+        |    sum(CAST(CAST(vi AS DECIMAL(19,0)) * vi AS DECIMAL(38,0)))
+        |      OVER w AS q
+        |  FROM b
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY tsi
+        |    RANGE BETWEEN 3600000000 PRECEDING AND 1 PRECEDING)
+        |), z AS (
+        |  SELECT event_id, user_id, ts, value, n_baseline,
+        |    CASE WHEN n_baseline >= 5 AND
+        |      ((CAST(q AS DOUBLE) / 1e8
+        |        - (CAST(s AS DOUBLE) / 10000.0)
+        |          * (CAST(s AS DOUBLE) / 10000.0)
+        |          / CAST(n_baseline AS DOUBLE))
+        |        / (CAST(n_baseline AS DOUBLE) - 1.0)) > 0
+        |    THEN floor((CAST(vi AS DOUBLE) / 10000.0
+        |        - CAST(s AS DOUBLE) / CAST(n_baseline AS DOUBLE) / 10000.0)
+        |      / sqrt((CAST(q AS DOUBLE) / 1e8
+        |        - (CAST(s AS DOUBLE) / 10000.0)
+        |          * (CAST(s AS DOUBLE) / 10000.0)
+        |          / CAST(n_baseline AS DOUBLE))
+        |        / (CAST(n_baseline AS DOUBLE) - 1.0))
+        |      * 1e6 + 0.5) / 1e6
+        |    END AS zscore
+        |  FROM m
+        |)
+        |SELECT event_id, user_id, ts, value, n_baseline, zscore,
+        |  coalesce(abs(zscore) >= 3.0, false) AS is_anomaly
+        |FROM z""".stripMargin,
+
+    // q_cusum: target=50 slack=5 threshold=150 at scale 4 →
+    // scaled knobs ti+ki=550000, ti-ki=450000, h=1500000; the prefix
+    // sum, running min (floored at 0), and integer alarm compare are
+    // the operator's exact arithmetic replayed verbatim
+    "q_cusum" ->
+      """WITH b AS (
+        |  SELECT event_id, user_id, ts, value,
+        |    CAST(floor(value * 10000.0 + 0.5) AS BIGINT) AS vi,
+        |    epoch_us(ts) AS tsi
+        |  FROM events
+        |), p AS (
+        |  SELECT event_id, user_id, ts, value, vi, tsi,
+        |    sum(CAST(coalesce(vi - 550000, 0) AS DECIMAL(38,0))) OVER w AS p_hi,
+        |    sum(CAST(coalesce(450000 - vi, 0) AS DECIMAL(38,0))) OVER w AS p_lo
+        |  FROM b
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY tsi, event_id
+        |    ROWS UNBOUNDED PRECEDING)
+        |), m AS (
+        |  SELECT event_id, user_id, ts, value, vi, p_hi, p_lo,
+        |    least(min(p_hi) OVER w, CAST(0 AS DECIMAL(38,0))) AS m_hi,
+        |    least(min(p_lo) OVER w, CAST(0 AS DECIMAL(38,0))) AS m_lo
+        |  FROM p
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY tsi, event_id
+        |    ROWS UNBOUNDED PRECEDING)
+        |)
+        |SELECT event_id, user_id, ts, value,
+        |  CASE WHEN vi IS NOT NULL
+        |    THEN CAST(p_hi - m_hi AS DOUBLE) / 10000.0 END AS cusum_high,
+        |  CASE WHEN vi IS NOT NULL
+        |    THEN CAST(p_lo - m_lo AS DOUBLE) / 10000.0 END AS cusum_low,
+        |  vi IS NOT NULL AND (p_hi - m_hi) > 1500000 AS alarm_high,
+        |  vi IS NOT NULL AND (p_lo - m_lo) > 1500000 AS alarm_low
+        |FROM m""".stripMargin,
+
+    "q_range_join" ->
+      """WITH iv AS (
+        |  SELECT user_id, ts AS start_ts,
+        |    ts + INTERVAL 45 MINUTE AS end_ts, event_id AS window_id
+        |  FROM events WHERE event_id % 10 = 0
+        |)
+        |SELECT e.event_id, e.user_id, e.ts,
+        |  iv.start_ts, iv.end_ts, iv.window_id
+        |FROM events e JOIN iv ON e.user_id = iv.user_id
+        |  AND e.ts >= iv.start_ts AND e.ts < iv.end_ts""".stripMargin,
+
+    "q_interval_join" ->
+      """WITH a AS (
+        |  SELECT user_id, ts AS a_start,
+        |    ts + INTERVAL 45 MINUTE AS a_end, event_id AS window_id
+        |  FROM events WHERE event_id % 10 = 0
+        |), b AS (
+        |  SELECT user_id, ts AS b_start,
+        |    ts + INTERVAL 30 MINUTE AS b_end, event_id AS promo_id
+        |  FROM events WHERE event_id % 7 = 0
+        |)
+        |SELECT a.user_id, a.a_start, a.a_end, a.window_id,
+        |  b.b_start, b.b_end, b.promo_id
+        |FROM a JOIN b ON a.user_id = b.user_id
+        |  AND a.a_start < b.b_end AND b.b_start < a.a_end""".stripMargin,
 
     "q_events_props" ->
       """SELECT event_type,
@@ -7763,6 +9924,12 @@ object SparkEntry {
         |SELECT event_id, ts, user_id, event_type, value FROM r
         |WHERE rn = 1""".stripMargin,
 
+    "q_skew_agg" ->
+      """SELECT l_returnflag,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
+        |  count(*) AS cnt
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
+
     "q_quality_checks" ->
       """WITH m AS (
         |  SELECT 'not_null' AS chk, 'l_shipdate' AS target,
@@ -7890,6 +10057,36 @@ object SparkEntry {
         |  (r.bin + 1) * 24000.0 AS bin_hi, COALESCE(c.n, 0) AS n
         |FROM range(25) r(bin) LEFT JOIN c ON r.bin = c.bin""".stripMargin,
 
+    // q_table_diff: the oracle replays the diff's SEMANTICS — a
+    // full-outer join with IS DISTINCT FROM over every shared non-pk
+    // column — which the engine's (pk, xxhash64) fast path stands in
+    // for (hash ≡ value comparison pinned in TableDiffSpec)
+    "q_table_diff" ->
+      """WITH old AS (
+        |  SELECT o_orderkey, o_custkey, o_orderstatus,
+        |    CASE WHEN o_orderkey % 5 = 0 THEN o_totalprice + 1.0
+        |         ELSE o_totalprice END AS o_totalprice,
+        |    o_orderdate, o_orderpriority
+        |  FROM orders WHERE o_orderkey % 7 <> 0)
+        |SELECT COALESCE(o.o_orderkey, c.o_orderkey) AS o_orderkey,
+        |  CASE WHEN o.o_orderkey IS NULL THEN 'added'
+        |       WHEN c.o_orderkey IS NULL THEN 'removed'
+        |       WHEN (o.o_custkey IS DISTINCT FROM c.o_custkey)
+        |         OR (o.o_orderstatus IS DISTINCT FROM c.o_orderstatus)
+        |         OR (o.o_totalprice IS DISTINCT FROM c.o_totalprice)
+        |         OR (o.o_orderdate IS DISTINCT FROM c.o_orderdate)
+        |         OR (o.o_orderpriority IS DISTINCT FROM c.o_orderpriority)
+        |       THEN 'changed' END AS change_type
+        |FROM old o FULL OUTER JOIN orders c ON o.o_orderkey = c.o_orderkey
+        |WHERE CASE WHEN o.o_orderkey IS NULL THEN 'added'
+        |       WHEN c.o_orderkey IS NULL THEN 'removed'
+        |       WHEN (o.o_custkey IS DISTINCT FROM c.o_custkey)
+        |         OR (o.o_orderstatus IS DISTINCT FROM c.o_orderstatus)
+        |         OR (o.o_totalprice IS DISTINCT FROM c.o_totalprice)
+        |         OR (o.o_orderdate IS DISTINCT FROM c.o_orderdate)
+        |         OR (o.o_orderpriority IS DISTINCT FROM c.o_orderpriority)
+        |       THEN 'changed' END IS NOT NULL""".stripMargin,
+
     // q_top_values: melt → count → rank, same deterministic tie-break
     // (count desc, value-as-string asc, nulls first)
     "q_top_values" ->
@@ -7963,6 +10160,156 @@ object SparkEntry {
         |SELECT user_id, min(ts) AS session_start, count(*) AS n_events,
         |  min(ts) AS first_ts, max(ts) AS last_ts
         |FROM g GROUP BY user_id, sid""".stripMargin,
+
+    "q_triangles" ->
+      """WITH raw AS (
+        |  SELECT least(o_custkey % 4000, o_orderkey % 4000) AS a,
+        |         greatest(o_custkey % 4000, o_orderkey % 4000) AS b
+        |  FROM orders
+        |  WHERE o_custkey % 4000 <> o_orderkey % 4000
+        |), e AS (
+        |  SELECT DISTINCT a, b FROM raw
+        |), tri AS (
+        |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
+        |  FROM e e1
+        |  JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
+        |  JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b
+        |), nodes AS (
+        |  SELECT x AS id FROM tri
+        |  UNION ALL SELECT y FROM tri
+        |  UNION ALL SELECT z FROM tri
+        |)
+        |SELECT id, count(*) AS triangles FROM nodes GROUP BY id""".stripMargin,
+
+    "q_interval_merge" ->
+      """WITH base AS (
+        |  SELECT l_suppkey, CAST(l_shipdate AS DATE) AS s,
+        |    CAST(l_shipdate AS DATE) + CAST(l_quantity - 45 AS INT) AS e
+        |  FROM lineitem WHERE l_quantity > 45
+        |), f AS (
+        |  SELECT l_suppkey, s, e,
+        |    max(e) OVER (PARTITION BY l_suppkey ORDER BY s, e
+        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+        |      AS pm
+        |  FROM base
+        |), i AS (
+        |  SELECT l_suppkey, s, e,
+        |    sum(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
+        |      OVER (PARTITION BY l_suppkey ORDER BY s, e
+        |            ROWS UNBOUNDED PRECEDING) AS island
+        |  FROM f
+        |)
+        |SELECT l_suppkey, min(s) AS span_start, max(e) AS span_end,
+        |  count(*) AS merged_n
+        |FROM i GROUP BY l_suppkey, island""".stripMargin,
+
+    // q_interval_gaps: merged spans (same CTE chain) + one lead
+    "q_interval_gaps" ->
+      """WITH base AS (
+        |  SELECT l_suppkey, CAST(l_shipdate AS DATE) AS s,
+        |    CAST(l_shipdate AS DATE) + CAST(l_quantity - 45 AS INT) AS e
+        |  FROM lineitem WHERE l_quantity > 45
+        |), f AS (
+        |  SELECT l_suppkey, s, e,
+        |    max(e) OVER (PARTITION BY l_suppkey ORDER BY s, e
+        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+        |      AS pm
+        |  FROM base
+        |), i AS (
+        |  SELECT l_suppkey, s, e,
+        |    sum(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
+        |      OVER (PARTITION BY l_suppkey ORDER BY s, e
+        |            ROWS UNBOUNDED PRECEDING) AS island
+        |  FROM f
+        |), spans AS (
+        |  SELECT l_suppkey, min(s) AS span_start, max(e) AS span_end
+        |  FROM i GROUP BY l_suppkey, island
+        |), g AS (
+        |  SELECT l_suppkey, span_end AS gap_start,
+        |    lead(span_start) OVER (PARTITION BY l_suppkey
+        |      ORDER BY span_start, span_end) AS gap_end
+        |  FROM spans
+        |)
+        |SELECT l_suppkey, gap_start, gap_end
+        |FROM g WHERE gap_end IS NOT NULL""".stripMargin,
+
+    "q_lpm_enrich" ->
+      """WITH facts AS (
+        |  SELECT event_id, (user_id * 2654435761) % 65536 AS ip FROM events
+        |), dim AS (
+        |  SELECT 4 AS len, CAST(n_nationkey AS BIGINT) AS prefix,
+        |         n_name AS geo
+        |  FROM nation WHERE n_nationkey < 10
+        |  UNION ALL
+        |  SELECT 8, CAST(n_nationkey * 9 + 3 AS BIGINT), n_name
+        |  FROM nation WHERE n_nationkey >= 5
+        |  UNION ALL
+        |  SELECT 12, CAST(n_nationkey * 163 AS BIGINT), n_name
+        |  FROM nation WHERE n_nationkey % 3 = 0
+        |), m AS (
+        |  SELECT f.event_id, f.ip, d.len, d.geo
+        |  FROM facts f
+        |  LEFT JOIN dim d ON (f.ip >> (16 - d.len)) = d.prefix
+        |)
+        |SELECT event_id, ip,
+        |  coalesce(max(len), 0) AS matched_len,
+        |  coalesce(arg_max(geo, len), 'none') AS geo
+        |FROM m GROUP BY event_id, ip""".stripMargin,
+
+    "q_decayed_score" ->
+      """SELECT user_id,
+        |  round(sum(value * pow(2.0,
+        |    -(epoch(TIMESTAMP '2024-02-01 00:00:00') - epoch(ts))
+        |      / 259200.0)), 4) AS decayed_score,
+        |  round(sum(value), 4) AS raw_sum,
+        |  count(*) AS n_events
+        |FROM events
+        |WHERE ts IS NOT NULL AND ts <= TIMESTAMP '2024-02-01 00:00:00'
+        |GROUP BY user_id""".stripMargin,
+
+    "q_golden_record" ->
+      """WITH u AS (
+        |  SELECT c_custkey, CAST(3 AS BIGINT) AS priority,
+        |    upper(c_name) AS name,
+        |    CASE WHEN c_custkey % 6 = 0 THEN NULL
+        |         ELSE '+1-' || c_custkey END AS phone,
+        |    round(c_acctbal + 10, 2) AS acctbal
+        |  FROM customer WHERE c_custkey % 3 = 0
+        |  UNION ALL
+        |  SELECT c_custkey, 2, c_name, '+0-' || c_custkey,
+        |    CASE WHEN c_custkey % 2 = 0 THEN NULL
+        |         ELSE round(c_acctbal, 2) END
+        |  FROM customer
+        |  UNION ALL
+        |  SELECT c_custkey, 1, NULL, 'unknown', 0.0
+        |  FROM customer WHERE c_custkey % 2 = 0
+        |)
+        |SELECT c_custkey,
+        |  arg_max(name, CASE WHEN name IS NOT NULL THEN priority END)
+        |    AS name,
+        |  arg_max(phone, CASE WHEN phone IS NOT NULL THEN priority END)
+        |    AS phone,
+        |  arg_max(acctbal, CASE WHEN acctbal IS NOT NULL THEN priority END)
+        |    AS acctbal,
+        |  max(priority) AS best_priority,
+        |  count(*) AS n_sources
+        |FROM u GROUP BY c_custkey""".stripMargin,
+
+    "q_transitions" ->
+      """WITH e AS (
+        |  SELECT user_id, event_type,
+        |    lag(event_type) OVER (PARTITION BY user_id
+        |                          ORDER BY ts, event_id) AS prev
+        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
+        |), c AS (
+        |  SELECT prev AS from_state, event_type AS to_state,
+        |    count(*) AS n
+        |  FROM e WHERE prev IS NOT NULL GROUP BY 1, 2
+        |)
+        |SELECT from_state, to_state, n,
+        |  round(CAST(n AS DOUBLE)
+        |    / sum(n) OVER (PARTITION BY from_state), 6) AS p
+        |FROM c""".stripMargin,
 
     "q_temperature_sample" ->
       """WITH c AS (
@@ -8042,6 +10389,77 @@ object SparkEntry {
         |FROM documents d JOIN probes ON contains(d.text, probes.p)
         |GROUP BY d.doc_id""".stripMargin,
 
+    "q_cooccurrence" ->
+      """WITH items0 AS (
+        |  SELECT DISTINCT l_orderkey AS b, l_partkey % 199 AS i
+        |  FROM lineitem
+        |  WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL
+        |), items AS (
+        |  -- mirror the operator's maxBasketSize=1000 skew guard: drop
+        |  -- whole baskets over the cap BEFORE nBaskets/itemCounts so
+        |  -- the metric denominators agree even on degenerate fixtures
+        |  SELECT b, i FROM (
+        |    SELECT b, i, count(*) OVER (PARTITION BY b) AS sz FROM items0
+        |  ) WHERE sz <= 1000
+        |), nb AS (
+        |  SELECT count(DISTINCT b) AS n FROM items
+        |), ic AS (
+        |  SELECT i, count(*) AS cnt FROM items GROUP BY i
+        |), co AS (
+        |  SELECT a.i AS item_a, c.i AS item_b, count(*) AS co_count
+        |  FROM items a JOIN items c ON a.b = c.b AND a.i < c.i
+        |  GROUP BY 1, 2 HAVING count(*) >= 3
+        |)
+        |SELECT co.item_a, co.item_b, co.co_count,
+        |  floor(co.co_count / CAST(nb.n AS DOUBLE) * 1000000 + 0.5)
+        |    / 1000000 AS support,
+        |  floor(co.co_count / CAST(na.cnt AS DOUBLE) * 1000000 + 0.5)
+        |    / 1000000 AS conf_a_to_b,
+        |  floor(co.co_count / CAST(cb.cnt AS DOUBLE) * 1000000 + 0.5)
+        |    / 1000000 AS conf_b_to_a,
+        |  floor(co.co_count * CAST(nb.n AS DOUBLE)
+        |    / CAST(na.cnt * cb.cnt AS DOUBLE) * 1000000 + 0.5)
+        |    / 1000000 AS lift
+        |FROM co, nb
+        |JOIN ic na ON na.i = co.item_a
+        |JOIN ic cb ON cb.i = co.item_b""".stripMargin,
+
+    "q_trend" ->
+      """WITH b AS (
+        |  SELECT l_suppkey,
+        |    date_diff('day', DATE '1995-01-01', CAST(l_shipdate AS DATE))
+        |      AS x,
+        |    CAST(round(l_extendedprice) AS BIGINT) AS y
+        |  FROM lineitem
+        |  WHERE l_shipdate IS NOT NULL AND l_extendedprice IS NOT NULL
+        |), m AS (
+        |  SELECT l_suppkey, count(*) AS n,
+        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+        |    CAST(sum(x * y) AS BIGINT) AS sxy,
+        |    CAST(sum(x * x) AS BIGINT) AS sxx,
+        |    CAST(sum(y * y) AS BIGINT) AS syy
+        |  FROM b GROUP BY 1
+        |)
+        |SELECT l_suppkey, n,
+        |  floor(CASE WHEN n * sxx - sx * sx > 0 THEN
+        |    CAST(n * sxy - sx * sy AS DOUBLE)
+        |      / CAST(n * sxx - sx * sx AS DOUBLE) END
+        |    * 1000000 + 0.5) / 1000000 AS slope,
+        |  floor(CASE WHEN n * sxx - sx * sx > 0 THEN
+        |    (CAST(sy AS DOUBLE)
+        |      - (CAST(n * sxy - sx * sy AS DOUBLE)
+        |         / CAST(n * sxx - sx * sx AS DOUBLE))
+        |        * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE) END
+        |    * 1000000 + 0.5) / 1000000 AS intercept,
+        |  floor(CASE WHEN n * sxx - sx * sx > 0
+        |             AND n * syy - sy * sy > 0 THEN
+        |    (CAST(n * sxy - sx * sy AS DOUBLE)
+        |      * CAST(n * sxy - sx * sy AS DOUBLE))
+        |    / (CAST(n * sxx - sx * sx AS DOUBLE)
+        |      * CAST(n * syy - sy * sy AS DOUBLE)) END
+        |    * 1000000 + 0.5) / 1000000 AS r2
+        |FROM m""".stripMargin,
+
     "q_weighted_sample" ->
       """SELECT doc_id, n_chars FROM (
         |  SELECT doc_id, n_chars,
@@ -8051,6 +10469,15 @@ object SparkEntry {
         |  FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0
         |  ORDER BY key DESC, doc_id LIMIT 60
         |)""".stripMargin,
+
+    "q_incremental_agg" ->
+      """SELECT o_custkey, count(*) AS n,
+        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+        |    AS sum_cents,
+        |  min(CAST(round(o_totalprice * 100) AS BIGINT)) AS min_cents,
+        |  max(CAST(round(o_totalprice * 100) AS BIGINT)) AS max_cents
+        |FROM orders WHERE o_orderdate IS NOT NULL
+        |GROUP BY o_custkey""".stripMargin,
 
     "q_attribution_linear" ->
       """WITH t AS (

@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   * array `filter`/`size` projection over the tokens — the query set is
   * tiny and LITERAL, so there is NO explode and NO (doc, term)
   * shuffle; corpus statistics (N, avgdl, per-term df) reduce to ONE
-  * aggregate row, cross-joined back onto every document as a
-  * broadcast. Total cost: one narrow scan + one scalar aggregate —
+  * aggregate row broadcast back (the RobustStats one-row-stats
+  * pattern). Total cost: one narrow scan + one scalar aggregate —
   * survives 100 TB trivially. For large query VOCABULARIES (thousands
   * of terms) use [[TfIdf]]/[[Indexing]]-style explode joins instead;
   * the literal-terms cap is enforced loudly. */

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 /** Ranking-quality metrics — nDCG@k and MRR per query — the
   * evaluation loop for the retrieval family ([[Bm25]], [[Fusion]],
   * the ANN indexes): before a ranking change ships, its graded
-  * relevance against labels must not regress. It scores ORDER, not
-  * set membership.
+  * relevance against labels must not regress. The pair-set twin is
+  * [[graft.operators.PairEval]]; this one scores ORDER.
   *
   * Definitions: DCG@k = Σ_{i≤k} (2^rel − 1)/log2(i+1) over the ranked
   * results; iDCG@k is the same sum over the k best labels (rel desc,

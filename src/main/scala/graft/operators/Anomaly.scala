@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * floor-half-up) and the window moments Σv / Σv² accumulate as EXACT
   * decimals — order-independent, so the score replays bit-for-bit on
   * any engine and any partitioning. The final mean/variance/z are a
-  * handful of double ops that a SQL replay spells identically;
+  * handful of double ops spelled identically in the SQL oracle;
   * z is rounded tie-safely and the anomaly flag evaluates on the
   * ROUNDED score. Zero-variance baselines yield a null z (flag false):
   * a constant history says nothing about scale.

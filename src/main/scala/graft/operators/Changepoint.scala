@@ -29,7 +29,7 @@ import org.apache.spark.sql.types._
   * decimals, floor-half-up — the [[Anomaly]] convention), so every
   * prefix sum and running min is exact integer arithmetic in
   * DECIMAL(38,0); the emitted statistics are a single cast-to-double
-  * division that a SQL replay spells identically, and alarms compare
+  * division spelled identically in the SQL oracle, and alarms compare
   * SCALED integers — no float ever decides a flag. Ordering ties break
   * on `idCol`, so the statistic is deterministic under any
   * partitioning. Null values pass through with null statistics and

@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions.col
   *  - CLUSTER: `repartitionByRange(n, keys) + sortWithinPartitions` —
   *    the Z-order-lite layout pass: one range shuffle + local sort
   *    buys min/max-statistics data skipping on the cluster keys for
-  *    every future scan.
+  *    every future scan (see [[ZOrder]] for the multi-column
+  *    interleave variant).
   *
   * Output file count derives from the INPUT's actual byte size (a
   * driver-side file listing — no data scan), not a row count guess,

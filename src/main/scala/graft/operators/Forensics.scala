@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.DecimalType
   * Everything here follows the engine's exactness discipline: counts
   * and value sums aggregate exactly (order-independent), and every
   * reported ratio is a fixed double sequence rounded tie-safely, so
-  * the reports replay bit-for-bit in SQL. */
+  * the reports replay bit-for-bit in the SQL oracle. */
 object Forensics {
 
   private def q(c: String): Column = col("`" + c.replace("`", "``") + "`")

@@ -19,8 +19,9 @@ import graft.functions.BloomExprs
   * as [[graft.llm.Bloom]] ([[BloomExprs.BloomKeyPositions]] with
   * k = depth, m = width): two 31/37 codepoint polynomials mod 2^31−1,
   * position_i = (h1 + i·h2) mod w — every step replays in DuckDB
-  * BIGINT arithmetic, so a SQL replay reproduces the exact cell table
-  * and every estimate, collisions included.
+  * BIGINT arithmetic, so the ORACLE reproduces the exact cell table
+  * and every estimate, collisions included (`q_cms_freq` uses a
+  * deliberately tiny w so collisions genuinely occur in-gate).
   *
   * Guarantees: estimate ≥ true count always (no underestimate — each
   * cell only ever adds mass); estimate ≤ true + ε·N with probability

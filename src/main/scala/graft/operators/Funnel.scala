@@ -16,12 +16,12 @@ import org.apache.spark.sql.functions._
   * final value equals the true sequential-funnel time, which is what
   * the per-key aggregate then takes. Same-timestamp events never
   * satisfy the strict `>`, so ties between stages resolve identically
-  * here and in the join-chain formulation below.
+  * here and in the oracle's join-chain replay.
   *
   * Scale shape: ONE exchange. The window partitions by key and the
   * closing groupBy reuses that partitioning, so a billion-user event
-  * log shuffles once; the join-chain formulation (one join + agg per
-  * stage) would shuffle the log per stage.
+  * log shuffles once; the join-chain formulation the oracle replays
+  * (one join + agg per stage) would shuffle the log per stage.
   * Output: keyCols, `t_<stage>` per stage, `stages_reached`. */
 object Funnel {
 

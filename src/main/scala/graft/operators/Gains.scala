@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
   * bucket's response rate, cumulative capture, and lift over the base
   * rate — the campaign-targeting readout ("mailing the top 2 deciles
   * reaches 60% of responders at 3× lift") that complements
-  * [[Calibration]] (is the probability honest?) and
   * [[graft.llm.RankEval]] (is the ordering good per query?).
   *
   * Bucket assignment is EXACT equal-depth over the total order

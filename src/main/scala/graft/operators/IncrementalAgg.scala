@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * frame (`n`, `sum_<c>`, `min_<c>`, `max_<c>` per measure);
   * [[combine]] merges any number of partial frames into one (sums
   * add, mins min, maxs max). `combine(partials(a), partials(b)) ≡
-  * partials(a ∪ b)` — the algebraic identity a full recompute
-  * checks. Exactness: sums accumulate the measure AS GIVEN —
+  * partials(a ∪ b)` — the algebraic identity the oracle checks by
+  * full recompute. Exactness: sums accumulate the measure AS GIVEN —
   * callers pass integer/decimal measures (cents, counts) when
   * bit-exact replay matters, the same contract as [[Trend]].
   *

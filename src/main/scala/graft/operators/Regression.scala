@@ -77,7 +77,7 @@ object Regression {
     val b2 = when(ok, det2.cast("double") / det.cast("double"))
     // r² = 1 − SSE/SST with SSE = Σy² − b0·Σy − b1·Σx1y − b2·Σx2y and
     // SST = Σy² − (Σy)²/n — a fixed double sequence over the exact
-    // moments, so a SQL replay of it is bit-identical
+    // moments, replayed verbatim by the oracle
     val sstD = col("__syy").cast("double") -
       col("__sy").cast("double") * col("__sy").cast("double") /
         col("n").cast("double")

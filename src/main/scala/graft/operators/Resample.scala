@@ -67,7 +67,7 @@ object Resample {
     * Determinism: rows order by (time, `idCol`), so duplicate
     * timestamps interpolate identically on any engine/partitioning;
     * the blend is a fixed double-arithmetic sequence on long tick
-    * deltas, rounded tie-safely (floor-half-up, 6dp).
+    * deltas, rounded tie-safely (6dp) with the oracle spelling.
     *
     * Scale shape: ONE hash exchange on the keys; the prev/next
     * neighbors come from two frames of the same sorted window

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * surviving rows. No serial stage wider than keys × shuffle-width
   * rows, no self-join, no nested loop. Ties on BOTH dimensions are
   * mutually undominating, so all such duplicates survive — matching
-  * the NOT-EXISTS definition of dominance.
+  * the NOT-EXISTS semantics the oracle replays.
   *
   * Two dimensions only, by design: the sort-based identity is what
   * makes the operator exact without a pairwise step; d>2 skylines need

@@ -288,11 +288,10 @@ object TableProfile {
     * (and may leave later bins empty): depth equality bends to value
     * atomicity, loudly by design.
     *
-    * Scale shape: rank positions come from the distinct values, not
-    * the rows — one map-side combined (value, count) aggregation,
-    * [[Distributions.cumulative]] parallel prefix sums over the
-    * distinct values, and a |bins|-row result. The table itself never
-    * sorts. */
+    * Scale shape: the [[Winsorize]] distribution trick — one map-side
+    * combined (value, count) aggregation, [[Distributions.cumulative]]
+    * parallel prefix sums over the distinct values, and a |bins|-row
+    * result. The table itself never sorts. */
   def equiDepthHistogram(df: DataFrame, c: String, bins: Int = 10): DataFrame = {
     import org.apache.spark.sql.types._
     require(bins >= 1, s"bins must be >= 1: $bins")

@@ -17,7 +17,8 @@ import org.apache.spark.sql.types._
   * accumulates as an exact DECIMAL(38,0) — order-independent, so the
   * result replays bit-for-bit on any engine and partitioning; the
   * final ratio is a fixed sequence of double ops rounded tie-safely.
-  * Simultaneous observations order deterministically by (ts, value).
+  * Simultaneous observations order deterministically by (ts, value),
+  * mirrored in the oracle.
   *
   * Scale shape: TWAP is ONE window exchange per key (lead + grouped
   * sum — the as-of/rolling family's shape); VWAP is a pure map-side
@@ -99,8 +100,8 @@ object Timeseries {
     *
     * Exactness: per-period sums accumulate as DECIMAL(18,`scale`)
     * (order-independent); deltas are decimal subtraction; pct changes
-    * are one double division rounded floor-half-up at 6dp. Scale
-    * shape: one map-side-combined groupBy reduces the
+    * are one double division rounded floor-half-up at 6dp, the oracle
+    * spelling. Scale shape: one map-side-combined groupBy reduces the
     * data to (keys × periods); both comparison joins run on that
     * aggregated frame. Null timestamps are excluded.
     *

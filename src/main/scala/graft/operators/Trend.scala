@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * Σxy, Σx², Σy²), and only the final slope/intercept/r² arithmetic
   * runs in doubles — so any engine computing the same formula over
   * the same exact sums produces bit-identical IEEE results (the
-  * a DuckDB replay does; a float-accumulating regr_slope would drift
+  * DuckDB oracle does; a float-accumulating regr_slope would drift
   * with partition order). Callers must keep |Σxy| under 2^63 —
   * scale the units, not the row count.
   *
@@ -68,7 +68,7 @@ object Trend {
     // (observed live on Cooccurrence's lift), and slope/intercept/r2
     // are ratios of exact integer moments, so representable ties
     // (e.g. 1/64 at roundTo=6) are reachable. Values may be negative;
-    // floor-half-up stays well-defined there as long as a replay
+    // floor-half-up stays well-defined there as long as the oracle
     // mirrors the same spelling.
     val p10 = math.pow(10.0, roundTo)
     def r(c: org.apache.spark.sql.Column) = floor(c * p10 + 0.5) / p10

@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   *
   * The z-value is pure codegen'd Column arithmetic (comparisons,
   * floor, shifts, masks — 16·n terms with disjoint bits joined by
-  * `+`), exactly SQL-replayable: DuckDB can rebuild the identical
-  * term sum. Quantization uses DOUBLE division
+  * `+`), exactly SQL-replayable: the q_zorder oracle rebuilds the
+  * identical term sum in DuckDB. Quantization uses DOUBLE division
   * with floor and clamps to [0, 65535]; values outside [lo, hi]
   * clamp to the curve's edge rather than erroring, so a stale stats
   * probe degrades locality, never correctness. */
