@@ -223,18 +223,24 @@ object Dedup {
     *
     * Scale shape — both corpora sketch independently (the same one-pass
     * native shingle+band projection as [[minhashPairs]]) and meet on
-    * (band, bucket) KEYS; document text never rides the bucket shuffle.
-    * Reference buckets are capped: a hot bucket (boilerplate mode)
-    * poisons its bounded buffer and drops, so each batch row pairs with
-    * at most `bands × maxBucketSize` reference candidates. Candidate
-    * (id, refKey) pairs dedup through an exchange PINNED to the session
-    * shuffle-partition width (16-byte rows would otherwise AQE-coalesce
-    * onto one core under the CPU-heavy verify — the [[minhashPairs]]
-    * lesson), then exact jaccard against the re-joined texts confirms,
-    * and the final drop is a keys-only anti-join. Reference rows need
-    * no id column: a reference document is keyed by xxhash64 of its
-    * text (exact-duplicate refs collapse, which is harmless — any one
-    * copy witnesses the near-dup). */
+    * (band, bucket) KEYS; document text never rides any shuffle.
+    * Reference rows need no id column: a reference document is keyed by
+    * xxhash64 of its text, and the reference dedups on its
+    * (rk, band, bucket) key triples before the bucket collect — exact-
+    * duplicate refs yield identical triples and collapse there (harmless:
+    * any one copy witnesses the near-dup), without the reference text
+    * crossing an aggregate exchange. Reference buckets are capped: a hot
+    * bucket (boilerplate mode) poisons its bounded buffer and drops, so
+    * each batch row pairs with at most `bands × maxBucketSize` reference
+    * candidates. Candidate (id, refKey) pairs dedup through an exchange
+    * PINNED to the session shuffle-partition width (16-byte rows would
+    * otherwise AQE-coalesce onto one core under the CPU-heavy verify —
+    * the [[minhashPairs]] lesson), then exact jaccard against the
+    * re-joined texts confirms. The dup-id set is a left-semi join of
+    * `df`'s id projection against the verified ids, so its size estimate
+    * is bounded by the ids, and the final drop is the keys-only anti-join
+    * of [[againstReference]]: it broadcasts the dup ids instead of
+    * shuffling `df`'s full rows. */
   def nearDupAgainstReference(df: DataFrame, ref: DataFrame, idCol: String,
                               textCol: String, refTextCol: String = "text",
                               nGram: Int = 3, numHashes: Int = 64,
@@ -242,10 +248,12 @@ object Dedup {
                               maxBucketSize: Int = 10000): DataFrame = {
     val refDocs = ref.select(col(refTextCol).as("__rt"))
       .select(xxhash64(col("__rt")).as("__rk"), col("__rt"))
-      .dropDuplicates("__rk")
+    // keys-only dedup: identical ref texts give identical triples, so
+    // copies collapse before the capped collect counts them
     val refKeys = refDocs.select(col("__rk"),
       posexplode(minhash_bands(shingleHashes(col("__rt"), nGram),
         numHashes, bands)).as(Seq("band", "bucket")))
+      .distinct()
     val refBuckets = refKeys.groupBy(col("band"), col("bucket"))
       .agg(collect_longs_capped(col("__rk"), maxBucketSize).as("rks"))
       .filter(col("rks").isNotNull)
@@ -269,11 +277,15 @@ object Dedup {
     val candRks = cand.select(col("__rk")).distinct()
     val refSh = refDocs.join(candRks, Seq("__rk"))
       .select(col("__rk"), shingleHashesPacked(col("__rt"), nGram).as("__sb"))
-    val dupIds = cand
+    val verifiedIds = cand
       .join(dfSh, Seq("__id"))
       .join(refSh, Seq("__rk"))
       .filter(jaccard_sorted_packed(col("__sa"), col("__sb")) >= threshold)
-      .select(col("__id").as(idCol)).distinct()
+      .select(col("__id").as(idCol))
+    // semi-join of the id projection: bounded by the ids (so the anti-
+    // join below broadcasts it, as in againstReference) and free of the
+    // repeats that duplicate refSh rows give
+    val dupIds = df.select(col(idCol)).join(verifiedIds, Seq(idCol), "left_semi")
     df.join(dupIds, Seq(idCol), "left_anti")
   }
 

@@ -724,6 +724,13 @@ class LlmSpec extends SparkSpec {
         bands = 32, threshold = 0.5)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(3L, 4L), s"kept=$kept")
+    // exact-duplicate refs collapse before the capped bucket collect:
+    // two copies must not poison a bucket capped at one reference
+    val twiceRef = ref.union(ref)
+    val keptTwice = Dedup.nearDupAgainstReference(corpus, twiceRef, "id", "text",
+        bands = 32, threshold = 0.5, maxBucketSize = 1)
+      .select("id").collect().map(_.getLong(0)).toSet
+    assert(keptTwice == Set(3L, 4L), s"kept with duplicate refs=$keptTwice")
     // empty reference keeps everything; empty corpus stays empty
     val noRef = Seq.empty[String].toDF("text")
     assert(Dedup.nearDupAgainstReference(corpus, noRef, "id", "text")
