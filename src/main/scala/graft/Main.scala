@@ -573,7 +573,11 @@ object Main {
   private def pipelineConfig(spark: SparkSession, cur: YamlJob.CurationSpec)
       : graft.llm.Curation.PipelineConfig = {
     import graft.llm.Sampling
-    def read(uri: String) = Connectors.read(spark, uri, Map.empty)
+    // one frame per distinct URI: two stages naming the same side
+    // input share its read (and its parquet schema job)
+    val frames = scala.collection.mutable.Map.empty[String, DataFrame]
+    def read(uri: String) =
+      frames.getOrElseUpdate(uri, Connectors.read(spark, uri, Map.empty))
     val probeFrames = cur.contamination.map(cs => read(cs.probesUri))
     val dsirFrames = cur.dsir.map(ds => read(ds.targetUri))
     val exciseFrames = cur.decontaminateExcise.map(es => read(es.probesUri))

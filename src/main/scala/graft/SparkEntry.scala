@@ -96,8 +96,13 @@ object SparkEntry {
         expr("repeat('hugs ', CAST(5 * (1 + doc_id % 2) AS INT))"))
         .as("text"))
 
+  /** Round-trip scratch root under the checkout the JVM runs in, so
+    * two checkouts verifying at once never share files. */
+  private def scratchRoot: java.nio.file.Path =
+    java.nio.file.Paths.get(sys.props("user.dir"), "target", "tmp")
+
   private def scratch(name: String): String = {
-    val p = java.nio.file.Paths.get(s"/root/repo/target/tmp/queries/$name")
+    val p = scratchRoot.resolve(s"queries/$name")
     java.nio.file.Files.createDirectories(p.getParent)
     p.toString
   }
@@ -3533,7 +3538,7 @@ object SparkEntry {
     // bucket zip. The oracle replays the plain join. ---
     "q_bucketed_join" -> { (s, dir) =>
       val dec = org.apache.spark.sql.types.DecimalType(18, 4)
-      val scratch = "/root/repo/target/tmp/q_bucketed"
+      val scratch = scratchRoot.resolve("q_bucketed").toString
       graft.operators.Bucketed.write(
         t(s, dir, "lineitem").select(col("l_orderkey"), col("l_quantity")),
         "graft_bkt_lineitem", Seq("l_orderkey"), 16, Some(s"$scratch/l"))

@@ -19,7 +19,8 @@ object Logs {
     * entry point. Respects an explicit pre-set value. */
   def derbyHomeToScratch(): Unit =
     if (System.getProperty("derby.system.home") == null) {
-      val p = java.nio.file.Paths.get("/root/repo/target/tmp/derby-home")
+      val p = java.nio.file.Paths.get(sys.props("user.dir"), "target", "tmp",
+        "derby-home")
       scala.util.Try(java.nio.file.Files.createDirectories(p))
       System.setProperty("derby.system.home", p.toString)
     }

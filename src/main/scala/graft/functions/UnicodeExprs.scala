@@ -85,8 +85,6 @@ object UnicodeExprs {
   case class ScriptProfile(child: org.apache.spark.sql.catalyst.expressions.Expression)
     extends UnaryExpression {
 
-    import UnicodeExprs.{scriptNames, scriptOf}
-
     override def dataType: DataType = StructType(
       Seq(StructField("n_chars", LongType, nullable = false)) ++
         scriptNames.map(s => StructField(s, LongType, nullable = false)) ++

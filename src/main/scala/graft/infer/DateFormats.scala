@@ -2,7 +2,6 @@ package graft.infer
 
 import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
 import java.time.format.{DateTimeFormatter, DateTimeFormatterBuilder, ResolverStyle}
-import java.time.temporal.ChronoField
 import java.util.Locale
 
 import graft.functions.DateExprs

@@ -2,7 +2,6 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** EXIF / image-metadata hygiene — the image-side sibling of PII text

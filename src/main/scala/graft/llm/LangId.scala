@@ -49,19 +49,15 @@ object LangId {
 
   /** [[NbClassifier.train]] over char n-grams. Model frames have the
     * same contract: (word=gram, label, log_lik) + (label, log_prior,
-    * oov_log_lik) — returned MATERIALIZED (eager localCheckpoint):
-    * they are bounded (vocabSize × |classes| rows) and every consumer
-    * — [[scoreAll]]'s compile collect, the curation stage, a second
-    * scoring pass — would otherwise re-run the corpus-scale training
-    * lineage per action (measured: 4 re-runs ≈ the whole q_lang_id
-    * cost). */
+    * oov_log_lik) — LOCAL frames (vocabSize × |classes| rows), so
+    * every consumer — [[scoreAll]]'s compile collect, the curation
+    * stage's label check, a second scoring pass — reads them without
+    * a Spark job and never re-runs the corpus-scale training. */
   def train(df: DataFrame, textCol: String, labelCol: String,
             vocabSize: Int = 2000, smoothing: Double = 1.0,
-            ns: Seq[Int] = Seq(2, 3)): (DataFrame, DataFrame) = {
-    val (model, stats) = NbClassifier.train(df, textCol, labelCol,
-      vocabSize, smoothing, tokenizer = charNgrams(_, ns))
-    (model.localCheckpoint(true), stats.localCheckpoint(true))
-  }
+            ns: Seq[Int] = Seq(2, 3)): (DataFrame, DataFrame) =
+    NbClassifier.train(df, textCol, labelCol, vocabSize, smoothing,
+      tokenizer = charNgrams(_, ns))
 
   /** Compile the bounded model to driver-side arrays for the native
     * scorer: (labels asc, priors, oov floors, gram → per-class

@@ -1,7 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** Multinomial Naive Bayes text classifier — the trainable half of the
   * classifier-based curation step (GPT-3's LR quality filter, CCNet's
@@ -18,11 +21,17 @@ import org.apache.spark.sql.functions._
   * smoothed floor, so the scorer needs no per-word special cases.
   * Priors are document-frequency: P(c) = docs(c) / docs.
   *
-  * Scale shape: training is two narrow aggregations over the exploded
-  * token stream (keys only — text never rides a shuffle) with a
-  * deterministic TakeOrdered vocabulary cut; the model is
-  * (vocab × classes) rows, bounded by construction so it stays
-  * BROADCASTABLE. Scoring pivots the model wide — ONE likelihood
+  * Scale shape: training is two bounded actions over the labeled
+  * seed and a driver-side finish. One collects the per-class document
+  * counts (|classes| rows). One aggregate keyed by token carries the
+  * token's total count and its count in each class (keys only: text
+  * never rides a shuffle); the deterministic TakeOrdered vocabulary
+  * cut of that aggregate is collected (vocabSize rows at most). The
+  * driver then computes the denominators, priors, OOV floors and
+  * likelihoods and returns the model and the class stats as LOCAL
+  * frames: (vocab × classes) rows, bounded by construction, so they
+  * stay BROADCASTABLE and a collect of either starts no Spark job.
+  * Scoring pivots the model wide — ONE likelihood
   * column per class, one row per vocab word — so each corpus token
   * joins the broadcast once (no ×classes row blowup) and a single
   * groupBy(id) sums per-class scores. Class count is assumed small
@@ -52,41 +61,47 @@ object NbClassifier {
             tokenizer: Column => Column = tokens): (DataFrame, DataFrame) = {
     require(vocabSize >= 1, s"vocabSize must be >= 1: $vocabSize")
     require(smoothing > 0.0, s"smoothing must be > 0: $smoothing")
+    val spark = df.sparkSession
     val labeled = df.where(colQ(labelCol).isNotNull)
     val toks = labeled.select(colQ(labelCol).as("label"),
       explode(tokenizer(colQ(textCol))).as("word"))
-    val vocab = toks.groupBy("word").agg(count(lit(1)).as("cnt"))
+    // action 1: (label, ndocs), |classes| rows
+    val docs = labeled.groupBy(colQ(labelCol).as("label"))
+      .agg(count(lit(1)).as("ndocs")).collect()
+      .map(r => (r.get(0), r.getLong(1)))
+    // action 2: the vocabulary cut — a total order (count desc, word
+    // asc) — with each word's count in every class, <= vocabSize rows
+    val perClass = docs.indices.map(i =>
+      count_if(col("label") === lit(docs(i)._1)).as(s"__c$i"))
+    val vocab = toks.groupBy("word")
+      .agg(count(lit(1)).as("cnt"), perClass: _*)
       .orderBy(col("cnt").desc, col("word")).limit(vocabSize)
-      .select("word")
-    // bounded action: |vocab| caps at vocabSize; training is a
-    // multi-job operation by nature (the cut must exist before the
-    // denominators do)
-    val vCount = vocab.count()
-    val classCnt = toks
-      .join(broadcast(vocab), Seq("word"), "left_semi")
-      .groupBy("label", "word").agg(count(lit(1)).as("cnt"))
-    val denom = col("tokc") + lit(smoothing) * lit(vCount.toDouble + 1.0)
+      .collect()
+    // driver finish, in the operand order and the StrictMath.log of
+    // Spark's `log`, so the values are those an in-plan finish gives.
+    // A null token counts toward |V| but matches no class.
+    val denomPad = smoothing * (vocab.length.toDouble + 1.0)
+    val words = vocab.filterNot(_.isNullAt(0))
     // classes whose docs contain zero vocab tokens still get stats
     // rows (tokc = 0) — their scores degrade to prior + OOV floors
-    val tokc = classCnt.groupBy("label").agg(sum("cnt").as("tokc"))
-    val docs = labeled.groupBy(colQ(labelCol).as("label"))
-      .agg(count(lit(1)).as("ndocs"))
-    val stats = docs.join(tokc, Seq("label"), "left")
-      .withColumn("tokc", coalesce(col("tokc"), lit(0L)).cast("double"))
-      .withColumn("__tot",
-        sum("ndocs").over(org.apache.spark.sql.expressions.Window
-          .partitionBy(lit(1))))
-      .select(col("label"),
-        log(col("ndocs").cast("double") / col("__tot").cast("double"))
-          .as("log_prior"),
-        log(lit(smoothing) / denom).as("oov_log_lik"))
-    val model = classCnt
-      .join(stats.select(col("label"), col("oov_log_lik")), Seq("label"))
-      .join(tokc, Seq("label"))
-      .select(col("word"), col("label"),
-        log((col("cnt") + lit(smoothing)) /
-          (col("tokc").cast("double") +
-            lit(smoothing) * lit(vCount.toDouble + 1.0))).as("log_lik"))
+    val tokc = docs.indices.map(i => words.map(_.getLong(2 + i)).sum)
+    val total = docs.map(_._2).sum.toDouble
+    val statsRows = docs.indices.map { i =>
+      Row(docs(i)._1, StrictMath.log(docs(i)._2.toDouble / total),
+        StrictMath.log(smoothing / (tokc(i).toDouble + denomPad)))
+    }
+    val modelRows = for {
+      r <- words.toSeq
+      i <- docs.indices
+      cnt = r.getLong(2 + i) if cnt > 0
+    } yield Row(r.get(0), docs(i)._1, StrictMath.log(
+      (cnt.toDouble + smoothing) / (tokc(i).toDouble + denomPad)))
+    val label = toks.schema("label")
+    val model = spark.createDataFrame(modelRows.asJava, StructType(Seq(
+      toks.schema("word"), label, StructField("log_lik", DoubleType))))
+    val stats = spark.createDataFrame(statsRows.asJava, StructType(Seq(
+      label, StructField("log_prior", DoubleType),
+      StructField("oov_log_lik", DoubleType))))
     (model, stats)
   }
 

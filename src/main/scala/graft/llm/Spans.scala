@@ -117,7 +117,6 @@ object Spans {
   def excise(df: DataFrame, idCol: String, textCol: String,
              k: Int = 40, stride: Int = 20, minOccurrences: Int = 2,
              persist: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(minOccurrences >= 2, s"minOccurrences must be >= 2: $minOccurrences")
     Guards.requireFreshColumns(df,
       Seq("__off", "__wh", "__occ", "__keep", "__s", "__e", "__pmax",

@@ -1,9 +1,7 @@
 package graft.sources
 
-import java.io.ByteArrayInputStream
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
-import java.util.{List => JList, Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
@@ -13,7 +11,6 @@ import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter, GenericR
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.types._
 
 /** Distributed Avro container read/write built on the Avro core libs

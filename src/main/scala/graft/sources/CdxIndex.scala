@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.io.ByteArrayInputStream
-import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPInputStream
 
 import org.apache.hadoop.conf.Configuration

@@ -780,7 +780,8 @@ object Connectors {
   }
 
   private[sources] def localTmp(): java.nio.file.Path = {
-    val p = java.nio.file.Paths.get("/root/repo/target/tmp/downloads")
+    val p = java.nio.file.Paths.get(sys.props("user.dir"), "target", "tmp",
+      "downloads")
     java.nio.file.Files.createDirectories(p)
     p
   }

@@ -150,7 +150,6 @@ object PdfSource {
     * genuinely procedural); one file's bytes in memory at a time. */
   def pagesFrom(df: DataFrame, fileCol: String,
                 contentCol: String): DataFrame = {
-    val spark = df.sparkSession
     val slim = df.select(col(fileCol).cast("string").as("f"),
       col(contentCol).cast("binary").as("c"))
     slim.flatMap { r =>
@@ -869,7 +868,7 @@ object PdfSource {
     * through would hand the caller silently-garbled data, the one
     * failure mode this reader never allows. */
   private def decodeStream(o: Obj, file: String, num: Int,
-      objs: Map[Int, Obj] = Map.empty): Array[Byte] = {
+      objs: Map[Int, Obj]): Array[Byte] = {
     val filters: Seq[String] =
       """/Filter\s*\[((?:\s*/[A-Za-z0-9]+)+)\s*\]""".r
         .findFirstMatchIn(o.dict) match {
@@ -1159,7 +1158,7 @@ object PdfSource {
       s"$file: object $num LZWDecode: $what")
     val out = new java.io.ByteArrayOutputStream(data.length * 3)
     // dictionary: entries 0..255 literal, 256 clear, 257 EOD
-    var dict = new Array[Array[Byte]](4096)
+    val dict = new Array[Array[Byte]](4096)
     var dictSize = 258
     var width = 9
     def reset(): Unit = { dictSize = 258; width = 9 }

@@ -535,7 +535,7 @@ object WarcSource {
   }
 
   private def httpResponseBlock(body: Array[Byte], contentType: String,
-                                extraHeaders: String = ""): Array[Byte] = {
+                                extraHeaders: String): Array[Byte] = {
     val extra =
       if (extraHeaders.isEmpty) ""
       else extraHeaders.split("\r?\n").filter(_.nonEmpty)

@@ -350,7 +350,6 @@ object ExprLang {
       val c = go(n)
       if (isNumeric(nodeType(n, schema, localTypes))) c else c.try_cast(DoubleType)
     }
-    def num(c: Column): Column = c.try_cast(DoubleType)
 
     def call(path: List[String], args: List[Node]): Column = {
       def a(i: Int): Column = go(args(i))

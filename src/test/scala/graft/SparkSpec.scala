@@ -25,10 +25,11 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf(name: String, dir: String = "/root/testdata/sf0.001") =
     spark.read.parquet(s"$dir/$name.parquet")
-  /** Fresh scratch dir inside the repo (we must not write outside
-    * /root/repo); wiped if it survives a previous run. */
+  /** Fresh scratch dir under the checkout the tests run in (never
+    * outside it); wiped if it survives a previous run. */
   def tmpDir(name: String): String = {
-    val p = java.nio.file.Paths.get(s"/root/repo/target/tmp/$name")
+    val p = java.nio.file.Paths.get(sys.props("user.dir"), "target", "tmp",
+      name)
     if (java.nio.file.Files.exists(p)) {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())

@@ -61,15 +61,20 @@ def py_oracle_compression_ratio(con, sfdir):
 PY_ORACLES = {"q_compression_ratio": py_oracle_compression_ratio}
 
 
+# the checkout this script belongs to: Verify runs there and writes
+# its default dump under its target/
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def main():
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     sfdir = args[0] if len(args) > 0 else "/root/testdata/sf0.001"
-    outdir = args[1] if len(args) > 1 else "/root/repo/target/verify_local"
+    outdir = args[1] if len(args) > 1 else f"{REPO}/target/verify_local"
     only = set(args[2:])
     if "--skip-verify" not in sys.argv:
         rc = subprocess.run(
             ["sbt", "-batch", f'runMain graft.Verify {sfdir} {outdir}'],
-            cwd="/root/repo").returncode
+            cwd=REPO).returncode
         if rc != 0:
             print("Verify FAILED"); sys.exit(1)
 
