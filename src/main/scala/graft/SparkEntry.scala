@@ -2530,39 +2530,6 @@ object SparkEntry {
         .withColumn("o_totalprice", round(col("o_totalprice"), 4))
     },
 
-    // --- PageRank over a link graph derived from orders (custkey-mod
-    // → orderkey-mod buckets: a dense 300-node digraph with real hub
-    // skew). 3 fixed rounds, d=0.85, uncalibrated power iteration —
-    // the oracle replays every round as an unrolled CTE chain, so the
-    // join-on-src / agg-on-dst loop is value-gated end to end. ---
-    "q_pagerank" -> { (s, dir) =>
-      val orders = t(s, dir, "orders")
-      val edges = orders.select(
-        pmod(col("o_custkey"), lit(300)).as("src"),
-        pmod(col("o_orderkey"), lit(300)).as("dst"))
-      graft.operators.PageRank.ranks(edges, "src", "dst", iters = 3)
-        .select(col("id"), round(col("rank"), 6).as("rank"))
-    },
-
-    // --- bounded-hop BFS over the bipartite customer–supplier graph
-    // (an edge when a supplier filled one of the customer's orders):
-    // blast-radius distances from a seeded customer cohort. Frontier
-    // joins only, visited anti-join, 3 rounds; the oracle is a
-    // recursive CTE taking min(dist). Supplier ids shift by 1e6 into
-    // their own id space. ---
-    "q_graph_bfs" -> { (s, dir) =>
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      val ord = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val edges = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + lit(1000000L)).as("dst"))
-      val seeds = t(s, dir, "customer")
-        .filter(pmod(col("c_custkey"), lit(100)) === 1)
-        .select(col("c_custkey").as("id"))
-      graft.operators.ShortestPaths.bfs(edges, "src", "dst", seeds, "id",
-        maxHops = 3)
-    },
-
     // --- validation quarantine (dead-letter pattern): the fail-fast
     // schema checks re-expressed as per-row violation reasons over a
     // deterministically corrupted customer frame — nulls into a
@@ -2725,47 +2692,6 @@ object SparkEntry {
         maximizeX = true, maximizeY = false)
     },
 
-    // --- general connected components over the per-user event-star
-    // graph (each event linked to its user's first event): the dedup
-    // closure promoted to a first-class graph operator. The oracle is
-    // an INDEPENDENT structural derivation — a star connects all of a
-    // user's events, so component = min(event_id) per user and size =
-    // the user's event count; the engine still runs the real fused
-    // join+agg label propagation to discover that. ---
-    "q_connected_components" -> { (s, dir) =>
-      val ev = t(s, dir, "events").select(col("event_id"), col("user_id"))
-      val hubs = ev.groupBy(col("user_id"))
-        .agg(min(col("event_id")).as("hub"))
-      val edges = ev.join(hubs, Seq("user_id"))
-        .select(col("event_id").as("src"), col("hub").as("dst"))
-      graft.operators.ConnectedComponents.withSizes(
-        graft.operators.ConnectedComponents.run(
-          edges, "src", "dst",
-          vertices = Some(ev.select(col("event_id").as("id")))))
-    },
-
-    // --- ordered funnel (view → click → purchase) per user: ONE
-    // window exchange computes sequential reach times (stage i counts
-    // only strictly after stage i-1); the oracle replays it as the
-    // equivalent per-stage join chain, so the one-pass formulation is
-    // value-gated against the textbook multi-join one. ---
-    "q_funnel" -> { (s, dir) =>
-      graft.operators.Funnel.funnel(
-        EventsStreaming.readEvents(s, dir)
-          .select(col("user_id"), col("ts"), col("event_type")),
-        Seq("user_id"), "ts", "event_type",
-        Seq("view", "click", "purchase"))
-    },
-
-    // --- weekly cohort retention triangle over events: first-seen
-    // week per user, distinct active users per (cohort, offset). ---
-    "q_cohort" -> { (s, dir) =>
-      graft.operators.Cohort.retention(
-        EventsStreaming.readEvents(s, dir)
-          .select(col("user_id"), col("ts")),
-        "user_id", "ts")
-    },
-
     // --- truncated EWMA smoothing per user over the event value
     // series: the bias-corrected EWM mean (pandas ewm adjust=True)
     // over a FIXED-WIDTH window instead of the inherently sequential
@@ -2896,20 +2822,6 @@ object SparkEntry {
       graft.operators.Correlations.matrixFixedPoint(t(s, dir, "lineitem"),
           Seq("l_quantity" -> 2, "l_extendedprice" -> 2, "l_discount" -> 2))
         .select(col("col_a"), col("col_b"), round(col("corr"), 6).as("corr"))
-    },
-
-    // --- per-user hourly resample with forward fill: regularize the
-    // irregular events stream onto a fixed 1h grid, carrying the last
-    // bucket average across gap hours. The oracle replays bucket agg →
-    // per-key generate_series grid → IGNORE-NULLS last_value fill. ---
-    "q_resample" -> { (s, dir) =>
-      graft.operators.Resample.resample(
-          EventsStreaming.readEvents(s, dir)
-            .select(col("user_id"), col("ts"), col("value")),
-          Seq("user_id"), "ts", "value", every = "1 hour")
-        .select(col("user_id"), col("bucket_start"),
-          round(col("avg_value"), 4).as("avg_value"),
-          col("n_events"), col("filled"))
     },
 
     // --- edit-distance-1 similarity join over the part-name vocabulary
@@ -3600,46 +3512,6 @@ object SparkEntry {
         thresholdNum = 3, thresholdDen = 4)
     },
 
-    // --- end-to-end entity resolution (the MDM capstone composition):
-    // TWO blocking strategies union their candidates (equality blocks
-    // catch mid-string typos, sorted neighborhood catches block-key
-    // typos), the pinned Jaro-Winkler scores at a tie-safe 0.9 cut,
-    // matched pairs close transitively into components, and the
-    // minimum id becomes each entity's golden record. ---
-    "q_entity_resolution" -> { (s, dir) =>
-      val name9 = translate(substring(col("c_name"), 10, 9),
-        "0123456789", "aeioubcdfg")
-      val base = t(s, dir, "customer")
-        .filter(pmod(col("c_custkey"), lit(10)) === 0)
-        .select(col("c_custkey").as("id"), name9.as("name"))
-      val p = (pmod(col("id"), lit(50)) / 10 + 1).cast("int")
-      val swapped = concat(
-        col("name").substr(lit(1), p - 1),
-        col("name").substr(p + 1, lit(1)),
-        col("name").substr(p, lit(1)),
-        col("name").substr(p + 2, lit(9)))
-      val party = base.union(
-        base.select((col("id") + 1000000L).as("id"), swapped.as("name")))
-      def cut(df: org.apache.spark.sql.DataFrame) = df
-        .withColumn("match_score",
-          floor(col("match_score") * 1e6 + 0.5) / 1e6)
-        .filter(col("match_score") >= 0.9)
-        .select(col("id_a"), col("id_b"))
-      val blocked = cut(graft.operators.RecordLinkage.fuzzyDedup(
-        party.withColumn("block", substring(col("name"), 7, 3)),
-        "id", "block", Seq(("name", 1.0)), threshold = 0.89))
-      val snm = cut(graft.operators.RecordLinkage
-        .sortedNeighborhood(party, "id", "name", window = 3)
-        .withColumn("match_score", graft.operators.RecordLinkage
-          .similarity(col("key_a"), col("key_b")))
-        .select(col("id_a"), col("id_b"), col("match_score")))
-      graft.operators.ConnectedComponents.withSizes(
-          graft.operators.ConnectedComponents.run(
-            blocked.union(snm), "id_a", "id_b",
-            vertices = Some(party.select(col("id")))))
-        .withColumn("is_canonical", col("id") === col("component"))
-    },
-
     // --- sorted-neighborhood blocking (Hernández-Stolfo): pair each
     // customer with its 3 successors in name order, score with the
     // native Jaro-Winkler — the blocking pass for near-dups that share
@@ -3693,25 +3565,6 @@ object SparkEntry {
             col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       graft.operators.PairEval.score(predicted, truth)
-    },
-
-    // --- TWAP per user: each value holds until the user's next
-    // observation — the irregular-sampling mean a plain AVG gets wrong
-    // (one window exchange, exact decimal value×duration products). ---
-    "q_twap" -> { (s, dir) =>
-      graft.operators.Timeseries.twap(
-        EventsStreaming.readEvents(s, dir)
-          .select(col("user_id"), col("ts"), col("value")),
-        Seq("user_id"), "ts", "value")
-    },
-
-    // --- VWAP per supplier: Σ price·qty / Σ qty in fixed point — the
-    // execution-quality benchmark; pure map-side-combined aggregation,
-    // no window. ---
-    "q_vwap" -> { (s, dir) =>
-      graft.operators.Timeseries.vwap(
-        t(s, dir, "lineitem"), Seq("l_suppkey"),
-        "l_extendedprice", "l_quantity")
     },
 
     // --- PSI drift detection: price distribution shift between the
@@ -3844,21 +3697,6 @@ object SparkEntry {
         Seq("user_id"), "ts", "event_id", horizon = 7200L * 1000000)
     },
 
-    // --- per-key linear interpolation: engineered nulls (every 7th
-    // event) take the time-weighted blend of their known neighbors;
-    // edges stay honestly null. One exchange, two frames of the same
-    // sorted window; the oracle replays with IGNORE NULLS windows. ---
-    "q_interpolate" -> { (s, dir) =>
-      val ev = EventsStreaming.readEvents(s, dir)
-        .select(col("event_id"), col("user_id"), col("ts"),
-          when(pmod(col("event_id"), lit(7)) === 0, lit(null))
-            .otherwise(col("value")).as("v"))
-      graft.operators.Resample.interpolate(ev, Seq("user_id"), "ts",
-          "event_id", "v")
-        .select(col("event_id"), col("user_id"), col("ts"), col("v"),
-          col("value_interp"), col("interpolated"))
-    },
-
     // --- top-N + Others rollup: per nation, the three biggest
     // suppliers by revenue keep their rows and the tail collapses to
     // one exactly-reconciling Others row (group total − top-N total in
@@ -3875,20 +3713,6 @@ object SparkEntry {
           .as("revenue"))
       graft.operators.GroupTopK.topNOthers(rev, Seq("s_nationkey"),
         "s_suppkey", "revenue", n = 3)
-    },
-
-    // --- calendar-aware period-over-period: monthly revenue per
-    // priority with MoM and YoY comparisons. Prior/season values
-    // arrive by equi-join on the integer month index (idx-1 / idx-12),
-    // so a missing month yields an honest null instead of silently
-    // borrowing the previous row; deltas exact decimal, pcts rounded
-    // tie-safely. The oracle replays the index joins. ---
-    "q_period_over_period" -> { (s, dir) =>
-      graft.operators.Timeseries.periodOverPeriod(
-        t(s, dir, "orders").select(col("o_orderpriority"),
-          col("o_orderdate"), col("o_totalprice")),
-        Seq("o_orderpriority"), "o_orderdate", "o_totalprice",
-        grain = "month", seasonLag = 12)
     },
 
     // --- chi-square contingency crosstab: is order status independent
@@ -3971,31 +3795,6 @@ object SparkEntry {
     "q_trimmed_mean" -> { (s, dir) =>
       graft.operators.RobustStats.trimmedMean(
         t(s, dir, "lineitem"), "l_suppkey", "l_extendedprice")
-    },
-
-    // --- trailing-baseline anomaly scoring: each event's z-score vs
-    // the PRIOR hour of its own user (frame ends strictly before now,
-    // so a spike never judges itself). Fixed-point exact window
-    // moments — order-independent, replays bit-for-bit; the flag
-    // evaluates on the ROUNDED score. ---
-    "q_anomaly_zscore" -> { (s, dir) =>
-      graft.operators.Anomaly.trailingZScore(
-        EventsStreaming.readEvents(s, dir)
-          .select(col("event_id"), col("user_id"), col("ts"), col("value")),
-        Seq("user_id"), "ts", "value", width = 3600L * 1000000)
-    },
-
-    // --- CUSUM change-point detection (Page): per-user two-sided
-    // drift statistic via the prefix-sum-minus-running-min identity —
-    // one hash exchange, exact fixed-point integer accumulation, the
-    // alarm decided on scaled integers. The oracle replays the same
-    // prefix/min windows in DuckDB. ---
-    "q_cusum" -> { (s, dir) =>
-      graft.operators.Changepoint.cusum(
-        EventsStreaming.readEvents(s, dir)
-          .select(col("event_id"), col("user_id"), col("ts"), col("value")),
-        Seq("user_id"), "ts", "event_id", "value",
-        target = 50.0, slack = 5.0, threshold = 150.0)
     },
 
     // --- bucketized range join: every event pairs with each active
@@ -4173,56 +3972,6 @@ object SparkEntry {
           round(col("running_total"), 4).as("running_total"))
     },
 
-    // --- per-node triangle counts over a derived order graph
-    // (custkey/orderkey folded onto one 4000-node domain so odd
-    // cycles exist; density stays non-degenerate at bench scale). Degree-oriented wedge counting — each triangle
-    // generated by exactly one wedge at its min-(deg,id) vertex; the
-    // oracle replays the id-ordered a<b<c three-way join, which
-    // counts the same set. ---
-    "q_triangles" -> { (s, dir) =>
-      val edges = t(s, dir, "orders").select(
-        pmod(col("o_custkey"), lit(4000)).as("x"),
-        pmod(col("o_orderkey"), lit(4000)).as("y"))
-      graft.operators.Triangles.perNodeCounts(edges, "x", "y")
-    },
-
-    // --- interval coalescing (gaps-and-islands) per supplier:
-    // shipping windows of (l_quantity - 45) days on the >45-quantity
-    // lineitems merge where they overlap or touch; one window
-    // exchange, no self-join. The oracle replays the running-max
-    // island derivation. ---
-    "q_interval_merge" -> { (s, dir) =>
-      val iv = t(s, dir, "lineitem").filter(col("l_quantity") > 45)
-        .select(col("l_suppkey"),
-          to_date(col("l_shipdate")).as("w_start"),
-          date_add(to_date(col("l_shipdate")),
-            (col("l_quantity") - 45).cast("int")).as("w_end"))
-      graft.operators.Intervals.coalesceIntervals(
-          iv, Seq("l_suppkey"), "w_start", "w_end")
-        // dates → timestamps only for the gate: the oracle's DATE
-        // arrives via pandas as midnight datetimes
-        .select(col("l_suppkey"),
-          col("span_start").cast("timestamp").as("span_start"),
-          col("span_end").cast("timestamp").as("span_end"),
-          col("merged_n"))
-    },
-
-    // --- coverage gaps (islands' complement): where each supplier's
-    // shipping windows were silent — one lead over the already-merged
-    // span frame. ---
-    "q_interval_gaps" -> { (s, dir) =>
-      val iv = t(s, dir, "lineitem").filter(col("l_quantity") > 45)
-        .select(col("l_suppkey"),
-          to_date(col("l_shipdate")).as("w_start"),
-          date_add(to_date(col("l_shipdate")),
-            (col("l_quantity") - 45).cast("int")).as("w_end"))
-      graft.operators.Intervals.gaps(iv, Seq("l_suppkey"),
-          "w_start", "w_end")
-        .select(col("l_suppkey"),
-          col("gap_start").cast("timestamp").as("gap_start"),
-          col("gap_end").cast("timestamp").as("gap_end"))
-    },
-
     // --- longest-prefix-match enrichment (CIDR/routing-table shape)
     // over a 16-bit key space: three prefix generations (len 4/8/12)
     // derived from nation, facts never shuffle (descending-length
@@ -4253,21 +4002,6 @@ object SparkEntry {
           coalesce(col("geo"), lit("none")).as("geo"))
     },
 
-    // --- exponentially time-decayed engagement score per user (fixed
-    // as-of instant, 3-day half-life): one map-side-combinable
-    // aggregation; the oracle replays the pow(2, -age/halflife)
-    // weighting in double seconds. ---
-    "q_decayed_score" -> { (s, dir) =>
-      graft.operators.Decay.decayedScore(
-          EventsStreaming.readEvents(s, dir)
-            .select(col("user_id"), col("ts"), col("value")),
-          Seq("user_id"), "ts", "value",
-          asOf = "2024-02-01 00:00:00", halfLifeSecs = 259200.0)
-        .select(col("user_id"),
-          round(col("decayed_score"), 4).as("decayed_score"),
-          round(col("raw_sum"), 4).as("raw_sum"), col("n_events"))
-    },
-
     // --- golden-record survivorship: three derived customer sources
     // with distinct priorities and engineered per-field null patterns;
     // every field survives from the highest-priority source that has
@@ -4294,19 +4028,6 @@ object SparkEntry {
       graft.operators.Survivorship.goldenRecords(
         srcA.union(srcB).union(srcC),
         Seq("c_custkey"), "priority", Seq("name", "phone", "acctbal"))
-    },
-
-    // --- first-order Markov transitions over per-user event flows:
-    // one window exchange for adjacent pairs, aggregation over
-    // (from, to), normalizer on the GROUPED counts only. ---
-    "q_transitions" -> { (s, dir) =>
-      graft.operators.Markov.transitions(
-          EventsStreaming.readEvents(s, dir)
-            .select(col("user_id"), col("ts"), col("event_id"),
-              col("event_type")),
-          Seq("user_id"), "ts", "event_type", tieCols = Seq("event_id"))
-        .select(col("from_state"), col("to_state"), col("n"),
-          round(col("p"), 6).as("p"))
     },
 
     // --- temperature-based domain rebalance (XLM-R p_d ∝ n_d^alpha,
@@ -7617,57 +7338,6 @@ object SparkEntry {
         |  o_orderpriority
         |FROM resolved WHERE op <> 'D'""".stripMargin,
 
-    "q_pagerank" ->
-      """WITH edges AS (
-        |  SELECT DISTINCT o_custkey % 300 AS src, o_orderkey % 300 AS dst
-        |  FROM orders
-        |), nodes AS (
-        |  SELECT src AS id FROM edges UNION SELECT dst FROM edges
-        |), deg AS (
-        |  SELECT src, count(*) AS d FROM edges GROUP BY src
-        |), r0 AS (
-        |  SELECT id, 1.0 AS rank FROM nodes
-        |), c1 AS (
-        |  SELECT e.dst AS id, sum(r.rank / deg.d) AS c
-        |  FROM edges e JOIN deg ON e.src = deg.src JOIN r0 r ON r.id = e.src
-        |  GROUP BY e.dst
-        |), r1 AS (
-        |  SELECT n.id, 0.15 + 0.85 * coalesce(c.c, 0) AS rank
-        |  FROM nodes n LEFT JOIN c1 c ON n.id = c.id
-        |), c2 AS (
-        |  SELECT e.dst AS id, sum(r.rank / deg.d) AS c
-        |  FROM edges e JOIN deg ON e.src = deg.src JOIN r1 r ON r.id = e.src
-        |  GROUP BY e.dst
-        |), r2 AS (
-        |  SELECT n.id, 0.15 + 0.85 * coalesce(c.c, 0) AS rank
-        |  FROM nodes n LEFT JOIN c2 c ON n.id = c.id
-        |), c3 AS (
-        |  SELECT e.dst AS id, sum(r.rank / deg.d) AS c
-        |  FROM edges e JOIN deg ON e.src = deg.src JOIN r2 r ON r.id = e.src
-        |  GROUP BY e.dst
-        |)
-        |SELECT n.id, round(0.15 + 0.85 * coalesce(c.c, 0), 6) AS rank
-        |FROM nodes n LEFT JOIN c3 c ON n.id = c.id""".stripMargin,
-
-    // q_graph_bfs: recursive-CTE ground truth — enumerate every
-    // (vertex, hops) pair reachable within 3 and take the minimum,
-    // which is exactly what first-discovery frontier BFS assigns
-    "q_graph_bfs" ->
-      """WITH RECURSIVE e0 AS (
-        |  SELECT DISTINCT o.o_custkey AS src, l.l_suppkey + 1000000 AS dst
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |), bi AS (
-        |  SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0
-        |), reach(id, dist) AS (
-        |  SELECT c_custkey AS id, 0 AS dist
-        |  FROM customer WHERE c_custkey % 100 = 1
-        |  UNION
-        |  SELECT bi.dst, r.dist + 1
-        |  FROM reach r JOIN bi ON bi.src = r.id
-        |  WHERE r.dist < 3
-        |)
-        |SELECT id, min(dist) AS dist FROM reach GROUP BY id""".stripMargin,
-
     // q_heatmap: the same floor((x-lo)/width) cell arithmetic on
     // exact pinned widths, hi folding into the last bin
     "q_heatmap" ->
@@ -7704,37 +7374,6 @@ object SparkEntry {
         |    AND e.endt - t < 7200000000 AS label_censored
         |FROM n CROSS JOIN e""".stripMargin,
 
-    // q_interpolate: prev/next known neighbors via IGNORE NULLS
-    // windows over (ts, event_id) order, the blend spelled with the
-    // same double ops and 6dp floor-half-up rounding
-    "q_interpolate" ->
-      """WITH b AS (
-        |  SELECT event_id, user_id, ts, epoch_us(ts) AS t,
-        |    CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS v
-        |  FROM events
-        |), n AS (
-        |  SELECT event_id, user_id, ts, t, v,
-        |    last_value(v IGNORE NULLS) OVER wp AS pv,
-        |    last_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS)
-        |      OVER wp AS pt,
-        |    first_value(v IGNORE NULLS) OVER wf AS nv,
-        |    first_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS)
-        |      OVER wf AS nt
-        |  FROM b
-        |  WINDOW wp AS (PARTITION BY user_id ORDER BY t, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |  wf AS (PARTITION BY user_id ORDER BY t, event_id
-        |    ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)
-        |)
-        |SELECT event_id, user_id, ts, v,
-        |  CASE WHEN v IS NOT NULL THEN v
-        |       WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
-        |         floor((pv + (nv - pv) * CAST(t - pt AS DOUBLE)
-        |           / CAST(nt - pt AS DOUBLE)) * 1e6 + 0.5) / 1e6
-        |  END AS value_interp,
-        |  v IS NULL AND pv IS NOT NULL AND nv IS NOT NULL AS interpolated
-        |FROM n""".stripMargin,
-
     // q_topn_others: rank replay + exact complement aggregation; item
     // stringified identically on both sides
     "q_topn_others" ->
@@ -7763,36 +7402,6 @@ object SparkEntry {
         |  CAST(sum(wi) AS DOUBLE) / 100.0,
         |  CAST(NULL AS INTEGER), true, CAST(count(*) AS BIGINT)
         |FROM r WHERE rk > 3 GROUP BY s_nationkey""".stripMargin,
-
-    // q_period_over_period: the integer month index (year*12+month-1)
-    // and both calendar joins replayed; decimal sums, double casts,
-    // and the 6dp floor-half-up pct spelling identical
-    "q_period_over_period" ->
-      """WITH m AS (
-        |  SELECT o_orderpriority,
-        |    (year(o_orderdate) * 12 + month(o_orderdate) - 1) AS idx,
-        |    min(date_trunc('month', o_orderdate)) AS period_start,
-        |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS v
-        |  FROM orders WHERE o_orderdate IS NOT NULL
-        |  GROUP BY 1, 2
-        |)
-        |SELECT cur.o_orderpriority, cur.period_start,
-        |  CAST(cur.v AS DOUBLE) AS value,
-        |  CAST(p.v AS DOUBLE) AS prior_value,
-        |  CAST(cur.v - p.v AS DOUBLE) AS delta,
-        |  CASE WHEN p.v IS NOT NULL AND p.v <> 0 THEN
-        |    floor(CAST(cur.v - p.v AS DOUBLE) / CAST(p.v AS DOUBLE)
-        |      * 1e6 + 0.5) / 1e6 END AS pct_change,
-        |  CAST(s.v AS DOUBLE) AS season_value,
-        |  CAST(cur.v - s.v AS DOUBLE) AS season_delta,
-        |  CASE WHEN s.v IS NOT NULL AND s.v <> 0 THEN
-        |    floor(CAST(cur.v - s.v AS DOUBLE) / CAST(s.v AS DOUBLE)
-        |      * 1e6 + 0.5) / 1e6 END AS season_pct
-        |FROM m cur
-        |LEFT JOIN m p ON p.o_orderpriority = cur.o_orderpriority
-        |  AND p.idx = cur.idx - 1
-        |LEFT JOIN m s ON s.o_orderpriority = cur.o_orderpriority
-        |  AND s.idx = cur.idx - 12""".stripMargin,
 
     // q_crosstab: the complete cell grid, the one-division expected,
     // the 6dp contribution snap, and the exact long statistic sum
@@ -8201,54 +7810,6 @@ object SparkEntry {
         |    AND (q.p_size > p.p_size
         |         OR q.p_retailprice < p.p_retailprice))""".stripMargin,
 
-    // q_connected_components: the star graph connects every event of a
-    // user, so ground truth needs no recursion — component = the
-    // user's minimum event_id, size = the user's event count. An
-    // independent derivation of what the engine's label propagation
-    // must converge to.
-    "q_connected_components" ->
-      """SELECT event_id AS id,
-        |  min(event_id) OVER (PARTITION BY user_id) AS component,
-        |  count(*) OVER (PARTITION BY user_id) AS component_size
-        |FROM events""".stripMargin,
-
-    "q_funnel" ->
-      """WITH u AS (SELECT DISTINCT user_id FROM events),
-        |t1 AS (
-        |  SELECT user_id, min(ts) AS t_view FROM events
-        |  WHERE event_type = 'view' GROUP BY 1
-        |), t2 AS (
-        |  SELECT e.user_id, min(e.ts) AS t_click
-        |  FROM events e JOIN t1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > t1.t_view GROUP BY 1
-        |), t3 AS (
-        |  SELECT e.user_id, min(e.ts) AS t_purchase
-        |  FROM events e JOIN t2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > t2.t_click GROUP BY 1
-        |)
-        |SELECT u.user_id, t1.t_view, t2.t_click, t3.t_purchase,
-        |  CAST(CASE WHEN t3.t_purchase IS NOT NULL THEN 3
-        |       WHEN t2.t_click IS NOT NULL THEN 2
-        |       WHEN t1.t_view IS NOT NULL THEN 1
-        |       ELSE 0 END AS INTEGER) AS stages_reached
-        |FROM u LEFT JOIN t1 USING (user_id)
-        |  LEFT JOIN t2 USING (user_id) LEFT JOIN t3 USING (user_id)""".stripMargin,
-
-    "q_cohort" ->
-      """WITH f AS (
-        |  SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
-        |  FROM events GROUP BY 1
-        |), act AS (
-        |  SELECT DISTINCT e.user_id, f.cohort_week,
-        |    date_trunc('week', e.ts) AS aw
-        |  FROM events e JOIN f USING (user_id)
-        |)
-        |SELECT cohort_week,
-        |  CAST(date_diff('day', cohort_week, aw) / 7 AS INTEGER)
-        |    AS week_offset,
-        |  count(*) AS n_users
-        |FROM act GROUP BY 1, 2""".stripMargin,
-
     // q_ewma: identical position-weighted fold over the same bounded
     // ROWS frame — vals is frame-ordered (oldest→newest) in both
     // engines, element i of n carries weight 0.5^(n-i), and the head
@@ -8405,27 +7966,6 @@ object SparkEntry {
         |  round((n * sp_pd - s_p * s_d)
         |    / (sqrt(n * ss_p - s_p * s_p) * sqrt(n * ss_d - s_d * s_d)), 6)
         |  FROM m""".stripMargin,
-
-    "q_resample" ->
-      """WITH per AS (
-        |  SELECT user_id, date_trunc('hour', ts) AS bucket_start,
-        |         avg(value) AS a, count(value) AS n
-        |  FROM events GROUP BY 1, 2
-        |), span AS (
-        |  SELECT user_id, min(bucket_start) AS mn, max(bucket_start) AS mx
-        |  FROM per GROUP BY 1
-        |), grid AS (
-        |  SELECT user_id,
-        |         unnest(generate_series(mn, mx, INTERVAL '1 hour')) AS bucket_start
-        |  FROM span
-        |)
-        |SELECT g.user_id, g.bucket_start,
-        |  round(last_value(p.a IGNORE NULLS) OVER (
-        |    PARTITION BY g.user_id ORDER BY g.bucket_start), 4) AS avg_value,
-        |  coalesce(p.n, 0) AS n_events,
-        |  p.n IS NULL AS filled
-        |FROM grid g LEFT JOIN per p
-        |  ON g.user_id = p.user_id AND g.bucket_start = p.bucket_start""".stripMargin,
 
     "q_edit_pairs" ->
       """WITH names AS (SELECT DISTINCT p_name FROM part),
@@ -8910,58 +8450,6 @@ object SparkEntry {
         |)
         |SELECT id_a, id_b, cosine FROM scored WHERE cosine >= 0.75""".stripMargin,
 
-    // q_entity_resolution: full replay — corruption, BOTH candidate
-    // generators, the rounded JW cut, recursive-CTE closure, golden
-    // records by min id
-    "q_entity_resolution" ->
-      """WITH RECURSIVE base AS (
-        |  SELECT c_custkey AS id,
-        |    translate(substr(c_name, 10, 9),
-        |              '0123456789', 'aeioubcdfg') AS name
-        |  FROM customer WHERE c_custkey % 10 = 0
-        |), party AS (
-        |  SELECT id, name FROM base
-        |  UNION ALL
-        |  SELECT id + 1000000,
-        |    substr(name, 1, p - 1) || substr(name, p + 1, 1) ||
-        |    substr(name, p, 1) || substr(name, p + 2, 9)
-        |  FROM (SELECT id, name,
-        |          CAST(id % 50 / 10 + 1 AS INTEGER) AS p FROM base)
-        |), blk AS (
-        |  SELECT id, name, substr(name, 7, 3) AS blk FROM party
-        |), blockp AS (
-        |  SELECT a.id AS ia, b.id AS ib
-        |  FROM blk a JOIN blk b ON a.blk = b.blk AND a.id < b.id
-        |  WHERE floor(jaro_winkler_similarity(a.name, b.name) * 1e6
-        |    + 0.5) / 1e6 >= 0.9
-        |), ranked AS (
-        |  SELECT id, name,
-        |    row_number() OVER (ORDER BY name, id) - 1 AS rnk
-        |  FROM party
-        |), snmp AS (
-        |  SELECT a.id AS ia, b.id AS ib
-        |  FROM ranked a JOIN ranked b ON b.rnk - a.rnk BETWEEN 1 AND 2
-        |  WHERE floor(jaro_winkler_similarity(a.name, b.name) * 1e6
-        |    + 0.5) / 1e6 >= 0.9
-        |), pairs AS (
-        |  SELECT DISTINCT least(ia, ib) AS a, greatest(ia, ib) AS b
-        |  FROM (SELECT ia, ib FROM blockp
-        |        UNION ALL SELECT ia, ib FROM snmp)
-        |), edges AS (
-        |  SELECT a AS src, b AS dst FROM pairs
-        |  UNION SELECT b, a FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT id, id FROM party
-        |  UNION
-        |  SELECT reach.id, e.dst FROM reach JOIN edges e ON e.src = reach.r
-        |), comp AS (
-        |  SELECT id, min(r) AS component FROM reach GROUP BY id
-        |)
-        |SELECT id, component,
-        |  count(*) OVER (PARTITION BY component) AS component_size,
-        |  id = component AS is_canonical
-        |FROM comp""".stripMargin,
-
     // q_sorted_neighborhood: ranks replay as row_number over the same
     // (key, id) order; neighbor pairs via the rank-difference window;
     // DuckDB's native jaro_winkler_similarity is the pinned scorer
@@ -9044,45 +8532,6 @@ object SparkEntry {
         |      * 1e6 + 0.5) / 1e6
         |  END AS f1
         |FROM m""".stripMargin,
-
-    // q_twap: same (ts, value)-ordered lead segments, same exact
-    // DECIMAL value×duration products, same two final double divisions
-    "q_twap" ->
-      """WITH o AS (
-        |  SELECT user_id,
-        |    CAST(floor(value * 10000.0 + 0.5) AS BIGINT) AS vi,
-        |    epoch_us(ts) AS t,
-        |    lead(epoch_us(ts)) OVER (
-        |      PARTITION BY user_id ORDER BY epoch_us(ts), value) AS nt
-        |  FROM events
-        |), seg AS (
-        |  SELECT user_id, vi, nt - t AS dur FROM o WHERE nt IS NOT NULL
-        |)
-        |SELECT user_id, count(*) AS n_segments,
-        |  CAST(sum(dur) AS BIGINT) AS span_us,
-        |  CASE WHEN sum(dur) > 0 THEN
-        |    floor(CAST(sum(CAST(vi AS DECIMAL(19,0)) * dur) AS DOUBLE)
-        |        / CAST(sum(dur) AS DOUBLE) / 10000.0 * 1e6 + 0.5) / 1e6
-        |  END AS twap
-        |FROM seg GROUP BY user_id""".stripMargin,
-
-    // q_vwap: identical fixed-point snap on both factors, exact
-    // decimal Σ p·q, identically-ordered final divisions
-    "q_vwap" ->
-      """WITH b AS (
-        |  SELECT l_suppkey,
-        |    CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS vi,
-        |    CAST(floor(l_quantity * 100.0 + 0.5) AS BIGINT) AS wi
-        |  FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-        |)
-        |SELECT l_suppkey, count(*) AS n,
-        |  CAST(sum(wi) AS DOUBLE) / 100.0 AS total_weight,
-        |  CASE WHEN sum(wi) > 0 THEN
-        |    floor(CAST(sum(CAST(vi AS DECIMAL(19,0)) * wi) AS DOUBLE)
-        |        / CAST(sum(wi) AS DOUBLE) / 100.0 * 1e6 + 0.5) / 1e6
-        |  END AS vwap
-        |FROM b GROUP BY l_suppkey""".stripMargin,
 
     // q_psi_drift: same baseline-anchored bins, same ε substitution on
     // the RAW proportions (display proportions round separately), same
@@ -9474,82 +8923,6 @@ object SparkEntry {
         |      / CAST(count(*) AS DOUBLE) / 100.0 * 1e6 + 0.5) / 1e6
         |    AS trimmed_mean
         |FROM t GROUP BY k""".stripMargin,
-
-    // q_anomaly_zscore: the oracle rebuilds the same prior-hour frame
-    // (RANGE ... 1 PRECEDING over epoch micros), the same exact decimal
-    // moments, and the identically-ordered double arithmetic; the flag
-    // evaluates on the rounded score in both engines
-    "q_anomaly_zscore" ->
-      """WITH b AS (
-        |  SELECT event_id, user_id, ts, value,
-        |    CAST(floor(value * 10000.0 + 0.5) AS BIGINT) AS vi,
-        |    epoch_us(ts) AS tsi
-        |  FROM events
-        |), m AS (
-        |  SELECT event_id, user_id, ts, value, vi,
-        |    count(vi) OVER w AS n_baseline,
-        |    sum(CAST(vi AS DECIMAL(38,0))) OVER w AS s,
-        |    sum(CAST(CAST(vi AS DECIMAL(19,0)) * vi AS DECIMAL(38,0)))
-        |      OVER w AS q
-        |  FROM b
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY tsi
-        |    RANGE BETWEEN 3600000000 PRECEDING AND 1 PRECEDING)
-        |), z AS (
-        |  SELECT event_id, user_id, ts, value, n_baseline,
-        |    CASE WHEN n_baseline >= 5 AND
-        |      ((CAST(q AS DOUBLE) / 1e8
-        |        - (CAST(s AS DOUBLE) / 10000.0)
-        |          * (CAST(s AS DOUBLE) / 10000.0)
-        |          / CAST(n_baseline AS DOUBLE))
-        |        / (CAST(n_baseline AS DOUBLE) - 1.0)) > 0
-        |    THEN floor((CAST(vi AS DOUBLE) / 10000.0
-        |        - CAST(s AS DOUBLE) / CAST(n_baseline AS DOUBLE) / 10000.0)
-        |      / sqrt((CAST(q AS DOUBLE) / 1e8
-        |        - (CAST(s AS DOUBLE) / 10000.0)
-        |          * (CAST(s AS DOUBLE) / 10000.0)
-        |          / CAST(n_baseline AS DOUBLE))
-        |        / (CAST(n_baseline AS DOUBLE) - 1.0))
-        |      * 1e6 + 0.5) / 1e6
-        |    END AS zscore
-        |  FROM m
-        |)
-        |SELECT event_id, user_id, ts, value, n_baseline, zscore,
-        |  coalesce(abs(zscore) >= 3.0, false) AS is_anomaly
-        |FROM z""".stripMargin,
-
-    // q_cusum: target=50 slack=5 threshold=150 at scale 4 →
-    // scaled knobs ti+ki=550000, ti-ki=450000, h=1500000; the prefix
-    // sum, running min (floored at 0), and integer alarm compare are
-    // the operator's exact arithmetic replayed verbatim
-    "q_cusum" ->
-      """WITH b AS (
-        |  SELECT event_id, user_id, ts, value,
-        |    CAST(floor(value * 10000.0 + 0.5) AS BIGINT) AS vi,
-        |    epoch_us(ts) AS tsi
-        |  FROM events
-        |), p AS (
-        |  SELECT event_id, user_id, ts, value, vi, tsi,
-        |    sum(CAST(coalesce(vi - 550000, 0) AS DECIMAL(38,0))) OVER w AS p_hi,
-        |    sum(CAST(coalesce(450000 - vi, 0) AS DECIMAL(38,0))) OVER w AS p_lo
-        |  FROM b
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY tsi, event_id
-        |    ROWS UNBOUNDED PRECEDING)
-        |), m AS (
-        |  SELECT event_id, user_id, ts, value, vi, p_hi, p_lo,
-        |    least(min(p_hi) OVER w, CAST(0 AS DECIMAL(38,0))) AS m_hi,
-        |    least(min(p_lo) OVER w, CAST(0 AS DECIMAL(38,0))) AS m_lo
-        |  FROM p
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY tsi, event_id
-        |    ROWS UNBOUNDED PRECEDING)
-        |)
-        |SELECT event_id, user_id, ts, value,
-        |  CASE WHEN vi IS NOT NULL
-        |    THEN CAST(p_hi - m_hi AS DOUBLE) / 10000.0 END AS cusum_high,
-        |  CASE WHEN vi IS NOT NULL
-        |    THEN CAST(p_lo - m_lo AS DOUBLE) / 10000.0 END AS cusum_low,
-        |  vi IS NOT NULL AND (p_hi - m_hi) > 1500000 AS alarm_high,
-        |  vi IS NOT NULL AND (p_lo - m_lo) > 1500000 AS alarm_low
-        |FROM m""".stripMargin,
 
     "q_range_join" ->
       """WITH iv AS (
@@ -10166,78 +9539,6 @@ object SparkEntry {
         |  min(ts) AS first_ts, max(ts) AS last_ts
         |FROM g GROUP BY user_id, sid""".stripMargin,
 
-    "q_triangles" ->
-      """WITH raw AS (
-        |  SELECT least(o_custkey % 4000, o_orderkey % 4000) AS a,
-        |         greatest(o_custkey % 4000, o_orderkey % 4000) AS b
-        |  FROM orders
-        |  WHERE o_custkey % 4000 <> o_orderkey % 4000
-        |), e AS (
-        |  SELECT DISTINCT a, b FROM raw
-        |), tri AS (
-        |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        |  FROM e e1
-        |  JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
-        |  JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b
-        |), nodes AS (
-        |  SELECT x AS id FROM tri
-        |  UNION ALL SELECT y FROM tri
-        |  UNION ALL SELECT z FROM tri
-        |)
-        |SELECT id, count(*) AS triangles FROM nodes GROUP BY id""".stripMargin,
-
-    "q_interval_merge" ->
-      """WITH base AS (
-        |  SELECT l_suppkey, CAST(l_shipdate AS DATE) AS s,
-        |    CAST(l_shipdate AS DATE) + CAST(l_quantity - 45 AS INT) AS e
-        |  FROM lineitem WHERE l_quantity > 45
-        |), f AS (
-        |  SELECT l_suppkey, s, e,
-        |    max(e) OVER (PARTITION BY l_suppkey ORDER BY s, e
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |      AS pm
-        |  FROM base
-        |), i AS (
-        |  SELECT l_suppkey, s, e,
-        |    sum(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY l_suppkey ORDER BY s, e
-        |            ROWS UNBOUNDED PRECEDING) AS island
-        |  FROM f
-        |)
-        |SELECT l_suppkey, min(s) AS span_start, max(e) AS span_end,
-        |  count(*) AS merged_n
-        |FROM i GROUP BY l_suppkey, island""".stripMargin,
-
-    // q_interval_gaps: merged spans (same CTE chain) + one lead
-    "q_interval_gaps" ->
-      """WITH base AS (
-        |  SELECT l_suppkey, CAST(l_shipdate AS DATE) AS s,
-        |    CAST(l_shipdate AS DATE) + CAST(l_quantity - 45 AS INT) AS e
-        |  FROM lineitem WHERE l_quantity > 45
-        |), f AS (
-        |  SELECT l_suppkey, s, e,
-        |    max(e) OVER (PARTITION BY l_suppkey ORDER BY s, e
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |      AS pm
-        |  FROM base
-        |), i AS (
-        |  SELECT l_suppkey, s, e,
-        |    sum(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY l_suppkey ORDER BY s, e
-        |            ROWS UNBOUNDED PRECEDING) AS island
-        |  FROM f
-        |), spans AS (
-        |  SELECT l_suppkey, min(s) AS span_start, max(e) AS span_end
-        |  FROM i GROUP BY l_suppkey, island
-        |), g AS (
-        |  SELECT l_suppkey, span_end AS gap_start,
-        |    lead(span_start) OVER (PARTITION BY l_suppkey
-        |      ORDER BY span_start, span_end) AS gap_end
-        |  FROM spans
-        |)
-        |SELECT l_suppkey, gap_start, gap_end
-        |FROM g WHERE gap_end IS NOT NULL""".stripMargin,
-
     "q_lpm_enrich" ->
       """WITH facts AS (
         |  SELECT event_id, (user_id * 2654435761) % 65536 AS ip FROM events
@@ -10260,17 +9561,6 @@ object SparkEntry {
         |  coalesce(max(len), 0) AS matched_len,
         |  coalesce(arg_max(geo, len), 'none') AS geo
         |FROM m GROUP BY event_id, ip""".stripMargin,
-
-    "q_decayed_score" ->
-      """SELECT user_id,
-        |  round(sum(value * pow(2.0,
-        |    -(epoch(TIMESTAMP '2024-02-01 00:00:00') - epoch(ts))
-        |      / 259200.0)), 4) AS decayed_score,
-        |  round(sum(value), 4) AS raw_sum,
-        |  count(*) AS n_events
-        |FROM events
-        |WHERE ts IS NOT NULL AND ts <= TIMESTAMP '2024-02-01 00:00:00'
-        |GROUP BY user_id""".stripMargin,
 
     "q_golden_record" ->
       """WITH u AS (
@@ -10299,22 +9589,6 @@ object SparkEntry {
         |  max(priority) AS best_priority,
         |  count(*) AS n_sources
         |FROM u GROUP BY c_custkey""".stripMargin,
-
-    "q_transitions" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |                          ORDER BY ts, event_id) AS prev
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |), c AS (
-        |  SELECT prev AS from_state, event_type AS to_state,
-        |    count(*) AS n
-        |  FROM e WHERE prev IS NOT NULL GROUP BY 1, 2
-        |)
-        |SELECT from_state, to_state, n,
-        |  round(CAST(n AS DOUBLE)
-        |    / sum(n) OVER (PARTITION BY from_state), 6) AS p
-        |FROM c""".stripMargin,
 
     "q_temperature_sample" ->
       """WITH c AS (

@@ -2,18 +2,18 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-round exchange sizing for ITERATIVE operators (closure rounds,
-  * frontier expansions, power iterations) — the rule SCALING.md's 30×
-  * ramp measured: a closure loop launches its join+agg jobs over every
-  * shuffle partition EVERY round, so `width × rounds × stages` of task
-  * overhead dominates before data volume does when the width is sized
-  * to the input corpus instead of the per-round table
-  * (q_dedup_connected at 30×: 113s at shuffle=192 vs 47s at 96 on
-  * identical data/cores). The loop families therefore size their own
-  * exchanges from a MEASURED per-round row count — one cheap count of
-  * an already-checkpointed frame — instead of inheriting the global
-  * `spark.sql.shuffle.partitions`, so a 100× run needs no hand-tuned
-  * global shuffle width.
+/** Per-round exchange sizing for the dedup closure loop,
+  * `Dedup.convergeCanonicals` (this object's one caller), by the rule
+  * SCALING.md's 30× ramp measured: a closure loop launches its
+  * join+agg jobs over every shuffle partition EVERY round, so
+  * `width × rounds × stages` of task overhead dominates before data
+  * volume does when the width is sized to the input corpus instead of
+  * the per-round table (q_dedup_connected at 30×: 113s at shuffle=192
+  * vs 47s at 96 on identical data/cores). The closure rounds therefore
+  * size their own exchanges from a MEASURED per-round row count — one
+  * cheap count of an already-checkpointed frame — instead of
+  * inheriting the global `spark.sql.shuffle.partitions`, so a 100× run
+  * needs no hand-tuned global shuffle width.
   */
 object LoopShuffle {
 
@@ -36,11 +36,11 @@ object LoopShuffle {
 
   /** Run `body` with `spark.sql.shuffle.partitions` set to `n`,
     * restoring the caller's value afterwards. Plans EXECUTED inside
-    * `body` (the loop families' eager per-round localCheckpoints) pick
+    * `body` (the closure loop's eager per-round localCheckpoints) pick
     * up `n`; lazily-returned frames do not — materialize inside.
     * Session-conf mutation is not thread-safe across concurrently
-    * executing queries on the same session; the loop operators run
-    * their rounds serially by construction. */
+    * executing queries on the same session; the closure loop runs its
+    * rounds serially by construction. */
   def withWidth[T](spark: SparkSession, n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val old = spark.conf.get(key)
@@ -49,14 +49,14 @@ object LoopShuffle {
   }
 
   /** Narrow-coalesce an eagerly-checkpointed LOOP INPUT down to the
-    * loop width and re-checkpoint it, freeing the wide original. Loop
-    * inputs (adjacency tables, seed frontiers, degree-annotated edges)
-    * are scanned EVERY round, so their partition count is per-round
-    * task overhead even when the round's own exchanges are sized right
-    * — a 397-partition adjacency checkpoint costs 397 scan tasks per
-    * hop on kilobytes of data. coalesce is narrow (no shuffle); the
-    * re-checkpoint is one map job reading the original's cached
-    * blocks. No-op when the frame is already at or under the width. */
+    * loop width and re-checkpoint it, freeing the wide original. A loop
+    * input (the closure's edge checkpoint) is scanned EVERY round, so
+    * its partition count is per-round task overhead even when the
+    * round's own exchanges are sized right — a 397-partition edge
+    * checkpoint costs 397 scan tasks per round on kilobytes of data.
+    * coalesce is narrow (no shuffle); the re-checkpoint is one map job
+    * reading the original's cached blocks. No-op when the frame is
+    * already at or under the width. */
   def resized(df: org.apache.spark.sql.DataFrame, n: Int)
       : org.apache.spark.sql.DataFrame =
     if (df.rdd.getNumPartitions <= n) df

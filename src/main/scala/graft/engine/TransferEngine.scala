@@ -123,11 +123,19 @@ class TransferEngine(cfg: JobConfig) {
     // target by primary key" (cli.rs:46-47; never wired in the
     // reference engine — SURVEY §2.E). Implemented as a left_anti join
     // against the target's current keys; broadcast-able when small.
+    // A target that cannot be read has nothing to skip; a readable one
+    // without the key column is a configuration error.
     if (cfg.skipExisting) {
       val pk = cfg.primaryKey.getOrElse(detectPk(df))
-      val existing = scala.util.Try(
-        Connectors.read(spark, cfg.target, cfg.targetOptions).select(pk))
-      existing.toOption.foreach(ex => df = df.join(ex, Seq(pk), "left_anti"))
+      scala.util.Try(Connectors.read(spark, cfg.target, cfg.targetOptions))
+        .foreach { target =>
+          val keys = try target.select(pk) catch {
+            case e: org.apache.spark.sql.AnalysisException =>
+              throw graft.core.GraftError.Configuration(
+                s"skipExisting: target ${cfg.target} has no key column '$pk'", e)
+          }
+          df = df.join(keys, Seq(pk), "left_anti")
+        }
     }
     df
   }

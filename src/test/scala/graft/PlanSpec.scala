@@ -527,17 +527,6 @@ class PlanSpec extends SparkSpec {
       s"expected the single explicit shard exchange, got ${shuffles.length}")
   }
 
-  test("interval coalescing: ONE key exchange feeds both windows and the groupBy") {
-    val iv = sf("lineitem").filter(col("l_quantity") > 45)
-      .select(col("l_suppkey"), col("l_shipdate").as("s"),
-        col("l_shipdate").as("e"))
-    val df = graft.operators.Intervals.coalesceIntervals(
-      iv, Seq("l_suppkey"), "s", "e")
-    val shuffles = shuffleOutputs(df)
-    assert(shuffles.length == 1,
-      s"islands must reuse one key partitioning, got ${shuffles.length}: $shuffles")
-  }
-
   test("shard manifest: one narrow partial-aggregating exchange, no content") {
     val df = graft.llm.Shuffling.shardManifest(
       sf("documents"), "doc_id", "text", seed = 7L, shards = 8)
@@ -547,17 +536,6 @@ class PlanSpec extends SparkSpec {
       assert(!cols.contains("text"), s"content crossed the shuffle: $cols"))
     assert(df.queryExecution.sparkPlan.toString.contains("partial_"),
       "manifest aggregation must combine map-side")
-  }
-
-  test("decayed score: one partial-aggregating exchange, weights in the scan") {
-    val df = graft.operators.Decay.decayedScore(
-      graft.streaming.EventsStreaming.readEvents(spark, "/root/testdata/sf0.001")
-        .select(col("user_id"), col("ts"), col("value")),
-      Seq("user_id"), "ts", "value", "2024-02-01 00:00:00", 259200.0)
-    val shuffles = shuffleOutputs(df)
-    assert(shuffles.length == 1, s"expected one exchange: $shuffles")
-    assert(df.queryExecution.sparkPlan.toString.contains("partial_sum"),
-      "decay weights must fold map-side")
   }
 
   test("temperature sample: the kept-set filter is a shuffle-free scan") {
@@ -581,27 +559,6 @@ class PlanSpec extends SparkSpec {
     // every exchange carries only basket/item keys and counters
     shuffleOutputs(df).foreach(cols =>
       assert(cols.size <= 5, s"unexpectedly wide shuffle: $cols"))
-  }
-
-  test("markov transitions: no shuffle carries raw event payloads") {
-    val df = graft.operators.Markov.transitions(
-      graft.streaming.EventsStreaming.readEvents(spark, "/root/testdata/sf0.001")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"), col("props")),
-      Seq("user_id"), "ts", "event_type", tieCols = Seq("event_id"))
-    shuffleOutputs(df).foreach(cols =>
-      assert(!cols.contains("props"),
-        s"unused payload crossed a shuffle: $cols"))
-  }
-
-  test("anomaly z-score: exactly one shuffle, the per-key window") {
-    import spark.implicits._
-    val d = (1 to 100).map(i => ("u" + (i % 5), i.toLong, i * 1.5))
-      .toDF("k", "t", "v")
-    val out = graft.operators.Anomaly.trailingZScore(
-      d, Seq("k"), "t", "v", width = 10L)
-    val shuffles = shuffleOutputs(out)
-    assert(shuffles.size == 1, s"expected ONE window exchange: $shuffles")
   }
 
   test("soft weights: one keys-only exchange on the component label") {
@@ -690,7 +647,6 @@ class PlanSpec extends SparkSpec {
   test("fused quality stages: c4Filter / gopherFilter / lineStats / " +
       "gopher_rules are each ONE shuffle-free projection over the " +
       "fused text walk") {
-    import spark.implicits._
     val docs = sf("documents").select(col("doc_id"), col("text"))
     // (stage, plan, expected walk-expression occurrences): the filter
     // stages are ONE boolean keep expression — filtering on derived

@@ -191,7 +191,7 @@ class PropertySpec extends SparkSpec {
 
   test("capped collects: any update/merge order obeys the cap contract") {
     import graft.functions.CollectCapped.CollectLongsCapped
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.util.ArrayData
     import org.apache.spark.sql.types.LongType
@@ -260,7 +260,6 @@ class PropertySpec extends SparkSpec {
 
   test("text rewrites: stripHtml / NFC idempotent, line dedup idempotent (Spark)") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // '&' excluded deliberately: entity decode is one-generation by
     // design — decoding `&lt;b&gt;` CREATES a tag a second pass would
     // strip, so idempotence only holds for entity-free text (the same

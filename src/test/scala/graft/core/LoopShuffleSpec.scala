@@ -2,7 +2,6 @@ package graft.core
 
 import graft.SparkSpec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
-import org.apache.spark.sql.functions._
 
 class LoopShuffleSpec extends SparkSpec {
   import spark.implicits._
@@ -70,31 +69,6 @@ class LoopShuffleSpec extends SparkSpec {
       val atFloor = counts.count(_ <= spark.sparkContext.defaultParallelism)
       assert(at397 <= 4, s"too many session-width stages: $counts")
       assert(atFloor >= 6, s"expected the rounds at the core floor: $counts")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
-  }
-
-  test("BFS and PageRank rounds are loop-width sized too") {
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try LoopShuffle.withWidth(spark, 397) {
-      val edges = (0L until 6L).map(i => (i, i + 1)).toDF("src", "dst")
-      val bfsCounts = stageTaskCounts {
-        graft.operators.ShortestPaths.bfs(edges, "src", "dst",
-          Seq(0L).toDF("id"), maxHops = 6).collect()
-      }
-      assert(bfsCounts.count(_ == 397) <= 4,
-        s"BFS rounds leaked the session width: $bfsCounts")
-      val prCounts = stageTaskCounts {
-        graft.operators.PageRank.ranks(edges, "src", "dst", iters = 3)
-          .collect()
-      }
-      // PageRank's SETUP (edge distinct ×2 consumers, degree join,
-      // width count, node distinct) is input-scale work correctly at
-      // the session width — 6 one-time stages; the 3 × N round stages
-      // must all be loop-width (without the sizing, each round adds
-      // session-width stages and this count grows with iters)
-      assert(prCounts.count(_ >= 397) <= 6,
-        s"PageRank rounds leaked the session width: $prCounts")
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 }

@@ -440,6 +440,12 @@ class EngineSpec extends SparkSpec {
     val cfg = JobConfig(s"$dir/in.csv", s"$dir/target.parquet", skipExisting = true)
     val df = new TransferEngine(cfg).plan(spark)
     assert(df.select("id").as[Long].collect().toSet == Set(3L))
+    // a target without the key column fails instead of re-appending
+    Seq((1L, "old")).toDF("key", "v")
+      .write.mode("overwrite").parquet(s"$dir/keyless.parquet")
+    val err = intercept[graft.core.GraftError.Configuration](new TransferEngine(
+      cfg.copy(target = s"$dir/keyless.parquet")).plan(spark))
+    assert(err.msg.contains("'id'") && err.msg.contains("keyless.parquet"))
   }
 
   test("preview and dry-run don't write (U2/U3)") {

@@ -1,7 +1,6 @@
 package graft.llm
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class LangIdSpec extends SparkSpec {
   import spark.implicits._
@@ -114,7 +113,6 @@ class LangIdSpec extends SparkSpec {
 
   test("non-default n-gram sizes thread train → score (r11 advice): " +
       "a ns=Seq(1,2) model scores with 1-2-gram windows") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     // vowel vs consonant classes: 1-grams alone separate them, so a
     // correctly-threaded ns=Seq(1) scorer classifies the held-out

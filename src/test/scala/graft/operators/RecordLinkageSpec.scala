@@ -3,7 +3,6 @@ package graft.operators
 import graft.SparkSpec
 import graft.core.GraftError
 import graft.functions.StringSim
-import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
 class RecordLinkageSpec extends SparkSpec {

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 

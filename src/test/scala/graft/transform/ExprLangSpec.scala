@@ -2,7 +2,6 @@ package graft.transform
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Row
 
 /** Semantics-by-example, mirroring the reference's transformer tests
   * (`/root/reference/src/transformer.rs` test module) and README
