@@ -5,6 +5,8 @@ import graft.transform.Transform
 import graft.validate.{SchemaFile, Validation}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, concat_ws}
+import org.apache.spark.storage.StorageLevel
 
 /** The pipeline driver (U1, `/root/reference/src/transfer.rs:23-199`):
   * read → [validate] → [transform] → (preview | dry-run | write).
@@ -58,32 +60,27 @@ final case class TransferStats(totalRows: Long, seconds: Double,
 
 class TransferEngine(cfg: JobConfig) {
 
-  /** The pre-transform frame (read + validation) — the "original
-    * schema" preview renders this stage's shape — and, with a
-    * quarantine target configured, the rejected rows. The source is
-    * built ONCE for both routes (a second build would re-run the
-    * inference sample and re-download http/ssh sources). */
-  private def sourceFrame(spark: SparkSession)
-      : (DataFrame, Option[DataFrame]) =
-    validated(Connectors.read(spark, cfg.source, cfg.sourceOptions))
+  /** The source frame: built ONCE per call and shared by every route
+    * and preview section (a second build would re-run the inference
+    * sample and re-download http/ssh sources). */
+  private def source(spark: SparkSession): DataFrame =
+    Connectors.read(spark, cfg.source, cfg.sourceOptions)
 
   /** Validation stage, BEFORE transform (transfer.rs:154-159,
     * README.md:772): fail-fast by default; with a quarantine target
-    * configured, [[Validation.quarantine]]'s (valid, invalid) split —
-    * the invalid side is written by [[execute]], and preview/dry-run
-    * naturally render the valid route. */
-  private def validated(df: DataFrame): (DataFrame, Option[DataFrame]) =
+    * configured, the valid side of [[Validation.quarantine]]'s split —
+    * preview and dry-run render it, and [[execute]] writes both sides
+    * from one scan. */
+  private def validated(df: DataFrame): DataFrame =
     cfg.schemaFile.map(SchemaFile.fromFile) match {
-      case None => (df, None)
-      case Some(sf) if cfg.quarantine.isEmpty => (Validation(df, sf), None)
-      case Some(sf) =>
-        val (valid, invalid) = Validation.quarantine(df, sf)
-        (valid, Some(invalid))
+      case None => df
+      case Some(sf) if cfg.quarantine.isEmpty => Validation(df, sf)
+      case Some(sf) => Validation.quarantine(Validation.annotate(df, sf), sf)._1
     }
 
   /** Build the full lazy plan (read → validate → transform). */
   def plan(spark: SparkSession): DataFrame =
-    applyTransforms(spark, sourceFrame(spark)._1)
+    applyTransforms(spark, validated(source(spark)))
 
   /** The validate → transform stages over an externally built source
     * frame — the streaming curation path reads via
@@ -101,7 +98,7 @@ class TransferEngine(cfg: JobConfig) {
         "quarantine cannot stream (it forks the batch into two sinks " +
           "over one materialized pass) — run validation-routing as a " +
           "batch transfer")
-    applyTransforms(spark, validated(source)._1)
+    applyTransforms(spark, validated(source))
   }
 
   /** Transform + skip-existing stages over an already-built source
@@ -150,26 +147,45 @@ class TransferEngine(cfg: JobConfig) {
   /** Execute the copy (write path). Row stats come from
     * [[Connectors.countedWrite]], riding each write job itself (U4) —
     * one pass, no re-read of the written target, no second scan of the
-    * source. */
+    * source. With a quarantine target the two routes fork from ONE
+    * scan: the annotated frame ([[Validation.annotate]]: typed source
+    * plus `_violations`) is persisted at MEMORY_AND_DISK, the
+    * quarantine write runs first and fills the cache, the valid write
+    * reads the cached rows instead of parsing, typing and checking the
+    * source again, and a `finally` drops the cache whether the writes
+    * succeed or fail. Preview, dry-run and the non-quarantine path stay
+    * lazy. */
   def execute(spark: SparkSession): TransferStats = {
-    import org.apache.spark.sql.functions.{col, concat_ws}
     val t0 = System.nanoTime()
-    val (valid, invalid) = sourceFrame(spark)
-    // dead-letter write: the INVALID route — raw source typing plus
-    // `_violations` flattened to a '|'-joined string (portable across
-    // every sink, CSV included), written BEFORE the main transfer so a
-    // failing main write still leaves the rejects inspectable
-    val rejected = invalid.fold(0L) { inv =>
-      val target = cfg.quarantine.get
-      val flat = inv.withColumn("_violations", concat_ws("|", col("_violations")))
-      Connectors.countedWrite(flat, s"quarantine $target")(
-        Connectors.write(_, target, cfg.truncate))
+    val src = source(spark)
+    val (rows, rejected) = cfg.quarantine match {
+      case Some(target) =>
+        val sf = SchemaFile.fromFile(cfg.schemaFile.get)
+        val annotated = Validation.annotate(src, sf)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val (valid, invalid) = Validation.quarantine(annotated, sf)
+          // dead-letter write: the INVALID route — raw source typing
+          // plus `_violations` flattened to a '|'-joined string
+          // (portable across every sink, CSV included), written BEFORE
+          // the main transfer so a failing main write still leaves the
+          // rejects inspectable
+          val flat = invalid.withColumn("_violations",
+            concat_ws("|", col("_violations")))
+          val rejected = Connectors.countedWrite(flat, s"quarantine $target")(
+            Connectors.write(_, target, cfg.truncate))
+          (writeTarget(spark, valid), rejected)
+        } finally annotated.unpersist()
+      case None => (writeTarget(spark, validated(src)), 0L)
     }
-    val out = exactDecimals(applyTransforms(spark, valid))
-    val rows = Connectors.countedWrite(out, cfg.target)(
-      Connectors.write(_, cfg.target, cfg.truncate, cfg.targetOptions))
     TransferStats(rows, (System.nanoTime() - t0) / 1e9, rejected)
   }
+
+  /** The main write: transform stages, then the decimal-mode cast. */
+  private def writeTarget(spark: SparkSession, df: DataFrame): Long =
+    Connectors.countedWrite(exactDecimals(applyTransforms(spark, df)),
+      cfg.target)(Connectors.write(_, cfg.target, cfg.truncate,
+      cfg.targetOptions))
 
   /** Write-boundary cast for `decimalMode = "exact"`: every floating
     * column becomes [[graft.core.TinyType.TDecimal.exact]]
@@ -186,7 +202,7 @@ class TransferEngine(cfg: JobConfig) {
   private def exactDecimals(df: DataFrame): DataFrame =
     if (cfg.decimalMode != "exact") df
     else {
-      import org.apache.spark.sql.functions.{col, concat, lit, raise_error, when}
+      import org.apache.spark.sql.functions.{concat, lit, raise_error, when}
       import org.apache.spark.sql.types.{DoubleType, FloatType}
       val floating = df.schema.fields
         .filter(f => f.dataType == DoubleType || f.dataType == FloatType)
@@ -212,7 +228,7 @@ class TransferEngine(cfg: JobConfig) {
     * schema when a transform is configured, then the first N rows in the
     * reference's fixed-width table — no write. */
   def preview(spark: SparkSession, n: Int = 10): String = {
-    val src = sourceFrame(spark)._1 // built ONCE; both sections derive from it
+    val src = validated(source(spark)) // both sections derive from it
     val df = applyTransforms(spark, src)
     val sb = new StringBuilder
     sb.append("\nOriginal Schema Preview:\n")

@@ -3,7 +3,12 @@ package graft.infer
 import graft.core.TinyType
 import graft.core.TinyType._
 
-import org.apache.spark.sql.{Column, DataFrame}
+import com.univocity.parsers.csv.CsvParser
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -107,13 +112,48 @@ object CellInference {
     "nullValue" -> "\u0000never\u0000",
     "escape" -> "\"")
 
+  /** The CSV input as text cells, named as Spark's own `header` read
+    * names them in the [[RawCsvOptions]] dialect: what typing samples
+    * and casts, for the batch and the streaming read alike. The header
+    * is read on the driver instead of in the Spark job (`take(1)` over
+    * a text scan) that Spark spends on it, from the file that `take(1)`
+    * reaches first: the planned text scan orders its splits by length,
+    * largest first, and empty files have none. `CSVUtils.readHeaderLine`
+    * skips empty and comment lines and decodes compression codecs; the
+    * dialect's univocity parser splits the line, and
+    * `CSVUtils.makeSafeHeader` names empty and duplicate columns. An
+    * input whose files hold no header line has no columns; an input
+    * with no files fails as Spark's read does. */
+  def rawCsv(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.conf
+    val options = new CSVOptions(RawCsvOptions, conf.csvColumnPruning,
+      conf.sessionLocalTimeZone)
+    val scan = spark.read.text(path).queryExecution.sparkPlan.collectFirst {
+      case s: FileSourceScanExec => s
+    }.get
+    if (scan.relation.location.inputFiles.isEmpty)
+      throw new AnalysisException("UNABLE_TO_INFER_SCHEMA", Map("format" -> "CSV"))
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val firstLine = scan.inputRDD.partitions.iterator
+      .flatMap { case p: FilePartition => p.files.iterator.map(_.toPath) }
+      .distinct
+      .flatMap(CSVUtils.readHeaderLine(_, options, hadoopConf))
+      .nextOption()
+    val names = firstLine.flatMap(l =>
+      Option(new CsvParser(options.asParserSettings).parseLine(l)))
+    val schema = StructType(names.toSeq.flatMap(n =>
+      CSVUtils.makeSafeHeader(n, conf.caseSensitiveAnalysis, options))
+      .map(StructField(_, StringType)))
+    spark.read.schema(schema).options(RawCsvOptions).csv(path)
+  }
+
   /** tinyetl-semantics CSV read: header row, every column read raw as
     * string, types inferred from a 1000-row sample, then cast
     * distributed. Differs from Spark's `inferSchema` on purpose
     * (multi-format dates, strict "true"/"false" booleans). */
-  def readCsv(spark: org.apache.spark.sql.SparkSession, path: String,
+  def readCsv(spark: SparkSession, path: String,
               sampleRows: Int = SampleRows): DataFrame = {
-    val raw = spark.read.options(RawCsvOptions).csv(path)
+    val raw = rawCsv(spark, path)
     applyTypes(raw, inferColumns(raw, sampleRows))
   }
 
@@ -121,7 +161,7 @@ object CellInference {
     * only accepted shape, json.rs:73-80) AND JSON-lines files (what
     * distributed sinks produce); numbers stay typed, strings are
     * date-sniffed, nested arrays/objects are stringified (json.rs:28-57). */
-  def readJson(spark: org.apache.spark.sql.SparkSession, path: String,
+  def readJson(spark: SparkSession, path: String,
                sampleRows: Int = SampleRows): DataFrame = {
     // Sniff: a whole-file JSON array needs multiLine; JSONL must not use it
     // (multiLine on JSONL parses only the first object).

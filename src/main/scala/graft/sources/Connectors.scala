@@ -177,11 +177,12 @@ object Connectors {
     * SSH are one-shot probes, and the RDD-based Avro connector cannot
     * stream). Schema comes from ONE batch pass over the same path —
     * the standard file-stream pattern (the source must declare its
-    * schema up front) — and for CSV the 1000-row sampled cell-typing
-    * inference runs on that batch pass while the CAST CHAIN applies
-    * per micro-batch, so streamed CSV gets the exact S1 typing
-    * semantics (multi-format dates, strict booleans), not Spark's
-    * native inference. */
+    * schema up front). For CSV that pass is the batch read's own
+    * [[CellInference.rawCsv]]: the header is read on the driver
+    * without a job, the 1000-row sampled cell-typing inference runs on
+    * it, and the CAST CHAIN applies per micro-batch, so streamed CSV
+    * gets the exact S1 typing semantics (multi-format dates, strict
+    * booleans), not Spark's native inference. */
   def readStream(spark: SparkSession, uri: String,
                  options: Map[String, String] = Map.empty): DataFrame = {
     val ref = parse(uri, options)
@@ -193,8 +194,7 @@ object Connectors {
         spark.readStream.schema(spark.read.orc(ref.path).schema)
           .orc(ref.path)
       case "csv" =>
-        val rawBatch = spark.read.options(CellInference.RawCsvOptions)
-          .csv(ref.path)
+        val rawBatch = CellInference.rawCsv(spark, ref.path)
         val cols = CellInference.inferColumns(rawBatch)
         val rawStream = spark.readStream.schema(rawBatch.schema)
           .options(CellInference.RawCsvOptions)

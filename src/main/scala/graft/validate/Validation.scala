@@ -116,18 +116,19 @@ object Validation {
     df.withColumn("_violations", arr)
   }
 
-  /** Quarantine split (dead-letter pattern): (valid rows, typed via
-    * the same projection as [[apply]] — which cannot fail, every
-    * violating row was routed away; invalid RAW rows + `_violations`).
-    * Two filters over one lazy plan — persist the input upstream if
-    * the source scan is expensive and both sides are consumed. */
-  def quarantine(df: DataFrame, schema: SchemaFile)
+  /** Quarantine split (dead-letter pattern) of an [[annotate]]d frame:
+    * (valid rows, typed via the same projection as [[apply]] — which
+    * cannot fail, every violating row was routed away; invalid RAW
+    * rows + `_violations`). Two filters over one plan: a caller that
+    * consumes both sides persists the annotated frame first, as
+    * [[graft.engine.TransferEngine.execute]] does, so the source is
+    * scanned and checked once. */
+  def quarantine(annotated: DataFrame, schema: SchemaFile)
       : (DataFrame, DataFrame) = {
-    val ann = annotate(df, schema)
     val valid = apply(
-      ann.where(size(col("_violations")) === 0).drop("_violations"),
+      annotated.where(size(col("_violations")) === 0).drop("_violations"),
       schema, failFast = true)
-    val invalid = ann.where(size(col("_violations")) > 0)
+    val invalid = annotated.where(size(col("_violations")) > 0)
     (valid, invalid)
   }
 

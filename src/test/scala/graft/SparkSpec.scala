@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session). */
@@ -37,5 +41,35 @@ abstract class SparkSpec extends AnyFunSuite {
     }
     java.nio.file.Files.createDirectories(p)
     p.toString
+  }
+
+  /** Spark jobs started and SQL executions finished while `body` runs,
+    * counted by listeners drained before and after it. */
+  def observeRun[A](body: => A): (A, Int, Seq[QueryExecution]) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val qeListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        done.add(qe)
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    ListenerDrain.drain(sc)
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(qeListener)
+    try {
+      val a = body
+      ListenerDrain.drain(sc)
+      import scala.jdk.CollectionConverters._
+      (a, jobs.get, done.asScala.toSeq)
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(qeListener)
+    }
   }
 }

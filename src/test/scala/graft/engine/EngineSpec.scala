@@ -1,11 +1,18 @@
 package graft.engine
 
 import graft.SparkSpec
+import graft.infer.CellInference
 import graft.sources.{AvroConnector, Connectors}
+import graft.transform.Transform
 import graft.validate.{SchemaFile, Validation}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
 
-class EngineSpec extends SparkSpec {
+class EngineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def writeText(path: String, s: String): String = {
@@ -478,5 +485,133 @@ class EngineSpec extends SparkSpec {
     assert(p.contains("│ dbl                 │"))
     // truncation: 15-char cells never widen the table
     assert(!p.linesIterator.exists(_.length > 200))
+  }
+
+  // --- quarantine: one source scan for both routes ----------------------
+
+  /** A CSV quarantine transfer with planted rejects (a bad decimal, a
+    * non-integer id, a null required id, a pattern miss, a non-date),
+    * rows the filter drops (one by value, one by its default), dates in
+    * several formats and a quoted cell holding a comma. 9 rows: 5
+    * rejected, 4 valid, 2 kept. */
+  private def quarantineJob(dir: String, amount1: String = "10.5"): JobConfig = {
+    writeText(s"$dir/in.csv",
+      s"""id,name,amount,when,status
+        |1,Alice,$amount1,2023-12-25,open
+        |2,Bob,oops,12/26/2023,open
+        |x,Carl,3.0,"Dec 27, 2023",open
+        |,Dana,4.0,2023/12/28,closed
+        |5,Eve!,5.0,25.12.2023,open
+        |6,Finn,0.5,2023-12-30T10:30:00Z,open
+        |7,Gus,7.25,12-31-2023,"closed, late"
+        |8,Hal,,2024-01-01,open
+        |9,Ivy,9.0,not a date,open
+        |""".stripMargin)
+    writeText(s"$dir/schema.yaml",
+      """columns:
+        |  - name: id
+        |    type: integer
+        |    nullable: false
+        |  - name: name
+        |    type: string
+        |    pattern: '^[A-Za-z]+$'
+        |  - name: amount
+        |    type: decimal
+        |    default: "0.0"
+        |  - name: when
+        |    type: datetime
+        |    nullable: false
+        |""".stripMargin)
+    JobConfig(
+      source = s"$dir/in.csv",
+      target = s"$dir/out.parquet",
+      transform = TransformSpec(
+        inline = Some("twice = row.amount * 2; tag = string.upper(row.status)"),
+        filter = Some("row.amount >= 1")),
+      schemaFile = Some(s"$dir/schema.yaml"),
+      truncate = true,
+      quarantine = Some(s"$dir/rejects.parquet"))
+  }
+
+  /** The two-scan form the engine replaced, as the oracle: Spark's own
+    * header inference, no persist, each route reading, typing and
+    * checking the source on its own. */
+  private def twoScanTransfer(cfg: JobConfig, out: String,
+                              rejects: String): Unit = {
+    val raw = spark.read.options(CellInference.RawCsvOptions).csv(cfg.source)
+    val typed = CellInference.applyTypes(raw, CellInference.inferColumns(raw))
+    val sf = SchemaFile.fromFile(cfg.schemaFile.get)
+    val ann = Validation.annotate(typed, sf)
+    Connectors.write(ann.where(size(col("_violations")) > 0)
+      .withColumn("_violations", concat_ws("|", col("_violations"))),
+      rejects, truncate = true)
+    val valid = Validation(
+      ann.where(size(col("_violations")) === 0).drop("_violations"), sf)
+    Connectors.write(Transform.filter(
+      Transform.inline(valid, cfg.transform.inline.get),
+      cfg.transform.filter.get), out, truncate = true)
+  }
+
+  /** The executed plan of the file write into `path`. */
+  private def writeInto(qes: Seq[QueryExecution], path: String) =
+    qes.map(_.executedPlan).find(p => p.collectFirst {
+      case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) =>
+        c.outputPath.toString.endsWith(path)
+    }.contains(true)).getOrElse(fail(s"no write into $path"))
+
+  test("quarantine transfer scans the CSV once: 3 Spark jobs, the valid " +
+      "write reads the cache, and execute drops it") {
+    val dir = tmpDir("engine_one_scan")
+    val cfg = quarantineJob(dir)
+    // the session is shared by every suite; start from an empty cache
+    spark.catalog.clearCache()
+    val (_, oracleJobs, _) = observeRun(
+      twoScanTransfer(cfg, s"$dir/two_scan/out.parquet",
+        s"$dir/two_scan/rejects.parquet"))
+    assert(oracleJobs == 4, "header, sample and two full scans")
+    val (stats, jobs, qes) = observeRun(new TransferEngine(cfg).execute(spark))
+    assert(stats.totalRows == 2 && stats.rejectedRows == 5)
+    assert(jobs == 3, "the sample and the two writes")
+    val valid = writeInto(qes, "/out.parquet")
+    assert(collect(valid) { case s: FileSourceScanExec => s }.isEmpty,
+      valid.treeString)
+    assert(collect(valid) { case s: InMemoryTableScanExec => s }.nonEmpty,
+      valid.treeString)
+    // the quarantine write ran first, over the same cached rows
+    assert(collect(writeInto(qes, "/rejects.parquet")) {
+      case s: InMemoryTableScanExec => s }.nonEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("quarantine: a failing main write keeps the rejects on disk and " +
+      "drops the cache") {
+    val dir = tmpDir("engine_one_scan_fail")
+    // 1e25 is a valid decimal, but DECIMAL(38,18) cannot hold it
+    val cfg = quarantineJob(dir, amount1 = "1e25").copy(decimalMode = "exact")
+    spark.catalog.clearCache()
+    val e = intercept[graft.core.GraftError.DataTransfer](
+      new TransferEngine(cfg).execute(spark))
+    assert(e.getMessage.contains("not representable as DECIMAL(38,18)"))
+    assert(spark.read.parquet(s"$dir/rejects.parquet").count() == 5)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("quarantine: the one-scan engine writes the two-scan form's rows " +
+      "and schemas on both routes") {
+    val dir = tmpDir("engine_two_scan_oracle")
+    val cfg = quarantineJob(dir)
+    twoScanTransfer(cfg, s"$dir/two_scan/out.parquet",
+      s"$dir/two_scan/rejects.parquet")
+    new TransferEngine(cfg).execute(spark)
+    for (route <- Seq("out.parquet", "rejects.parquet")) {
+      val got = spark.read.parquet(s"$dir/$route")
+      val want = spark.read.parquet(s"$dir/two_scan/$route")
+      assert(got.schema == want.schema, route)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toSeq.mkString("\u0001")).sorted.toSeq
+      assert(rows(got) == rows(want), route)
+    }
+    assert(spark.read.parquet(s"$dir/out.parquet").count() == 2)
+    assert(spark.read.parquet(s"$dir/rejects.parquet").count() == 5)
   }
 }

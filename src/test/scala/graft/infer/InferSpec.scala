@@ -205,4 +205,81 @@ class InferSpec extends SparkSpec {
     val vals = df.orderBy("id").collect().map(_.getTimestamp(1).toInstant.toString)
     assert(vals.toSeq == Seq("2023-12-25T00:00:00Z", "2023-12-26T00:00:00Z"))
   }
+
+  /** Header fixtures, each a path Spark's CSV reader takes. */
+  private def headerFixtures(dir: String): Seq[String] = {
+    def put(name: String, bytes: Array[Byte]): String = {
+      val p = java.nio.file.Paths.get(dir, name)
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.write(p, bytes)
+      p.toString
+    }
+    def text(name: String, s: String): String =
+      put(name, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val gz = {
+      val buf = new java.io.ByteArrayOutputStream
+      val out = new java.util.zip.GZIPOutputStream(buf)
+      out.write("g1,\"g,2\"\n1,2\n".getBytes("UTF-8"))
+      out.close()
+      put("gz/in.csv.gz", buf.toByteArray)
+    }
+    // the alphabetically first file is the smallest: Spark's first
+    // split is the largest file's, so its header names the columns
+    text("multi/a.csv", "small1,small2\n1,2\n")
+    text("multi/m.csv", "big1,big2,big3\n" + "1,2,3\n" * 200)
+    text("multi/z.csv", "mid1\n" + "1\n" * 50)
+    text("multi/empty.csv", "")
+    Seq(
+      text("quoted.csv", "\"a,b\",\"say \"\"hi\"\"\",c\n1,2,3\n"),
+      text("bom.csv", "\uFEFFid,name\n1,a\n"),
+      text("dups.csv", "a,,a,A,\n1,2,3,4,5\n"),
+      text("blank.csv", "\n\nx,y\n1,2\n"),
+      gz,
+      s"$dir/multi",
+      text("header_only.csv", "h1,h2\n"),
+      text("empty.csv", ""))
+  }
+
+  test("rawCsv names the columns as Spark's header read does, " +
+      "without a Spark job") {
+    import org.apache.spark.sql.types.StringType
+    for (p <- headerFixtures(tmpDir("csv_header"))) {
+      val (raw, jobs, _) = observeRun(CellInference.rawCsv(spark, p))
+      assert(jobs == 0, s"$p: $jobs Spark jobs")
+      val spark0 = spark.read.options(CellInference.RawCsvOptions).csv(p)
+      assert(raw.columns.toSeq == spark0.columns.toSeq, p)
+      assert(raw.schema.fields.forall(_.dataType == StringType), p)
+      // the header line is skipped in every file, as before
+      assert(raw.collect().map(_.toSeq).toSet ==
+        spark0.collect().map(_.toSeq).toSet, p)
+    }
+    // no files at all: Spark's own read error, not an empty schema
+    val none = tmpDir("csv_header_none")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      CellInference.rawCsv(spark, none))
+    assert(e.getCondition == "UNABLE_TO_INFER_SCHEMA")
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.read.options(CellInference.RawCsvOptions).csv(none))
+  }
+
+  test("Connectors.readStream types a CSV directory as before, with the " +
+      "header read off the job") {
+    val dir = tmpDir("csv_stream")
+    def put(name: String, s: String): Unit =
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, name), s)
+    put("a.csv", "id,price,active,when,note\n1,9.99,true,2023-12-25,\"x, y\"\n")
+    put("b.csv", "id,price,active,when,note\n" +
+      (2 to 40).map(i => s"$i,$i.5,false,12/26/2023,n$i\n").mkString)
+    // the schema the stream had when Spark's own read named its columns
+    val raw = spark.read.options(CellInference.RawCsvOptions).csv(dir)
+    val (cols, sampleJobs, _) = observeRun(CellInference.inferColumns(raw))
+    val before = CellInference.applyTypes(
+      spark.readStream.schema(raw.schema)
+        .options(CellInference.RawCsvOptions).csv(dir), cols)
+    val (stream, jobs, _) = observeRun(graft.sources.Connectors.readStream(
+      spark, dir, Map("sourceType" -> "csv")))
+    assert(stream.isStreaming)
+    assert(stream.schema == before.schema)
+    assert(jobs == sampleJobs, "the inference sample's jobs only")
+  }
 }

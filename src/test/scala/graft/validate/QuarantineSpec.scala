@@ -47,7 +47,8 @@ class QuarantineSpec extends SparkSpec {
   }
 
   test("quarantine: valid side is typed with defaults applied, invalid side raw") {
-    val (valid, invalid) = Validation.quarantine(frame, schema)
+    val (valid, invalid) =
+      Validation.quarantine(Validation.annotate(frame, schema), schema)
     val v = valid.select(col("id"), col("amount")).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(v == Map(1L -> 10.5, 6L -> 3.0))
