@@ -2475,61 +2475,6 @@ object SparkEntry {
           col("w.purchase_value").as("purchase_value"))
     },
 
-    // --- SCD2 versioning: events as per-user state updates → half-open
-    // validity intervals, last version open (one window pass). ---
-    "q_scd2" -> { (s, dir) =>
-      graft.operators.Scd2.history(
-        EventsStreaming.readEvents(s, dir)
-          .select(col("event_id"), col("user_id"), col("ts"), col("value")),
-        Seq("user_id"), "ts", orderCols = Seq("event_id"))
-        .select(col("event_id"), col("user_id"), col("value"),
-          col("valid_from"), col("valid_to"), col("is_current"))
-    },
-
-    // --- as-of join: every event attaches the latest preceding snapshot
-    // (every-5th event, deduped per (user, ts)) within a 1h tolerance.
-    // Single-exchange sort-merge as-of; the oracle is DuckDB's native
-    // ASOF LEFT JOIN with the tolerance replayed as a mask on the
-    // matched row's own time. ---
-    "q_asof_join" -> { (s, dir) =>
-      val ev = EventsStreaming.readEvents(s, dir)
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val snaps = ev.filter(pmod(col("event_id"), lit(5)) === 0)
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("value")).as("snap_value"))
-        .withColumnRenamed("ts", "snap_ts")
-      graft.operators.AsOfJoin.asof(ev, snaps,
-        on = Seq("user_id"), leftTime = "ts", rightTime = "snap_ts",
-        carry = Seq("snap_value"), matchedTimeAs = Some("snap_ts_matched"),
-        tolerance = Some(expr("INTERVAL 1 HOUR")))
-    },
-
-    // --- CDC changelog apply: merge an upsert/delete log into a
-    // snapshot, latest seq per key wins. The log exercises every path:
-    // update (seq 1), delete-overriding-update (%35 keys), re-insert
-    // after delete (%21 keys), insert of keys the snapshot never had
-    // (%4==3 keys), delete of absent keys (no-op), pure passthrough.
-    // The window sorts the LOG only; the snapshot sees one anti join. ---
-    "q_cdc_apply" -> { (s, dir) =>
-      val orders = t(s, dir, "orders")
-      val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
-        "o_totalprice", "o_orderdate", "o_orderpriority")
-      val snap = orders.filter(pmod(col("o_orderkey"), lit(4)) =!= 3)
-      val upd = orders.filter(pmod(col("o_orderkey"), lit(5)) === 0)
-        .withColumn("o_totalprice", col("o_totalprice") + 100.0)
-        .withColumn("seq", lit(1L)).withColumn("op", lit("U"))
-      val del = orders.filter(pmod(col("o_orderkey"), lit(7)) === 0)
-        .withColumn("seq", lit(2L)).withColumn("op", lit("D"))
-      val reins = orders.filter(pmod(col("o_orderkey"), lit(3)) === 0)
-        .withColumn("o_totalprice", col("o_totalprice") * 0.5)
-        .withColumn("seq", lit(3L)).withColumn("op", lit("U"))
-      val changes = upd.unionByName(del).unionByName(reins)
-        .select((cols :+ "seq" :+ "op").map(col): _*)
-      graft.operators.Cdc.apply(snap.select(cols.map(col): _*), changes,
-          Seq("o_orderkey"), "seq", "op")
-        .withColumn("o_totalprice", round(col("o_totalprice"), 4))
-    },
-
     // --- validation quarantine (dead-letter pattern): the fail-fast
     // schema checks re-expressed as per-row violation reasons over a
     // deterministically corrupted customer frame — nulls into a
@@ -3443,52 +3388,6 @@ object SparkEntry {
         "l_extendedprice", cutoff = 3.5)
     },
 
-    // --- bucketed co-located join: lineitem and orders pre-shuffled
-    // into 16 matching buckets at write time, then joined with ZERO
-    // exchanges on the join (asserted in BucketedSpec) — the nightly-
-    // table pattern that turns a 100 TB join shuffle into a local
-    // bucket zip. The oracle replays the plain join. ---
-    "q_bucketed_join" -> { (s, dir) =>
-      val dec = org.apache.spark.sql.types.DecimalType(18, 4)
-      val scratch = scratchRoot.resolve("q_bucketed").toString
-      graft.operators.Bucketed.write(
-        t(s, dir, "lineitem").select(col("l_orderkey"), col("l_quantity")),
-        "graft_bkt_lineitem", Seq("l_orderkey"), 16, Some(s"$scratch/l"))
-      graft.operators.Bucketed.write(
-        t(s, dir, "orders").select(col("o_orderkey").as("l_orderkey"),
-          col("o_orderpriority")),
-        "graft_bkt_orders", Seq("l_orderkey"), 16, Some(s"$scratch/o"))
-      graft.operators.Bucketed.join(s,
-          "graft_bkt_lineitem", "graft_bkt_orders", Seq("l_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast(dec)).cast("double").as("sum_qty"))
-    },
-
-    // --- winsorization: clamp heavy-tailed numerics to exact
-    // [p01, p99] order-statistic bounds (distribution + cumulative
-    // windows; no global sort, bounds broadcast back). ---
-    "q_winsorize" -> { (s, dir) =>
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity"), col("l_extendedprice"))
-      graft.operators.Winsorize.clamp(
-        li, Seq("l_quantity", "l_extendedprice"), 0.01, 0.99)
-    },
-
-    // --- trailing time-window features: per-user count + decimal-exact
-    // sum over the last hour at every event (RANGE frame; two-pointer
-    // scan per key, one exchange). ---
-    "q_rolling_features" -> { (s, dir) =>
-      val dec = org.apache.spark.sql.types.DecimalType(18, 4)
-      val ev = EventsStreaming.readEvents(s, dir)
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      graft.operators.Rolling.withTrailing(
-          ev, Seq("user_id"), "ts", 3600L * 1000000)(
-        w => count(lit(1)).over(w).as("n_1h"),
-        w => sum(col("value").cast(dec)).over(w).cast("double").as("sum_1h"))
-    },
-
     // --- exact weighted-cosine all-pairs join (Bayardo WWW'07 shape):
     // tf-idf cosine >= 0.6 pairs via a SOUND integer-arithmetic prefix
     // filter (rarest-first; a skippable tail carries < t of the norm).
@@ -3647,32 +3546,6 @@ object SparkEntry {
         subjects, "variant", "converted", "control")
     },
 
-    // --- Benford first-digit audit (Nigrini's fabricated-numbers
-    // screen): leading digit from the fixed-point integer's STRING
-    // form (no log10 edge cases), all nine digits reported with
-    // observed vs log10(1+1/d) expected. Shuffle-free projection +
-    // 9-key aggregation. ---
-    "q_benford" -> { (s, dir) =>
-      graft.operators.Forensics.benford(
-        t(s, dir, "lineitem"), "l_extendedprice")
-    },
-
-    // --- market concentration per nation: supplier revenue HHI (DOJ
-    // points scale) + Gini via the rank formulation — exact decimal
-    // moments, one bounded per-market window for ranks. ---
-    "q_concentration" -> { (s, dir) =>
-      val dec = org.apache.spark.sql.types.DecimalType(18, 4)
-      val rev = t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "supplier")
-          .select(col("s_suppkey"), col("s_nationkey"))),
-          col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("s_nationkey"), col("s_suppkey"))
-        .agg(sum(col("l_extendedprice").cast(dec)).cast("double")
-          .as("revenue"))
-      graft.operators.Forensics.concentration(
-        rev, Seq("s_nationkey"), "revenue", "s_suppkey")
-    },
-
     // --- 2-D heatmap: quantity × price density grid over lineitem
     // with pinned ranges so both widths (2.5, 6000.0) are exact
     // doubles and every cell assignment replays bit-for-bit; empty
@@ -3797,44 +3670,6 @@ object SparkEntry {
         t(s, dir, "lineitem"), "l_suppkey", "l_extendedprice")
     },
 
-    // --- bucketized range join: every event pairs with each active
-    // 45-minute window of its user (windows anchored at every 10th
-    // event). Stays a hash equi-join on (user, time-bucket); the
-    // oracle is the plain inequality join. ---
-    "q_range_join" -> { (s, dir) =>
-      val ev = EventsStreaming.readEvents(s, dir)
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val ivs = ev.filter(pmod(col("event_id"), lit(10)) === 0)
-        .select(col("user_id"), col("ts").as("start_ts"),
-          (col("ts") + expr("INTERVAL 45 MINUTES")).as("end_ts"),
-          col("event_id").as("window_id"))
-      graft.operators.RangeJoin.join(ev, ivs, Seq("user_id"), "ts",
-        "start_ts", "end_ts", granularity = 15L * 60 * 1000000)
-    },
-
-    // --- interval OVERLAP join (interval×interval): each user's
-    // 45-minute activity windows pair with each of their 30-minute
-    // promo windows whose spans intersect. Both sides ride the
-    // time-grid bucketization, so the plan is a hash equi-join on
-    // (user, bucket) with each overlapping pair meeting exactly once
-    // (residual pins the bucket of the later start); the oracle is the
-    // plain inequality join. ---
-    "q_interval_join" -> { (s, dir) =>
-      val ev = EventsStreaming.readEvents(s, dir)
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val act = ev.filter(pmod(col("event_id"), lit(10)) === 0)
-        .select(col("user_id"), col("ts").as("a_start"),
-          (col("ts") + expr("INTERVAL 45 MINUTES")).as("a_end"),
-          col("event_id").as("window_id"))
-      val promo = ev.filter(pmod(col("event_id"), lit(7)) === 0)
-        .select(col("user_id"), col("ts").as("b_start"),
-          (col("ts") + expr("INTERVAL 30 MINUTES")).as("b_end"),
-          col("event_id").as("promo_id"))
-      graft.operators.RangeJoin.overlap(act, promo, Seq("user_id"),
-        "a_start", "a_end", "b_start", "b_end",
-        granularity = 15L * 60 * 1000000)
-    },
-
     // --- skew-salted two-stage aggregation (equal to plain groupBy) ---
     "q_skew_agg" -> { (s, dir) =>
       graft.operators.Skew.saltedSumCount(
@@ -3901,23 +3736,6 @@ object SparkEntry {
         bins = 25, lo = Some(0.0), hi = Some(600000.0))
     },
 
-    // --- snapshot delta: an "old" snapshot is derived deterministically
-    // from orders (keys ≡0 mod 7 missing → added; o_totalprice bumped
-    // for keys ≡0 mod 5 → changed; nothing removed on this corpus, the
-    // removed leg is unit-pinned). The hash fast path ships only
-    // (pk, 8-byte fingerprint) through the full-outer join — the
-    // oracle replays the value-comparison semantics the hash stands
-    // in for, and units pin the two paths equal ---
-    "q_table_diff" -> { (s, dir) =>
-      import org.apache.spark.sql.functions._
-      val cur = t(s, dir, "orders")
-      val old = cur.where(col("o_orderkey") % 7 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 5 === 0, col("o_totalprice") + 1.0)
-            .otherwise(col("o_totalprice")))
-      graft.operators.TableDiff.diff(old, cur, Seq("o_orderkey"))
-    },
-
     // --- top-k frequent values per column: melt → one distinct-triple
     // shuffle → per-column rank over aggregated counts; deterministic
     // tie-break (count desc, value asc) so any engine replays it ---
@@ -3970,64 +3788,6 @@ object SparkEntry {
       EventsStreaming.thresholdCrossings(EventsStreaming.readEvents(s, dir), 500.0)
         .select(col("user_id"), col("crossed_at"),
           round(col("running_total"), 4).as("running_total"))
-    },
-
-    // --- longest-prefix-match enrichment (CIDR/routing-table shape)
-    // over a 16-bit key space: three prefix generations (len 4/8/12)
-    // derived from nation, facts never shuffle (descending-length
-    // broadcast join chain + coalesce). Some top nibbles are
-    // deliberately uncovered so the no-match path is exercised. ---
-    "q_lpm_enrich" -> { (s, dir) =>
-      val facts = EventsStreaming.readEvents(s, dir)
-        .select(col("event_id"),
-          pmod(col("user_id") * lit(2654435761L), lit(65536)).as("ip"))
-      val n = t(s, dir, "nation")
-      val dim =
-        n.filter(col("n_nationkey") < 10)
-          .select(lit(4).as("len"),
-            col("n_nationkey").cast("long").as("prefix"),
-            col("n_name").as("geo"))
-          .union(n.filter(col("n_nationkey") >= 5)
-            .select(lit(8).as("len"),
-              (col("n_nationkey") * 9 + 3).cast("long").as("prefix"),
-              col("n_name").as("geo")))
-          .union(n.filter(pmod(col("n_nationkey"), lit(3)) === 0)
-            .select(lit(12).as("len"),
-              (col("n_nationkey") * 163).cast("long").as("prefix"),
-              col("n_name").as("geo")))
-      graft.operators.PrefixJoin.lpmJoin(
-          facts, dim, "ip", "len", "prefix", Seq("geo"), keyBits = 16)
-        .select(col("event_id"), col("ip"),
-          coalesce(col("matched_len"), lit(0)).cast("long").as("matched_len"),
-          coalesce(col("geo"), lit("none")).as("geo"))
-    },
-
-    // --- golden-record survivorship: three derived customer sources
-    // with distinct priorities and engineered per-field null patterns;
-    // every field survives from the highest-priority source that has
-    // it, in ONE hash aggregation (no per-field joins). The oracle
-    // replays the union + per-field arg_max. ---
-    "q_golden_record" -> { (s, dir) =>
-      val c = t(s, dir, "customer")
-      val srcA = c.filter(pmod(col("c_custkey"), lit(3)) === 0)
-        .select(col("c_custkey"), lit(3L).as("priority"),
-          upper(col("c_name")).as("name"),
-          when(pmod(col("c_custkey"), lit(6)) === 0, lit(null))
-            .otherwise(concat(lit("+1-"), col("c_custkey"))).as("phone"),
-          round(col("c_acctbal") + 10, 2).as("acctbal"))
-      val srcB = c.select(col("c_custkey"), lit(2L).as("priority"),
-        col("c_name").as("name"),
-        concat(lit("+0-"), col("c_custkey")).as("phone"),
-        when(pmod(col("c_custkey"), lit(2)) === 0, lit(null))
-          .otherwise(round(col("c_acctbal"), 2)).as("acctbal"))
-      val srcC = c.filter(pmod(col("c_custkey"), lit(2)) === 0)
-        .select(col("c_custkey"), lit(1L).as("priority"),
-          lit(null).cast("string").as("name"),
-          lit("unknown").as("phone"),
-          lit(0.0).as("acctbal"))
-      graft.operators.Survivorship.goldenRecords(
-        srcA.union(srcB).union(srcC),
-        Seq("c_custkey"), "priority", Seq("name", "phone", "acctbal"))
     },
 
     // --- temperature-based domain rebalance (XLM-R p_d ∝ n_d^alpha,
@@ -4106,25 +3866,6 @@ object SparkEntry {
       graft.llm.Sampling.weightedSample(
         t(s, dir, "documents").select(col("doc_id"), col("n_chars")),
         "doc_id", "n_chars", k = 60, seed = 7L)
-    },
-
-    // --- incremental aggregate maintenance: the snapshot (pre-1997
-    // orders) merges with the delta batch's partials — history is
-    // never rescanned — and the oracle is the FULL recompute, so the
-    // merge identity combine(partials(a), partials(b)) ≡
-    // partials(a ∪ b) is what the gate checks. ---
-    "q_incremental_agg" -> { (s, dir) =>
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate").isNotNull)
-        .select(col("o_custkey"), col("o_orderdate"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-      val cut = to_timestamp(lit("1997-01-01 00:00:00"))
-      val snap = graft.operators.IncrementalAgg.partials(
-        o.filter(col("o_orderdate") < cut), Seq("o_custkey"), Seq("cents"))
-      val delta = graft.operators.IncrementalAgg.partials(
-        o.filter(col("o_orderdate") >= cut), Seq("o_custkey"), Seq("cents"))
-      graft.operators.IncrementalAgg.combine(
-        Seq(snap, delta), Seq("o_custkey"), Seq("cents"))
     },
 
     // --- LINEAR multi-touch attribution: every qualifying click
@@ -7252,14 +6993,6 @@ object SparkEntry {
         |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
         |FROM events GROUP BY 1, 2""".stripMargin,
 
-    "q_scd2" ->
-      """SELECT event_id, user_id, value,
-        |  ts AS valid_from,
-        |  lead(ts) OVER w AS valid_to,
-        |  lead(ts) OVER w IS NULL AS is_current
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin,
-
     "q_json_flatten" ->
       """SELECT event_id, event_type AS "type", user_id AS user_uid,
         |  user_id % 5 AS user_segment, value AS amount,
@@ -7290,53 +7023,6 @@ object SparkEntry {
         |SELECT user_id, purchase_id, click_id, click_ts, purchase_ts,
         |  purchase_value
         |FROM r WHERE rn = 1""".stripMargin,
-
-    "q_asof_join" ->
-      """WITH snaps AS (
-        |  SELECT user_id, ts AS snap_ts, max(value) AS snap_value
-        |  FROM events WHERE event_id % 5 = 0 GROUP BY user_id, ts
-        |)
-        |SELECT e.event_id, e.user_id, e.ts, e.value,
-        |  CASE WHEN s.snap_ts >= e.ts - INTERVAL 1 HOUR
-        |       THEN s.snap_value END AS snap_value,
-        |  CASE WHEN s.snap_ts >= e.ts - INTERVAL 1 HOUR
-        |       THEN s.snap_ts END AS snap_ts_matched
-        |FROM events e ASOF LEFT JOIN snaps s
-        |  ON e.user_id = s.user_id AND e.ts >= s.snap_ts""".stripMargin,
-
-    "q_cdc_apply" ->
-      """WITH snap AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-        |         o_orderdate, o_orderpriority
-        |  FROM orders WHERE o_orderkey % 4 <> 3
-        |), ch AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus,
-        |         o_totalprice + 100.0 AS o_totalprice, o_orderdate,
-        |         o_orderpriority, 1 AS seq, 'U' AS op
-        |  FROM orders WHERE o_orderkey % 5 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-        |         o_orderdate, o_orderpriority, 2, 'D'
-        |  FROM orders WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, o_custkey, o_orderstatus,
-        |         o_totalprice * 0.5, o_orderdate, o_orderpriority, 3, 'U'
-        |  FROM orders WHERE o_orderkey % 3 = 0
-        |), resolved AS (
-        |  SELECT * FROM (
-        |    SELECT ch.*, row_number() OVER (
-        |      PARTITION BY o_orderkey ORDER BY seq DESC) AS rn FROM ch)
-        |  WHERE rn = 1
-        |)
-        |SELECT s.o_orderkey, s.o_custkey, s.o_orderstatus,
-        |  round(s.o_totalprice, 4) AS o_totalprice, s.o_orderdate,
-        |  s.o_orderpriority
-        |FROM snap s ANTI JOIN resolved r ON s.o_orderkey = r.o_orderkey
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, o_orderstatus,
-        |  round(o_totalprice, 4) AS o_totalprice, o_orderdate,
-        |  o_orderpriority
-        |FROM resolved WHERE op <> 'D'""".stripMargin,
 
     // q_heatmap: the same floor((x-lo)/width) cell arithmetic on
     // exact pinned widths, hi folding into the last bin
@@ -8351,48 +8037,6 @@ object SparkEntry {
         |       END AS l_extendedprice_outlier
         |FROM lineitem, m, md""".stripMargin,
 
-    "q_bucketed_join" ->
-      """SELECT o_orderpriority, count(*) AS n,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority""".stripMargin,
-
-    "q_winsorize" ->
-      """WITH qv AS (
-        |  SELECT l_quantity AS v, row_number() OVER (ORDER BY l_quantity) - 1 AS r,
-        |    count(*) OVER () AS n
-        |  FROM lineitem WHERE l_quantity IS NOT NULL
-        |), qb AS (
-        |  SELECT min(CASE WHEN r = CAST(floor((n-1)*0.01) AS BIGINT) THEN v END) AS lo,
-        |         min(CASE WHEN r = CAST(ceil((n-1)*0.99) AS BIGINT) THEN v END) AS hi
-        |  FROM qv
-        |), pv AS (
-        |  SELECT l_extendedprice AS v,
-        |    row_number() OVER (ORDER BY l_extendedprice) - 1 AS r,
-        |    count(*) OVER () AS n
-        |  FROM lineitem WHERE l_extendedprice IS NOT NULL
-        |), pb AS (
-        |  SELECT min(CASE WHEN r = CAST(floor((n-1)*0.01) AS BIGINT) THEN v END) AS lo,
-        |         min(CASE WHEN r = CAST(ceil((n-1)*0.99) AS BIGINT) THEN v END) AS hi
-        |  FROM pv
-        |)
-        |SELECT l_orderkey, l_linenumber,
-        |  CASE WHEN l_quantity < qb.lo THEN qb.lo
-        |       WHEN l_quantity > qb.hi THEN qb.hi
-        |       ELSE l_quantity END AS l_quantity,
-        |  CASE WHEN l_extendedprice < pb.lo THEN pb.lo
-        |       WHEN l_extendedprice > pb.hi THEN pb.hi
-        |       ELSE l_extendedprice END AS l_extendedprice
-        |FROM lineitem, qb, pb""".stripMargin,
-
-    "q_rolling_features" ->
-      """SELECT event_id, user_id, ts, value,
-        |  count(*) OVER w AS n_1h,
-        |  CAST(sum(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sum_1h
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts
-        |  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)""".stripMargin,
-
     "q_events_sliding" ->
       """WITH off AS (SELECT unnest([0, 900, 1800, 2700]) AS o),
         |w AS (
@@ -8749,69 +8393,6 @@ object SparkEntry {
         |      * 1e6 + 0.5) / 1e6 END) >= 1.96, false) AS significant_95
         |FROM counts, ctrl WHERE variant <> 'control'""".stripMargin,
 
-    // q_benford: string-form leading digit, 9-digit scaffold via
-    // range, identical ratio spellings; dev subtracts the ROUNDED
-    // proportions in both engines
-    "q_benford" ->
-      """WITH v AS (
-        |  SELECT abs(CAST(floor(l_extendedprice * 100.0 + 0.5)
-        |    AS BIGINT)) AS v
-        |  FROM lineitem WHERE l_extendedprice IS NOT NULL
-        |), d AS (
-        |  SELECT CAST(substr(CAST(v AS VARCHAR), 1, 1) AS INTEGER)
-        |    AS digit, count(*) AS n
-        |  FROM v WHERE v > 0 GROUP BY 1
-        |), t AS (
-        |  SELECT CAST(sum(n) AS BIGINT) AS tt FROM d
-        |), dig AS (
-        |  SELECT CAST(unnest(range(1, 10)) AS INTEGER) AS digit
-        |)
-        |SELECT dig.digit, coalesce(n, 0) AS n,
-        |  floor(CAST(coalesce(n, 0) AS DOUBLE) / CAST(tt AS DOUBLE)
-        |    * 1e6 + 0.5) / 1e6 AS observed_p,
-        |  floor(log10(1.0 + 1.0 / CAST(dig.digit AS DOUBLE))
-        |    * 1e6 + 0.5) / 1e6 AS expected_p,
-        |  abs(floor(CAST(coalesce(n, 0) AS DOUBLE) / CAST(tt AS DOUBLE)
-        |      * 1e6 + 0.5) / 1e6
-        |    - floor(log10(1.0 + 1.0 / CAST(dig.digit AS DOUBLE))
-        |      * 1e6 + 0.5) / 1e6) AS dev
-        |FROM dig LEFT JOIN d ON d.digit = dig.digit, t""".stripMargin,
-
-    // q_concentration: pre-aggregated supplier revenues, same rank
-    // formulation with (value, member) tie order, exact decimal
-    // moments, identically-ordered double sequences
-    "q_concentration" ->
-      """WITH rev AS (
-        |  SELECT s_nationkey, s_suppkey,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
-        |      AS revenue
-        |  FROM lineitem JOIN supplier ON s_suppkey = l_suppkey
-        |  GROUP BY 1, 2
-        |), b AS (
-        |  SELECT s_nationkey, s_suppkey,
-        |    CAST(floor(revenue * 100.0 + 0.5) AS BIGINT) AS v
-        |  FROM rev WHERE revenue IS NOT NULL AND revenue >= 0
-        |), r AS (
-        |  SELECT s_nationkey, v,
-        |    row_number() OVER (PARTITION BY s_nationkey
-        |      ORDER BY v, s_suppkey) AS rk
-        |  FROM b
-        |)
-        |SELECT s_nationkey, count(*) AS n,
-        |  CAST(sum(CAST(v AS DECIMAL(38,0))) AS DOUBLE) / 100.0 AS total,
-        |  floor(CAST(sum(CAST(CAST(v AS DECIMAL(19,0)) * v
-        |      AS DECIMAL(38,0))) AS DOUBLE)
-        |    / (CAST(sum(CAST(v AS DECIMAL(38,0))) AS DOUBLE)
-        |       * CAST(sum(CAST(v AS DECIMAL(38,0))) AS DOUBLE))
-        |    * 10000.0 * 1e6 + 0.5) / 1e6 AS hhi,
-        |  floor((2.0 * CAST(sum(CAST(CAST(v AS DECIMAL(19,0)) * rk
-        |      AS DECIMAL(38,0))) AS DOUBLE)
-        |    / (CAST(count(*) AS DOUBLE)
-        |       * CAST(sum(CAST(v AS DECIMAL(38,0))) AS DOUBLE))
-        |    - (CAST(count(*) AS DOUBLE) + 1.0) / CAST(count(*) AS DOUBLE))
-        |    * 1e6 + 0.5) / 1e6 AS gini
-        |FROM r GROUP BY s_nationkey""".stripMargin,
-
     // q_ks_drift: single-axis cumulative replay; the rounded gap maxes
     // identically and ties on D break to the smaller value
     "q_ks_drift" ->
@@ -8923,32 +8504,6 @@ object SparkEntry {
         |      / CAST(count(*) AS DOUBLE) / 100.0 * 1e6 + 0.5) / 1e6
         |    AS trimmed_mean
         |FROM t GROUP BY k""".stripMargin,
-
-    "q_range_join" ->
-      """WITH iv AS (
-        |  SELECT user_id, ts AS start_ts,
-        |    ts + INTERVAL 45 MINUTE AS end_ts, event_id AS window_id
-        |  FROM events WHERE event_id % 10 = 0
-        |)
-        |SELECT e.event_id, e.user_id, e.ts,
-        |  iv.start_ts, iv.end_ts, iv.window_id
-        |FROM events e JOIN iv ON e.user_id = iv.user_id
-        |  AND e.ts >= iv.start_ts AND e.ts < iv.end_ts""".stripMargin,
-
-    "q_interval_join" ->
-      """WITH a AS (
-        |  SELECT user_id, ts AS a_start,
-        |    ts + INTERVAL 45 MINUTE AS a_end, event_id AS window_id
-        |  FROM events WHERE event_id % 10 = 0
-        |), b AS (
-        |  SELECT user_id, ts AS b_start,
-        |    ts + INTERVAL 30 MINUTE AS b_end, event_id AS promo_id
-        |  FROM events WHERE event_id % 7 = 0
-        |)
-        |SELECT a.user_id, a.a_start, a.a_end, a.window_id,
-        |  b.b_start, b.b_end, b.promo_id
-        |FROM a JOIN b ON a.user_id = b.user_id
-        |  AND a.a_start < b.b_end AND b.b_start < a.a_end""".stripMargin,
 
     "q_events_props" ->
       """SELECT event_type,
@@ -9435,36 +8990,6 @@ object SparkEntry {
         |  (r.bin + 1) * 24000.0 AS bin_hi, COALESCE(c.n, 0) AS n
         |FROM range(25) r(bin) LEFT JOIN c ON r.bin = c.bin""".stripMargin,
 
-    // q_table_diff: the oracle replays the diff's SEMANTICS — a
-    // full-outer join with IS DISTINCT FROM over every shared non-pk
-    // column — which the engine's (pk, xxhash64) fast path stands in
-    // for (hash ≡ value comparison pinned in TableDiffSpec)
-    "q_table_diff" ->
-      """WITH old AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus,
-        |    CASE WHEN o_orderkey % 5 = 0 THEN o_totalprice + 1.0
-        |         ELSE o_totalprice END AS o_totalprice,
-        |    o_orderdate, o_orderpriority
-        |  FROM orders WHERE o_orderkey % 7 <> 0)
-        |SELECT COALESCE(o.o_orderkey, c.o_orderkey) AS o_orderkey,
-        |  CASE WHEN o.o_orderkey IS NULL THEN 'added'
-        |       WHEN c.o_orderkey IS NULL THEN 'removed'
-        |       WHEN (o.o_custkey IS DISTINCT FROM c.o_custkey)
-        |         OR (o.o_orderstatus IS DISTINCT FROM c.o_orderstatus)
-        |         OR (o.o_totalprice IS DISTINCT FROM c.o_totalprice)
-        |         OR (o.o_orderdate IS DISTINCT FROM c.o_orderdate)
-        |         OR (o.o_orderpriority IS DISTINCT FROM c.o_orderpriority)
-        |       THEN 'changed' END AS change_type
-        |FROM old o FULL OUTER JOIN orders c ON o.o_orderkey = c.o_orderkey
-        |WHERE CASE WHEN o.o_orderkey IS NULL THEN 'added'
-        |       WHEN c.o_orderkey IS NULL THEN 'removed'
-        |       WHEN (o.o_custkey IS DISTINCT FROM c.o_custkey)
-        |         OR (o.o_orderstatus IS DISTINCT FROM c.o_orderstatus)
-        |         OR (o.o_totalprice IS DISTINCT FROM c.o_totalprice)
-        |         OR (o.o_orderdate IS DISTINCT FROM c.o_orderdate)
-        |         OR (o.o_orderpriority IS DISTINCT FROM c.o_orderpriority)
-        |       THEN 'changed' END IS NOT NULL""".stripMargin,
-
     // q_top_values: melt → count → rank, same deterministic tie-break
     // (count desc, value-as-string asc, nulls first)
     "q_top_values" ->
@@ -9538,57 +9063,6 @@ object SparkEntry {
         |SELECT user_id, min(ts) AS session_start, count(*) AS n_events,
         |  min(ts) AS first_ts, max(ts) AS last_ts
         |FROM g GROUP BY user_id, sid""".stripMargin,
-
-    "q_lpm_enrich" ->
-      """WITH facts AS (
-        |  SELECT event_id, (user_id * 2654435761) % 65536 AS ip FROM events
-        |), dim AS (
-        |  SELECT 4 AS len, CAST(n_nationkey AS BIGINT) AS prefix,
-        |         n_name AS geo
-        |  FROM nation WHERE n_nationkey < 10
-        |  UNION ALL
-        |  SELECT 8, CAST(n_nationkey * 9 + 3 AS BIGINT), n_name
-        |  FROM nation WHERE n_nationkey >= 5
-        |  UNION ALL
-        |  SELECT 12, CAST(n_nationkey * 163 AS BIGINT), n_name
-        |  FROM nation WHERE n_nationkey % 3 = 0
-        |), m AS (
-        |  SELECT f.event_id, f.ip, d.len, d.geo
-        |  FROM facts f
-        |  LEFT JOIN dim d ON (f.ip >> (16 - d.len)) = d.prefix
-        |)
-        |SELECT event_id, ip,
-        |  coalesce(max(len), 0) AS matched_len,
-        |  coalesce(arg_max(geo, len), 'none') AS geo
-        |FROM m GROUP BY event_id, ip""".stripMargin,
-
-    "q_golden_record" ->
-      """WITH u AS (
-        |  SELECT c_custkey, CAST(3 AS BIGINT) AS priority,
-        |    upper(c_name) AS name,
-        |    CASE WHEN c_custkey % 6 = 0 THEN NULL
-        |         ELSE '+1-' || c_custkey END AS phone,
-        |    round(c_acctbal + 10, 2) AS acctbal
-        |  FROM customer WHERE c_custkey % 3 = 0
-        |  UNION ALL
-        |  SELECT c_custkey, 2, c_name, '+0-' || c_custkey,
-        |    CASE WHEN c_custkey % 2 = 0 THEN NULL
-        |         ELSE round(c_acctbal, 2) END
-        |  FROM customer
-        |  UNION ALL
-        |  SELECT c_custkey, 1, NULL, 'unknown', 0.0
-        |  FROM customer WHERE c_custkey % 2 = 0
-        |)
-        |SELECT c_custkey,
-        |  arg_max(name, CASE WHEN name IS NOT NULL THEN priority END)
-        |    AS name,
-        |  arg_max(phone, CASE WHEN phone IS NOT NULL THEN priority END)
-        |    AS phone,
-        |  arg_max(acctbal, CASE WHEN acctbal IS NOT NULL THEN priority END)
-        |    AS acctbal,
-        |  max(priority) AS best_priority,
-        |  count(*) AS n_sources
-        |FROM u GROUP BY c_custkey""".stripMargin,
 
     "q_temperature_sample" ->
       """WITH c AS (
@@ -9748,15 +9222,6 @@ object SparkEntry {
         |  FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0
         |  ORDER BY key DESC, doc_id LIMIT 60
         |)""".stripMargin,
-
-    "q_incremental_agg" ->
-      """SELECT o_custkey, count(*) AS n,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |    AS sum_cents,
-        |  min(CAST(round(o_totalprice * 100) AS BIGINT)) AS min_cents,
-        |  max(CAST(round(o_totalprice * 100) AS BIGINT)) AS max_cents
-        |FROM orders WHERE o_orderdate IS NOT NULL
-        |GROUP BY o_custkey""".stripMargin,
 
     "q_attribution_linear" ->
       """WITH t AS (

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.NumericType
   * A zero MAD (over half the values identical) yields z = 0 and no
   * outliers by convention, loudly documented rather than Inf.
   *
-  * Scale shape: the same distribution trick as [[Winsorize]] — a
+  * Scale shape: an order statistic found without sorting the table — a
   * map-side-combined (value, count) aggregation,
   * [[Distributions.cumulative]]'s parallel prefix sums to locate the
   * order statistic, and a one-row broadcast back. Two narrow passes

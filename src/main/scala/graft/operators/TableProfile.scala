@@ -288,7 +288,7 @@ object TableProfile {
     * (and may leave later bins empty): depth equality bends to value
     * atomicity, loudly by design.
     *
-    * Scale shape: the [[Winsorize]] distribution trick — one map-side
+    * Scale shape: order statistics without a sort — one map-side
     * combined (value, count) aggregation, [[Distributions.cumulative]]
     * parallel prefix sums over the distinct values, and a |bins|-row
     * result. The table itself never sorts. */
