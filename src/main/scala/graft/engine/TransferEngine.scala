@@ -4,7 +4,7 @@ import graft.sources.Connectors
 import graft.transform.Transform
 import graft.validate.{SchemaFile, Validation}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions.{col, concat_ws}
 import org.apache.spark.storage.StorageLevel
 
@@ -147,14 +147,18 @@ class TransferEngine(cfg: JobConfig) {
   /** Execute the copy (write path). Row stats come from
     * [[Connectors.countedWrite]], riding each write job itself (U4) —
     * one pass, no re-read of the written target, no second scan of the
-    * source. With a quarantine target the two routes fork from ONE
-    * scan: the annotated frame ([[Validation.annotate]]: typed source
-    * plus `_violations`) is persisted at MEMORY_AND_DISK, the
+    * source. A CSV source is typed from one bounded driver-side read of
+    * its first rows, read sequentially as the reference reads its
+    * sample ([[graft.infer.CellInference.rawCsv]]), so no Spark job
+    * precedes the writes. With a quarantine target the two routes fork
+    * from ONE scan through a row cache that keeps its lineage: the
+    * annotated frame's rows ([[Validation.annotate]]: typed source plus
+    * `_violations`) are persisted as an RDD at MEMORY_AND_DISK, the
     * quarantine write runs first and fills the cache, the valid write
     * reads the cached rows instead of parsing, typing and checking the
-    * source again, and a `finally` drops the cache whether the writes
-    * succeed or fail. Preview, dry-run and the non-quarantine path stay
-    * lazy. */
+    * source again (a lost block is recomputed from the source), and a
+    * `finally` drops the cache whether the writes succeed or fail.
+    * Preview, dry-run and the non-quarantine path stay lazy. */
   def execute(spark: SparkSession): TransferStats = {
     val t0 = System.nanoTime()
     val src = source(spark)
@@ -162,9 +166,11 @@ class TransferEngine(cfg: JobConfig) {
       case Some(target) =>
         val sf = SchemaFile.fromFile(cfg.schemaFile.get)
         val annotated = Validation.annotate(src, sf)
+        val rows = annotated.queryExecution.toRdd.map(_.copy())
           .persist(StorageLevel.MEMORY_AND_DISK)
         try {
-          val (valid, invalid) = Validation.quarantine(annotated, sf)
+          val (valid, invalid) = Validation.quarantine(
+            GraftBridge.dataFrame(spark, rows, annotated.schema), sf)
           // dead-letter write: the INVALID route — raw source typing
           // plus `_violations` flattened to a '|'-joined string
           // (portable across every sink, CSV included), written BEFORE
@@ -175,7 +181,7 @@ class TransferEngine(cfg: JobConfig) {
           val rejected = Connectors.countedWrite(flat, s"quarantine $target")(
             Connectors.write(_, target, cfg.truncate))
           (writeTarget(spark, valid), rejected)
-        } finally annotated.unpersist()
+        } finally rows.unpersist()
       case None => (writeTarget(spark, validated(src)), 0L)
     }
     TransferStats(rows, (System.nanoTime() - t0) / 1e9, rejected)

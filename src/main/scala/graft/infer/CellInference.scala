@@ -4,10 +4,13 @@ import graft.core.TinyType
 import graft.core.TinyType._
 
 import com.univocity.parsers.csv.CsvParser
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.csv.CSVOptions
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVHeaderChecker, CSVOptions, UnivocityParser}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{DataSource, FilePartition,
+  HadoopFileLinesReader, HadoopFsRelation, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -24,10 +27,16 @@ import org.apache.spark.sql.types._
   *  - CSV header order is preserved (csv.rs:34-80) — free with Spark.
   *
   * Scale design: the 1000-row sample is the only driver-side
-  * materialization (bounded, like the reference). The actual conversion
-  * is a per-column codegen'd cast chain over the full distributed scan —
-  * column pruning and predicate pushdown still reach the file scan
-  * because the casts are plain projections.
+  * materialization (bounded, like the reference). For CSV it is one
+  * bounded driver-side read, sequential as the reference's is: the
+  * first rows of the input's splits in the scan's own order, through
+  * the scan's own line reader and parser, so typing runs no Spark job
+  * ([[rawCsv]]). The actual conversion is a per-column codegen'd cast
+  * chain over the full distributed scan — column pruning and predicate
+  * pushdown still reach the file scan because the casts are plain
+  * projections. A quarantine transfer forks its two routes from a
+  * lineage-keeping row cache of the typed, checked rows
+  * (`TransferEngine.execute`), not from a second scan.
   */
 object CellInference {
 
@@ -51,16 +60,20 @@ object CellInference {
   private def isI64(s: String): Boolean =
     try { s.toLong; true } catch { case _: NumberFormatException => false }
 
-  /** Infer tiny columns from an all-string DataFrame by sampling
-    * `SampleRows` rows (driver-side, bounded — mirrors transfer.rs:47).
+  /** Infer tiny columns from an all-string DataFrame by collecting its
+    * first `sampleRows` rows. [[rawCsv]] reads the same rows on the
+    * driver without a Spark job; this form serves callers that hold
+    * only a frame. */
+  def inferColumns(raw: DataFrame, sampleRows: Int = SampleRows): Seq[TinyColumn] =
+    unify(raw.columns.toSeq, raw.limit(sampleRows).collect().toSeq.map(row =>
+      (0 until row.length).map(i => if (row.isNullAt(i)) null else row.getString(i))))
+
+  /** Per-column unification of sampled text cells (transfer.rs:47):
+    * each cell is classified, then the column's observations resolve.
     * Date + DateTime observations unify to DateTime (one runtime repr). */
-  def inferColumns(raw: DataFrame, sampleRows: Int = SampleRows): Seq[TinyColumn] = {
-    val names = raw.columns.toSeq
-    val sample = raw.limit(sampleRows).collect()
+  private def unify(names: Seq[String], sample: Seq[Seq[String]]): Seq[TinyColumn] =
     names.zipWithIndex.map { case (name, i) =>
-      val observed = sample.toSeq.map { row =>
-        classify(if (row.isNullAt(i)) null else row.getString(i))
-      }
+      val observed = sample.map(row => classify(row(i)))
       // Date/DateTime share one runtime repr; a mix is DateTime, not String.
       val normalized =
         if (observed.exists(_ == TDateTime) && observed.contains(TDate))
@@ -69,7 +82,6 @@ object CellInference {
       val (tpe, nullable) = TinyType.resolve(normalized)
       TinyColumn(name, tpe, nullable)
     }
-  }
 
   /** The distributed conversion for one inferred column: empty→null, then
     * a lenient typed cast (failures → null, like per-cell fallback). */
@@ -112,49 +124,122 @@ object CellInference {
     "nullValue" -> "\u0000never\u0000",
     "escape" -> "\"")
 
-  /** The CSV input as text cells, named as Spark's own `header` read
-    * names them in the [[RawCsvOptions]] dialect: what typing samples
-    * and casts, for the batch and the streaming read alike. The header
-    * is read on the driver instead of in the Spark job (`take(1)` over
-    * a text scan) that Spark spends on it, from the file that `take(1)`
-    * reaches first: the planned text scan orders its splits by length,
-    * largest first, and empty files have none. `CSVUtils.readHeaderLine`
-    * skips empty and comment lines and decodes compression codecs; the
+  /** A CSV input as text cells: the frame every cell of it stays text
+    * in, and the first rows its scan reads, read on the driver.
+    * `columns` types the frame from them. */
+  final case class RawCsv(frame: DataFrame, sample: Seq[Seq[String]]) {
+    def columns: Seq[TinyColumn] = unify(frame.columns.toSeq, sample)
+  }
+
+  /** The CSV input in the [[RawCsvOptions]] dialect, named as Spark's
+    * own `header` read names it, with its first `sampleRows` rows: what
+    * typing samples and casts, for the batch and the streaming read
+    * alike. The input is listed once, as Spark's read lists it (globs,
+    * hidden files, partition directories), and the frame reads that
+    * listing. Nothing runs a Spark job. The header comes from the first
+    * file the scan reads that holds a line: `CSVUtils.readHeaderLine`
+    * skips empty and comment lines and decodes compression codecs, the
     * dialect's univocity parser splits the line, and
-    * `CSVUtils.makeSafeHeader` names empty and duplicate columns. An
-    * input whose files hold no header line has no columns; an input
-    * with no files fails as Spark's read does. */
-  def rawCsv(spark: SparkSession, path: String): DataFrame = {
+    * `CSVUtils.makeSafeHeader` names empty and duplicate columns. The
+    * sample is one bounded sequential read, as the reference's is: the
+    * splits in scan order, each through the executor's own line reader
+    * and CSV parser, until `sampleRows` rows. These are the rows a
+    * `limit(sampleRows).collect()` of the frame returns. An input whose
+    * files hold no header line has no columns; an input with no files
+    * fails as Spark's read does. */
+  def rawCsv(spark: SparkSession, path: String,
+             sampleRows: Int = SampleRows): RawCsv = {
     val conf = spark.sessionState.conf
     val options = new CSVOptions(RawCsvOptions, conf.csvColumnPruning,
       conf.sessionLocalTimeZone)
-    val scan = spark.read.text(path).queryExecution.sparkPlan.collectFirst {
-      case s: FileSourceScanExec => s
-    }.get
-    if (scan.relation.location.inputFiles.isEmpty)
+    val listing = DataSource(spark, "csv", Seq(path), Some(new StructType),
+      options = RawCsvOptions).resolveRelation().asInstanceOf[HadoopFsRelation]
+    if (listing.location.inputFiles.isEmpty)
       throw new AnalysisException("UNABLE_TO_INFER_SCHEMA", Map("format" -> "CSV"))
     val hadoopConf = spark.sessionState.newHadoopConf()
-    val firstLine = scan.inputRDD.partitions.iterator
-      .flatMap { case p: FilePartition => p.files.iterator.map(_.toPath) }
-      .distinct
+    val splits = scanOrder(spark, listing)
+    val firstLine = splits.iterator.map(_.toPath).distinct
       .flatMap(CSVUtils.readHeaderLine(_, options, hadoopConf))
       .nextOption()
     val names = firstLine.flatMap(l =>
       Option(new CsvParser(options.asParserSettings).parseLine(l)))
-    val schema = StructType(names.toSeq.flatMap(n =>
+    // a partition column shadows a header column of its name, as in
+    // Spark's read with a given schema
+    val partitions = listing.partitionSchema
+    val dataSchema = StructType(names.toSeq.flatMap(n =>
       CSVUtils.makeSafeHeader(n, conf.caseSensitiveAnalysis, options))
+      .filterNot(n => partitions.exists(p => conf.resolver(p.name, n)))
       .map(StructField(_, StringType)))
-    spark.read.schema(schema).options(RawCsvOptions).csv(path)
+    val frame = spark.baseRelationToDataFrame(
+      listing.copy(dataSchema = dataSchema)(spark))
+    RawCsv(frame, firstRows(splits, dataSchema, partitions, sampleRows,
+      options, hadoopConf))
+  }
+
+  /** The input's splits in the order its planned scan reads them
+    * (`FileSourceScanExec`): each file cut at `maxSplitBytes` where the
+    * format can split it (not `.gz`), largest split first, then packed
+    * into partitions. */
+  private[infer] def scanOrder(spark: SparkSession,
+                               listing: HadoopFsRelation): Seq[PartitionedFile] = {
+    val dirs = listing.location.listFiles(Nil, Nil)
+    val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
+    val splits = dirs.flatMap { dir =>
+      dir.files.flatMap { f =>
+        val p = f.getPath
+        PartitionedFileUtil.splitFiles(f, p,
+          listing.fileFormat.isSplitable(spark, listing.options, p),
+          maxSplit, dir.values)
+      }
+    }.sortBy(_.length)(Ordering[Long].reverse)
+    FilePartition.getFilePartitions(spark, splits, maxSplit).flatMap(_.files)
+  }
+
+  /** The first `n` rows of `splits` as text cells, the data columns then
+    * the split's partition values: each split read in turn through
+    * `HadoopFileLinesReader` and `UnivocityParser.parseIterator` with a
+    * `CSVHeaderChecker`, as a scan task reads it, and closed. */
+  private def firstRows(splits: Seq[PartitionedFile], schema: StructType,
+                        partitions: StructType, n: Int, options: CSVOptions,
+                        hadoopConf: Configuration): Seq[Seq[String]] = {
+    val rows = Vector.newBuilder[Seq[String]]
+    var left = n
+    val files = splits.iterator
+    while (left > 0 && files.hasNext) {
+      val file = files.next()
+      val partitionCells = partitions.fields.indices.map { i =>
+        val t = partitions(i).dataType
+        val v = Cast(Literal(file.partitionValues.get(i, t), t), StringType,
+          Some(options.zoneId.getId)).eval()
+        if (v == null) null else v.toString
+      }
+      val reader = new HadoopFileLinesReader(file, options.lineSeparatorInRead,
+        hadoopConf)
+      try {
+        val lines = reader.map(l =>
+          new String(l.getBytes, 0, l.getLength, options.charset))
+        val checker = new CSVHeaderChecker(schema, options,
+          s"CSV file: ${file.urlEncodedPath}", file.start == 0)
+        GraftBridge.parseCsv(lines, new UnivocityParser(schema, options),
+          checker, schema).take(left).foreach { row =>
+          rows += schema.indices.map(i =>
+            if (row.isNullAt(i)) null else row.getUTF8String(i).toString) ++
+            partitionCells
+          left -= 1
+        }
+      } finally reader.close()
+    }
+    rows.result()
   }
 
   /** tinyetl-semantics CSV read: header row, every column read raw as
-    * string, types inferred from a 1000-row sample, then cast
+    * string, types inferred from the first 1000 rows, then cast
     * distributed. Differs from Spark's `inferSchema` on purpose
     * (multi-format dates, strict "true"/"false" booleans). */
   def readCsv(spark: SparkSession, path: String,
               sampleRows: Int = SampleRows): DataFrame = {
-    val raw = rawCsv(spark, path)
-    applyTypes(raw, inferColumns(raw, sampleRows))
+    val raw = rawCsv(spark, path, sampleRows)
+    applyTypes(raw.frame, raw.columns)
   }
 
   /** tinyetl-semantics JSON read (S2): JSON-array files (the reference's

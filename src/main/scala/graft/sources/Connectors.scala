@@ -178,11 +178,11 @@ object Connectors {
     * stream). Schema comes from ONE batch pass over the same path —
     * the standard file-stream pattern (the source must declare its
     * schema up front). For CSV that pass is the batch read's own
-    * [[CellInference.rawCsv]]: the header is read on the driver
-    * without a job, the 1000-row sampled cell-typing inference runs on
-    * it, and the CAST CHAIN applies per micro-batch, so streamed CSV
-    * gets the exact S1 typing semantics (multi-format dates, strict
-    * booleans), not Spark's native inference. */
+    * [[CellInference.rawCsv]]: the header and the 1000-row sample are
+    * read on the driver without a job, the cell-typing inference runs
+    * on the sample, and the CAST CHAIN applies per micro-batch, so
+    * streamed CSV gets the exact S1 typing semantics (multi-format
+    * dates, strict booleans), not Spark's native inference. */
   def readStream(spark: SparkSession, uri: String,
                  options: Map[String, String] = Map.empty): DataFrame = {
     val ref = parse(uri, options)
@@ -194,12 +194,11 @@ object Connectors {
         spark.readStream.schema(spark.read.orc(ref.path).schema)
           .orc(ref.path)
       case "csv" =>
-        val rawBatch = CellInference.rawCsv(spark, ref.path)
-        val cols = CellInference.inferColumns(rawBatch)
-        val rawStream = spark.readStream.schema(rawBatch.schema)
+        val raw = CellInference.rawCsv(spark, ref.path)
+        val rawStream = spark.readStream.schema(raw.frame.schema)
           .options(CellInference.RawCsvOptions)
           .csv(ref.path)
-        CellInference.applyTypes(rawStream, cols)
+        CellInference.applyTypes(rawStream, raw.columns)
       case other => throw graft.core.GraftError.Configuration(
         s"streaming source must be a parquet/orc/csv directory, " +
           s"got '$other' (uri '$uri')")

@@ -120,7 +120,7 @@ object Validation {
     * (valid rows, typed via the same projection as [[apply]] — which
     * cannot fail, every violating row was routed away; invalid RAW
     * rows + `_violations`). Two filters over one plan: a caller that
-    * consumes both sides persists the annotated frame first, as
+    * consumes both sides caches the annotated rows first, as
     * [[graft.engine.TransferEngine.execute]] does, so the source is
     * scanned and checked once. */
   def quarantine(annotated: DataFrame, schema: SchemaFile)

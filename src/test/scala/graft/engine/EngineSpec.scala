@@ -5,7 +5,8 @@ import graft.infer.CellInference
 import graft.sources.{AvroConnector, Connectors}
 import graft.transform.Transform
 import graft.validate.{SchemaFile, Validation}
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
+  RDDScanExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
@@ -559,28 +560,58 @@ class EngineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         c.outputPath.toString.endsWith(path)
     }.contains(true)).getOrElse(fail(s"no write into $path"))
 
-  test("quarantine transfer scans the CSV once: 3 Spark jobs, the valid " +
-      "write reads the cache, and execute drops it") {
+  /** No RDD or frame left cached in the shared session. */
+  private def assertNothingCached(): Unit = {
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("quarantine transfer scans the CSV once: 2 Spark jobs, both writes " +
+      "read one row cache, and execute drops it") {
     val dir = tmpDir("engine_one_scan")
     val cfg = quarantineJob(dir)
     // the session is shared by every suite; start from an empty cache
     spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist())
     val (_, oracleJobs, _) = observeRun(
       twoScanTransfer(cfg, s"$dir/two_scan/out.parquet",
         s"$dir/two_scan/rejects.parquet"))
     assert(oracleJobs == 4, "header, sample and two full scans")
-    val (stats, jobs, qes) = observeRun(new TransferEngine(cfg).execute(spark))
+    // the storage level of every RDD each job reads, as the job starts
+    val levels = new java.util.concurrent.ConcurrentLinkedQueue[
+      (Int, Int, org.apache.spark.storage.StorageLevel)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        e.stageInfos.flatMap(_.rddInfos)
+          .foreach(r => levels.add((e.jobId, r.id, r.storageLevel)))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (stats, jobs, qes) =
+      try observeRun(new TransferEngine(cfg).execute(spark))
+      finally spark.sparkContext.removeSparkListener(listener)
     assert(stats.totalRows == 2 && stats.rejectedRows == 5)
-    assert(jobs == 3, "the sample and the two writes")
-    val valid = writeInto(qes, "/out.parquet")
-    assert(collect(valid) { case s: FileSourceScanExec => s }.isEmpty,
-      valid.treeString)
-    assert(collect(valid) { case s: InMemoryTableScanExec => s }.nonEmpty,
-      valid.treeString)
-    // the quarantine write ran first, over the same cached rows
-    assert(collect(writeInto(qes, "/rejects.parquet")) {
-      case s: InMemoryTableScanExec => s }.nonEmpty)
-    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(jobs == 2, "the two writes")
+    // neither write scans the file or a columnar cache: both read the
+    // one persisted RDD, which the quarantine write ran first to fill
+    val scans = Seq("/rejects.parquet", "/out.parquet").map { path =>
+      val plan = writeInto(qes, path)
+      assert(collect(plan) { case s: FileSourceScanExec => s }.isEmpty,
+        plan.treeString)
+      assert(collect(plan) { case s: InMemoryTableScanExec => s }.isEmpty,
+        plan.treeString)
+      val rdds = collect(plan) { case s: RDDScanExec => s.rdd }
+      assert(rdds.size == 1, plan.treeString)
+      rdds.head
+    }
+    assert(scans.distinct.size == 1)
+    // ... persisted while both jobs ran
+    import scala.jdk.CollectionConverters._
+    val cached = levels.asScala.toSeq.filter(_._2 == scans.head.id)
+    assert(cached.map(_._1).distinct.size == 2)
+    assert(cached.forall(
+      _._3 == org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    assertNothingCached()
   }
 
   test("quarantine: a failing main write keeps the rejects on disk and " +
@@ -589,11 +620,12 @@ class EngineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // 1e25 is a valid decimal, but DECIMAL(38,18) cannot hold it
     val cfg = quarantineJob(dir, amount1 = "1e25").copy(decimalMode = "exact")
     spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist())
     val e = intercept[graft.core.GraftError.DataTransfer](
       new TransferEngine(cfg).execute(spark))
     assert(e.getMessage.contains("not representable as DECIMAL(38,18)"))
+    assertNothingCached()
     assert(spark.read.parquet(s"$dir/rejects.parquet").count() == 5)
-    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("quarantine: the one-scan engine writes the two-scan form's rows " +

@@ -2,6 +2,7 @@ package graft.infer
 
 import graft.SparkSpec
 import graft.core.TinyType._
+import graft.infer.CellInference.RawCsv
 import java.time.Instant
 
 /** Date-parser corpus from the reference's tests (FIXTURES.md A9,
@@ -206,23 +207,29 @@ class InferSpec extends SparkSpec {
     assert(vals.toSeq == Seq("2023-12-25T00:00:00Z", "2023-12-26T00:00:00Z"))
   }
 
+  /** Writes `bytes` to `dir/name`, making its directories. */
+  private def put(dir: String, name: String, bytes: Array[Byte]): String = {
+    val p = java.nio.file.Paths.get(dir, name)
+    java.nio.file.Files.createDirectories(p.getParent)
+    java.nio.file.Files.write(p, bytes)
+    p.toString
+  }
+
+  private def utf8(s: String): Array[Byte] =
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  private def gzip(s: String): Array[Byte] = {
+    val buf = new java.io.ByteArrayOutputStream
+    val out = new java.util.zip.GZIPOutputStream(buf)
+    out.write(utf8(s))
+    out.close()
+    buf.toByteArray
+  }
+
   /** Header fixtures, each a path Spark's CSV reader takes. */
   private def headerFixtures(dir: String): Seq[String] = {
-    def put(name: String, bytes: Array[Byte]): String = {
-      val p = java.nio.file.Paths.get(dir, name)
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, bytes)
-      p.toString
-    }
-    def text(name: String, s: String): String =
-      put(name, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val gz = {
-      val buf = new java.io.ByteArrayOutputStream
-      val out = new java.util.zip.GZIPOutputStream(buf)
-      out.write("g1,\"g,2\"\n1,2\n".getBytes("UTF-8"))
-      out.close()
-      put("gz/in.csv.gz", buf.toByteArray)
-    }
+    def text(name: String, s: String): String = put(dir, name, utf8(s))
+    val gz = put(dir, "gz/in.csv.gz", gzip("g1,\"g,2\"\n1,2\n"))
     // the alphabetically first file is the smallest: Spark's first
     // split is the largest file's, so its header names the columns
     text("multi/a.csv", "small1,small2\n1,2\n")
@@ -244,7 +251,7 @@ class InferSpec extends SparkSpec {
       "without a Spark job") {
     import org.apache.spark.sql.types.StringType
     for (p <- headerFixtures(tmpDir("csv_header"))) {
-      val (raw, jobs, _) = observeRun(CellInference.rawCsv(spark, p))
+      val (RawCsv(raw, _), jobs, _) = observeRun(CellInference.rawCsv(spark, p))
       assert(jobs == 0, s"$p: $jobs Spark jobs")
       val spark0 = spark.read.options(CellInference.RawCsvOptions).csv(p)
       assert(raw.columns.toSeq == spark0.columns.toSeq, p)
@@ -276,10 +283,97 @@ class InferSpec extends SparkSpec {
     val before = CellInference.applyTypes(
       spark.readStream.schema(raw.schema)
         .options(CellInference.RawCsvOptions).csv(dir), cols)
+    assert(sampleJobs > 0)
     val (stream, jobs, _) = observeRun(graft.sources.Connectors.readStream(
       spark, dir, Map("sourceType" -> "csv")))
     assert(stream.isStreaming)
     assert(stream.schema == before.schema)
-    assert(jobs == sampleJobs, "the inference sample's jobs only")
+    assert(jobs == 0, "the header and the sample are read on the driver")
+  }
+
+  /** Sample fixtures: each a path and the Spark confs its scan is
+    * planned under. */
+  private def sampleFixtures(dir: String): Seq[(String, Map[String, String])] = {
+    def text(name: String, s: String): String = put(dir, name, utf8(s))
+    val header = "id,amount,flag,when,note\n"
+    def rows(from: Int, n: Int): String = (from until from + n).map(i =>
+      s"$i,${i * 0.5},${i % 2 == 0},2023-12-${10 + i % 18},n$i\n").mkString
+    // many small files over several partitions, none holding the
+    // sample: `limit` scans them in rounds; equal lengths keep their
+    // listing order
+    (0 until 40).foreach(k =>
+      text(f"small/part-$k%02d.csv", header + rows(k * 100, 40 + k % 7)))
+    text("small/empty.csv", "")
+    text("small/header_only.csv", header)
+    // one file cut into splits that end mid-record
+    val split = text("split.csv", header + rows(0, 3000))
+    val gz = put(dir, "gz/in.csv.gz", gzip(header + rows(0, 1500)))
+    text("glob/a.csv", header + rows(0, 600))
+    text("glob/b.csv", header + rows(600, 700))
+    text("glob/c.txt", "other\n1\n")
+    // partition directories: their values join each sampled row
+    text("parts/region=us/a.csv", header + rows(0, 30))
+    text("parts/region=eu/b.csv", header + rows(30, 40))
+    val few = Seq.tabulate(12)(i =>
+      s"""$i,"1,5",${i % 2 == 0},"say ""hi"" $i",x\n""").mkString
+    Seq(
+      s"$dir/small" -> Map.empty[String, String],
+      split -> Map("spark.sql.files.maxPartitionBytes" -> "4096"),
+      gz -> Map.empty,
+      s"$dir/glob/*.csv" -> Map.empty,
+      s"$dir/parts" -> Map.empty,
+      // a quoted comma, a doubled quote, a short row and a long row
+      text("quoted.csv", header + few + "99,1.0\n100,2,true,x,y,z\n") -> Map.empty,
+      text("bom.csv", "\uFEFF" + header + rows(0, 5)) -> Map.empty)
+  }
+
+  test("rawCsv's driver-side sample is the scan's first rows, in its " +
+      "split order and typed alike, without a Spark job") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.{FilePartition,
+      HadoopFsRelation, LogicalRelation}
+    val dir = tmpDir("csv_sample")
+    val fixtures = sampleFixtures(dir) ++
+      headerFixtures(tmpDir("csv_sample_header")).map(_ -> Map.empty[String, String])
+    for ((p, confs) <- fixtures; n <- Seq(CellInference.SampleRows, 7)) {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val (raw, jobs, _) = observeRun(CellInference.rawCsv(spark, p, n))
+        assert(jobs == 0, s"$p: $jobs Spark jobs")
+        // the frame the header-only rawCsv gave, and its sample job
+        val before = spark.read.schema(raw.frame.schema)
+          .options(CellInference.RawCsvOptions).csv(p)
+        val want = before.limit(n).collect().toSeq.map(_.toSeq.map(
+          v => if (v == null) null else v.toString))
+        assert(raw.sample == want, p)
+        assert(raw.columns == CellInference.inferColumns(before, n), p)
+        def pieces(plan: org.apache.spark.sql.execution.SparkPlan) =
+          plan.collectFirst { case s: FileSourceScanExec => s }.get
+            .inputRDD.partitions.toSeq
+            .flatMap { case fp: FilePartition => fp.files.toSeq }
+            .map(f => (f.urlEncodedPath, f.start, f.length))
+        val relation = raw.frame.queryExecution.analyzed.collectFirst {
+          case l: LogicalRelation => l.relation.asInstanceOf[HadoopFsRelation]
+        }.get
+        val order = CellInference.scanOrder(spark, relation)
+          .map(f => (f.urlEncodedPath, f.start, f.length))
+        assert(order == pieces(spark.read.text(p).queryExecution.sparkPlan), p)
+        assert(order == pieces(before.queryExecution.sparkPlan), p)
+        assert(order == pieces(raw.frame.queryExecution.sparkPlan), p)
+      } finally confs.keys.foreach(spark.conf.unset)
+    }
+    // the layouts exercise what they name
+    val (small, split) = (s"$dir/small", s"$dir/split.csv")
+    assert(spark.read.text(small).rdd.getNumPartitions > 1)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    try assert(spark.read.text(split).rdd.getNumPartitions > 10)
+    finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    val (_, sampleJobs, _) = observeRun(CellInference.inferColumns(
+      spark.read.options(CellInference.RawCsvOptions).csv(small)))
+    assert(sampleJobs > 1, "limit scans the small files in rounds")
+    val (typed, readJobs, _) = observeRun(CellInference.readCsv(spark, small))
+    assert(readJobs == 0)
+    assert(typed.schema.map(_.dataType.typeName) ==
+      Seq("long", "double", "boolean", "timestamp", "string"))
   }
 }
